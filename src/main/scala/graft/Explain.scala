@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: prints the formatted physical plan of selected queries
   * and flags the scale-critical properties — parquet filter pushdown,
   * column-pruned scans, broadcast joins, whole-stage codegen spans.
@@ -54,13 +52,7 @@ object Explain {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = core.Session.build("graft-explain")
     if (args.headOption.contains("--audit-all")) {
       // one summary line per registered query: the shuffle/broadcast/scan
       // shape a reviewer needs to judge 100 TB readiness at a glance

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** 10× scale diagnostic (BACKLOG: catch the next cliff before the driver
@@ -56,16 +56,7 @@ object ScaleCheck {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // registry-sized codegen cache (see Bench) — repeats run compile-free
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    core.Logs.quietKnownWarnings()
+    val spark = core.Session.build("graft-scalecheck")
     spark.range(1000000).selectExpr("sum(id)").collect()
 
     def x10(df: DataFrame)(shift: (DataFrame, Int) => DataFrame): DataFrame =

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Materialized scale-fixture writer (judge r16 task 2): the
@@ -39,14 +39,7 @@ object ScaleFixture {
     val diverseOnly = args.length > 2 && args(2) == "diverse-only"
     require(scaleX >= 1, s"scaleX must be >= 1, got $scaleX")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    core.Logs.quietKnownWarnings()
+    val spark = core.Session.build("graft-scalefixture")
 
     // the exact ScaleCheck shift transforms — the fixture IS the union,
     // materialized; any drift here would silently change every

@@ -3,8 +3,8 @@ package graft.core
 import org.apache.logging.log4j.Level
 import org.apache.logging.log4j.core.config.Configurator
 
-/** Driver-log hygiene for the contract mains (Verify / Bench /
-  * ScaleCheck): three Spark WARNs are emitted BY DESIGN in this engine
+/** Driver-log hygiene for the mains (via [[Session.build]]) and the
+  * benchmark: three Spark WARNs are emitted BY DESIGN in this engine
   * and at registry scale they bury the lines a human (or the driver's
   * log tail) actually needs — round 8's bench log ended as hundreds of
   * WindowExec warnings instead of timings.

@@ -3,8 +3,8 @@ package graft.core
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Shared full-computation consumer for measurement mains (Bench,
-  * ScaleCheck, profilers): hashing a struct of EVERY output column pins
+/** Shared full-computation consumer for measurement (ScaleCheck,
+  * ProfileQ, cosmobench): hashing a struct of EVERY output column pins
   * every column-producing operator in the measured plan — a bare
   * `.count()` lets Catalyst prune unreferenced projections (and with
   * them entire window/compute stages; see PERF standing-rule-4 and the

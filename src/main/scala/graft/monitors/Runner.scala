@@ -1,6 +1,7 @@
 package graft.monitors
 
 import scala.collection.mutable
+import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Monitor orchestration (reference: cosmo/run_monitors.py:11–146): the
@@ -33,7 +34,8 @@ object Runner {
     * the reference orders SMS ingest before the monthly monitors because
     * OSM monitors need fresh SMS rows (run_monitors.py:95–108). A monitor
     * failure is recorded, not fatal — remaining monitors still run
-    * (matching pytest's per-test isolation in the reference). */
+    * (matching pytest's per-test isolation in the reference). Fatal JVM
+    * errors and interrupts are not monitor failures: they propagate. */
   def runAll(spark: SparkSession, cadence: String,
              ingest: Option[() => Unit] = None,
              sink: (String, DataFrame) => Unit = (_, _) => ()): Seq[MonitorResult] = {
@@ -44,7 +46,7 @@ object Runner {
         sink(job.name, df)
         MonitorResult(job.name, df.count(), None)
       } catch {
-        case e: Throwable => MonitorResult(job.name, -1L, Some(e.getMessage))
+        case NonFatal(e) => MonitorResult(job.name, -1L, Some(e.getMessage))
       }
     }
   }

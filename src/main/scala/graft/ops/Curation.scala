@@ -142,9 +142,9 @@ object Curation {
     * shingle explode without persistence (the corpus side is the
     * expensive one). `persistShingles = true` computes each shingle
     * stream once and serves both consumers from storage. Second return
-    * value holds the handles to `unpersist()` when done (Bench/Verify's
-    * per-query clearCache releases them implicitly). At true corpus
-    * scale the signature-store form replaces the corpus derivation
+    * value holds the handles to `unpersist()` when done (the mains'
+    * per-query `Measure.releaseAll` releases them implicitly). At true
+    * corpus scale the signature-store form replaces the corpus derivation
     * entirely (see [[incrementalDedup]]'s scaladoc). */
   def incrementalDedupWithHandle(newDocs: DataFrame, corpus: DataFrame,
                        idCol: String, textCol: String, shingleK: Int = 4,

@@ -1146,7 +1146,7 @@ object Text {
     // pre-training corpus), the c2-side explode is vocab²-bounded while
     // the deleted pass re-read every event, and it removed one of the
     // sequential corpus-scale stages that amplified host contention
-    // (r17 ProfileJobs evidence).
+    // (r17 job/stage-count profile evidence).
     val vocab = c2.select(explode(array(col("ha"), col("hb"))).as("t"))
       .agg(countDistinct("t").as("v"))
     val model = c2

@@ -10,11 +10,9 @@ import graft.ops.{MergeOps, Text}
   */
 object ExtQueries {
 
-  /** The s8 synthetic SMS-report line stream (shared with ProfileSms so
-    * the profiler's stage splits measure the registry's exact
-    * synthesis): fanned-out orders → fixed-format exposure lines behind
-    * the EvalBarrier (pins synthesis above the exchange, computed once
-    * — see the s8 query note). */
+  /** The s8 synthetic SMS-report line stream: fanned-out orders →
+    * fixed-format exposure lines behind the EvalBarrier (pins synthesis
+    * above the exchange, computed once — see the s8 query note). */
   def s8SynthLines(s: org.apache.spark.sql.SparkSession,
                    dir: String): org.apache.spark.sql.DataFrame =
     Tables.fannedOut(s, dir, "orders")
@@ -427,8 +425,7 @@ object ExtQueries {
       // them below the repartition — re-evaluating format_string once per
       // predicate, all on the single pre-shuffle core (measured 3.5 s vs
       // 0.9 s). The barrier pins synthesis above the exchange, computed
-      // once. Synthesis lives in s8SynthLines, shared with ProfileSms so
-      // the profiler's stage splits measure THIS query's exact stream.
+      // once. Synthesis lives in s8SynthLines.
       graft.ingest.SmsIngest.parseLines(s8SynthLines(s, dir))
         .groupBy("DETECTOR", "OPMODE", "FUVHVSTATE", "OSM1POS", "OSM2POS")
         .agg(count(lit(1)).as("n"),

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * register themselves here by contributing a `Seq[Q]`. */
 object Registry {
 
-  /** Registry partitioned by source group — the unit Verify/Bench can
+  /** Registry partitioned by source group — the unit Verify can
     * filter on (env SPARK_GRAFT_FAMILY) so single-family changes don't
     * force full-registry runs; insertion order mirrors [[all]]. The
     * driver never sets the env, so its runs always see the full

@@ -595,8 +595,8 @@ object TextQueries {
         .unionAll(docs.filter(col("doc_id") < 50)
           .select((col("doc_id") + 10000).as("doc_id"),
             concat(lit("edited preamble xyzzy "), col("text")).as("text")))
-      // persistFp = true is the CONTRACT-MAIN opt-in (Bench/Verify
-      // clearCache() per query releases it); the library default is
+      // persistFp = true is the CONTRACT-MAIN opt-in (the per-query
+      // release in Verify/ProfileQ frees it); the library default is
       // false since r15 — see winnowDedupE2e's scaladoc
       Text.winnowDedupE2e(corpus, "doc_id", "text",
           k = 5, w = 8, maxDf = 20, minShared = 3, minJacPct = 50,

@@ -452,7 +452,7 @@ object TrainQueries {
         // each would otherwise replay the full bigram-LM chain (28
         // exchanges / 8 scans in the r10 audit). It is doc-count-sized
         // (two columns), so persist it — released by the per-query
-        // clearCache in Bench/Verify, the scrub-spans handle contract.
+        // release in Verify/ProfileQ, the scrub-spans handle contract.
         val scored = Text.bigramNll(docs, "doc_id", "text")
           .join(docs.select("doc_id", "lang"), "doc_id")
           .select(col("lang"), col("nll"))
@@ -1160,7 +1160,7 @@ object TrainQueries {
       // CPU-dense per-row and the single-file scan would single-thread
       // it; persistShingles: each side's shingle stream has two
       // consumers (band hashes + Jaccard verify) — computed once via
-      // the handle, released by Verify/Bench's per-query clearCache
+      // the handle, released by Verify/ProfileQ's per-query release
       val docs = Tables.fannedOut(s, dir, "documents")
       Curation.incrementalDedupWithHandle(
           docs.filter(col("source") === "src0").select("doc_id", "text"),

@@ -565,7 +565,7 @@ object WebQueries {
     // stream, joined into the final keep decision per doc — every
     // stage's verdict hash-checked through one DuckDB twin. The line
     // table feeds three consumers, so it persists for the query's
-    // lifetime (released by the per-query clearCache in Bench/Verify).
+    // lifetime (released by the per-query release in Verify/ProfileQ).
     Q("pipe_web_e2e",
       linesCtes +
         """,

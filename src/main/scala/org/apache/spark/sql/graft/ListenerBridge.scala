@@ -7,7 +7,8 @@ import org.apache.spark.SparkContext
   * post asynchronously — a counter read immediately after an action can
   * miss the tail of its own job's events. `waitUntilEmpty` blocks until
   * the bus has delivered everything, making per-query counts exact.
-  * Diagnostic-main use only (ProfileJobs); never in a query plan. */
+  * Diagnostic use only (ProfileQ, the cosmobench tracer); never in a
+  * query plan. */
 object ListenerBridge {
   def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

@@ -6,16 +6,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * registry↔evidence gap re-opened silently three rounds running —
   * r10, r11, r12 — precisely because closing it was a manual sweep).
   *
-  * Every name in `SparkEntry.queries` must be evidenced in THREE
+  * Every name in `SparkEntry.queries` must be evidenced in TWO
   * committed artifacts, or this suite is red and `sbt test` blocks the
   * round:
   *
   *  - PLANS.md        — a physical-plan audit row (`| name |`),
   *                      regenerated via `sbt "runMain graft.Explain
   *                      --audit-all"`;
-  *  - bench_ledger.json — a committed quiet-run floor, so the bench's
-  *                      ledger gate covers the query (an un-floored
-  *                      query burns un-gated pass-1 budget);
   *  - COVERAGE.md     — at least a name-level mention tying the query
   *                      to the operator/capability it certifies.
   *
@@ -46,15 +43,6 @@ class RegistryEvidenceSpec extends AnyFunSuite {
     assert(missing.isEmpty,
       s"""${missing.size} queries lack a PLANS.md row — regenerate with
          |  sbt "runMain graft.Explain --audit-all"
-         |missing: ${missing.mkString(", ")}""".stripMargin)
-  }
-
-  test("every registered query has a committed bench_ledger.json floor") {
-    val ledger = read("bench_ledger.json")
-    val missing = names.filterNot(n => ledger.contains("\"" + n + "\""))
-    assert(missing.isEmpty,
-      s"""${missing.size} queries lack a quiet-run floor — regenerate with
-         |  SPARK_GRAFT_BENCH_WRITE_LEDGER=1 sbt "runMain graft.Bench"
          |missing: ${missing.mkString(", ")}""".stripMargin)
   }
 

@@ -35,6 +35,26 @@ class RunnerSpec extends SparkSpec {
     assert(sunk == Map("osm_shift" -> 1L))
   }
 
+  test("runner rethrows fatal errors instead of recording them") {
+    Seq[() => Throwable](() => new InterruptedException("stop"),
+      () => new StackOverflowError("deep")).foreach { fatal =>
+      Runner.clear()
+      val order = scala.collection.mutable.ArrayBuffer[String]()
+      Runner.register(MonitorJob("fatal", "monthly", _ => {
+        order += "fatal"
+        throw fatal()
+      }))
+      Runner.register(MonitorJob("after", "monthly", _ => {
+        order += "after"
+        Seq((1, 2.0)).toDF("k", "v")
+      }))
+      val thrown = intercept[Throwable](Runner.runAll(spark, "monthly"))
+      assert(thrown.getClass == fatal().getClass)
+      assert(order == Seq("fatal"), "no monitor runs after a fatal error")
+    }
+    Runner.clear()
+  }
+
   test("full monthly run: real FITS OSM monitor through the runner with CSV sink") {
     Runner.clear()
     val data = "/root/reference/tests/data"
