@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 /** Plan auditor: prints the formatted physical plan of selected queries
   * and flags the scale-critical properties — parquet filter pushdown,
   * column-pruned scans, broadcast joins, whole-stage codegen spans.
@@ -46,8 +48,8 @@ object Explain {
       "former eager agg().head hid one full reference derivation from " +
       "this audit entirely), so the plan shows the reference subtree " +
       "once for the total and once for the distribution. Production " +
-      "serves jsDrift from a STORED histogram (the t_corpus_drift " +
-      "ScaleCheck entry runs that shape, exponent 0.09): both " +
+      "serves jsDrift from a STORED histogram (the shape " +
+      "MergeStreamSpec's streaming JS drift case pins): both " +
       "consumers collapse to cheap store scans"))
 
   def main(args: Array[String]): Unit = {
@@ -87,7 +89,7 @@ object Explain {
           println(s"| $name | $nEx | $nBc | $nScan | $pushed | true |")
           if (nEx > heavyThreshold) heavy += name -> nEx
         } catch {
-          case e: Throwable => println(s"| $name | - | - | - | - | ERROR ${e.getClass.getSimpleName} |")
+          case NonFatal(e) => println(s"| $name | - | - | - | - | ERROR ${e.getClass.getSimpleName} |")
         } finally {
           // a query that registers a persist handle (e.g. the ppl-thresh
           // scored stream) must not leave cache entries that rewrite

@@ -18,18 +18,18 @@ import org.apache.spark.sql.functions._
   * Brute-force truth is O(N²/2) native cosines, so this runs at probe
   * scales (10×/30× fixture), not production — the point is calibrating
   * the generators' recall once, with numbers, where ScaleCheck then
-  * tracks their cost slopes per round.
+  * tracks the registry's cost slopes.
   *
-  * Usage: SPARK_GRAFT_SCALE_FIXTURE_DIR=/tmp/scalefix
-  *        SPARK_GRAFT_SCALE_X=10 runMain graft.RecallProbe [gen …]
+  * Usage: runMain graft.ScaleFixture <sfDir> <root> <X>
+  *        runMain graft.RecallProbe <root> <X> [gen …]
   * (gens default to "bands,multiprobe,ivf"; truth always runs). */
 object RecallProbe {
   def main(args: Array[String]): Unit = {
-    val scaleX = sys.env.getOrElse("SPARK_GRAFT_SCALE_X", "10").toInt
-    val fixtureDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_FIXTURE_DIR",
-      "/tmp/scalefix")
+    require(args.length >= 2, "usage: RecallProbe <fixtureRoot> <X> [gen …]")
+    val fixtureRoot = args(0)
+    val scaleX = args(1).toInt
     val gens: Seq[String] =
-      if (args.nonEmpty) args.toSeq else Seq("bands", "multiprobe", "ivf")
+      if (args.length > 2) args.drop(2).toSeq else Seq("bands", "multiprobe", "ivf")
     // SPARK_GRAFT_RECALL_TAU: the verify gate. 0.35 (default) matches
     // the registry's historical near-dup gate — but the base corpus has
     // a measured 0.21% BACKGROUND rate of >= 0.35 pairs among unrelated
@@ -46,10 +46,10 @@ object RecallProbe {
     // fixture (ScaleFixture's linear-truth growth model) instead of the
     // replication table; both hold 2000·X rows
     val table = sys.env.getOrElse("SPARK_GRAFT_RECALL_TABLE", "embeddings")
-    val e = spark.read.parquet(s"$fixtureDir/${table}_x$scaleX")
+    val e = core.Tables(spark, s"$fixtureRoot/x$scaleX", table)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    require(e.count() == nVec, s"fixture ${table}_x$scaleX != $nVec rows")
+    require(e.count() == nVec, s"fixture x$scaleX/$table != $nVec rows")
 
     def verified(cand: DataFrame): DataFrame = cand
       .join(e.select(col("vec_id").as("id_a"), col("v").as("va")), "id_a")

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 /** The composed corpus-curation pipeline (quality gate → exact dedup →
   * MinHash-LSH near-dup drop → attrition report) as reusable plan
   * builders — the `pipe_curation` query oracles this end-to-end against
-  * DuckDB; ScaleCheck runs it at 10× scale.
+  * DuckDB; ScaleCheck times that query on the scale fixture.
   *
   * Scale shape: per-doc expressions, ONE fingerprint window, one band
   * groupBy, one broadcast-sized flag join, one final aggregation — no

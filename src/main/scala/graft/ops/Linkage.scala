@@ -44,7 +44,7 @@ object Linkage {
     * repo: resolved = max(25, ⌈maxDfFrac × cleanCount⌉), 25 being the
     * long-standing explicit default the registry query was calibrated
     * at (registries ≤ ~147k records resolve to exactly it) and the
-    * default frac 1.7e-4 reproducing the 150k-record ScaleCheck
+    * default frac 1.7e-4 reproducing the measured 150k-record
     * calibration. A FIXED absolute cut silently loses recall as the
     * registry grows: a discriminative gram's df grows with the entity
     * count, crosses any absolute cut, and the pair's only surviving

@@ -55,8 +55,8 @@ object Retrieval {
     // (scores sink below minCos and pairs silently vanish — the
     // published df-cut only promises UNDERestimation at the calibrated
     // scale, not across scales). resolved = max(25, ⌈maxDfFrac × N⌉):
-    // 25 (the old explicit default) up to ~41k docs, 30 at the 50k
-    // ScaleCheck corpus. Explicit maxDf overrides; corpusDocs ≥ 0
+    // 25 (the old explicit default) up to ~41k docs, 30 at a 50k-doc
+    // corpus. Explicit maxDf overrides; corpusDocs ≥ 0
     // supplies N and skips the one count() job.
     require(maxDf >= 0,
       s"maxDf must be >= 0 (0 = corpus-relative auto), got $maxDf")

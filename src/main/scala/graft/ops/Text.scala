@@ -73,7 +73,7 @@ object Text {
     * maxDf ∝ corpus restored all 146 at a sublinear 0.79 exponent
     * (PERF.md r15). The default `maxDfFrac = 6e-4` reproduces both
     * calibrated points: 20 (the floor) at the ≤33k-doc registry
-    * corpora, 30 at the 50k-doc ScaleCheck corpus, 90 at its 30×
+    * corpora, 30 at a 50k-doc corpus (sf0.1 × 10), 90 at its 30×
     * 150k-doc form. `corpusDocs < 0` resolves the count with one cheap
     * `df.count()` job; large-scale callers that know the corpus size
     * pass it to skip that pass. */
@@ -200,10 +200,9 @@ object Text {
     // Deliberately corpus-wide sets, MEASURED against the "obvious"
     // refinement before keeping this shape: semi-join-pruning the fp
     // stream to candidate ids before the collect_set (so array building
-    // tracks the near-dup population) ran 2× SLOWER at the 50k-doc
-    // ScaleCheck (48.9 s vs 24.3 s in matched back-to-back single-entry
-    // runs; 14.0 s in the full journal sweep) — the candidate-id list
-    // is not
+    // tracks the near-dup population) ran 2× SLOWER on a 50k-doc
+    // corpus (48.9 s vs 24.3 s in matched back-to-back single-query
+    // runs) — the candidate-id list is not
     // statically broadcastable, so the "prune" costs a full shuffle of
     // the fp stream anyway, and referencing `pairs` from the id list
     // makes it a multi-consumer subtree that re-runs the rare-fp
@@ -1069,7 +1068,7 @@ object Text {
     * tried and REJECTED: within-doc n-gram repetition is ~1.1-1.3× in
     * natural text, so it adds a full event-scale shuffle (with a
     * group-per-row hash table that spills) to shrink the join input by
-    * almost nothing — 2.7× slower at the 50k-doc ScaleCheck.
+    * almost nothing — 2.7× slower on a 50k-doc corpus.
     * Docs with <2 tokens have no bigrams and drop out.
     *
     * `persistBigrams = true` is the full-corpus handle (same contract as
@@ -1746,8 +1745,8 @@ object Text {
     * vanish). resolved = max(1000, ⌈2e-3 × docs⌉) — 1000 (the old
     * explicit default) up to 500k docs, growing with the corpus after;
     * never tighter than today's default, so recall cannot rot. Cost
-    * control (the df² fan-out) is the explicit override's job — the
-    * 50k-doc ScaleCheck entry keeps its cost-calibrated maxDf = 100. */
+    * control (the df² fan-out) is the explicit override's job — a
+    * 50k-doc corpus measured fine at an explicit maxDf = 100. */
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
                        k: Int = 5, minContain: Double = 0.5,
                        maxDf: Int = 0, maxDfFrac: Double = 2e-3,

@@ -44,9 +44,8 @@ object AnnotQueries {
     * synthesize the same label table. The worker roster is a 5-row
     * literal (broadcast cross join — per-item fan-out by a bounded
     * constant, no shuffle). THE single Scala-side copy of the fixture:
-    * the queries below and ScaleCheck's annot entry both call it, so
-    * the hash process can never desynchronize from the oracle's
-    * [[labSql]] in one place only (judge r15 review). */
+    * every query below calls it, so the hash process cannot drift
+    * from the oracle's [[labSql]]. */
   private[graft] def crowdLabels(docs: DataFrame): DataFrame = {
     val workers = docs.sparkSession.createDataFrame(Seq(
       ("w0", 5), ("w1", 10), ("w2", 20), ("w3", 30), ("w4", 45)))

@@ -1143,8 +1143,8 @@ object TextQueries {
         |FROM comp c JOIN (SELECT cluster, COUNT(*) AS cluster_size
         |  FROM comp GROUP BY cluster) s USING (cluster)
         |ORDER BY c.doc_id""".stripMargin) { (s, dir) =>
-      // bounded corpus slice (= the whole corpus at the correctness SFs);
-      // the UNBOUNDED 50k-doc run lives in ScaleCheck's dedup_cc entry
+      // bounded corpus slice (= the whole corpus at the correctness SFs,
+      // so this query's cost stays flat on the scale fixture)
       val sh = Tables.fannedOut(s, dir, "documents")
         .filter(col("doc_id") < 500)
         .select(col("doc_id"),

@@ -405,8 +405,8 @@ object TrainQueries {
     // column ever sorts on one partition (Curation.quantileBuckets:
     // thresholds are a lang-count-bounded broadcast aggregate; the
     // production arm estimates them with percentile_approx, pinned
-    // equal to this exact arm in TrainSpec, partition-freedom at 1M
-    // rows in ScaleCheck). Oracled with the EXACT interpolated
+    // equal to this exact arm in TrainSpec; ScaleCheck times this
+    // query on the scale fixture). Oracled with the EXACT interpolated
     // percentile (DuckDB quantile_cont, the same R-7 interpolation):
     // thresholds, membership, and per-bucket aggregates all replay.
     // Tie semantics differ from ntile BY DESIGN (equal NLLs share a

@@ -264,9 +264,9 @@ class RetrievalSpec extends SparkSpec {
     import spark.implicits._
     // below the frac knee every auto path resolves to its floor (= the
     // old explicit default), so default-vs-explicit must be identical —
-    // the regime every existing fixture lives in; the scale regime is
-    // measured in ScaleCheck (winnow 146 clusters at 10x/30x/100x,
-    // fuzzy 360k matches at 30x where fixed-25 returns 0)
+    // the regime every existing fixture lives in; the scale regime was
+    // measured on 10x/30x/100x copies of sf0.1 (winnow 146 clusters at
+    // each, fuzzy 360k matches at 30x where fixed-25 returns 0)
     val clean = Seq((1L, "Customer#000000001"), (2L, "Customer#000000002"),
       (3L, "Supplier#000000009")).toDF("c_id", "c_name")
     val dirty = Seq((10L, "Customer#00000001"), (11L, "Suplier#000000009"))

@@ -188,6 +188,13 @@ class SimilaritySpec extends SparkSpec {
     assert(stored.as[(Long, Long, Double)].collect().toSet ==
       inMem.as[(Long, Long, Double)].collect().toSet,
       "rebuilt-generation search must equal the in-memory IVF join")
+    // continuity across the rebuild: the same probes get full k-sized
+    // result sets from the old and the new generation
+    val kProbes = base.filter(col("vec_id") < 5)
+      .select(col("vec_id").as("probe_id"), col("vec"))
+    for (d <- Seq(dirA, dirC))
+      assert(Similarity.searchIvfIndex(spark, d, kProbes, "probe_id",
+        "vec_id", "vec", k = 3).count() == 15L, s"short result sets from $d")
   }
 
   test("marginMining equals a driver-side brute-force replay of the ratio margin") {
@@ -295,7 +302,7 @@ class SimilaritySpec extends SparkSpec {
     // at the calibration scale (and below it) the base knobs hold
     assert(lshKnobsForScale(20000L, 20000L) == (8, 2))
     assert(lshKnobsForScale(500L, 20000L) == (8, 2))
-    // the measured 30x ScaleCheck configuration: 10-bit bands, and the
+    // the measured 30x configuration: 10-bit bands, and the
     // recall-recovery band count that restored the fixed-knob cluster
     // set (PERF.md r16 three-way table)
     assert(lshKnobsForScale(60000L, 20000L) == (10, 6))
@@ -358,7 +365,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("probeKnobsForScale pins the measured multi-probe configurations") {
     import graft.ops.Similarity.probeKnobsForScale
-    // the r17 ScaleCheck multiprobe row's knobs at 10x and 30x: 10-bit
+    // the measured r17 multi-probe knobs at 10x and 30x: 10-bit
     // minimum bucket resolution (8-bit H1 fan-out blew the candidate
     // guard), 2 bands (probing replaces bands), 4 flips
     assert(probeKnobsForScale(20000L, 20000L) == (10, 2, 4))
