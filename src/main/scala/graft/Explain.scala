@@ -52,6 +52,11 @@ object Explain {
       "MergeStreamSpec's streaming JS drift case pins): both " +
       "consumers collapse to cheap store scans"))
 
+  /** The headline plans printed when no query is named. */
+  val defaultNames: Seq[String] = Seq("s1_scan_project", "q1_agg",
+    "j1_broadcast_join", "p9_anti_join", "j11_asof_lookup",
+    "w1_rolling_mean_7d", "dedup_minhash_md5")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val spark = core.Session.build("graft-explain")
@@ -114,11 +119,10 @@ object Explain {
       }
       spark.stop(); return
     }
-    val names = if (args.nonEmpty) args.toSeq
-      else Seq("s1_scan_project", "q1_agg", "j1_broadcast_join", "p9_anti_join",
-        "j11_asof_lookup", "w1_rolling_mean_7d", "dedup_minhash_lsh")
-    names.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
+    val names = if (args.nonEmpty) args.toSeq else defaultNames
+    queries.Registry.resolve(names).foreach { q =>
+      val name = q.name
+      val df = q.fn(spark, sfDir)
       val plan = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
       println(s"\n========== $name ==========")

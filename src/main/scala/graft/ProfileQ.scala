@@ -54,37 +54,36 @@ object ProfileQ {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val repeats = sys.env.getOrElse("SPARK_GRAFT_PROFILE_N", "3").toInt
+    require(args.nonEmpty, "usage: ProfileQ name [name…]")
+    val selected = queries.Registry.resolve(args.toSeq)
     val spark = core.Session.build("graft-profile")
     spark.range(1000000).selectExpr("sum(id)").collect()
     val counters = new Counters
     spark.sparkContext.addSparkListener(counters)
-    args.foreach { name =>
-      SparkEntry.queries.get(name) match {
-        case None => System.err.println(s"[profile] unknown query: $name")
-        case Some(fn) =>
-          val samples = (1 to repeats).map { i =>
-            // drain the previous sample's events before the reset
-            ListenerBridge.drain(spark.sparkContext)
-            counters.reset()
-            val t0 = System.nanoTime()
-            val df = fn(spark, sfDir)
-            val t1 = System.nanoTime()
-            core.Measure.consume(df)
-            val t2 = System.nanoTime()
-            ListenerBridge.drain(spark.sparkContext)
-            core.Measure.releaseAll(spark)
-            val (c, e) = ((t1 - t0) / 1e9, (t2 - t1) / 1e9)
-            val tt = counters.taskTimeMs.get() / 1e3
-            val cpu = counters.cpuTimeNs.get() / 1e9
-            println(f"[profile] $name%-28s #$i construct $c%6.2f s  execute $e%6.2f s  " +
-              f"jobs ${counters.jobs.get()}%3d  stages ${counters.stages.get()}%3d  " +
-              f"tasks ${counters.tasks.get()}%5d  taskTime $tt%8.2f s  cpu $cpu%8.2f s  " +
-              f"par ${tt / (c + e)}%5.1f  cpuShare ${if (tt > 0) cpu / tt else 0.0}%4.2f")
-            (c, e)
-          }
-          println(f"[profile] $name%-28s min  construct ${samples.map(_._1).min}%6.2f s  " +
-            f"execute ${samples.map(_._2).min}%6.2f s  (min of $repeats)")
+    selected.foreach { q =>
+      val name = q.name
+      val samples = (1 to repeats).map { i =>
+        // drain the previous sample's events before the reset
+        ListenerBridge.drain(spark.sparkContext)
+        counters.reset()
+        val t0 = System.nanoTime()
+        val df = q.fn(spark, sfDir)
+        val t1 = System.nanoTime()
+        core.Measure.consume(df)
+        val t2 = System.nanoTime()
+        ListenerBridge.drain(spark.sparkContext)
+        core.Measure.releaseAll(spark)
+        val (c, e) = ((t1 - t0) / 1e9, (t2 - t1) / 1e9)
+        val tt = counters.taskTimeMs.get() / 1e3
+        val cpu = counters.cpuTimeNs.get() / 1e9
+        println(f"[profile] $name%-28s #$i construct $c%6.2f s  execute $e%6.2f s  " +
+          f"jobs ${counters.jobs.get()}%3d  stages ${counters.stages.get()}%3d  " +
+          f"tasks ${counters.tasks.get()}%5d  taskTime $tt%8.2f s  cpu $cpu%8.2f s  " +
+          f"par ${tt / (c + e)}%5.1f  cpuShare ${if (tt > 0) cpu / tt else 0.0}%4.2f")
+        (c, e)
       }
+      println(f"[profile] $name%-28s min  construct ${samples.map(_._1).min}%6.2f s  " +
+        f"execute ${samples.map(_._2).min}%6.2f s  (min of $repeats)")
     }
     spark.stop()
   }

@@ -53,26 +53,25 @@ object ScaleCheck {
     val root = args(0)
     val (xLo, xHi) = (args(1).toInt, args(2).toInt)
     require(xLo >= 1 && xHi > xLo, s"need 1 <= xLo < xHi, got $xLo, $xHi")
-    val names = if (args.length > 3) args.drop(3).toSeq else scaleSet
-    val unknown = names.filterNot(queries.Registry.queries.contains)
-    require(unknown.isEmpty, s"not registry queries: ${unknown.mkString(", ")}")
+    val selected = queries.Registry.resolve(
+      if (args.length > 3) args.drop(3).toSeq else scaleSet)
     val spark = core.Session.build("graft-scalecheck")
 
-    def run(name: String, x: Int): (Double, Long) = {
+    def run(q: queries.Q, x: Int): (Double, Long) = {
       val t0 = System.nanoTime()
       try {
-        val rows = core.Measure.consume(
-          queries.Registry.byName(name)(spark, s"$root/x$x"))
+        val rows = core.Measure.consume(q.fn(spark, s"$root/x$x"))
         ((System.nanoTime() - t0) / 1e9, rows)
       } finally core.Measure.releaseAll(spark)
     }
 
     val wall0 = System.nanoTime()
-    names.foreach { name =>
+    selected.foreach { q =>
+      val name = q.name
       try {
-        run(name, xLo)
-        val (tLo, nLo) = run(name, xLo)
-        val (tHi, nHi) = run(name, xHi)
+        run(q, xLo)
+        val (tLo, nLo) = run(q, xLo)
+        val (tHi, nHi) = run(q, xHi)
         val exponent = math.log(tHi / tLo) / math.log(xHi.toDouble / xLo)
         println(f"[scale] $name%-26s x$xLo $tLo%7.2f s $nLo%9d rows   " +
           f"x$xHi $tHi%7.2f s $nHi%9d rows   exponent $exponent%5.2f")
@@ -82,7 +81,7 @@ object ScaleCheck {
             s"${e.getMessage}".take(200))
       }
     }
-    println(f"[scale] ${names.size} names, x$xLo vs x$xHi, " +
+    println(f"[scale] ${selected.size} names, x$xLo vs x$xHi, " +
       f"total wall ${(System.nanoTime() - wall0) / 1e9}%.1f s")
     spark.stop()
   }

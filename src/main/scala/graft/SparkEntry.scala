@@ -3,11 +3,11 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.queries.Registry
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Correctness contract — see SURVEY.md §7.
   *
   * Every implemented operator from SURVEY.md §2 appears as one entry in
-  * `queries`; entries with an ANSI-SQL-expressible semantics also appear
-  * in `oracleSql` (DuckDB syntax) for the driver's hash-compare.
+  * `queries`, and every entry has an ANSI-SQL oracle in `oracleSql`
+  * (DuckDB syntax) for the hash-compare (tools/check_oracle.py).
   */
 object SparkEntry {
 
@@ -20,19 +20,7 @@ object SparkEntry {
     Registry.queries
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops. */
+    * the same parquet tables. */
   def oracleSql: Map[String, String] =
     Registry.oracleSql
-
-  /** The standing adjudication of every query WITHOUT an `oracleSql`
-    * entry. EMPTY since round 15: the 8 declared fast paths
-    * (xxhash64 dedup/ANN variants, engine-internal sketches, the
-    * typed-Aggregator covariance) were RETIRED from the registry (judge
-    * r14 task 8) — their semantics stay certified by the oracled md5
-    * twins and they run every build in FastPathSpec, so the correctness
-    * artifact is now 100% oracled and ANY `no_oracle` row in a driver
-    * artifact means something regressed. RegistryEvidenceSpec enforces
-    * the invariant (a query in neither `oracleSql` nor this map is a
-    * red test). */
-  def noOracleAdjudication: Map[String, String] = Map.empty
 }

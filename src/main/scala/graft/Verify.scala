@@ -1,32 +1,28 @@
 package graft
 import java.nio.file.{Files, Paths}
 import scala.util.control.NonFatal
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each registry query's result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare (tools/check_oracle.py).
+  *
+  * Usage: runMain graft.Verify <sfDir> <outDir> [name …]
+  * With no names it dumps the full registry; names select a subset, and an
+  * unknown name is refused before the session starts. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
+    require(args.length >= 2, "usage: Verify <sfDir> <outDir> [name …]")
+    val Array(sfDir, outDir) = args.take(2)
+    val selected = queries.Registry.resolve(args.drop(2).toSeq)
     val spark = core.Session.build("graft-verify")
     new java.io.File(outDir).mkdirs()
-    // Dev-only subset filters (the driver never sets either, so its
-    // runs always dump the full registry): SPARK_GRAFT_ONLY picks
-    // names, SPARK_GRAFT_FAMILY picks registry source groups
-    // (core/arraytime/text/sim/ext/gap/train/retrieval/web).
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String]) ++
-      sys.env.get("SPARK_GRAFT_FAMILY")
-        .map(graft.queries.Registry.familyNames).getOrElse(Set.empty[String])
-    val selected =
-      if (only.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.filter { case (n, _) => only(n) }
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+    selected.foreach { query =>
+      val name = query.name
+      try query.fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // release any persist handle the query holds (t_scrub_spans' span
-      // stream) so cached blocks don't accumulate across the registry
+      // release any persist handle the query holds (pipe_suffix_scrub's
+      // ladder levels) so cached blocks don't accumulate across the registry
       core.Measure.releaseAll(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -44,14 +40,6 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // the standing no-oracle adjudication rides along in the artifact
-    // (judge r12 stretch 8): the driver's `err: no_oracle` rows
-    // self-describe — each maps to why it has no direct oracle and
-    // which oracled twin certifies its semantics. Extra file only; the
-    // driver contract (result parquets + oracle_sql.json) is unchanged.
-    val adj = SparkEntry.noOracleAdjudication
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/no_oracle_adjudication.json"), adj)
     spark.stop()
   }
 }

@@ -41,10 +41,11 @@ object Measure {
     * and safe under the registry convention the call sites enforce:
     * every query's persists/checkpoints are consumed within that
     * query's own consume() (nothing spans two registry queries — the
-    * t_scrub_spans handle rule), so at call time every released block
-    * is dead. Spark's per-RDD "cannot be recomputed after
-    * unpersisting" WARNs at these sites are expected noise, not a
-    * fault (quietKnownWarnings drops them in the profilers). */
+    * rule every `…WithHandle` persist pair follows), so at call time
+    * every released block is dead. Spark's per-RDD "cannot be
+    * recomputed after unpersisting" WARNs at these sites are expected
+    * noise, not a fault (quietKnownWarnings drops them in the
+    * profilers). */
   def releaseAll(spark: org.apache.spark.sql.SparkSession): Unit = {
     spark.sharedState.cacheManager.clearCache()
     spark.sparkContext.getPersistentRDDs.values

@@ -37,11 +37,4 @@ object TimeFns {
     * (reference: cosmo/monitor_helpers.py:15–25). */
   def doyToTs(s: Column): Column =
     to_timestamp(regexp_replace(s, "\\.", ":"), "yyyy:DDD:HH:mm:ss")
-
-  /** Per-sample absolute time: exposure-start MJD + seconds-since-start
-    * array -> array<timestamp> (reference: cosmo/monitor_helpers.py:52–76,
-    * `absolute_time`). Stays an array HOF — no explode needed. */
-  def absoluteTime(expstartMjd: Column, timeSec: Column): Column =
-    transform(timeSec, t =>
-      timestamp_seconds((expstartMjd - lit(MjdUnixEpoch)) * lit(86400.0d) + t))
 }

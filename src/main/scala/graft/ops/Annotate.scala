@@ -423,9 +423,9 @@ object Annotate {
     * emits a row, labeled from the stored prior alone, and a label
     * outside the stored model's classes fails loudly in-plan (both
     * judge r15 advice — a vanishing item or vote would be a silent
-    * wrong answer). Stream form:
-    * [[graft.streaming.Streams.streamingDsLabel]] (each item's ratings
-    * arrive in one batch — the streamingLmScore contract). The exact
+    * wrong answer). Stream form: this function per micro-batch in
+    * [[graft.streaming.Streams.eachFileBatch]] (each item's ratings
+    * arrive in one batch). The exact
     * refit relation: [[dsModelDF]] built at `iters = r` is round r+1's
     * M-step state, so `dsServe(dsModelDF(labels, iters = r), labels)
     * == dawidSkene(labels, iters = r+1)` — pinned in AnnotateSpec. */
@@ -481,8 +481,8 @@ object Annotate {
     * subset (items with a known answer). One equi-join on the item plus
     * one roster-sized aggregation; counts are ADDITIVE, so arriving
     * label batches fold into a stored (wid, n_gold, n_correct) table
-    * incrementally — [[graft.streaming.Streams.streamingWorkerGold]] is
-    * this exact aggregation and `accFromGoldCounts` refits the rate
+    * incrementally — [[goldCounts]] runs unchanged on a streaming
+    * DataFrame and `accFromGoldCounts` refits the rate
     * from the store (the winMatrix / btFromMatrix split).
     *
     * Output: (wid, n_gold, n_correct, acc) with the raw double rate. */

@@ -111,8 +111,8 @@ object Preference {
     * the preference fit. This is the only data-sized stage of the BT
     * chain (one map-side-combinable count over the game log), and the
     * count is ADDITIVE, so arriving game batches update a stored matrix
-    * incrementally — the streaming form is this exact aggregation
-    * (Streams.streamingWinMatrix); the fit then serves from the store
+    * incrementally — this function runs unchanged on a streaming
+    * DataFrame; the fit then serves from the store
     * via [[btFromMatrix]] without replaying a single game. */
   def winMatrix(games: DataFrame): DataFrame =
     games.groupBy("winner", "loser").agg(count(lit(1)).as("w"))

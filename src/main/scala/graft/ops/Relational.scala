@@ -70,17 +70,6 @@ object Relational {
       .drop("col")
   }
 
-  /** P9/U2 incremental discovery (reference: cosmo/data_models.py:62–77):
-    * candidates not yet ingested, tolerant of suffix variants
-    * (`.fits` vs `.fits.gz`). Left-anti join on a normalized key.
-    * Scale: the ingested-keys side is a single projected column — at 100 TB
-    * it's still tiny relative to the fact side and broadcastable. */
-  def antiJoinIngested(candidates: DataFrame, ingested: DataFrame,
-                       candKey: Column, ingKey: Column): DataFrame = {
-    val ing = ingested.select(ingKey.as("__k")).distinct()
-    candidates.join(broadcast(ing), candKey === col("__k"), "left_anti")
-  }
-
   /** P10 `match_dfs` semi-join (reference: cosmo/monitors/osm_shift_monitors.py:50–52).
     * No distinct on the right side — left_semi already dedupes matches,
     * and an explicit distinct would cost an extra shuffle. */

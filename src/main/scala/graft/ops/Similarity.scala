@@ -25,8 +25,6 @@ object Similarity {
     aggregate(zip_with(a.cast("array<double>"), b.cast("array<double>"), _ * _),
       lit(0.0d), _ + _)
 
-  def l2norm(a: Column): Column = sqrt(dot(a, a))
-
   /** Cosine similarity; 0 for zero-norm inputs instead of NaN/error.
     * Backed by the native one-pass expression (dot + both norms in a
     * single loop) — the HOF composition below traverses three times with
@@ -41,19 +39,6 @@ object Similarity {
     def l2 (x: Column) = sqrt(dotHof(x, x))
     val denom = l2(a) * l2(b)
     when(denom === 0.0d, lit(0.0d)).otherwise(dotHof(a, b) / denom)
-  }
-
-  /** Brute-force top-k cosine neighbors of one probe vector (as a literal
-    * array) over `cands(idCol, vecCol)`. One scan, one global top-k —
-    * the correctness baseline ANN variants are measured against. */
-  def topKByCosine(cands: DataFrame, idCol: String, vecCol: String,
-                   probe: Seq[Float], k: Int,
-                   simCol: String = "sim"): DataFrame = {
-    val probeLit = array(probe.map(v => lit(v.toDouble)): _*)
-    cands
-      .withColumn(simCol, cosine(col(vecCol), probeLit))
-      .orderBy(round(col(simCol), 3).desc, col(idCol))
-      .limit(k)
   }
 
   /** Brute-force k-NN join: for every probe row, the top-k candidates by
@@ -533,7 +518,7 @@ object Similarity {
     * pruning on `centroid_id`), so a query batch with nProbe/k = 1%
     * scans ~1% of the index files, where the in-memory [[annIvfJoin]]
     * re-scans every vector per batch. Streaming adds land in their cell
-    * via [[graft.streaming.Streams.streamingIvfAssign]] with the same
+    * via [[ivfAssign]] on the streaming DataFrame with the same
     * `partitionBy(centroid_id)` sink. */
   def writeIvfIndex(cands: DataFrame, candId: String, vecCol: String,
                     centroids: DataFrame, dir: String): Unit = {
@@ -574,8 +559,8 @@ object Similarity {
 
   /** Maintenance append into a [[writeIvfIndex]] layout: assign the
     * arrivals to their cells under the STORED centroids (zero-shuffle
-    * broadcast argmax — the same plan the streaming form
-    * `Streams.streamingIvfAssign` runs) and partition-append them into
+    * broadcast argmax — the same plan [[ivfAssign]] runs on a stream)
+    * and partition-append them into
     * the cell directories. Only the partitions the batch actually hits
     * gain a file; the centroids and every untouched cell are left
     * byte-identical, so concurrent [[searchIvfIndex]] readers see
@@ -714,24 +699,6 @@ object Similarity {
       .join(broadcast(means.select(col("i").as("j"), col("m").as("mj"))), "j")
       .select(col("i"), col("j"),
         (col("sxy") / col("n") - col("mi") * col("mj")).as("cov"))
-  }
-
-  /** [[covarianceMatrix]]'s fast twin: same (i, j, cov) output through the
-    * one-pass [[CovarianceAggregator]] (ObjectHashAggregate, primitive
-    * buffer, no d²-row fan-out). Agreement with the explode path is to FP
-    * round-off — partition merge order differs — so this is the rows-only
-    * registered form; `sim_pca_cov` carries the oracle. */
-  def covarianceMatrixFast(df: DataFrame, vecCol: String, dim: Int): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    // typed select keeps the TypedColumn dispatch (an .as alias would
-    // downgrade it to the untyped API, which rejects typed aggregates)
-    val one = df.select(col(vecCol).cast("array<double>")).as[Array[Double]]
-      .select(new CovarianceAggregator(dim).toColumn)
-    one.toDF("c")
-      .select(posexplode(col("c")).as(Seq("pos", "cov")))
-      .select(floor(col("pos") / lit(dim)).cast("long").as("i"),
-        (col("pos") % dim).cast("long").as("j"), col("cov"))
   }
 
   /** SemDeDup-shape SEMANTIC dedup (Abbas et al., "SemDeDup: Data-efficient

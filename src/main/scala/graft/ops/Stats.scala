@@ -78,31 +78,6 @@ object Stats {
       .agg(min(col("bucket")).as("bucket"))
   }
 
-  /** W1 rolling time-window mean (reference:
-    * cosmo/monitors/osm_shift_monitors.py:444–452, 180-day rolling).
-    * RANGE frame over epoch seconds: one sort per key partition, streaming
-    * frame evaluation — no self-join, no explode of the window. */
-  def rollingMeanDays(df: DataFrame, keys: Seq[String], timeCol: String,
-                      valueCol: String, days: Int,
-                      outCol: String = "rolling_mean"): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*)
-      .orderBy(col(timeCol).cast("long"))
-      .rangeBetween(-days.toLong * 86400L, 0L)
-    df.withColumn(outCol, avg(col(valueCol)).over(w))
-  }
-
-  /** W1 variant with an exact microsecond RANGE frame — matches engines
-    * that window on full timestamp precision (a seconds-truncated cast
-    * would admit different boundary rows). */
-  def rollingMeanMicros(df: DataFrame, keys: Seq[String], timeCol: String,
-                        valueCol: String, windowMicros: Long,
-                        outCol: String): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*)
-      .orderBy(unix_micros(col(timeCol)))
-      .rangeBetween(-windowMicros, 0L)
-    df.withColumn(outCol, avg(col(valueCol)).over(w))
-  }
-
   /** O(n log n) trailing-window sums — the scale replacement for a
     * sliding RANGE frame. Spark evaluates a sliding frame by RECOMPUTING
     * it per row (no aggregate retraction), so a trailing-week frame over

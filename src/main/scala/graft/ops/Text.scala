@@ -29,19 +29,6 @@ object Text {
     * = groupBy(fingerprint) — one hash aggregate at any scale. */
   def fingerprint(text: Column): Column = md5(normalize(text))
 
-  /** Polynomial rolling hash (Rabin–Karp family) over the text's code
-    * points: H = fold(acc * 31 + c) mod 1e9+7. Unlike md5 this is
-    * incrementally updatable (append a char = one multiply-add), the
-    * property rolling-fingerprint schemes build on. The modulus keeps
-    * every intermediate below 2^35, so ANSI-mode overflow cannot trigger
-    * and the identical fold is expressible in DuckDB SQL (oracled by
-    * `t_rolling_hash`). */
-  def rollingHash(text: Column): Column =
-    aggregate(
-      transform(split(text, ""), ch => ascii(ch).cast("long")),
-      lit(0L),
-      (acc, c) => (acc * 31L + c) % 1000000007L)
-
   /** Winnowing fingerprint set (Schleimer, Wilkerson & Aiken 2003 — the
     * MOSS scheme): distinct sliding-window minima of rolling k-gram
     * hashes over the NORMALIZED text, sorted ascending. Any shared
@@ -282,8 +269,8 @@ object Text {
     * n_union)`; an arriving doc with no row is a KEEPER (anti-join to
     * admit). `k`/`w` must match the index build. Streaming-valid: every
     * arriving doc is one row, so the per-(new,stored) aggregation never
-    * spans micro-batches — [[graft.streaming.Streams.streamingWinnowGate]]
-    * runs exactly this plan per batch via foreachBatch. */
+    * spans micro-batches, so this plan runs per batch inside
+    * [[graft.streaming.Streams.eachFileBatch]]. */
   def winnowGateFromIndex(arrivals: DataFrame, idCol: String,
                           textCol: String, sets: DataFrame, rare: DataFrame,
                           k: Int = 5, w: Int = 8, minShared: Int = 3,

@@ -1078,40 +1078,4 @@ object ExtQueries {
           (round(col("js"), 4) + lit(0)).as("js"))
         .orderBy("source")
     })
-
-  /** Non-portable sketch fast paths RETIRED from the registry (round
-    * 15, judge r14 task 8): engine-internal register formats with no
-    * DuckDB twin, certified by the oracled exact/portable queries
-    * (ext_kmv_distinct_md5, ext_count_distinct) and the ScaleSpec
-    * register-exact union pin. Exercised every build by FastPathSpec. */
-  val fastPaths: Seq[Q] = Seq(
-
-    // Approximate distinct via HLL++ (error bound asserted in ScaleSpec
-    // against the exact count, emitted alongside).
-    Q.noOracle("ext_approx_distinct") { (s, dir) =>
-      Tables(s, dir, "lineitem")
-        .groupBy("l_returnflag")
-        .agg(approx_count_distinct("l_partkey").as("approx_parts"),
-          countDistinct("l_partkey").as("exact_parts"))
-        .orderBy("l_returnflag")
-    },
-
-    // MERGEABLE distinct-count sketches (Apache DataSketches HLL):
-    // per-group sketches whose union answers the global question
-    // WITHOUT re-touching the data — union over a partition of the data
-    // is register-exact vs sketching the whole (pinned in ScaleSpec).
-    Q.noOracle("ext_hll_mergeable") { (s, dir) =>
-      val ev = Tables(s, dir, "events")
-      val perType = ev.groupBy("event_type")
-        .agg(expr("hll_sketch_agg(user_id, 12)").as("sk"),
-          countDistinct("user_id").as("exact_users"))
-      val merged = perType.agg(expr("hll_union_agg(sk)").as("sk"))
-        .crossJoin(broadcast(ev.agg(countDistinct("user_id").as("exact_users"))))
-        .select(lit("ALL").as("event_type"),
-          expr("hll_sketch_estimate(sk)").as("est_users"), col("exact_users"))
-      perType.select(col("event_type"),
-          expr("hll_sketch_estimate(sk)").as("est_users"), col("exact_users"))
-        .unionByName(merged)
-        .orderBy("event_type")
-    })
 }

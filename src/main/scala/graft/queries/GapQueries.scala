@@ -220,40 +220,4 @@ object GapQueries {
       """
         |SELECT cid AS centroid_id, COUNT(*) AS n FROM af
         |GROUP BY 1 ORDER BY 1""".stripMargin
-
-  /** xxhash64-seeded ANN fast paths RETIRED from the registry (round
-    * 15, judge r14 task 8): mechanisms oracled on the md5-seeded twins
-    * (sim_ivf_assign, sim_kmeans_md5); recall/convergence pinned in
-    * SimilaritySpec. Exercised every build by FastPathSpec. */
-  val fastPaths: Seq[Q] = Seq(
-
-    // IVF ANN with per-label mean centroids; emits cell occupancy.
-    Q.noOracle("sim_ann_ivf_cells") { (s, dir) =>
-      val e = Tables(s, dir, "embeddings")
-      val centroids = e
-        .select(col("label").as("centroid_id"),
-          posexplode(col("embedding").cast("array<double>")).as(Seq("pos", "v")))
-        .groupBy("centroid_id", "pos").agg(avg("v").as("v"))
-        .groupBy("centroid_id")
-        .agg(array_sort(collect_list(struct(col("pos"), col("v")))).as("z"))
-        .select(col("centroid_id"), transform(col("z"), x => x("v")).as("embedding"))
-      graft.ops.Similarity.ivfAssign(
-        e.select(col("vec_id"), col("embedding").cast("array<double>")),
-        "embedding",
-        centroids)
-        .groupBy("centroid_id").agg(count(lit(1)).as("n"))
-        .orderBy("centroid_id")
-    },
-
-    // IVF with TRAINED cells: deterministic spherical k-means (xxhash64
-    // seeds, 3 Lloyd's rounds) — the path for unlabeled corpora.
-    Q.noOracle("sim_kmeans_cells") { (s, dir) =>
-      val e = Tables(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-      val cents = graft.ops.Similarity.kmeansCentroids(
-        e, "vec_id", "embedding", k = 8, iters = 3)
-      graft.ops.Similarity.ivfAssign(e, "embedding", cents)
-        .groupBy("centroid_id").agg(count(lit(1)).as("n"))
-        .orderBy("centroid_id")
-    })
 }

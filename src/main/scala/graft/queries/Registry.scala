@@ -6,57 +6,31 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * register themselves here by contributing a `Seq[Q]`. */
 object Registry {
 
-  /** Registry partitioned by source group — the unit Verify can
-    * filter on (env SPARK_GRAFT_FAMILY) so single-family changes don't
-    * force full-registry runs; insertion order mirrors [[all]]. The
-    * driver never sets the env, so its runs always see the full
-    * registry (contract unchanged). */
-  val families: Seq[(String, Seq[Q])] = Seq(
-    "core" -> CoreQueries.qs,
-    "arraytime" -> ArrayTimeQueries.qs,
-    "text" -> TextQueries.qs,
-    "sim" -> SimilarityQueries.qs,
-    "ext" -> ExtQueries.qs,
-    "gap" -> GapQueries.qs,
-    "train" -> TrainQueries.qs,
-    "retrieval" -> RetrievalQueries.qs,
-    "web" -> WebQueries.qs,
-    "pref" -> PrefQueries.qs,
-    "annot" -> AnnotQueries.qs)
-
-  def all: Seq[Q] = families.flatMap(_._2)
-
-  /** Non-portable fast paths retired from the registry (8 in round 15,
-    * judge r14 task 8; +2 in round 16, judge r15 task 5 registry
-    * offset): xxhash64/sketch/float-accumulation variants — plus the
-    * two md5 standalone dumps whose mechanism also runs inside an
-    * oracled e2e twin — with semantics certified by oracled twins in
-    * [[all]]. They no longer ride the correctness artifact (which stays
-    * 100% oracled); FastPathSpec runs every one of them each build, so
-    * a regression still turns the suite red. */
-  val fastPaths: Seq[Q] =
-    TextQueries.fastPaths ++ ExtQueries.fastPaths ++
-      GapQueries.fastPaths ++ SimilarityQueries.fastPaths ++
-      TrainQueries.fastPaths
-
-  /** Query names selected by a comma-separated family list (unknown
-    * family names are an error — a typo must not silently select
-    * nothing). */
-  def familyNames(spec: String): Set[String] = {
-    val wanted = spec.split(",").map(_.trim).filter(_.nonEmpty).toSet
-    val known = families.map(_._1).toSet
-    val unknown = wanted -- known
-    require(unknown.isEmpty,
-      s"unknown families ${unknown.mkString(",")}; known: ${known.mkString(",")}")
-    families.filter(f => wanted(f._1)).flatMap(_._2.map(_.name)).toSet
-  }
+  val all: Seq[Q] =
+    CoreQueries.qs ++ ArrayTimeQueries.qs ++ TextQueries.qs ++
+      SimilarityQueries.qs ++ ExtQueries.qs ++ GapQueries.qs ++
+      TrainQueries.qs ++ RetrievalQueries.qs ++ WebQueries.qs ++
+      PrefQueries.qs ++ AnnotQueries.qs
 
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
     all.map(q => q.name -> q.fn).toMap
 
   lazy val oracleSql: Map[String, String] =
-    all.flatMap(q => q.oracle.map(q.name -> _)).toMap
+    all.map(q => q.name -> q.oracle).toMap
 
   def byName(name: String): (SparkSession, String) => DataFrame =
     queries(name)
+
+  /** The queries a main was asked for: every query in registry order
+    * when `names` is empty, else `names` in the given order. Any unknown
+    * name fails the one `require`, which lists all of them, so a typo
+    * never silently selects nothing. */
+  def resolve(names: Seq[String]): Seq[Q] =
+    if (names.isEmpty) all
+    else {
+      val unknown = names.filterNot(queries.contains)
+      require(unknown.isEmpty, s"not registry queries: ${unknown.mkString(", ")}")
+      val index = all.map(q => q.name -> q).toMap
+      names.map(index)
+    }
 }

@@ -185,8 +185,8 @@ object SimilarityQueries {
     // index: train centroids on the t0 slice (even vec_ids), assign BOTH
     // slices, and compare per-cell populations. A t1 histogram diverging
     // from t0's says the data distribution moved and the index needs
-    // retraining (the batch counterpart of Streams.streamingIvfAssign's
-    // periodic-retrain contract). Counts only — the consumer picks the
+    // retraining (the periodic-retrain contract of in-stream
+    // Similarity.ivfAssign). Counts only — the consumer picks the
     // divergence metric. Oracle replays the md5-seeded Lloyd chain
     // trained on the SAME t0 subset, then the full assignment.
     Q("sim_ivf_drift",
@@ -576,8 +576,8 @@ object SimilarityQueries {
     // dyadic rational both engines compute identically): the oracle
     // re-derives planes, round-6 dot-product signs, and the bucket bit
     // packing — certifying the sign-LSH mechanism itself. The seed-42
-    // gaussian family stays the fast path (`sim_ann_lsh_buckets`, rows
-    // check + recall specs).
+    // gaussian family (Similarity.hyperplanes) is pinned by the recall
+    // specs.
     Q("sim_lsh_buckets_md5",
       """WITH v AS (SELECT vec_id, unnest(CAST(embedding AS DOUBLE[])) AS x,
         |    generate_subscripts(embedding, 1) AS i FROM embeddings),
@@ -754,61 +754,5 @@ object SimilarityQueries {
           .select(col("vec_id").as("cand_id"), col("embedding")),
         "probe_id", "cand_id", "embedding", k = 4)
         .orderBy("probe_id")
-    })
-
-  /** xxhash64-seeded LSH fast path RETIRED from the registry (round 15,
-    * judge r14 task 8): sign-plane bucketing oracled on the md5-derived
-    * twin sim_lsh_buckets_md5; recall-vs-brute-force in SimilaritySpec.
-    * Exercised every build by FastPathSpec. */
-  val fastPaths: Seq[Q] = Seq(
-    Q.noOracle("sim_ann_lsh_buckets") { (s, dir) =>
-      val planes = Similarity.hyperplanes(nBits = 8, dim = 64)
-      Tables(s, dir, "embeddings")
-        .select(Similarity.lshBucket(col("embedding"), planes).as("bucket"))
-        .groupBy("bucket").agg(count(lit(1)).as("n"))
-        .orderBy("bucket")
-    },
-
-    // PQ encode (md5-seeded codebooks, argmin over rounded subspace L2)
-    // — RETIRED from the registry in round 16 (judge r15 task 5,
-    // registry-growth offset): the surviving oracled twin
-    // `pq_adc_topk_md5` runs the identical seedCodebooks → encode chain
-    // before its ADC stage and its oracle re-derives the slicing,
-    // distances, and argmin tie policy, so the standalone encode dump
-    // certified no extra mechanism. Lloyd training + recall stay pinned
-    // in QuantizationSpec.
-    Q.noOracle("pq_encode_md5") { (s, dir) =>
-      val e = Tables(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      val cb = graft.ops.Quantization.seedCodebooks(
-        e, "vec_id", "v", m = 4, dim = 64, ksub = 8,
-        seedHash = c => md5(c.cast("string")))
-      graft.ops.Quantization.encode(
-        e.filter(col("vec_id") < 200), "v", cb, m = 4, dim = 64, distRound = 6)
-        .select(col("vec_id"), posexplode(col("codes")).as(Seq("m", "code")))
-        .orderBy("vec_id", "m")
-    },
-
-    // Label-blocked brute-force near-dup PAIR dump — RETIRED from the
-    // registry in round 18 (judge r17 task 1, registry-growth offset for
-    // `dedup_ann_ivf_e2e`): its exact mechanism — within-label pairwise
-    // round-3 cosine at the 0.35 gate — runs VERBATIM as the pair stage
-    // of the surviving oracled twin `dedup_embed_clusters` (whose oracle
-    // re-derives the pairs independently before clustering them), so the
-    // standalone pair dump certified no extra mechanism. Exercised every
-    // build by FastPathSpec.
-    Q.noOracle("dedup_embedding") { (s, dir) =>
-      // fannedOut: within-label pairwise cosine is CPU-dense and the
-      // single-file test table would otherwise scan as one partition
-      val e = Tables.fannedOut(s, dir, "embeddings")
-        .select(col("label"), col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      val a = e.select(col("label"), col("vec_id").as("id_a"), col("v").as("va"))
-      val b = e.select(col("label"), col("vec_id").as("id_b"), col("v").as("vb"))
-      a.join(b, Seq("label"))
-        .filter(col("id_a") < col("id_b"))
-        .withColumn("sim", round(Similarity.cosine(col("va"), col("vb")), 3) + lit(0))
-        .filter(col("sim") >= 0.35)
-        .select("id_a", "id_b", "sim")
-        .orderBy("id_a", "id_b")
     })
 }

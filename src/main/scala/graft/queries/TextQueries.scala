@@ -613,8 +613,8 @@ object TextQueries {
     // organic non-dup arrivals) is matched per row: in-row
     // fingerprinting, rare-fp candidate join (rarity = STORE df only —
     // arrivals never mutate the index), exact integer full-set Jaccard
-    // verify at the measured 50% threshold. Streams.streamingWinnowGate
-    // runs this exact plan per micro-batch (stream==batch pinned in
+    // verify at the measured 50% threshold. Streams.eachFileBatch runs
+    // this exact plan per micro-batch (stream==batch pinned in
     // MergeStreamSpec). Expected: every injected copy matches its
     // original; clean arrivals pass the gate (organic candidates die in
     // verify at 3–29% Jaccard).
@@ -863,10 +863,9 @@ object TextQueries {
     // (one appended token) → 60-bit simhash → 12-bit prefix buckets →
     // in-bucket pairs with hamming <= 8. The ONE registry certifier of
     // the whole SimHash dedup path since round 16: the oracle
-    // re-derives the per-bit ±1 majority-vote signatures itself, so the
-    // standalone signature dump (dedup_simhash_md5) retired to the
-    // FastPathSpec roster (judge r15 task 5 registry offset); the
-    // xxhash64 bucket histogram lives there too. Pairs form inside
+    // re-derives the per-bit ±1 majority-vote signatures itself; the
+    // xxhash64 SimHash family's Hamming properties are pinned in
+    // TextSpec. Pairs form inside
     // buckets only — the bucket groupBy is the one shuffle, no
     // all-pairs at any scale.
     Q("dedup_simhash_pairs_md5",
@@ -1722,66 +1721,6 @@ object TextQueries {
         .withColumn("payload", col("text").cast("binary"))
         .select(col("doc_id"), octet_length(col("payload")).as("n_bytes"),
           md5(col("payload")).as("digest"))
-        .orderBy("doc_id")
-    })
-
-  /** Non-portable fast paths RETIRED from the registry (round 15, judge
-    * r14 task 8): the xxhash64 production variants whose semantics are
-    * certified by the oracled md5 twins above. Exercised every build by
-    * FastPathSpec (rows>0 + mechanism checks) instead of riding the
-    * correctness artifact as permanent `no_oracle` rows. */
-  val fastPaths: Seq[Q] = Seq(
-
-    // MinHash-LSH candidate pairs (hash-seeded; verified in MinHashSpec
-    // against exact Jaccard; oracled twin dedup_minhash_md5).
-    Q.noOracle("dedup_minhash_lsh") { (s, dir) =>
-      Text.minhashCandidates(
-        Tables.fannedOut(s, dir, "documents"), "doc_id", "text",
-        k = 4, numHashes = 32, bands = 16)
-        .orderBy("id_a", "id_b")
-    },
-
-    // SimHash signatures + bucket histogram (xxhash64 fast path; the
-    // BIT LOGIC is oracled exactly by dedup_simhash_pairs_md5, Hamming
-    // properties in TextSpec).
-    Q.noOracle("dedup_simhash_buckets") { (s, dir) =>
-      Tables.fannedOut(s, dir, "documents")
-        .select(transform(split(col("text"), " ", -1), t => xxhash64(t)).as("th"))
-        .select(graft.functions.GraftExtensions.simhash64(col("th")).as("sh"))
-        .select(shiftrightunsigned(col("sh"), 48).as("bucket"))
-        .groupBy("bucket").agg(count(lit(1)).as("n"))
-        .orderBy("bucket")
-    },
-
-    // SimHash signature derivation over the portable md5 token family —
-    // RETIRED from the registry in round 16 (judge r15 task 5,
-    // registry-growth offset): the identical per-bit ±1 majority-vote
-    // logic over the identical md5 hashes is INSIDE the surviving
-    // oracled twin `dedup_simhash_pairs_md5` (signatures → buckets →
-    // Hamming-verified pairs), so the standalone signature dump added a
-    // registry row without adding certified mechanism.
-    Q.noOracle("dedup_simhash_md5") { (s, dir) =>
-      Tables(s, dir, "documents")
-        .filter(col("doc_id") < 300)
-        .select(col("doc_id"),
-          transform(split(col("text"), " ", -1),
-            t => conv(substring(md5(t), 1, 15), 16, 10).cast("long")).as("th"))
-        .select(col("doc_id"),
-          graft.functions.GraftExtensions.simhash64(col("th")).as("sh"))
-        .orderBy("doc_id")
-    },
-
-    // Rolling-hash fingerprint (Rabin–Karp polynomial fold) — RETIRED
-    // from the registry in round 17 (judge r16 task 4 registry offset):
-    // the identical (acc·31 + byte) mod 1e9+7 fold runs verbatim inside
-    // the surviving oracled CDC twins (`dedup_cdc` / `t_cdc_bytes`,
-    // whose DuckDB oracles replay the same fold per 8-byte window), so
-    // the standalone whole-text dump added a registry row without
-    // adding certified mechanism.
-    Q.noOracle("t_rolling_hash") { (s, dir) =>
-      Tables(s, dir, "documents")
-        .filter(col("doc_id") < 200)
-        .select(col("doc_id"), Text.rollingHash(col("text")).as("rh"))
         .orderBy("doc_id")
     })
 }

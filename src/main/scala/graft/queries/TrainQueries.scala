@@ -78,7 +78,7 @@ object TrainQueries {
         |    AS dup_ratio
         |FROM tot LEFT JOIN dd USING (doc_id) ORDER BY doc_id""".stripMargin) {
       (s, dir) =>
-        // persistSpans handle (the t_scrub_spans route): the span stream
+        // persistSpans handle: the span stream
         // has THREE consumers here (dup-hash aggregate, per-doc total,
         // per-doc dup count) — one materialized explode instead of three
         // derivations; fannedOut because the span-hash explode is
@@ -2084,53 +2084,6 @@ object TrainQueries {
        |    / (COUNT(*) * 2.0)) / 10000.0 AS subwords_per_token
        |FROM dt JOIN v$bpeRounds ON v$bpeRounds.word = dt.word
        |GROUP BY dt.doc_id ORDER BY dt.doc_id""".stripMargin
-
-  /** Float-accumulation fast path RETIRED from the registry (round 15,
-    * judge r14 task 8): one-pass typed-Aggregator covariance whose
-    * merge-order FP round-off keeps it off the hash compare; the
-    * explode form sim_pca_cov carries the oracle and TrainSpec pins
-    * 6-decimal agreement between the two paths. Exercised every build
-    * by FastPathSpec. */
-  val fastPaths: Seq[Q] = Seq(
-    Q.noOracle("sim_pca_cov_fast") { (s, dir) =>
-      Similarity.covarianceMatrixFast(Tables(s, dir, "embeddings"),
-          "embedding", dim = 64)
-        .select(col("i"), col("j"),
-          (round(col("cov"), 6) + lit(0.0)).as("cov"))
-        .orderBy("i", "j")
-    },
-
-    // Stratified doc-keyed hash split dump — RETIRED from the registry
-    // in round 17 (judge r16 stretch, registry offset for
-    // `pipe_split_decontam`): the identical Sampling.hashSplit(doc_id)
-    // mechanism runs verbatim as the `doc` protocol INSIDE the
-    // surviving oracled composition (which also measures exactly why
-    // the doc-keyed split is the wrong production default — every
-    // within-site dup family leaks across its splits).
-    Q.noOracle("pipe_split") { (s, dir) =>
-      Sampling.hashSplit(Tables(s, dir, "documents"), "doc_id", "sp0",
-          fracTrain = 0.9, fracVal = 0.05)
-        .groupBy("source", "split")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(size(split(col("text"), " ", -1)).cast("long")).as("n_tokens"))
-        .orderBy("source", "split")
-    },
-
-    // Fixed-k duplicated-span scrub — RETIRED from the registry in
-    // round 18 (judge r17 stretch, registry offset for
-    // `pipe_suffix_scrub`): both of its mechanisms run verbatim inside
-    // surviving oracled twins — the fixed-k dup-hash span source is
-    // `dedup_span_ngrams`'s (duplicatedSpanStats, same spanHashes
-    // explode + HAVING >= 2), and the covered-position rebuild is the
-    // shared `rebuildScrubbed` tail the oracled composition executes.
-    // TrainSpec keeps the persisted-equals-plain pin and the
-    // minLen = 0 equality (scrubSuffixSpans at minLen 0 == this).
-    Q.noOracle("t_scrub_spans") { (s, dir) =>
-      Text.scrubDuplicatedSpansWithHandle(
-          Tables.fannedOut(s, dir, "documents"),
-          "doc_id", "text", k = 3, persistSpans = true)._1
-        .orderBy("doc_id")
-    })
 
   /** Per-doc encode oracle: per-word best cost (unrounded) joined back
     * to the per-document token stream, summed and rounded once — the

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 import graft.ops.MergeOps
 
 /** Streaming/incremental semantics (SURVEY.md §2.11). The reference has no
@@ -18,6 +19,18 @@ import graft.ops.MergeOps
   * At scale the file source tracks processed files in the checkpoint (the
   * role the reference's DB file-list plays), and each micro-batch MERGE
   * shuffles only on the upsert key.
+  *
+  * A batch operator whose plan is valid on an unbounded input (a per-row
+  * projection such as [[graft.ops.Similarity.ivfAssign]],
+  * [[graft.ops.Text.cdcChunks]] or [[graft.ops.Corrupt.fimTransform]]; a
+  * bounded-state aggregation such as [[graft.ops.Sketches.cmsSketch]],
+  * [[graft.ops.Preference.winMatrix]], [[graft.ops.Sampling.doremiModelDF]]
+  * or [[graft.ops.Annotate.goldCounts]]) is called directly on the
+  * streaming DataFrame: it runs through the same Catalyst plan, and
+  * MergeStreamSpec pins stream == batch for each. A batch operator whose
+  * plan is not valid on a stream (per-item windows, per-group totals) runs
+  * per micro-batch inside [[eachFileBatch]]. This object keeps only the
+  * operators with a streaming plan of their own.
   */
 object Streams {
 
@@ -27,113 +40,44 @@ object Streams {
                   key: String): DataFrame =
     candidates.join(ingested.select(key).distinct(), Seq(key), "left_anti")
 
-  /** Continuous ingest: watch `sourceDir` for new parquet files, MERGE
-    * each micro-batch into `tableDir` with version-guarded upsert
-    * semantics. Returns the running query (caller awaits/stops).
-    *
-    * `transactional = true` routes each micro-batch through the
-    * [[graft.ops.TxLog]] commit log instead of the single-writer swap:
-    * batches become numbered commits, concurrent writers (another stream,
-    * a batch backfill) serialize via optimistic concurrency, and readers
-    * only ever see committed snapshots (`TxLog.read`). Version-guarded
-    * MERGE makes replayed micro-batches idempotent, so restart after a
-    * mid-batch failure converges to the same table. */
+  /** The micro-batch loop over a parquet file source: files under
+    * `sourceDir` not yet recorded in `checkpointDir` are read with
+    * `schema`, and `f(batch, batchId)` runs once per micro-batch under
+    * `Trigger.AvailableNow`, which drains the backlog and stops. The
+    * checkpoint is what makes a restart resume after the last committed
+    * batch, so `f` should be idempotent (a version-guarded MERGE, a
+    * keyed TxLog commit, an append of a pure function of the batch).
+    * AvailableNow otherwise drains the whole backlog as ONE batch;
+    * `maxFilesPerTrigger` caps the files per micro-batch, which is how a
+    * backfill still runs `f` once per file group. Returns the running
+    * query (caller awaits/stops). */
+  def eachFileBatch(spark: SparkSession, sourceDir: String,
+                    checkpointDir: String, schema: StructType,
+                    maxFilesPerTrigger: Option[Int] = None)(
+                    f: (DataFrame, Long) => Unit): StreamingQuery = {
+    val reader = spark.readStream.schema(schema)
+    maxFilesPerTrigger.fold(reader)(n =>
+        reader.option("maxFilesPerTrigger", n.toString))
+      .parquet(sourceDir)
+      .writeStream
+      .option("checkpointLocation", checkpointDir)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch(f)
+      .start()
+  }
+
+  /** Continuous ingest: [[eachFileBatch]] over `sourceDir`, MERGING each
+    * micro-batch into `tableDir` with version-guarded upsert semantics
+    * ([[graft.ops.MergeOps.mergeParquet]]); replayed batches are no-ops.
+    * For a transactional table, pass [[graft.ops.TxLog.commitMerge]] to
+    * [[eachFileBatch]] instead. */
   def incrementalIngest(spark: SparkSession, sourceDir: String,
                         tableDir: String, checkpointDir: String,
-                        schema: org.apache.spark.sql.types.StructType,
-                        keys: Seq[String], versionCol: String,
-                        transactional: Boolean = false): StreamingQuery =
-    spark.readStream
-      .schema(schema)
-      .parquet(sourceDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (transactional)
-          graft.ops.TxLog.commitMerge(spark, tableDir, batch, keys, versionCol): Unit
-        else
-          MergeOps.mergeParquet(spark, tableDir, batch, keys, versionCol)
-      }
-      .start()
-
-  /** [[incrementalIngest]] (transactional) with inline maintenance —
-    * the auto-OPTIMIZE serving shape: every micro-batch commit leaves a
-    * file tail, and once the snapshot's file count exceeds
-    * `compactAtFiles` the SAME foreachBatch bin-packs it via
-    * [[graft.ops.TxLog.commitCompact]] before the next trigger. The
-    * trigger check reads file METADATA only (`snapshotFiles`), so quiet
-    * batches pay nothing; compaction itself is a separate numbered
-    * commit, so a reader never sees a partially-packed table and a
-    * crash between merge and compact just leaves the compaction for the
-    * next batch — idempotent by construction. */
-  def incrementalIngestCompacting(spark: SparkSession, sourceDir: String,
-                                  tableDir: String, checkpointDir: String,
-                                  schema: org.apache.spark.sql.types.StructType,
-                                  keys: Seq[String], versionCol: String,
-                                  compactAtFiles: Int = 64,
-                                  targetFileBytes: Long = 128L * 1024 * 1024,
-                                  maxFilesPerTrigger: Option[Int] = None)
-      : StreamingQuery = {
-    val reader0 = spark.readStream.schema(schema)
-    // AvailableNow otherwise drains the whole backlog as ONE batch —
-    // capping files per trigger is how a backfill still exercises the
-    // merge→check→compact cycle per micro-batch
-    val reader = maxFilesPerTrigger.fold(reader0)(n =>
-      reader0.option("maxFilesPerTrigger", n.toString))
-    reader
-      .parquet(sourceDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ops.TxLog.commitMerge(spark, tableDir, batch, keys, versionCol)
-        if (graft.ops.TxLog.snapshotFiles(tableDir).exists(_._1 > compactAtFiles))
-          graft.ops.TxLog.commitCompact(spark, tableDir, targetFileBytes): Unit
-      }
-      .start()
-  }
-
-  /** [[incrementalIngestCompacting]] with the full maintenance loop —
-    * merge → bin-pack → Z-ORDER cluster, the streaming auto-OPTIMIZE
-    * shape of a clustered lakehouse table: when the micro-batch commit
-    * leaves a file tail past `clusterAtFiles`, the same foreachBatch
-    * runs [[graft.ops.TxLog.commitCluster]] instead of a plain compact
-    * — the Z-order rewrite bin-packs AND re-sorts in one rewrite, and
-    * writes the per-file min/max `_stats` manifest INTO the snapshot,
-    * so [[graft.ops.TxLog.prunedRead]] range scans prune files again
-    * immediately after maintenance. Quiet batches pay one file-METADATA
-    * check; clustering is its own numbered commit (crash between merge
-    * and cluster just defers it — idempotent, same as the compacting
-    * form). Trade-off vs [[incrementalIngestCompacting]]: the rewrite
-    * shuffles (range partition on the Z-value) where bin-packing is a
-    * narrow coalesce — pay it when readers range-filter the clustered
-    * columns, which is exactly when the manifest earns its keep. */
-  def incrementalIngestClustering(spark: SparkSession, sourceDir: String,
-                                  tableDir: String, checkpointDir: String,
-                                  schema: org.apache.spark.sql.types.StructType,
-                                  keys: Seq[String], versionCol: String,
-                                  zcols: Seq[String], bits: Int = 8,
-                                  clusterAtFiles: Int = 64,
-                                  outPartitions: Int = 0,
-                                  maxFilesPerTrigger: Option[Int] = None)
-      : StreamingQuery = {
-    val reader0 = spark.readStream.schema(schema)
-    val reader = maxFilesPerTrigger.fold(reader0)(n =>
-      reader0.option("maxFilesPerTrigger", n.toString))
-    reader
-      .parquet(sourceDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ops.TxLog.commitMerge(spark, tableDir, batch, keys, versionCol)
-        if (graft.ops.TxLog.snapshotFiles(tableDir).exists(_._1 > clusterAtFiles))
-          graft.ops.TxLog.commitCluster(spark, tableDir, zcols, bits,
-            outPartitions = outPartitions): Unit
-      }
-      .start()
-  }
+                        schema: StructType,
+                        keys: Seq[String], versionCol: String): StreamingQuery =
+    eachFileBatch(spark, sourceDir, checkpointDir, schema) { (batch, _) =>
+      MergeOps.mergeParquet(spark, tableDir, batch, keys, versionCol)
+    }
 
   /** Custom stateful sessionization via flatMapGroupsWithState: events
     * group into sessions closed after `gapSeconds` of event-time
@@ -250,42 +194,6 @@ object Streams {
         .getField("keep")),
       tsCol, textCol, horizon)
 
-  /** Streaming count-min sketch maintenance: the batch
-    * [[graft.ops.Sketches.cmsSketch]] plan IS a valid streaming
-    * aggregation, so this is a delegation with a contract, not new code —
-    * the aggregation state is the sketch itself, ≤ depth·width counter
-    * rows, CONSTANT-size on an unbounded token stream (the streaming
-    * analogue of the batch entry's "sketch-sized shuffle at any corpus
-    * size"). Run in complete (or update) output mode — no watermark is
-    * needed because state never grows; each trigger re-emits the grid
-    * for a downstream [[graft.ops.Sketches.cmsEstimate]] join.
-    * Stream-equals-batch is pinned in MergeStreamSpec. */
-  def streamingCmsSketch(toks: DataFrame, tokCol: String,
-                         depth: Int = 4, width: Int = 64): DataFrame =
-    graft.ops.Sketches.cmsSketch(toks, tokCol, depth, width)
-
-  /** Streaming IVF index maintenance: assign arriving embeddings to
-    * their inverted-file cell as they stream in — the incremental-add
-    * half of the ANN story (batch trains the centroids; the stream keeps
-    * the index current without retraining). The batch
-    * [[graft.ops.Similarity.ivfAssign]] is already a STATELESS per-row
-    * projection against a packed broadcast centroid array (zero
-    * shuffles), so it is directly valid on an unbounded stream — this is
-    * a delegation with a contract, not new code, the
-    * [[streamingCmsSketch]] pattern. Append-mode output lands each
-    * vector in its cell partition (`partitionBy(centroidId)` at the
-    * sink) for cell-pruned search; centroid DRIFT handling stays a
-    * periodic batch retrain + whole-index rewrite (the
-    * [[compactNearDups]] role), because re-assignment needs every
-    * vector, not the arriving one. Stream-equals-batch is pinned in
-    * MergeStreamSpec. */
-  def streamingIvfAssign(vecs: DataFrame, vecCol: String,
-                         centroids: DataFrame,
-                         centroidId: String = "centroid_id",
-                         simRound: Int = -1): DataFrame =
-    graft.ops.Similarity.ivfAssign(vecs, vecCol, centroids, centroidId,
-      simRound = simRound)
-
   /** Streaming retrieval-index statistics maintenance: the BM25/TF-IDF
     * corpus statistics (per-term document frequency `df` and collection
     * frequency `cf`) kept current as documents stream in — the
@@ -310,24 +218,6 @@ object Streams {
       .groupBy("term")
       .agg(count(lit(1)).as("df"), sum("tf").as("cf"))
   }
-
-  /** Streaming CDC chunk extraction: content-defined chunk rows for
-    * documents as they arrive — the ingest-time half of the chunk-level
-    * dedup index ([[graft.ops.Text.cdcChunks]] / `dedup_cdc`). The chunk
-    * pass is STATELESS per document (a native rolling-hash cut expression
-    * plus a generator), so the batch plan is directly valid on an
-    * unbounded stream — a delegation with a contract, the
-    * [[streamingCmsSketch]] pattern. Append-mode chunk rows feed an
-    * idempotent chunk-store MERGE (keyed on chunk_md5) or a downstream
-    * occurrence aggregation; cross-corpus dedup DECISIONS stay a periodic
-    * compaction ([[compactNearDups]] role) because they need state
-    * proportional to the chunk index, not the arriving row.
-    * Stream-equals-batch is pinned in MergeStreamSpec. */
-  def streamingCdcChunks(docs: DataFrame, idCol: String, textCol: String,
-                         window: Int = 8, divisor: Int = 64,
-                         minSize: Int = 1, maxSize: Int = Int.MaxValue): DataFrame =
-    graft.ops.Text.cdcChunks(docs, idCol, textCol, window, divisor,
-      minSize, maxSize)
 
   /** Periodic near-dup COMPACTION over a TxLog-committed document store —
     * the batch half of streaming curation that [[streamingCurate]]'s
@@ -435,8 +325,7 @@ object Streams {
     * stream applies, the batch trains). The batch scorer
     * [[graft.ops.Curation.classifierScore]] is a STATELESS per-row
     * aggregate HOF over a literal weight array — zero shuffles, no
-    * state store, directly valid on an unbounded stream (the
-    * [[streamingCmsSketch]] delegation-with-a-contract pattern).
+    * state store, directly valid on an unbounded stream.
     * Append-mode rows carry `(p, keep)` for a downstream filter or
     * idempotent MERGE. Stream-equals-batch is pinned in
     * MergeStreamSpec. */
@@ -457,18 +346,13 @@ object Streams {
     * periodic batch job over the accumulated scored store, the same
     * split as every learned model here: the stream applies, the batch
     * trains/selects. Stream==batch pinned in MergeStreamSpec. */
-  /** Streaming fill-in-the-middle transform: the FIM rendering
-    * ([[graft.ops.Corrupt.fimTransform]]) is a pure per-row projection
-    * (hash-chosen cuts, slice, concat — no explode, no window, no
-    * shuffle), so it is directly valid on an unbounded stream in append
-    * mode — the [[streamingCmsSketch]] delegation-with-a-contract
-    * pattern. Span corruption, by contrast, regroups exploded tokens by
-    * doc and belongs in the [[incrementalIngest]] foreachBatch form
-    * (each doc arrives as ONE row, so per-micro-batch application is
-    * exact). Stream==batch pinned in MergeStreamSpec. */
-  def streamingFim(docs: DataFrame, idCol: String,
-                   textCol: String): DataFrame =
-    graft.ops.Corrupt.fimTransform(docs, idCol, textCol)
+  def streamingDsirScore(docs: DataFrame, textCol: String,
+                         logRatios: Seq[Double]): DataFrame =
+    docs
+      .withColumn("n_tokens", graft.ops.Curation.dsirTokenCount(col(textCol)))
+      .withColumn("log_weight",
+        round(graft.ops.Curation.dsirScore(col(textCol), logRatios), 4)
+          + lit(0))
 
   /** Streaming categorical-domain monitoring: arriving rows whose
     * category value the STORED reference domain has never seen pass
@@ -485,196 +369,18 @@ object Streams {
       broadcast(domain.select(col(domain.columns.head).as(c))),
       Seq(c), "left_anti")
 
-  /** Streaming Bradley–Terry win-matrix maintenance: arriving game
-    * outcomes (winner, loser) fold into the stored entity² matrix — the
-    * train-side half of the preference-leaderboard split
-    * ([[graft.ops.Preference.btFromMatrix]] refits from the store at
-    * refresh cadence, never replaying the game log). The count is
-    * ADDITIVE and the single stateful operator's state is
-    * entity²-bounded (entities = models under comparison — tens)
-    * regardless of stream length, the [[streamingIndexStats]] contract.
-    * Update-mode rows upsert into the matrix store; stream==batch is
-    * pinned in MergeStreamSpec. */
-  def streamingWinMatrix(games: DataFrame): DataFrame =
-    graft.ops.Preference.winMatrix(games)
-
-  /** Streaming DoReMi model maintenance: arriving documents fold into
-    * the stored (domain, bucket) token histogram
-    * ([[graft.ops.Sampling.doremiModelDF]]'s schema) — the train-side
-    * half of the mixture-reweighting split, completing the last
-    * batch-trains/stream-applies pair that lacked a streaming twin
-    * (judge r15 task 8). The count is ADDITIVE and the single stateful
-    * aggregation's state is domains×buckets-bounded REGARDLESS of
-    * stream length or vocabulary growth (tokens hash into the bounded
-    * bucket space before any state is kept — the whole point of the
-    * bounded stored model); update-mode rows upsert into the histogram
-    * store, and [[graft.ops.Sampling.doremiFromModel]] refits the
-    * mixture weights from the store at refresh cadence, never replaying
-    * the corpus — the [[streamingWinMatrix]] contract exactly.
-    * Stream==batch pinned in MergeStreamSpec. */
-  def streamingDoremiModel(docs: DataFrame, domainCol: String,
-                           textCol: String, buckets: Int = 512): DataFrame =
-    graft.ops.Sampling.doremiModelDF(docs, domainCol, textCol, buckets)
-
-  /** Streaming gold-question scoring: each arriving batch of crowd
-    * labels joins the (bounded, broadcast) gold table and folds into
-    * the stored per-worker (n_gold, n_correct) counts — ADDITIVE, so
-    * the store appends without read-modify-write and
-    * [[graft.ops.Annotate.accFromGoldCounts]] refits the accuracy on
-    * read (the winMatrix / btFromMatrix split). State is
-    * annotator-roster-bounded regardless of stream length; stream ==
-    * batch pinned in MergeStreamSpec. */
-  def streamingWorkerGold(labels: DataFrame, gold: DataFrame,
-                          itemCol: String, workerCol: String,
-                          labelCol: String, goldItemCol: String,
-                          goldLabelCol: String): DataFrame =
-    graft.ops.Annotate.goldCounts(labels, gold, itemCol, workerCol,
-      labelCol, goldItemCol, goldLabelCol)
-
-  /** Streaming Dawid–Skene labeling from a STORED model
-    * ([[graft.ops.Annotate.dsModelDF]]) — the crowd-label twin of
-    * [[streamingLmScore]]'s batch-trains/stream-applies split: each
-    * arriving rating batch is labeled by one E-step against the stored
-    * priors + confusion (broadcast join, bounded per-item window), the
-    * EM never replays, and the model refreshes only at refit cadence.
-    * The E-step's per-item aggregation + window make the plan
-    * unsupported on a raw streaming DataFrame, so this is the
-    * foreachBatch shape ([[streamingLmScore]]'s contract) — each item's
-    * ratings must arrive within one micro-batch; stream==batch pinned
-    * in MergeStreamSpec. */
-  def streamingDsLabel(spark: SparkSession, sourceDir: String,
-                       outDir: String, checkpointDir: String,
-                       schema: org.apache.spark.sql.types.StructType,
-                       model: DataFrame, itemCol: String,
-                       workerCol: String, labelCol: String): StreamingQuery =
-    spark.readStream
-      .schema(schema)
-      .parquet(sourceDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ops.Annotate.dsServe(model, batch, itemCol, workerCol,
-            labelCol)
-          .write.mode("append").parquet(outDir)
-      }
-      .start()
-
-  def streamingDsirScore(docs: DataFrame, textCol: String,
-                         logRatios: Seq[Double]): DataFrame =
-    docs
-      .withColumn("n_tokens", graft.ops.Curation.dsirTokenCount(col(textCol)))
-      .withColumn("log_weight",
-        round(graft.ops.Curation.dsirScore(col(textCol), logRatios), 4)
-          + lit(0))
-
-  /** Streaming LM quality-gate scoring from a STORED bigram model
-    * ([[graft.ops.Text.bigramModelDF]]) — the LM twin of
-    * [[streamingClassifierScore]]'s batch-trains/stream-applies split.
-    * Unlike the classifier's 64 literal weights, the bigram model is
-    * vocab²-BOUNDED, far past literal size, so scoring stays the
-    * stream-static join plan: per-row bigram explode (stateless
-    * flatMap), left join to the static pair table, broadcast fallbacks.
-    * The per-doc re-aggregation groups by the doc key — each document
-    * is ONE arriving row, so its events never span micro-batches and
-    * the aggregate carries no cross-batch state in foreachBatch form;
-    * this helper is therefore exposed as the batch scorer applied per
-    * micro-batch (the [[incrementalIngest]] foreachBatch pattern), and
-    * MergeStreamSpec pins stream==batch. */
-  def streamingLmScore(spark: SparkSession, sourceDir: String, outDir: String,
-                       checkpointDir: String,
-                       schema: org.apache.spark.sql.types.StructType,
-                       idCol: String, textCol: String,
-                       model: DataFrame): StreamingQuery =
-    spark.readStream
-      .schema(schema)
-      .parquet(sourceDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ops.Text.bigramNllFromModel(batch, idCol, textCol, model)
-          .write.mode("append").parquet(outDir)
-      }
-      .start()
-
   /** Streaming winnow fingerprinting: each arriving doc carries its
     * fingerprint set (one fused O(n) pass, stateless — no state store,
     * valid unbounded). The serving shape: arrivals fingerprint
     * in-stream, the fingerprint→doc candidate index lives in the batch
     * layer ([[graft.ops.Text.winnowPairs]] over the accumulated store),
-    * exactly the [[streamingIvfAssign]] split of per-row assignment
-    * from corpus-wide structure. Stream==batch pinned in
-    * MergeStreamSpec. */
+    * the same split of per-row assignment from corpus-wide structure as
+    * in-stream [[graft.ops.Similarity.ivfAssign]]. Stream==batch pinned
+    * in MergeStreamSpec. */
   def streamingWinnow(docs: DataFrame, textCol: String,
                       k: Int = 5, w: Int = 8): DataFrame =
     docs.withColumn("fps",
       graft.ops.Text.winnowFingerprints(col(textCol), k, w))
-
-  /** Streaming incremental winnow near-dup gate (judge r13 task 5):
-    * each arriving micro-batch is matched against a STORED corpus
-    * fingerprint index ([[graft.ops.Text.winnowIndex]], built by a
-    * periodic batch job — the batch-trains/stream-applies split of
-    * every stored model here) via
-    * [[graft.ops.Text.winnowGateFromIndex]]: in-row fingerprinting →
-    * rare-fp candidate join → exact integer full-set Jaccard verify.
-    * foreachBatch (the [[streamingLmScore]] shape) because the gate
-    * aggregates per (arrival, stored) pair — each arriving doc is ONE
-    * row, so the aggregation is complete within its micro-batch and
-    * the per-batch plan equals the batch plan by construction; matched
-    * pairs append to `outDir`, keepers are the arrivals without a row
-    * (anti-join downstream). Stream==batch pinned in MergeStreamSpec. */
-  /** Streaming corpus-drift scoring (judge r14 task 6): each arriving
-    * micro-batch is scored against a STORED reference token histogram
-    * via [[graft.ops.Validation.jsDrift]] — the batch-trains/
-    * stream-applies split of every stored model here: the reference is
-    * FIXED (built by a periodic batch job; never rescanned at serving —
-    * pass a histogram READ FROM its store, not derived inline, or each
-    * micro-batch re-derives it), the term grid is (reference ∪ batch
-    * vocabulary) × groups — model-sized — and drift is a PER-GROUP
-    * statistic whose totals aggregate within the group, so as long as a
-    * group does not span micro-batches (the arriving unit IS the
-    * monitored slice) each batch's plan equals the batch plan by
-    * construction (the [[streamingWinnowGate]] foreachBatch shape).
-    * Rows append to `outDir` tagged with the micro-batch id.
-    * Stream==batch pinned in MergeStreamSpec. */
-  def streamingJsDrift(spark: SparkSession, sourceDir: String,
-                       outDir: String, checkpointDir: String,
-                       schema: org.apache.spark.sql.types.StructType,
-                       groupCol: String, textCol: String,
-                       refHist: DataFrame): StreamingQuery =
-    spark.readStream
-      .schema(schema)
-      .parquet(sourceDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ops.Validation.jsDrift(refHist, batch, groupCol, textCol)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(outDir)
-      }
-      .start()
-
-  def streamingWinnowGate(spark: SparkSession, sourceDir: String,
-                          outDir: String, checkpointDir: String,
-                          schema: org.apache.spark.sql.types.StructType,
-                          idCol: String, textCol: String,
-                          sets: DataFrame, rare: DataFrame,
-                          k: Int = 5, w: Int = 8, minShared: Int = 3,
-                          minJacPct: Int = 50): StreamingQuery =
-    spark.readStream
-      .schema(schema)
-      .parquet(sourceDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ops.Text.winnowGateFromIndex(batch, idCol, textCol,
-            sets, rare, k, w, minShared, minJacPct)
-          .write.mode("append").parquet(outDir)
-      }
-      .start()
 }
 
 final case class SessionState(startSec: Long, lastSec: Long, n: Long, sum: Double)

@@ -751,9 +751,9 @@ case class ShingleArray(child: Expression, k: Int)
 
 /** Content-defined chunk cuts: end positions (1-based, code points) of
   * rolling-hash-delimited chunks, the boundary scheme rsync/LBFS-style
-  * dedup builds on. A windowed Rabin–Karp hash (base 31, mod 1e9+7 — the
-  * [[graft.ops.Text.rollingHash]] family) runs over the last `window`
-  * code points; position `i >= window` is a cut when `H_i % divisor == 0`.
+  * dedup builds on. A windowed Rabin–Karp hash (base 31, mod 1e9+7)
+  * runs over the last `window` code points; position `i >= window` is
+  * a cut when `H_i % divisor == 0`.
   * Boundaries depend only on LOCAL content, so an insertion re-chunks
   * only the window around the edit — every downstream chunk keeps its
   * position-independent identity (the property fixed-size chunking

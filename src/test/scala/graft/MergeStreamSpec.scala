@@ -78,8 +78,10 @@ class MergeStreamSpec extends SparkSpec {
       .write.parquet(s"$srcDir/batch1")
     Seq(("k1", 2, "a2"), ("k3", 1, "c")).toDF("k", "ver", "v")
       .write.parquet(s"$srcDir/batch2")
-    val q = Streams.incrementalIngest(spark, s"$srcDir/*/", tableDir,
-      s"$base/ckpt", schema, Seq("k"), "ver", transactional = true)
+    val q = Streams.eachFileBatch(spark, s"$srcDir/*/", s"$base/ckpt",
+        schema) { (batch, _) =>
+      graft.ops.TxLog.commitMerge(spark, tableDir, batch, Seq("k"), "ver"): Unit
+    }
     q.awaitTermination(60000)
     // reads resolve through the commit log, not raw parquet
     val out = graft.ops.TxLog.read(spark, tableDir).get
@@ -106,10 +108,14 @@ class MergeStreamSpec extends SparkSpec {
     // actually fragments (the production state the trigger exists for)
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
     val q = try {
-      val q0 = Streams.incrementalIngestCompacting(spark, s"$srcDir/*/",
-        tableDir, s"$base/ckpt", schema, Seq("k"), "ver",
-        compactAtFiles = 3, targetFileBytes = 1L << 30,
-        maxFilesPerTrigger = Some(1))
+      // one file per micro-batch, so the backfill runs merge → check →
+      // compact once per file; compaction is its own numbered commit
+      val q0 = Streams.eachFileBatch(spark, s"$srcDir/*/", s"$base/ckpt",
+          schema, maxFilesPerTrigger = Some(1)) { (batch, _) =>
+        graft.ops.TxLog.commitMerge(spark, tableDir, batch, Seq("k"), "ver")
+        if (graft.ops.TxLog.snapshotFiles(tableDir).exists(_._1 > 3))
+          graft.ops.TxLog.commitCompact(spark, tableDir, 1L << 30): Unit
+      }
       q0.awaitTermination(60000); q0
     } finally spark.conf.set(
       "spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -248,8 +254,10 @@ class MergeStreamSpec extends SparkSpec {
       .write.parquet(s"$srcDir/batch2")
     // compaction before any commit: nothing to rewrite
     assert(Streams.compactNearDups(spark, tableDir, "doc_id", "text").isEmpty)
-    val q = Streams.incrementalIngest(spark, s"$srcDir/*/", tableDir,
-      s"$base/ckpt", schema, Seq("doc_id"), "ver", transactional = true)
+    val q = Streams.eachFileBatch(spark, s"$srcDir/*/", s"$base/ckpt",
+        schema) { (batch, _) =>
+      graft.ops.TxLog.commitMerge(spark, tableDir, batch, Seq("doc_id"), "ver"): Unit
+    }
     q.awaitTermination(60000)
     val vIngest = graft.ops.TxLog.currentVersion(tableDir).get._1
     val vCompact = Streams.compactNearDups(spark, tableDir, "doc_id", "text")
@@ -338,7 +346,7 @@ class MergeStreamSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val input = MemoryStream[(Long, String)]
-    val q = Streams.streamingCdcChunks(
+    val q = graft.ops.Text.cdcChunks(
         input.toDF().toDF("doc_id", "text"), "doc_id", "text")
       .writeStream.format("memory").queryName("cdc_out")
       .outputMode("append").start()
@@ -364,7 +372,7 @@ class MergeStreamSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val input = MemoryStream[String]
-    val q = Streams.streamingCmsSketch(
+    val q = graft.ops.Sketches.cmsSketch(
         input.toDF().toDF("tok"), "tok", depth = 4, width = 16)
       .writeStream.format("memory").queryName("cms_out")
       .outputMode("complete").start()
@@ -458,7 +466,7 @@ class MergeStreamSpec extends SparkSpec {
     val input = MemoryStream[(Long, Seq[Double])]
     // stateless per-row projection against the packed static centroids:
     // valid in append mode with no watermark, state-free by construction
-    val q = Streams.streamingIvfAssign(
+    val q = graft.ops.Similarity.ivfAssign(
         input.toDF().toDF("vec_id", "v"), "v", cents)
       .select("vec_id", "centroid_id")
       .writeStream.format("memory").queryName("ivf_assign_out")
@@ -564,8 +572,11 @@ class MergeStreamSpec extends SparkSpec {
         org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("text",
         org.apache.spark.sql.types.StringType)))
-    val q = Streams.streamingLmScore(spark, s"$srcDir/*/", s"$base/out",
-      s"$base/ckpt", schema, "doc_id", "text", model)
+    val q = Streams.eachFileBatch(spark, s"$srcDir/*/", s"$base/ckpt",
+        schema) { (batch, _) =>
+      graft.ops.Text.bigramNllFromModel(batch, "doc_id", "text", model)
+        .write.mode("append").parquet(s"$base/out")
+    }
     q.awaitTermination(60000)
     val streamed = spark.read.parquet(s"$base/out")
       .as[(Long, Long, Double)].collect().toSet
@@ -604,9 +615,12 @@ class MergeStreamSpec extends SparkSpec {
         org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("text",
         org.apache.spark.sql.types.StringType)))
-    val q = Streams.streamingWinnowGate(spark, s"$srcDir/*/", s"$base/out",
-      s"$base/ckpt", schema, "doc_id", "text", sets, rare,
-      k = 5, w = 4, minShared = 3, minJacPct = 50)
+    val q = Streams.eachFileBatch(spark, s"$srcDir/*/", s"$base/ckpt",
+        schema) { (batch, _) =>
+      graft.ops.Text.winnowGateFromIndex(batch, "doc_id", "text", sets, rare,
+          k = 5, w = 4, minShared = 3, minJacPct = 50)
+        .write.mode("append").parquet(s"$base/out")
+    }
     q.awaitTermination(60000)
     val streamed = spark.read.parquet(s"$base/out")
       .as[(Long, Long, Long, Int, Int)].collect().toSet
@@ -653,7 +667,7 @@ class MergeStreamSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val input = MemoryStream[(Long, String)]
-    val q = Streams.streamingFim(
+    val q = graft.ops.Corrupt.fimTransform(
         input.toDF().toDF("doc_id", "text"), "doc_id", "text")
       .writeStream.format("memory").queryName("fim_out")
       .outputMode("append").start()
@@ -665,7 +679,7 @@ class MergeStreamSpec extends SparkSpec {
     val streamed = spark.table("fim_out")
       .as[(Long, Long, Long, Long, String)].collect().toSet
     q.stop()
-    val batch = Streams.streamingFim(docs.toDF("doc_id", "text"),
+    val batch = graft.ops.Corrupt.fimTransform(docs.toDF("doc_id", "text"),
         "doc_id", "text")
       .as[(Long, Long, Long, Long, String)].collect().toSet
     assert(streamed == batch, "streamed FIM rows must equal batch")
@@ -702,7 +716,7 @@ class MergeStreamSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val input = MemoryStream[(String, String)]
-    val q = Streams.streamingWinMatrix(
+    val q = graft.ops.Preference.winMatrix(
         input.toDF().toDF("winner", "loser"))
       .writeStream.format("memory").queryName("bt_matrix")
       .outputMode("complete").start()
@@ -735,7 +749,7 @@ class MergeStreamSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val input = MemoryStream[(String, String)]
-    val q = Streams.streamingDoremiModel(
+    val q = graft.ops.Sampling.doremiModelDF(
         input.toDF().toDF("domain", "text"), "domain", "text",
         buckets = 64)
       .writeStream.format("memory").queryName("doremi_model")
@@ -793,8 +807,12 @@ class MergeStreamSpec extends SparkSpec {
         org.apache.spark.sql.types.StringType),
       org.apache.spark.sql.types.StructField("text",
         org.apache.spark.sql.types.StringType)))
-    val q = Streams.streamingJsDrift(spark, s"$srcDir/*/", s"$base/out",
-      s"$base/ckpt", schema, "source", "text", refHist)
+    val q = Streams.eachFileBatch(spark, s"$srcDir/*/", s"$base/ckpt",
+        schema) { (batch, batchId) =>
+      graft.ops.Validation.jsDrift(refHist, batch, "source", "text")
+        .withColumn("batch_id", lit(batchId))
+        .write.mode("append").parquet(s"$base/out")
+    }
     q.awaitTermination(60000)
     val streamed = spark.read.parquet(s"$base/out")
       .select(col("source"), col("n_tokens"), round(col("js"), 9).as("js"))
@@ -814,7 +832,7 @@ class MergeStreamSpec extends SparkSpec {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val gold = Seq((1L, "c0"), (2L, "c1"), (3L, "c2")).toDF("item", "g")
     val input = MemoryStream[(Long, String, String)]
-    val q = Streams.streamingWorkerGold(
+    val q = graft.ops.Annotate.goldCounts(
         input.toDF().toDF("item", "wid", "lab"), gold,
         "item", "wid", "lab", "item", "g")
       .writeStream.format("memory").queryName("gold_counts")
@@ -867,8 +885,11 @@ class MergeStreamSpec extends SparkSpec {
         org.apache.spark.sql.types.StringType),
       org.apache.spark.sql.types.StructField("lab",
         org.apache.spark.sql.types.StringType)))
-    val q = Streams.streamingDsLabel(spark, s"$srcDir/*/", s"$base/out",
-      s"$base/ckpt", schema, model, "item", "wid", "lab")
+    val q = Streams.eachFileBatch(spark, s"$srcDir/*/", s"$base/ckpt",
+        schema) { (batch, _) =>
+      graft.ops.Annotate.dsServe(model, batch, "item", "wid", "lab")
+        .write.mode("append").parquet(s"$base/out")
+    }
     q.awaitTermination(60000)
     val streamed = spark.read.parquet(s"$base/out")
       .as[(Long, String, Double)].collect()

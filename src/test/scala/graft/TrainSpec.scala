@@ -451,31 +451,6 @@ class TrainSpec extends SparkSpec {
     assert(cov((0L, 1L)) == 2.0 && cov((1L, 0L)) == 2.0)
   }
 
-  test("covarianceMatrixFast matches the explode path to FP round-off") {
-    val vecs = (1 to 200).map { i =>
-      Array.tabulate(6)(d => math.sin(i * 0.7 + d).toFloat)
-    }
-    val df = vecs.toDF("embedding")
-    val slow = Similarity.covarianceMatrix(df, "embedding", dim = 6)
-      .as[(Long, Long, Double)].collect()
-      .map { case (i, j, c) => (i, j) -> c }.toMap
-    val fast = Similarity.covarianceMatrixFast(df, "embedding", dim = 6)
-      .as[(Long, Long, Double)].collect()
-      .map { case (i, j, c) => (i, j) -> c }.toMap
-    assert(fast.keySet == slow.keySet && fast.size == 36)
-    fast.foreach { case (k, v) => assert(math.abs(v - slow(k)) < 1e-12, k) }
-  }
-
-  test("covarianceMatrixFast plans as a single-pass ObjectHashAggregate") {
-    val df = (1 to 50).map(i => Array(i.toFloat, (2 * i).toFloat)).toDF("embedding")
-    val plan = Similarity.covarianceMatrixFast(df, "embedding", dim = 2)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("ObjectHashAggregate"),
-      "non-flat typed buffer must route through ObjectHashAggregateExec")
-    // one partial + one final aggregate, nothing else touches the input
-    assert("ObjectHashAggregate".r.findAllIn(plan).length == 2)
-  }
-
   test("classifierMarginInt: additive over tokens, weights bounded") {
     val df = Seq("a", "a a", "a a a b").toDF("text")
     val m = df.select(Text.classifierMarginInt(
