@@ -22,14 +22,14 @@ object Explain {
       "dedup_suffix_spans) PLUS the scrub composition: the maximal " +
       "spans' covered-position union and the byte-exact rebuild join " +
       "add one explode and two doc-keyed joins on top of the ladder's. " +
-      "Same persist-handle contract; everything past level 0 " +
+      "Same persisted ladder levels; everything past level 0 " +
       "carries survivor-sized data, and the rebuild join ships " +
       "(id, covered-set) pairs, never span text"),
     "dedup_suffix_spans" -> ("the prefix-doubling ladder IS four " +
       "chained dedup operators: each of the 4 levels runs its own " +
       "hash explode → min/max-dup aggregate → join-back verify " +
       "(level results persisted so every exchange executes ONCE — " +
-      "without the persist handles the tree measured 8000+ nodes), " +
+      "without the persisted levels the tree measured 8000+ nodes), " +
       "plus the containment anti-joins and the final union. Since r18 " +
       "level 0 explodes its window hashes natively off each doc row " +
       "(SpanHashes60 — no positions-to-tokens join) and the dup test " +
@@ -76,7 +76,7 @@ object Explain {
             org.apache.spark.sql.execution.FormattedMode)
           // tree nodes print as "Name (id)"; details as "(id) Name" —
           // match the tree form only, and dedupe by NODE ID: a cached
-          // subtree (persist handle) is expanded verbatim under every
+          // subtree (an operator's persist) is expanded verbatim under every
           // InMemoryTableScan that reads it, with the SAME ids — at
           // runtime it executes once, so occurrence-counting would
           // charge a persist-collapsed plan for the branches the
@@ -96,10 +96,11 @@ object Explain {
         } catch {
           case NonFatal(e) => println(s"| $name | - | - | - | - | ERROR ${e.getClass.getSimpleName} |")
         } finally {
-          // a query that registers a persist handle (e.g. the ppl-thresh
-          // scored stream) must not leave cache entries that rewrite
-          // LATER rows' plans into InMemoryTableScans
-          spark.sharedState.cacheManager.clearCache()
+          // a query that persists (e.g. the ppl-thresh scored stream)
+          // must not leave cache entries that rewrite LATER rows' plans
+          // into InMemoryTableScans, nor RDD blocks (CC checkpoints)
+          // that pile up across the audit
+          core.Measure.releaseAll(spark)
         }
       }
       // The audit REFUSES SILENCE on its heaviest plans: every row over
@@ -136,7 +137,7 @@ object Explain {
       // mirror the audit path: a persisting query (e.g. the ppl-thresh
       // scored stream) must not rewrite later queries' printed plans
       // into InMemoryTableScans
-      spark.sharedState.cacheManager.clearCache()
+      core.Measure.releaseAll(spark)
     }
     spark.stop()
   }

@@ -21,8 +21,8 @@ object Verify {
       catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // release any persist handle the query holds (pipe_suffix_scrub's
-      // ladder levels) so cached blocks don't accumulate across the registry
+      // release what the query cached (pipe_suffix_scrub's ladder levels,
+      // CC checkpoints) so blocks don't accumulate across the registry
       core.Measure.releaseAll(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

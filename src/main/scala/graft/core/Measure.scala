@@ -20,29 +20,35 @@ object Measure {
       // collect-bound: single aggregate row (the consume hash)
       .agg(sum("__h"), count(lit(1))).collect()(0).getLong(1)
 
-  /** Full between-queries storage release for the measurement mains:
-    * the SQL cache clear alone leaves RDD-level blocks behind —
-    * localCheckpoint() blocks (pipe_pretrain_e2e's packing guard, the
-    * CC frontier of whatever ran last) are NOT CacheManager entries,
+  /** The one release of cached intermediates. Operators may persist
+    * or locally checkpoint what their own plan reads more than once
+    * (winnowPairs' fingerprint stream, the suffix ladder's levels,
+    * Graph's CC frontiers) and return only a DataFrame; the caller of
+    * the action releases everything with this call once the result is
+    * consumed. Verify, ProfileQ, ScaleCheck, Explain and cosmobench
+    * call it after every query.
+    *
+    * It clears more than the SQL cache, which alone leaves RDD-level
+    * blocks behind — localCheckpoint() blocks (pipe_pretrain_e2e's
+    * packing guard, the CC frontier of whatever ran last) are NOT
+    * CacheManager entries,
     * so across a 234-query run (or repeat samples of one query in a
     * profiler JVM) they accumulate in block storage until driver GC
     * happens to collect the RDD — squeezing execution memory and
     * inflating later queries' spill. Measured (r18): four back-to-back
     * pipe_pretrain_e2e samples in one JVM read executor CPU
     * 63 → 152 → 162 → 157 s with only the SQL-cache clear; flat with
-    * this release. Sequential call sites only (a concurrent clear
-    * would release another thread's in-flight handle — the pre-warm
-    * pool deliberately skips it, same as the old clearCache note).
+    * this release. Sequential call sites only: a concurrent release
+    * would free another thread's in-flight cache.
     *
     * Contract on checkpointed RDDs (advisor r18): this unpersists
     * locally-checkpointed RDDs too, whose lineage is TRUNCATED — a
-    * handle that survived into a LATER query would fail with
+    * DataFrame that survived into a LATER query would fail with
     * missing-block errors rather than recompute. That is deliberate
     * and safe under the registry convention the call sites enforce:
     * every query's persists/checkpoints are consumed within that
-    * query's own consume() (nothing spans two registry queries — the
-    * rule every `…WithHandle` persist pair follows), so at call time
-    * every released block is dead. Spark's per-RDD "cannot be
+    * query's own consume() (nothing spans two registry queries), so at
+    * call time every released block is dead. Spark's per-RDD "cannot be
     * recomputed after unpersisting" WARNs at these sites are expected
     * noise, not a fault (quietKnownWarnings drops them in the
     * profilers). */

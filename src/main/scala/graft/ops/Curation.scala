@@ -127,40 +127,23 @@ object Curation {
     * verification joins shingle arrays only for candidate ids
     * (candidate-set-reduced, never all-pairs). Same md5 signature
     * family as [[flags]]/[[mdCandidatePairs]], so the whole flow
-    * re-derives in the DuckDB oracle (`dedup_incremental`). */
+    * re-derives in the DuckDB oracle (`dedup_incremental`).
+    *
+    * Each side's shingle stream has TWO consumers — the band-hash
+    * derivation and the candidate Jaccard verify — so both are
+    * persisted MEMORY_AND_DISK and the tokenize + shingle explode runs
+    * once per side; the caller of the action releases them
+    * ([[graft.core.Measure.releaseAll]]). */
   def incrementalDedup(newDocs: DataFrame, corpus: DataFrame,
                        idCol: String, textCol: String, shingleK: Int = 4,
                        numHashes: Int = 16, bands: Int = 4,
-                       jaccardMin: Double = 0.5): DataFrame =
-    incrementalDedupWithHandle(newDocs, corpus, idCol, textCol, shingleK,
-      numHashes, bands, jaccardMin, persistShingles = false)._1
-
-  /** [[incrementalDedup]] with the full-corpus persist handle (the
-    * persistTf / scrubDuplicatedSpansWithHandle contract): each side's
-    * shingle stream has TWO consumers — the band-hash derivation and
-    * the candidate Jaccard verify — and each re-runs the tokenize +
-    * shingle explode without persistence (the corpus side is the
-    * expensive one). `persistShingles = true` computes each shingle
-    * stream once and serves both consumers from storage. Second return
-    * value holds the handles to `unpersist()` when done (the mains'
-    * per-query `Measure.releaseAll` releases them implicitly). At true
-    * corpus scale the signature-store form replaces the corpus derivation
-    * entirely (see [[incrementalDedup]]'s scaladoc). */
-  def incrementalDedupWithHandle(newDocs: DataFrame, corpus: DataFrame,
-                       idCol: String, textCol: String, shingleK: Int = 4,
-                       numHashes: Int = 16, bands: Int = 4,
-                       jaccardMin: Double = 0.5,
-                       persistShingles: Boolean = false)
-      : (DataFrame, Seq[DataFrame]) = {
+                       jaccardMin: Double = 0.5): DataFrame = {
     val id = col(idCol)
-    def shingled(df: DataFrame) = {
-      val sh = df.select(id,
-        array_distinct(graft.functions.GraftExtensions
-          .shingles(split(col(textCol), " ", -1), shingleK)).as("sh"))
-      if (persistShingles)
-        sh.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else sh
-    }
+    def shingled(df: DataFrame) =
+      df.select(id,
+          array_distinct(graft.functions.GraftExtensions
+            .shingles(split(col(textCol), " ", -1), shingleK)).as("sh"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val newSh = shingled(newDocs)
     val corpSh = shingled(corpus)
     val exactIds = newDocs
@@ -181,12 +164,11 @@ object Curation {
       .filter(Text.jaccard(col("sha"), col("shb")) >= jaccardMin)
       .select(col("new_id").as(idCol)).distinct()
       .withColumn("is_near", lit(true))
-    val out = newDocs.select(id)
+    newDocs.select(id)
       .join(exactIds, Seq(idCol), "left")
       .join(nearIds, Seq(idCol), "left")
       .select(id, when(col("is_exact"), "exact_dup")
         .when(col("is_near"), "near_dup").otherwise("kept").as("status"))
-    (out, if (persistShingles) Seq(newSh, corpSh) else Seq.empty)
   }
 
   /** Per-language attrition report over [[flags]] output: raw → quality →
@@ -234,26 +216,20 @@ object Curation {
     * rows broadcast into the scoring join; the only corpus-scale
     * exchanges are the feature-count aggregate (map-side combined to
     * `buckets` partials per task) and the per-doc sum. The event stream
-    * has two consumers (count aggregate + scoring join) — same contract
-    * as [[Text.tfidf]]'s persistTf: pass `persistEvents = true` at full
-    * corpus scale and unpersist the returned handle. */
-  def dsirWeightsWithHandle(df: DataFrame, idCol: String, textCol: String,
-                            isTarget: Column, buckets: Int = 512,
-                            persistEvents: Boolean = false)
-      : (DataFrame, DataFrame) = {
+    * has two consumers (count aggregate + scoring join) and is not
+    * persisted: each re-runs the token explode. */
+  def dsirWeights(df: DataFrame, idCol: String, textCol: String,
+                  isTarget: Column, buckets: Int = 512): DataFrame = {
     require(buckets > 0, "buckets must be positive")
     // empty tokens (leading/trailing/double spaces) are not features —
     // filtered like every other token pipeline here (zipf, index stats,
     // LM encodes); hashing '' would skew both distributions and every
     // doc weight that touches its bucket
-    val ev0 = df.select(col(idCol), isTarget.as("is_t"),
+    val ev = df.select(col(idCol), isTarget.as("is_t"),
         explode(split(col(textCol), " ", -1)).as("tok"))
       .filter(col("tok") =!= "")
       .select(col(idCol), col("is_t"),
         (Text.portableHash(col("tok")) % buckets).as("f"))
-    val ev = if (persistEvents)
-      ev0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else ev0
     val counts = ev.groupBy("f").agg(
       count(lit(1)).as("cr"),
       sum(when(col("is_t"), 1L).otherwise(0L)).as("ct"))
@@ -263,7 +239,7 @@ object Curation {
         (log((col("ct") + 1).cast("double") / (col("nt") + lit(buckets))) -
           log((col("cr") + 1).cast("double") / (col("nr") + lit(buckets))))
           .as("lr"))
-    val out = ev.select(col(idCol), col("f"))
+    ev.select(col(idCol), col("f"))
       .join(broadcast(ratios), Seq("f"))
       .groupBy(idCol)
       // + lit(0): SUM(lr) is a sum of SIGNED log-ratios; a doc whose
@@ -272,13 +248,7 @@ object Curation {
       // is engine-portable (the mooreLewisFromModels delta convention).
       .agg(count(lit(1)).as("n_tokens"),
         (round(sum("lr"), 4) + lit(0)).as("log_weight"))
-    (out, ev)
   }
-
-  /** [[dsirWeightsWithHandle]] without the persist handle. */
-  def dsirWeights(df: DataFrame, idCol: String, textCol: String,
-                  isTarget: Column, buckets: Int = 512): DataFrame =
-    dsirWeightsWithHandle(df, idCol, textCol, isTarget, buckets)._1
 
   /** The DSIR MODEL as a storable `(bucket, w)` table — the classifier
     * stored-weights pattern for importance resampling: train the
@@ -321,7 +291,7 @@ object Curation {
     * streaming twin of [[classifierScore]], and the scoring shape
     * [[graft.streaming.Streams.streamingDsirScore]] applies per row on
     * an unbounded stream. Empty tokens are skipped exactly as
-    * [[dsirWeightsWithHandle]] skips them; token-order summation keeps
+    * [[dsirWeights]] skips them; token-order summation keeps
     * the float deterministic. Returns the RAW log-weight sum — callers
     * round (the registry convention). Semantics note: a ZERO-token doc
     * scores 0.0 here (a row per input row), where the event-sum

@@ -36,18 +36,15 @@ object Retrieval {
     * Scale shape: explode → two groupBys (tf, df) + one broadcast
     * single-row count → posting self-join keyed by term with per-key
     * fan-out ≤ maxDf (the cut IS the skew guard) → one (d1,d2) groupBy.
-    * The weighted stream has two consumers (norms + postings), hence
-    * the persist handle. Threshold applies to the UNROUNDED cosine
-    * (rounding last — the decimal-tie contract); output is rounded.
-    *
-    * Returns ((d1, d2, cos), weighted-stream handle). */
-  def sparseCosinePairsWithHandle(docs: DataFrame, idCol: String,
-                                  textCol: String, shingleK: Int = 4,
-                                  maxDf: Int = 0, minCos: Double = 0.2,
-                                  persistW: Boolean = false,
-                                  maxDfFrac: Double = 6e-4,
-                                  corpusDocs: Long = -1L)
-      : (DataFrame, DataFrame) = {
+    * The weighted stream has two consumers (norms + postings), so it is
+    * persisted MEMORY_AND_DISK; the caller of the action releases it
+    * ([[graft.core.Measure.releaseAll]]). Threshold applies to the
+    * UNROUNDED cosine (rounding last — the decimal-tie contract);
+    * output (d1, d2, cos) is rounded. */
+  def sparseCosinePairs(docs: DataFrame, idCol: String, textCol: String,
+                        shingleK: Int = 4, maxDf: Int = 0,
+                        minCos: Double = 0.2, maxDfFrac: Double = 6e-4,
+                        corpusDocs: Long = -1L): DataFrame = {
     // maxDf = 0 (default) resolves CORPUS-RELATIVE — the winnow
     // resolveMaxDf rule (judge r15 task 2) applied to the third
     // absolute df cut in the repo: a term's df grows with the corpus,
@@ -76,34 +73,23 @@ object Retrieval {
     val tf = tok.groupBy("id", "term").agg(count(lit(1)).as("tf"))
     val dfT = tok.groupBy("term").agg(countDistinct("id").as("df"))
     val n = tok.agg(countDistinct("id").as("n"))
-    val w0 = tf.join(dfT, "term").crossJoin(broadcast(n))
+    val w = tf.join(dfT, "term").crossJoin(broadcast(n))
       .select(col("id"), col("term"), col("df"),
         (col("tf") * log(col("n").cast("double") / col("df"))).as("w"))
-    val w = if (persistW)
-      w0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else w0
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val norms = w.groupBy("id").agg(sqrt(sum(col("w") * col("w"))).as("nrm"))
     val posts = w.filter(col("df") <= dfCut).select("term", "id", "w")
     val dots = posts.toDF("term", "d1", "w1")
       .join(posts.toDF("term", "d2", "w2"), "term")
       .filter(col("d1") < col("d2"))
       .groupBy("d1", "d2").agg(sum(col("w1") * col("w2")).as("dot"))
-    val pairs = dots
+    dots
       .join(norms.toDF("d1", "n1"), "d1")
       .join(norms.toDF("d2", "n2"), "d2")
       .filter(col("dot") / (col("n1") * col("n2")) >= minCos)
       .select(col("d1"), col("d2"),
         round(col("dot") / (col("n1") * col("n2")), 4).as("cos"))
-    (pairs, w)
   }
-
-  /** [[sparseCosinePairsWithHandle]] without the handle. */
-  def sparseCosinePairs(docs: DataFrame, idCol: String, textCol: String,
-                        shingleK: Int = 4, maxDf: Int = 0,
-                        minCos: Double = 0.2, maxDfFrac: Double = 6e-4,
-                        corpusDocs: Long = -1L): DataFrame =
-    sparseCosinePairsWithHandle(docs, idCol, textCol, shingleK, maxDf,
-      minCos, maxDfFrac = maxDfFrac, corpusDocs = corpusDocs)._1
 
   /** BM25 top-`topK` documents per query. `queries` is (query_id, terms);
     * a doc scores `Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1−b+b·dl/avgdl))`
@@ -111,25 +97,19 @@ object Retrieval {
     * `idf = ln(1 + (N−df+0.5)/(df+0.5))`. Ranking compares scores
     * ROUNDED to 4 decimals (ties → lower doc id) so the order is stable
     * across FP summation orders — the same contract as the k-means
-    * argmax. Output: (query_id, doc_id, rank, score). */
+    * argmax. Output: (query_id, doc_id, rank, score).
+    *
+    * The postings stream `tf` has two consumers (df derivation +
+    * scoring), each of which re-runs the tokenize explode over the
+    * corpus. `persist = true` materializes the (query-term-filtered,
+    * postings-sized) tf once; the caller of the action releases it
+    * ([[graft.core.Measure.releaseAll]]). The corpus-stats pass still
+    * reads text once more — it needs ALL docs' lengths, which the
+    * term-filtered postings can't provide. */
   def bm25TopK(docs: DataFrame, idCol: String, textCol: String,
                queries: Seq[(String, Seq[String])], topK: Int = 5,
-               k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    bm25TopKWithHandle(docs, idCol, textCol, queries, topK, k1, b,
-      persistTf = false)._1
-
-  /** [[bm25TopK]] with the full-corpus persist contract (the
-    * Text.tfidf/duplicatedSpanStats handle): the postings stream `tf`
-    * has two consumers (df derivation + scoring), each of which would
-    * re-run the tokenize explode over the corpus. `persistTf = true`
-    * materializes the (query-term-filtered, postings-sized) tf once;
-    * the second return value is the handle to `unpersist()` when done.
-    * The corpus-stats pass still reads text once more — it needs ALL
-    * docs' lengths, which the term-filtered postings can't provide. */
-  def bm25TopKWithHandle(docs: DataFrame, idCol: String, textCol: String,
-                         queries: Seq[(String, Seq[String])], topK: Int = 5,
-                         k1: Double = 1.2, b: Double = 0.75,
-                         persistTf: Boolean = false): (DataFrame, DataFrame) = {
+               k1: Double = 1.2, b: Double = 0.75,
+               persist: Boolean = false): DataFrame = {
     val spark: SparkSession = docs.sparkSession
     import spark.implicits._
     val qdf = queries.flatMap { case (qid, ts) => ts.map(qid -> _) }
@@ -146,7 +126,7 @@ object Retrieval {
       .filter(col("term").isin(terms: _*)) // map-side, below the exchange
       .groupBy(col(idCol), col("term"), col("dl"))
       .agg(count(lit(1)).cast("double").as("tf"))
-    val tf = if (persistTf) tf0.persist() else tf0
+    val tf = if (persist) tf0.persist() else tf0
     // df is per-TERM (query-sized) — derived from the postings, broadcast
     val dfreq = tf.groupBy("term").agg(count(lit(1)).cast("double").as("df"))
     // arithmetic shape mirrored token-for-token by the DuckDB oracle so
@@ -165,10 +145,9 @@ object Retrieval {
       .agg(sum(col("contrib")).as("score"))
     val w = Window.partitionBy("query_id")
       .orderBy(round(col("score"), 4).desc, col(idCol))
-    val out = scored.withColumn("rank", row_number().over(w))
+    scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= topK)
       .select(col("query_id"), col(idCol), col("rank"),
         (round(col("score"), 4) + lit(0.0)).as("score"))
-    (out, tf)
   }
 }

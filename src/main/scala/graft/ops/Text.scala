@@ -95,33 +95,33 @@ object Text {
     *
     * `maxDf = 0` (the default) resolves CORPUS-RELATIVE — see
     * [[resolveMaxDf]]: a fixed absolute cut silently loses recall as
-    * the corpus grows past it. */
+    * the corpus grows past it.
+    *
+    * The exploded (id, fp) stream has three consumers (df counting and
+    * both sides of the pair self-join), so it is persisted
+    * MEMORY_AND_DISK: one winnow pass instead of three. Like every
+    * cached intermediate of this library, the caller of the action
+    * releases it ([[graft.core.Measure.releaseAll]]). */
   def winnowPairs(df: DataFrame, idCol: String, textCol: String,
                   k: Int = 5, w: Int = 8, maxDf: Int = 0,
                   minShared: Int = 3, maxDfFrac: Double = 6e-4,
                   corpusDocs: Long = -1L): DataFrame =
-    winnowPairsWithHandle(df, idCol, textCol, k, w, maxDf, minShared,
-      persistFp = false, maxDfFrac = maxDfFrac, corpusDocs = corpusDocs)._1
+    winnowPairsAndFp(df, idCol, textCol, k, w, maxDf, minShared,
+      maxDfFrac, corpusDocs)._1
 
-  /** [[winnowPairs]] with the full-corpus persist handle (the tfidf
-    * persistTf contract): the exploded (id, fp) stream has THREE
-    * consumers (df counting, and both sides of the pair self-join) —
-    * without persistence each re-runs the O(n) winnow pass over the
-    * corpus. Second return value is the handle to `unpersist()`. */
-  def winnowPairsWithHandle(df: DataFrame, idCol: String, textCol: String,
-                            k: Int = 5, w: Int = 8, maxDf: Int = 0,
-                            minShared: Int = 3, persistFp: Boolean = false,
-                            maxDfFrac: Double = 6e-4,
-                            corpusDocs: Long = -1L)
+  /** [[winnowPairs]] plus the persisted (id, fp) stream it pairs from,
+    * which [[winnowDedupE2e]] reads again for its verify stage. */
+  private def winnowPairsAndFp(df: DataFrame, idCol: String,
+                               textCol: String, k: Int, w: Int,
+                               maxDf: Int, minShared: Int,
+                               maxDfFrac: Double, corpusDocs: Long)
       : (DataFrame, DataFrame) = {
     val dfCut = resolveMaxDf(df, maxDf, maxDfFrac, corpusDocs)
     // the fingerprint array is distinct per doc by construction, so the
     // explode already yields distinct (doc, fp) rows — no dedup shuffle
-    val fp0 = df.select(col(idCol).as("id"),
-      explode(winnowFingerprints(col(textCol), k, w)).as("fp"))
-    val fp = if (persistFp)
-      fp0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else fp0
+    val fp = df.select(col(idCol).as("id"),
+        explode(winnowFingerprints(col(textCol), k, w)).as("fp"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val rare = fp.groupBy("fp").agg(count("*").as("df"))
       .filter(col("df") <= dfCut).select("fp")
     val pruned = fp.join(rare, "fp").select("fp", "id")
@@ -135,7 +135,7 @@ object Text {
 
   /** End-to-end winnowing near-dup dedup (the substring-level complement
     * of the shingle-document chain behind `dedup_near_e2e`): MOSS-style
-    * candidates ([[winnowPairsWithHandle]]) → EXACT full-fingerprint-set
+    * candidates ([[winnowPairs]]) → EXACT full-fingerprint-set
     * Jaccard verify → connected components → longest-doc keeper. The
     * candidate stage sees only maxDf-pruned rare fingerprints (its skew
     * guard); the verify stage re-compares candidates on the FULL
@@ -149,41 +149,16 @@ object Text {
     * Scale: candidate volume is bounded by the maxDf self-join; the
     * verify join fans each candidate pair to exactly two array lookups;
     * CC is the checkpointed large/small-star loop (O(log n) rounds);
-    * the keeper is one window over cluster-labeled nodes. */
-  /** Convenience variant that DISCARDS the persist handle — it cannot
-    * unpersist for you (the result is lazy; the cache materializes only
-    * at the caller's action). `persistFp` defaults to FALSE (judge r15
-    * task 5 / advisor r14): this wrapper is the LIBRARY surface, and a
-    * leaked MEMORY_AND_DISK cache entry per call is the slow footgun no
-    * scaladoc saves — the fp stream recomputes per consumer instead
-    * (correct, just slower). Callers that clear the cache per query
-    * (the contract mains) opt IN with `persistFp = true`; callers that
-    * want the persist AND the release use
-    * [[winnowDedupE2eWithHandle]] and `unpersist()` after the action. */
+    * the keeper is one window over cluster-labeled nodes. The persisted
+    * fp stream has FOUR consumers here (df count, both pair-join sides,
+    * and the verify stage's per-doc set rebuild). */
   def winnowDedupE2e(df: DataFrame, idCol: String, textCol: String,
                      k: Int = 5, w: Int = 8, maxDf: Int = 0,
                      minShared: Int = 3, minJacPct: Int = 50,
-                     persistFp: Boolean = false, maxDfFrac: Double = 6e-4,
-                     corpusDocs: Long = -1L): DataFrame =
-    winnowDedupE2eWithHandle(df, idCol, textCol, k, w, maxDf, minShared,
-      minJacPct, persistFp, maxDfFrac, corpusDocs)._1
-
-  /** [[winnowDedupE2e]] with the persist handle (the tfidf persistTf
-    * contract): the exploded (id, fp) stream now has FOUR consumers (df
-    * count, both pair-join sides, and the verify stage's per-doc set
-    * rebuild) — callers running the plan once should `unpersist()` the
-    * handle after the action; contract mains rely on their per-query
-    * clearCache instead. */
-  def winnowDedupE2eWithHandle(df: DataFrame, idCol: String, textCol: String,
-                               k: Int = 5, w: Int = 8, maxDf: Int = 0,
-                               minShared: Int = 3, minJacPct: Int = 50,
-                               persistFp: Boolean = true,
-                               maxDfFrac: Double = 6e-4,
-                               corpusDocs: Long = -1L)
-      : (DataFrame, DataFrame) = {
-    val (pairs, fp) = winnowPairsWithHandle(df, idCol, textCol,
-      k, w, maxDf, minShared, persistFp = persistFp,
-      maxDfFrac = maxDfFrac, corpusDocs = corpusDocs)
+                     maxDfFrac: Double = 6e-4,
+                     corpusDocs: Long = -1L): DataFrame = {
+    val (pairs, fp) = winnowPairsAndFp(df, idCol, textCol,
+      k, w, maxDf, minShared, maxDfFrac, corpusDocs)
     // Deliberately corpus-wide sets, MEASURED against the "obvious"
     // refinement before keeping this shape: semi-join-pruning the fp
     // stream to candidate ids before the collect_set (so array building
@@ -213,11 +188,10 @@ object Text {
       df.select(col(idCol).as("node"),
         size(split(col(textCol), " ", -1)).as("nt")), "node")
     val sizes = labeled.groupBy("cluster").agg(count(lit(1)).as("cluster_size"))
-    val reps = Graph.representatives(scored, "node", "cluster", "nt")
+    Graph.representatives(scored, "node", "cluster", "nt")
       .join(sizes, "cluster")
       .select(col("cluster"), col("cluster_size"),
         col("node").as("keeper"), col("nt").as("keeper_tokens"))
-    (reps, fp)
   }
 
   /** Winnowing near-dup INDEX build — the stored-model form of the
@@ -624,35 +598,25 @@ object Text {
     * the per-doc top-k window; df and N derive from the tf AGGREGATE (its
     * rows are already distinct (doc, term) pairs), so the derived
     * branches shuffle the small (doc, term) table, never the corpus text.
-    *
-    * `persistTf = true` is the full-corpus handle (VERDICT r7 #5):
     * Catalyst's column pruning specializes each derived branch's partial
-    * aggregate, so WITHOUT persistence the corpus explode+aggregate
-    * executes once per branch (three times) — fine at query-test scale,
-    * wasteful over a 100 TB corpus. Persisting marks tf MEMORY_AND_DISK
-    * so every branch after the first reads the cached aggregate. Returns
-    * (result, tfHandle); when persisting, call `tfHandle.unpersist()`
-    * after consuming the result — the cache lives until released. */
-  def tfidf(docs: DataFrame, idCol: String, textCol: String, topK: Int = 3,
-            persistTf: Boolean = false): (DataFrame, DataFrame) = {
+    * aggregate, so the corpus explode+aggregate executes once per branch
+    * (three times) — fine at query-test scale; nothing is cached. */
+  def tfidf(docs: DataFrame, idCol: String, textCol: String,
+            topK: Int = 3): DataFrame = {
     val tok = docs.select(col(idCol),
       explode(split(col(textCol), " ", -1)).as("term"))
-    val tf0 = tok.groupBy(idCol, "term").agg(count(lit(1)).as("tf"))
-    val tf = if (persistTf)
-      tf0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else tf0
+    val tf = tok.groupBy(idCol, "term").agg(count(lit(1)).as("tf"))
     val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val n = tf.select(countDistinct(idCol).as("n"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(idCol)
       .orderBy(col("score").desc, col("term"))
-    val out = tf.join(dfreq, "term").crossJoin(broadcast(n))
+    tf.join(dfreq, "term").crossJoin(broadcast(n))
       .withColumn("score", col("tf") * log(col("n").cast("double") / col("df")))
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= topK)
       .select(col(idCol), col("term"),
         round(col("score"), 4).as("tfidf"), col("rk"))
-    (out, tf)
   }
 
   /** Portable 60-bit hash (top 15 hex digits of md5, base-16 → long):
@@ -698,30 +662,19 @@ object Text {
     * suffix-style dedup.
     *
     * The (doc_id, h) span stream has three consumers (dup-hash aggregate,
-    * per-doc total, join-back), each of which re-derives the tokenize +
-    * hash explode WITHOUT persistence — fine at test SF, 3× the dominant
-    * CPU cost at full corpus scale. `persistSpans = true` is the
-    * full-corpus handle (same contract as [[tfidf]]'s persistTf): the
-    * 16-byte/span stream is computed once and served from storage; the
-    * second return value is the handle to `unpersist()` when done.
+    * per-doc total, join-back), each of which would re-derive the
+    * tokenize + hash explode, so the 16-byte/span stream is persisted
+    * MEMORY_AND_DISK and computed once; the caller of the action
+    * releases it ([[graft.core.Measure.releaseAll]]).
     * A groupBy-h formulation stays deliberately: the hot-span case (one
     * boilerplate sentence in every doc) partial-aggregates map-side,
     * where a window-over-h would concentrate it on one partition. */
   def duplicatedSpanStats(df: DataFrame, idCol: String, textCol: String,
-                          k: Int = 5): DataFrame =
-    duplicatedSpanStatsWithHandle(df, idCol, textCol, k, persistSpans = false)._1
-
-  /** [[duplicatedSpanStats]] with the full-corpus persist handle. */
-  def duplicatedSpanStatsWithHandle(df: DataFrame, idCol: String,
-                                    textCol: String, k: Int = 5,
-                                    persistSpans: Boolean = false)
-      : (DataFrame, DataFrame) = {
-    val spans0 = df
+                          k: Int = 5): DataFrame = {
+    val spans = df
       .select(col(idCol), explode(spanHashes(split(col(textCol), " ", -1), k)).as("s"))
       .select(col(idCol), col("s.h").as("h"))
-    val spans = if (persistSpans)
-      spans0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else spans0
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val dupHashes = spans.groupBy("h")
       .agg(countDistinct(idCol).as("nd"))
       .filter(col("nd") >= 2)
@@ -729,12 +682,11 @@ object Text {
     val perDocTotal = spans.groupBy(idCol).agg(count(lit(1)).as("n_spans"))
     val perDocDup = spans.join(dupHashes, "h")
       .groupBy(idCol).agg(count(lit(1)).as("n_dup_spans"))
-    val out = perDocTotal.join(perDocDup, Seq(idCol), "left")
+    perDocTotal.join(perDocDup, Seq(idCol), "left")
       .select(col(idCol), col("n_spans"),
         coalesce(col("n_dup_spans"), lit(0L)).as("n_dup_spans"),
         round(coalesce(col("n_dup_spans"), lit(0L)).cast("double")
           / col("n_spans"), 4).as("dup_ratio"))
-    (out, spans)
   }
 
   /** Variable-length exact-substring dedup by PREFIX DOUBLING — the
@@ -772,57 +724,12 @@ object Text {
     * next level's candidate self-join, the containment unroll one
     * level down, and its own maximal output), so without persistence
     * the plan re-derives level i fan-out^i times — measured: the
-    * 4-level un-persisted physical tree passed 8000 nodes. Pass
-    * `persistLevels = true` beyond toy corpora (the winnow persistFp
-    * contract: the caller unpersists the returned handles after its
-    * action; the convenience variant defaults OFF because it cannot
-    * release caches for you). */
+    * 4-level un-persisted physical tree passed 8000 nodes. Every level
+    * is therefore persisted MEMORY_AND_DISK; the caller of the action
+    * releases them ([[graft.core.Measure.releaseAll]]). */
   def suffixDupSpans(df: DataFrame, idCol: String, textCol: String,
                      baseK: Int = 8, levels: Int = 4, minDocs: Int = 2)
-      : DataFrame =
-    suffixDupSpansWithHandle(df, idCol, textCol, baseK, levels, minDocs,
-      persistLevels = false)._1
-
-  /** (id, pos, key…) rows → the rows whose window key occurs in
-    * ≥ minDocs distinct docs — the shared verify tail of
-    * [[suffixDupSpans]]'s ladder levels (map-side-combinable aggregate,
-    * hash-only shuffle). The survivor rows KEEP their key columns: the
-    * next level composes its own window keys from them (r19, below).
-    *
-    * r18 optimization (guide §2.3/§2.4): at the default minDocs = 2,
-    * "≥ 2 distinct docs" is exactly `min(id) != max(id)` — ONE
-    * map-side-combinable aggregate and ONE exchange of (h, min, max)
-    * triples, where `countDistinct` plans as the two-phase distinct
-    * expansion (partial dedup keyed (h, id) → exchange → merge →
-    * second exchange for the count). Measured on the ladder: each of
-    * the 4 verify levels drops one full exchange and its dedup
-    * aggregates. minDocs > 2 keeps the exact countDistinct. */
-  private def dupPositions(hashed: DataFrame, idCol: String,
-                           minDocs: Int,
-                           keyCols: Seq[String] = Seq("__h")): DataFrame = {
-    val keys = keyCols.map(col)
-    val dup =
-      if (minDocs == 2)
-        hashed.groupBy(keys: _*)
-          .agg(min(col(idCol)).as("__mn"), max(col(idCol)).as("__mx"))
-          .filter(col("__mn") =!= col("__mx"))
-          .select(keys: _*)
-      else
-        hashed.groupBy(keys: _*)
-          .agg(countDistinct(col(idCol)).as("__nd"))
-          .filter(col("__nd") >= minDocs)
-          .select(keys: _*)
-    hashed.join(dup, keyCols)
-      .select((col(idCol) +: col("pos") +: keys): _*)
-  }
-
-  /** [[suffixDupSpans]] with the per-level persist handles (second
-    * return value — `unpersist()` each after the consuming action). */
-  def suffixDupSpansWithHandle(df: DataFrame, idCol: String,
-                               textCol: String, baseK: Int = 8,
-                               levels: Int = 4, minDocs: Int = 2,
-                               persistLevels: Boolean = false)
-      : (DataFrame, Seq[DataFrame]) = {
+      : DataFrame = {
     require(baseK >= 1 && levels >= 1 && minDocs >= 2,
       s"need baseK >= 1, levels >= 1, minDocs >= 2; " +
         s"got $baseK/$levels/$minDocs")
@@ -859,10 +766,6 @@ object Text {
     // every level with independent md5 window-text hashes, so any
     // divergence would fail the hash compare. 2 corpus scans per
     // level → 0; the candidate verify becomes 4 long-hashes per row.
-    def hold(d: DataFrame): DataFrame =
-      if (persistLevels)
-        d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else d
     // level 0: every baseK-window position of every long-enough doc.
     // r18: hashes explode DIRECTLY from each doc row via the native
     // SpanHashes60 loop — the old explode-ints-then-join-back-then-hash
@@ -873,13 +776,14 @@ object Text {
     // whole ladder (2 Scans + a join per derivation → 1 Scan, ×2
     // consumers). Docs shorter than baseK yield the empty array and
     // vanish in the explode — the old size() filter's semantics.
-    val level0 = hold(dupPositions(
+    val level0 = dupPositions(
       toks.select(col(idCol),
           explode(graft.functions.GraftExtensions
             .spanHashes60(col("__toks"), baseK)).as("__s"))
         .select(col(idCol), col("__s.pos").as("pos"),
           col("__s.h").as("__h")),
-      idCol, minDocs))
+      idCol, minDocs)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // ladder: dups(i) = positions duplicated at width baseK * 2^i.
     // Each level's candidate at pos p pairs the survivor at p (left
     // half) with the survivor at p + half (right half, shifted to join
@@ -900,7 +804,8 @@ object Text {
         .select(col(idCol), col("pos"),
           xxhash64(halves: _*).as("__h1"),
           xxhash64((lit(1) +: halves): _*).as("__h2"))
-      hold(dupPositions(cands, idCol, minDocs, Seq("__h1", "__h2")))
+      dupPositions(cands, idCol, minDocs, Seq("__h1", "__h2"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
     // maximality: drop level-i spans contained in a level-(i+1) span —
     // a 2k-span at q contains exactly the k-spans starting in
@@ -916,7 +821,40 @@ object Text {
         }
       kept.select(col(idCol), col("pos"), lit(k).as("len_tokens"))
     }
-    (maximal.reduce(_.unionByName(_)), if (persistLevels) dups else Nil)
+    maximal.reduce(_.unionByName(_))
+  }
+
+  /** (id, pos, key…) rows → the rows whose window key occurs in
+    * ≥ minDocs distinct docs — the shared verify tail of
+    * [[suffixDupSpans]]'s ladder levels (map-side-combinable aggregate,
+    * hash-only shuffle). The survivor rows KEEP their key columns: the
+    * next level composes its own window keys from them (r19, below).
+    *
+    * r18 optimization (guide §2.3/§2.4): at the default minDocs = 2,
+    * "≥ 2 distinct docs" is exactly `min(id) != max(id)` — ONE
+    * map-side-combinable aggregate and ONE exchange of (h, min, max)
+    * triples, where `countDistinct` plans as the two-phase distinct
+    * expansion (partial dedup keyed (h, id) → exchange → merge →
+    * second exchange for the count). Measured on the ladder: each of
+    * the 4 verify levels drops one full exchange and its dedup
+    * aggregates. minDocs > 2 keeps the exact countDistinct. */
+  private def dupPositions(hashed: DataFrame, idCol: String,
+                           minDocs: Int,
+                           keyCols: Seq[String] = Seq("__h")): DataFrame = {
+    val keys = keyCols.map(col)
+    val dup =
+      if (minDocs == 2)
+        hashed.groupBy(keys: _*)
+          .agg(min(col(idCol)).as("__mn"), max(col(idCol)).as("__mx"))
+          .filter(col("__mn") =!= col("__mx"))
+          .select(keys: _*)
+      else
+        hashed.groupBy(keys: _*)
+          .agg(countDistinct(col(idCol)).as("__nd"))
+          .filter(col("__nd") >= minDocs)
+          .select(keys: _*)
+    hashed.join(dup, keyCols)
+      .select((col(idCol) +: col("pos") +: keys): _*)
   }
 
   /** [[suffixDupSpans]] with a winnowing PRE-GATE on the level-0 corpus
@@ -960,16 +898,7 @@ object Text {
     * join-back and verify rounds ever run. */
   def suffixDupSpansGated(df: DataFrame, idCol: String, textCol: String,
                           baseK: Int = 8, levels: Int = 4, minDocs: Int = 2)
-      : DataFrame =
-    suffixDupSpansGatedWithHandle(df, idCol, textCol, baseK, levels,
-      minDocs, persistLevels = false)._1
-
-  /** [[suffixDupSpansGated]] with the per-level persist handles. */
-  def suffixDupSpansGatedWithHandle(df: DataFrame, idCol: String,
-                                    textCol: String, baseK: Int = 8,
-                                    levels: Int = 4, minDocs: Int = 2,
-                                    persistLevels: Boolean = false)
-      : (DataFrame, Seq[DataFrame]) = {
+      : DataFrame = {
     require(baseK >= 2, s"gate sizing needs baseK >= 2, got $baseK")
     val g = 3 * baseK
     // gw-HEAVY split of gk + gw − 1 = G: fingerprint density is
@@ -1021,10 +950,8 @@ object Text {
     // which the fp stream is releasable)
     gatedIds.count()
     fps.unpersist(blocking = false)
-    val (out, handles) = suffixDupSpansWithHandle(
-      df.join(gatedIds, Seq(idCol), "left_semi"),
-      idCol, textCol, baseK, levels, minDocs, persistLevels)
-    (out, handles :+ gatedIds)
+    suffixDupSpans(df.join(gatedIds, Seq(idCol), "left_semi"),
+      idCol, textCol, baseK, levels, minDocs)
   }
 
   /** Adjacent-token bigrams as (a, b) structs; n tokens → n−1 bigrams,
@@ -1058,26 +985,18 @@ object Text {
     * almost nothing — 2.7× slower on a 50k-doc corpus.
     * Docs with <2 tokens have no bigrams and drop out.
     *
-    * `persistBigrams = true` is the full-corpus handle (same contract as
-    * [[tfidf]]'s persistTf): it materializes the hashed event stream —
-    * the one input with two consumers (count aggregate + scoring join) —
-    * and the second return value is the handle to `unpersist()`.
+    * The hashed event stream has two consumers (count aggregate +
+    * scoring join) and is NOT persisted: each re-runs the explode.
     * Scoring stays a join rather than a window by first token: hot
     * tokens ("the …") partial-aggregate map-side and AQE can split the
     * skewed join, where a window would pin every "the"-bigram on one
     * partition. */
-  def bigramNll(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    bigramNllWithHandle(df, idCol, textCol, persistBigrams = false)._1
-
-  /** [[bigramNll]] with the full-corpus persist handle. */
-  def bigramNllWithHandle(df: DataFrame, idCol: String, textCol: String,
-                          persistBigrams: Boolean = false)
-      : (DataFrame, DataFrame) = {
+  def bigramNll(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     // Hash each bigram event map-side and drop token strings BEFORE any
     // exchange: the event stream is (id + four longs). Even |V| no
     // longer reads strings — it counts distinct single-token hashes off
     // the vocab²-BOUNDED count table below, the same from-the-model
-    // derivation as [[kneserNeyNllWithHandle]]'s N (judge r16 task 1:
+    // derivation as [[kneserNeyNll]]'s N (judge r16 task 1:
     // the separate corpus-scale vocabulary pass was one of the
     // sequential stages that amplified host contention; deriving it
     // from c2 removes a full corpus explode from the plan).
@@ -1096,14 +1015,11 @@ object Text {
     // lambda, the (a, b) token-struct materialization and the
     // post-explode string re-hashing all disappear, and the explode
     // emits 32 bytes of longs per event instead of two token strings.
-    val ev0 = df.select(col(idCol),
+    val ev = df.select(col(idCol),
         explode(graft.functions.GraftExtensions
           .bigramHashes(split(col(textCol), " ", -1))).as("b"))
       .select(col(idCol), col("b.h2").as("h2"), col("b.h2b").as("h2b"),
         col("b.ha").as("ha"), col("b.hb").as("hb"))
-    val ev = if (persistBigrams)
-      ev0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else ev0
     // ONE vocab²-bounded table model(h2, lp): corpus counts keyed by h2
     // (ha carried through `max` — constant within the group, and max,
     // unlike first, keeps the plan deterministic for composition guards
@@ -1140,11 +1056,10 @@ object Text {
       .crossJoin(broadcast(vocab))
       .select(col("h2"), col("h2b"), log((col("c2") + 1).cast("double")
         / (col("c1") + col("v"))).as("lp"))
-    val out = ev.select(col(idCol), col("h2"), col("h2b"))
+    ev.select(col(idCol), col("h2"), col("h2b"))
       .join(model, Seq("h2", "h2b"))
       .groupBy(idCol)
       .agg(count(lit(1)).as("n_bigrams"), round(-avg("lp"), 4).as("nll"))
-    (out, ev)
   }
 
   /** Per-document NLL under an interpolated Kneser–Ney bigram LM — the
@@ -1163,46 +1078,33 @@ object Text {
     * trained on the scored corpus itself, so every scored bigram has
     * C(a,b) ≥ 1 > D and the max(·,0) clamp never binds.
     *
-    * Plan shape at 100 TB: identical to [[bigramNllWithHandle]] — one
+    * Plan shape at 100 TB: identical to [[bigramNll]] — one
     * bigram explode hashed map-side, a single vocab²-bounded model
     * table. All three KN statistics are WINDOWS over that count table
     * (sum + count over ha; count over hb) — bounded per key by vocab
     * size, computed without re-deriving the corpus aggregate — and N
     * comes off the event stream (countDistinct of the already-computed
     * h2) broadcast as one row. Scoring is the same (doc, h2)-longs join;
-    * the same join-not-window skew rationale applies. */
+    * the same join-not-window skew rationale applies, and as there the
+    * two-consumer event stream is not persisted. */
   def kneserNeyNll(df: DataFrame, idCol: String, textCol: String,
-                   discount: Double = 0.75): DataFrame =
-    kneserNeyNllWithHandle(df, idCol, textCol, discount,
-      persistBigrams = false)._1
-
-  /** [[kneserNeyNll]] with the full-corpus persist handle (the
-    * bigramNllWithHandle contract — the hashed event stream has two
-    * corpus-scale consumers: the count aggregate and the scoring join). */
-  def kneserNeyNllWithHandle(df: DataFrame, idCol: String, textCol: String,
-                             discount: Double = 0.75,
-                             persistBigrams: Boolean = false)
-      : (DataFrame, DataFrame) = {
+                   discount: Double = 0.75): DataFrame = {
     require(discount > 0 && discount < 1, "discount must be in (0, 1)")
-    // 128-bit bigram keying (h2, h2b) — see [[bigramNllWithHandle]];
+    // 128-bit bigram keying (h2, h2b) — see [[bigramNll]];
     // ha/hb marginal keys stay 64-bit (token-level cardinality).
     // r19: fused native key loop (BigramHashes, bit-identical — see
-    // bigramNllWithHandle's note).
-    val ev0 = df.select(col(idCol),
+    // bigramNll's note).
+    val ev = df.select(col(idCol),
         explode(graft.functions.GraftExtensions
           .bigramHashes(split(col(textCol), " ", -1))).as("b"))
       .select(col(idCol), col("b.h2").as("h2"), col("b.h2b").as("h2b"),
         col("b.ha").as("ha"), col("b.hb").as("hb"))
-    val ev = if (persistBigrams)
-      ev0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else ev0
     val c2 = ev.groupBy("h2", "h2b").agg(count(lit(1)).as("c2"),
       max("ha").as("ha"), max("hb").as("hb"))
     // N (bigram-type total) = c2's row count — a count over the
     // vocab²-BOUNDED table, not a global distinct shuffle of the raw
     // event stream (countDistinct over ev was a full second corpus pass;
-    // re-deriving c2's map-side-combined aggregate from the persisted
-    // events is strictly cheaper)
+    // c2's map-side-combined aggregate is strictly cheaper)
     val nTypes = c2.agg(count(lit(1)).as("nt"))
     val wa = Window.partitionBy("ha")
     val wb = Window.partitionBy("hb")
@@ -1215,11 +1117,10 @@ object Text {
         (col("c2") - lit(discount)) / col("c1") +
           lit(discount) * col("n1a") / col("c1") *
             (col("n1b").cast("double") / col("nt"))).as("lp"))
-    val out = ev.select(col(idCol), col("h2"), col("h2b"))
+    ev.select(col(idCol), col("h2"), col("h2b"))
       .join(model, Seq("h2", "h2b"))
       .groupBy(idCol)
       .agg(count(lit(1)).as("n_bigrams"), round(-avg("lp"), 4).as("nll"))
-    (out, ev)
   }
 
   /** Moore–Lewis cross-entropy-difference scores (Moore & Lewis 2010,
@@ -1237,8 +1138,9 @@ object Text {
     * ~29× vs ~3× for its peers): ONE bigram explode hashed map-side
     * (longs only — no token strings survive the first projection)
     * feeds exactly TWO consumers — a single count aggregate and the
-    * scoring join — so pass `persistEvents = true` at corpus scale and
-    * unpersist the returned handle. BOTH models come out of that one
+    * scoring join — so it is persisted MEMORY_AND_DISK, released by the
+    * caller of the action ([[graft.core.Measure.releaseAll]]). BOTH
+    * models come out of that one
     * aggregate: `count(*)` is the corpus pair count and
     * `sum(is_target)` the target pair count, their context marginals
     * are two sums over one ha-keyed window pass, and both vocabulary
@@ -1254,9 +1156,8 @@ object Text {
     *
     * Returns (doc_id, n_bigrams, ce_target, ce_corpus, delta); docs
     * with <2 tokens have no bigrams and drop out. */
-  def mooreLewisWithHandle(df: DataFrame, idCol: String, textCol: String,
-                           isTarget: Column, persistEvents: Boolean = false)
-      : (DataFrame, DataFrame) = {
+  def mooreLewis(df: DataFrame, idCol: String, textCol: String,
+                 isTarget: Column): DataFrame = {
     // fail loudly on a BIGRAM-free target slice (the waterFill guard
     // convention): what empties the target LM is the absence of target
     // bigram EVENTS, not of target rows — a slice of only <2-token docs
@@ -1271,15 +1172,13 @@ object Text {
       "mooreLewis: isTarget slice has no document with >=2 tokens — the " +
         "target LM would be empty (V=0) and every delta ±Inf")
     // r19: fused native key loop (BigramHashes, bit-identical — see
-    // bigramNllWithHandle's note)
-    val ev0 = df.select(col(idCol), isTarget.as("is_t"),
+    // bigramNll's note)
+    val ev = df.select(col(idCol), isTarget.as("is_t"),
         explode(graft.functions.GraftExtensions
           .bigramHashes(split(col(textCol), " ", -1))).as("b"))
       .select(col(idCol), col("is_t"), col("b.h2").as("h2"),
         col("b.h2b").as("h2b"), col("b.ha").as("ha"), col("b.hb").as("hb"))
-    val ev = if (persistEvents)
-      ev0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else ev0
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // ONE corpus-scale aggregate carries both models: cc = corpus pair
     // count, ct = target pair count (sum of the is_t flag)
     val c2 = ev.groupBy("h2", "h2b").agg(
@@ -1310,7 +1209,7 @@ object Text {
           .as("lp_c"),
         log((col("ct") + 1).cast("double") / (col("c1t") + col("vt")))
           .as("lp_t"))
-    val out = ev.select(col(idCol), col("h2"), col("h2b"))
+    ev.select(col(idCol), col("h2"), col("h2b"))
       .join(model, Seq("h2", "h2b"))
       .groupBy(idCol)
       .agg(count(lit(1)).as("n_bigrams"),
@@ -1320,13 +1219,7 @@ object Text {
         // ±0.0 depending on summation order — normalize as in
         // mooreLewisFromModels so the training delta is engine-portable.
         (round(avg(col("lp_c") - col("lp_t")), 4) + lit(0)).as("delta"))
-    (out, ev)
   }
-
-  /** [[mooreLewisWithHandle]] without the persist handle. */
-  def mooreLewis(df: DataFrame, idCol: String, textCol: String,
-                 isTarget: Column): DataFrame =
-    mooreLewisWithHandle(df, idCol, textCol, isTarget)._1
 
   /** Moore–Lewis scoring at SERVING time, from two STORED models
     * ([[bigramModelDF]] tables for the target slice and the corpus):
@@ -1334,12 +1227,12 @@ object Text {
     * in the plan — the selection criterion applied to an arriving batch
     * the way [[bigramNllFromModel]] applies the quality gate. Both
     * scoring passes share one bigram explode via the two join chains;
-    * unseen fallbacks per model as in [[mooreLewisWithHandle]].
+    * unseen fallbacks per model as in [[mooreLewis]].
     *
     * GRID DIVERGENCE vs the training path: this delta is
     * `round4(round4(ce_t) − round4(ce_c))` (each NLL rounds at 4 dp
     * before subtracting — the stored model only carries the rounded
-    * values), while [[mooreLewisWithHandle]] computes `round4` of the
+    * values), while [[mooreLewis]] computes `round4` of the
     * exact per-event average difference. The two can disagree by 1e-4
     * exactly at rounding-grid boundaries (TrainSpec pins agreement at
     * 2e-4), so a selection CUTOFF keyed on the rounded delta can flip a
@@ -1367,7 +1260,7 @@ object Text {
     * 6× scored-from-stored win). Layout is one typed table,
     * `(kind, k1, k2, v)`:
     *
-    *  - `pair`: k1/k2 = the 128-bit bigram key ([[bigramNllWithHandle]]
+    *  - `pair`: k1/k2 = the 128-bit bigram key ([[bigramNll]]
     *    collision rationale), v = the add-one log-prob;
     *  - `ctx`:  k1 = the context-token hash, v = C(a·) — the marginal
     *    an unseen pair in a SEEN context needs for its add-one mass;
@@ -1387,7 +1280,7 @@ object Text {
       "bigramModelDF: training input has no document with >=2 tokens — " +
         "the stored model would have V=0 and every serving NLL +Inf")
     // r19: fused native key loop (BigramHashes, bit-identical — see
-    // bigramNllWithHandle's note)
+    // bigramNll's note)
     val ev = train.select(col(idCol),
         explode(graft.functions.GraftExtensions
           .bigramHashes(split(col(textCol), " ", -1))).as("b"))
@@ -1396,7 +1289,7 @@ object Text {
     val c2 = ev.groupBy("h2", "h2b").agg(count(lit(1)).as("c2"),
       max("ha").as("ha"), max("hb").as("hb"))
     // |V| off the vocab²-bounded count table, not a second corpus pass
-    // — the [[bigramNllWithHandle]] derivation (judge r16 task 1)
+    // — the [[bigramNll]] derivation (judge r16 task 1)
     val vocab = c2.select(explode(array(col("ha"), col("hb"))).as("t"))
       .agg(countDistinct("t").as("v"))
     val withC1 = c2.withColumn("c1", sum("c2").over(Window.partitionBy("ha")))
@@ -1417,7 +1310,7 @@ object Text {
     * explode hashed map-side, a left join against the stored pair
     * table, and the two vocab-bounded/1-row broadcast fallbacks for
     * events the model never saw (pair unseen in a seen context →
-    * (0+1)/(c1+V); context unseen → 1/V — the [[mooreLewisWithHandle]]
+    * (0+1)/(c1+V); context unseen → 1/V — the [[mooreLewis]]
     * target-side arithmetic). On the model's own training corpus this
     * equals [[bigramNll]] exactly (every event seen; identical stored
     * doubles), pinned in TrainSpec. */
@@ -1430,7 +1323,7 @@ object Text {
     val vTab = model.filter(col("kind") === "meta")
       .select(col("v").cast("long").as("v"))
     // r19: fused native key loop (BigramHashes, bit-identical — see
-    // bigramNllWithHandle's note); the unused hb field of the struct is
+    // bigramNll's note); the unused hb field of the struct is
     // dead weight only inside the generate row, never shuffled
     val ev = score.select(col(idCol),
         explode(graft.functions.GraftExtensions
@@ -1469,23 +1362,14 @@ object Text {
     * single corpus C(a,b,c) aggregate via `xxhash64` long keys and
     * assembled into one vocab³-bounded `model(h3, lp)` table, scoring a
     * single join of `(doc, h3)` long pairs against it. The same
-    * hot-key-safe join-not-window choice as [[bigramNll]], with
-    * `persistTrigrams` as the full-corpus handle materializing the
-    * hashed event stream (the one two-consumer input); the same
-    * rejected-pre-aggregate note applies (trigrams repeat within a
-    * document even less than bigrams do). */
+    * hot-key-safe join-not-window choice as [[bigramNll]], and the
+    * same unpersisted two-consumer event stream: materializing it was
+    * measured slower than re-running the explode (the `t_lm_interp`
+    * note); the same rejected-pre-aggregate note applies (trigrams
+    * repeat within a document even less than bigrams do). */
   def trigramNll(df: DataFrame, idCol: String, textCol: String,
                  l3: Double = 0.6, l2: Double = 0.3, l1: Double = 0.1)
-      : DataFrame =
-    trigramNllWithHandle(df, idCol, textCol, l3, l2, l1,
-      persistTrigrams = false)._1
-
-  /** [[trigramNll]] with the full-corpus persist handle. */
-  def trigramNllWithHandle(df: DataFrame, idCol: String, textCol: String,
-                           l3: Double = 0.6, l2: Double = 0.3,
-                           l1: Double = 0.1,
-                           persistTrigrams: Boolean = false)
-      : (DataFrame, DataFrame) = {
+      : DataFrame = {
     // Hash every n-gram key map-side and drop the token strings BEFORE
     // any exchange: the event stream carries five longs (h3 + the four
     // marginal hashes, needed only by the count aggregate) and scoring
@@ -1500,20 +1384,17 @@ object Text {
     // hashes are computed once per token): the interpreted trigrams()
     // transform() lambda, the 3-string struct materialization and
     // ~14 post-explode string traversals per event collapse to ~6.
-    val ev0 = df.select(col(idCol),
+    val ev = df.select(col(idCol),
         explode(graft.functions.GraftExtensions
           .trigramHashes(split(col(textCol), " ", -1))).as("t"))
       .select(col(idCol), col("t.h3").as("h3"), col("t.h3b").as("h3b"),
         col("t.hab").as("hab"), col("t.habb").as("habb"),
         col("t.hbc").as("hbc"), col("t.hbcb").as("hbcb"),
         col("t.hb").as("hb"), col("t.hc").as("hc"))
-    val ev = if (persistTrigrams)
-      ev0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else ev0
     // One vocab³-bounded model table: corpus trigram counts keyed by h3
     // carry their context/suffix hashes through `max` (functionally
     // dependent on the trigram), and every marginal count is a WINDOW
-    // sum over THAT table — see [[bigramNllWithHandle]] for why windows
+    // sum over THAT table — see [[bigramNll]] for why windows
     // beat groupBy+join-back here (the join form's multi-consumer c3
     // subtree defeated exchange reuse: 7 corpus scans in the audit; the
     // window chain computes c3 once). Window keys are vocab-bounded
@@ -1528,7 +1409,7 @@ object Text {
     // T = Σc3 over the vocab³-BOUNDED count table — exactly the event
     // count (integer sum of per-key counts), without the third
     // corpus-scale pass the direct ev.agg(count) was (judge r16 task 1:
-    // with it, the un-persisted event stream re-ran the explode for the
+    // with it, the event stream re-ran the explode for the
     // total alone; now ev has exactly two consumers — c3 + scoring)
     val tot = c3.agg(sum("c3").cast("double").as("t"))
     val p = lit(l3) * (col("c3").cast("double") / col("cab")) +
@@ -1541,11 +1422,10 @@ object Text {
       .withColumn("ccnt", sum("c3").over(Window.partitionBy("hc")))
       .crossJoin(broadcast(tot))
       .select(col("h3"), col("h3b"), log(p).as("lp"))
-    val out = ev.select(col(idCol), col("h3"), col("h3b"))
+    ev.select(col(idCol), col("h3"), col("h3b"))
       .join(model, Seq("h3", "h3b"))
       .groupBy(idCol)
       .agg(count(lit(1)).as("n_trigrams"), round(-avg("lp"), 4).as("nll"))
-    (out, ev)
   }
 
   /** Sliding-window token chunking: split each document into windows of
@@ -1610,31 +1490,15 @@ object Text {
     * by tokens/doc) → one join to the docs table for the rebuild. Two
     * shuffles of hash/int streams plus the doc-id join; the span text
     * itself never moves. Docs shorter than k have no spans and pass
-    * through untouched. */
+    * through untouched. The (id, pos, h) span stream has two consumers
+    * (dup-hash aggregate + cover join) and is not persisted: each
+    * re-runs the tokenize + hash explode. */
   def scrubDuplicatedSpans(df: DataFrame, idCol: String, textCol: String,
-                           k: Int = 5, minDocs: Int = 2): DataFrame =
-    scrubDuplicatedSpansWithHandle(df, idCol, textCol, k, minDocs,
-      persistSpans = false)._1
-
-  /** [[scrubDuplicatedSpans]] with the full-corpus persist handle (same
-    * contract as [[duplicatedSpanStatsWithHandle]]): the (id, pos, h)
-    * span stream has two consumers (dup-hash aggregate + cover join) and
-    * each would re-derive the tokenize + hash explode without
-    * persistence; `persistSpans = true` computes the 20-byte/span stream
-    * once and serves both from storage. Second return value is the
-    * handle to `unpersist()` when done. */
-  def scrubDuplicatedSpansWithHandle(df: DataFrame, idCol: String,
-                                     textCol: String, k: Int = 5,
-                                     minDocs: Int = 2,
-                                     persistSpans: Boolean = false)
-      : (DataFrame, DataFrame) = {
-    val spans0 = df
+                           k: Int = 5, minDocs: Int = 2): DataFrame = {
+    val spans = df
       .select(col(idCol),
         explode(spanHashes(split(col(textCol), " ", -1), k)).as("s"))
       .select(col(idCol), col("s.pos").as("pos"), col("s.h").as("h"))
-    val spans = if (persistSpans)
-      spans0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else spans0
     val dupHashes = spans.groupBy("h")
       .agg(countDistinct(idCol).as("nd"))
       .filter(col("nd") >= minDocs)
@@ -1643,7 +1507,7 @@ object Text {
       .select(col(idCol),
         explode(sequence(col("pos"), col("pos") + (k - 1))).as("ci"))
       .groupBy(idCol).agg(collect_set("ci").as("__cov"))
-    (rebuildScrubbed(df, idCol, textCol, covered), spans)
+    rebuildScrubbed(df, idCol, textCol, covered)
   }
 
   /** Shared rebuild tail of the scrub family: `covered(idCol,
@@ -1679,31 +1543,20 @@ object Text {
     * survive while long boilerplate dies — expressible only with
     * variable-length spans. Nested/overlapping maximal spans union in
     * the covered-position set. Returns the [[scrubDuplicatedSpans]]
-    * shape (id, n_tokens, n_removed, clean_text); second value is the
-    * ladder's persist handles. */
-  def scrubSuffixSpansWithHandle(df: DataFrame, idCol: String,
-                                 textCol: String, baseK: Int = 8,
-                                 levels: Int = 4, minDocs: Int = 2,
-                                 minLen: Int = 0,
-                                 persistLevels: Boolean = false)
-      : (DataFrame, Seq[DataFrame]) = {
-    val (spans, handles) = suffixDupSpansWithHandle(df, idCol, textCol,
-      baseK, levels, minDocs, persistLevels)
+    * shape (id, n_tokens, n_removed, clean_text); the ladder levels are
+    * persisted as in [[suffixDupSpans]]. */
+  def scrubSuffixSpans(df: DataFrame, idCol: String, textCol: String,
+                       baseK: Int = 8, levels: Int = 4, minDocs: Int = 2,
+                       minLen: Int = 0): DataFrame = {
+    val spans = suffixDupSpans(df, idCol, textCol, baseK, levels, minDocs)
     val kept =
       if (minLen > 0) spans.filter(col("len_tokens") >= minLen) else spans
     val covered = kept.select(col(idCol),
         explode(sequence(col("pos"),
           col("pos") + col("len_tokens") - 1)).as("ci"))
       .groupBy(idCol).agg(collect_set("ci").as("__cov"))
-    (rebuildScrubbed(df, idCol, textCol, covered), handles)
+    rebuildScrubbed(df, idCol, textCol, covered)
   }
-
-  /** [[scrubSuffixSpansWithHandle]] without the handles. */
-  def scrubSuffixSpans(df: DataFrame, idCol: String, textCol: String,
-                       baseK: Int = 8, levels: Int = 4, minDocs: Int = 2,
-                       minLen: Int = 0): DataFrame =
-    scrubSuffixSpansWithHandle(df, idCol, textCol, baseK, levels,
-      minDocs, minLen, persistLevels = false)._1
 
   /** Shingle-CONTAINMENT pairs: for ordered pairs (src, dst),
     * containment C(src→dst) = |shingles(src) ∩ shingles(dst)| /

@@ -6,8 +6,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** Transactional commit log for parquet tables — the multi-writer upgrade
-  * of [[MergeOps.mergeParquet]]'s single-writer swap (BACKLOG round-2
-  * item; same protocol family as Delta Lake's `_delta_log`).
+  * of [[MergeOps.mergeParquet]]'s single-writer swap (same protocol
+  * family as Delta Lake's `_delta_log`).
   *
   * Layout: `tableDir/_graft_log/NNNNNNNNNN.commit` files, one per
   * committed version, whose CONTENT is the snapshot directory holding

@@ -166,21 +166,21 @@ object RetrievalQueries {
     * DataFrame would re-run the full tokenize → postings derivation per
     * branch (3× in `pipe_hard_negatives`). The ranking is ≤ topK rows —
     * bounded driver state, the same contract as the ANN probe `head` —
-    * so: derive with the persist handle (one tokenize scan feeds both df
-    * and scoring), collect the topK rows, release the handle, and hand
-    * every consumer a broadcast-sized LocalRelation. One TOKENIZE scan
-    * per query (the corpus-stats length aggregate inside
-    * bm25TopKWithHandle is a second, cheaper pass over the raw text —
-    * its own scaladoc documents why), no persist left behind. */
+    * so: derive with the postings persisted (one tokenize scan feeds
+    * both df and scoring), collect the topK rows, and hand every
+    * consumer a broadcast-sized LocalRelation. One TOKENIZE scan per
+    * query (the corpus-stats length aggregate inside bm25TopK is a
+    * second, cheaper pass over the raw text — its own scaladoc
+    * documents why). The cached postings cover the query terms only;
+    * the per-query Measure.releaseAll frees them. */
   private def bm25Q1(s: org.apache.spark.sql.SparkSession, dir: String,
                      topK: Int): org.apache.spark.sql.DataFrame = {
-    val (out, tf) = Retrieval.bm25TopKWithHandle(
-      Tables.fannedOut(s, dir, "documents"), "doc_id", "text",
-      Seq("q1" -> q1Terms), topK = topK, persistTf = true)
-    val ranked = out.select(col("doc_id"), col("rank").cast("long").as("r"))
+    val ranked = Retrieval.bm25TopK(
+        Tables.fannedOut(s, dir, "documents"), "doc_id", "text",
+        Seq("q1" -> q1Terms), topK = topK, persist = true)
+      .select(col("doc_id"), col("rank").cast("long").as("r"))
     // collect-bound: top-K ranking of one query - K rows
     val rows = ranked.collect().toSeq
-    tf.unpersist()
     // a TRUE LocalRelation (list-backed createDataFrame), not a
     // 1-partition RDD: Catalyst sees the rows as a local literal
     // relation, so consumers broadcast/fold it without scheduling an
@@ -288,8 +288,8 @@ object RetrievalQueries {
         .unionByName(docs.filter(col("doc_id") < 30)
           .select((col("doc_id") + 30000).as("doc_id"),
             concat(lit("prefixed edit marker "), col("text")).as("text")))
-      Retrieval.sparseCosinePairsWithHandle(corpus, "doc_id", "text",
-          shingleK = 4, maxDf = 25, minCos = 0.2, persistW = true)._1
+      Retrieval.sparseCosinePairs(corpus, "doc_id", "text",
+          shingleK = 4, maxDf = 25, minCos = 0.2)
         .orderBy("d1", "d2")
     },
 
@@ -486,8 +486,8 @@ object RetrievalQueries {
       // materializing the 8-long stream cost MORE than the explode
       // re-run it saves (2.94 vs 2.06 s min at sf0.1 — cache write+read
       // beats nothing here; exchange reuse already dedupes the count
-      // subtree). The WithHandle persist form remains for corpora where
-      // two scan passes out-cost one cache round-trip.
+      // subtree). Whether larger corpora tip the other way is
+      // unmeasured.
       Text.trigramNll(Tables.fannedOut(s, dir, "documents"), "doc_id", "text")
         .orderBy("doc_id")
     },

@@ -521,11 +521,11 @@ object TextQueries {
         .unionAll(docs.filter(col("doc_id") < 50)
           .select((col("doc_id") + 10000).as("doc_id"),
             concat(lit("edited preamble xyzzy "), col("text")).as("text")))
-      // persistFp handle: the exploded (id, fp) stream has three
-      // consumers (df count + both self-join sides) — one materialized
-      // winnow pass instead of three derivations
-      Text.winnowPairsWithHandle(corpus, "doc_id", "text",
-          k = 5, w = 8, maxDf = 20, minShared = 3, persistFp = true)._1
+      // the operator persists the exploded (id, fp) stream, which has
+      // three consumers (df count + both self-join sides) — one
+      // materialized winnow pass instead of three derivations
+      Text.winnowPairs(corpus, "doc_id", "text",
+          k = 5, w = 8, maxDf = 20, minShared = 3)
         .orderBy("d1", "d2")
     },
 
@@ -595,12 +595,10 @@ object TextQueries {
         .unionAll(docs.filter(col("doc_id") < 50)
           .select((col("doc_id") + 10000).as("doc_id"),
             concat(lit("edited preamble xyzzy "), col("text")).as("text")))
-      // persistFp = true is the CONTRACT-MAIN opt-in (the per-query
-      // release in Verify/ProfileQ frees it); the library default is
-      // false since r15 — see winnowDedupE2e's scaladoc
+      // the persisted fp stream is freed by the per-query
+      // Measure.releaseAll in Verify/ProfileQ
       Text.winnowDedupE2e(corpus, "doc_id", "text",
-          k = 5, w = 8, maxDf = 20, minShared = 3, minJacPct = 50,
-          persistFp = true)
+          k = 5, w = 8, maxDf = 20, minShared = 3, minJacPct = 50)
         .orderBy("cluster")
     },
 
@@ -699,7 +697,7 @@ object TextQueries {
     // the banded bucket join this query exists to parameterize. The
     // shingle table feeds three consumers (both pair sides + the
     // signature pipeline), so it is persisted (released by the
-    // per-query clearCache, the scrub-spans handle contract).
+    // per-query Measure.releaseAll).
     Q("dedup_lsh_scurve",
       """WITH corpus AS (
         |  SELECT doc_id, text FROM documents WHERE doc_id < 120
@@ -1300,12 +1298,9 @@ object TextQueries {
         |  FROM tf JOIN df USING (term) CROSS JOIN n)
         |SELECT doc_id, term, tfidf, rk FROM scored WHERE rk <= 3
         |ORDER BY doc_id, rk""".stripMargin) { (s, dir) =>
-      // routed through ops.Text.tfidf — the reusable form with the
-      // full-corpus persist handle (persistTf); the query runs it
-      // unpersisted, the sf-scale-appropriate choice (TextSpec pins the
-      // persisted variant equal)
+      // routed through ops.Text.tfidf, the reusable form
       Text.tfidf(Tables(s, dir, "documents").filter(col("doc_id") < 200),
-          "doc_id", "text", topK = 3)._1
+          "doc_id", "text", topK = 3)
         .orderBy("doc_id", "rk")
     },
 

@@ -78,14 +78,13 @@ object TrainQueries {
         |    AS dup_ratio
         |FROM tot LEFT JOIN dd USING (doc_id) ORDER BY doc_id""".stripMargin) {
       (s, dir) =>
-        // persistSpans handle: the span stream
-        // has THREE consumers here (dup-hash aggregate, per-doc total,
-        // per-doc dup count) — one materialized explode instead of three
+        // the operator persists the span stream, which has THREE
+        // consumers here (dup-hash aggregate, per-doc total, per-doc dup
+        // count) — one materialized explode instead of three
         // derivations; fannedOut because the span-hash explode is
         // CPU-dense per row (standing rule 7)
-        Text.duplicatedSpanStatsWithHandle(
-            Tables.fannedOut(s, dir, "documents"),
-            "doc_id", "text", k = 5, persistSpans = true)._1
+        Text.duplicatedSpanStats(Tables.fannedOut(s, dir, "documents"),
+            "doc_id", "text", k = 5)
           .orderBy("doc_id")
     },
 
@@ -150,13 +149,12 @@ object TrainQueries {
         |  SELECT doc_id, pos, 32 FROM d3)
         |SELECT doc_id, pos, len_tokens FROM m
         |ORDER BY doc_id, pos, len_tokens""".stripMargin) { (s, dir) =>
-      // persistLevels: each ladder level has four consumers (next
-      // level's self-join halves, containment, output) — un-persisted
-      // the physical tree measured 8000+ nodes; mains clearCache per
-      // query (the pipe_moore_lewis persist-handle pattern)
-      Text.suffixDupSpansWithHandle(Tables.fannedOut(s, dir, "documents"),
-          "doc_id", "text", baseK = 4, levels = 4, minDocs = 2,
-          persistLevels = true)._1
+      // the operator persists each ladder level, which has four
+      // consumers (next level's self-join halves, containment, output)
+      // — un-persisted the physical tree measured 8000+ nodes; the
+      // per-query Measure.releaseAll frees the levels
+      Text.suffixDupSpans(Tables.fannedOut(s, dir, "documents"),
+          "doc_id", "text", baseK = 4, levels = 4, minDocs = 2)
         .orderBy("doc_id", "pos", "len_tokens")
     },
 
@@ -228,13 +226,11 @@ object TrainQueries {
         |  COALESCE(array_to_string(list(tok ORDER BY i)
         |    FILTER (WHERE ci IS NULL), ' '), '') AS clean_text
         |FROM j GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      // persistLevels: the ladder levels have four consumers each (see
-      // dedup_suffix_spans); handles released by the harness's
-      // per-query clearCache
-      Text.scrubSuffixSpansWithHandle(
-          Tables.fannedOut(s, dir, "documents"),
+      // the ladder levels are persisted, four consumers each (see
+      // dedup_suffix_spans); the per-query Measure.releaseAll frees them
+      Text.scrubSuffixSpans(Tables.fannedOut(s, dir, "documents"),
           "doc_id", "text", baseK = 4, levels = 4, minDocs = 2,
-          minLen = 8, persistLevels = true)._1
+          minLen = 8)
         .orderBy("doc_id")
     },
 
@@ -452,7 +448,7 @@ object TrainQueries {
         // each would otherwise replay the full bigram-LM chain (28
         // exchanges / 8 scans in the r10 audit). It is doc-count-sized
         // (two columns), so persist it — released by the per-query
-        // release in Verify/ProfileQ, the scrub-spans handle contract.
+        // Measure.releaseAll in Verify/ProfileQ.
         val scored = Text.bigramNll(docs, "doc_id", "text")
           .join(docs.select("doc_id", "lang"), "doc_id")
           .select(col("lang"), col("nll"))
@@ -629,11 +625,10 @@ object TrainQueries {
         |  ROUND(SUM(n * (lp_c - lp_t)) / SUM(n), 4) + 0 AS delta
         |FROM sc GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, dir) =>
       // fannedOut: the bigram explode is CPU-dense (the t_lm_perplexity
-      // rationale); persistEvents — the hashed event stream has three
-      // consumers (corpus counts, target counts, scoring join)
-      Text.mooreLewisWithHandle(Tables.fannedOut(s, dir, "documents"),
-          "doc_id", "text", isTarget = col("lang") === "en",
-          persistEvents = true)._1
+      // rationale); the operator persists the hashed event stream
+      // (consumers: the count aggregate and the scoring join)
+      Text.mooreLewis(Tables.fannedOut(s, dir, "documents"),
+          "doc_id", "text", isTarget = col("lang") === "en")
         .select(col("doc_id"), col("n_bigrams"), col("ce_target"),
           col("ce_corpus"), (col("delta") + lit(0)).as("delta"))
         .orderBy("doc_id")
@@ -1158,15 +1153,15 @@ object TrainQueries {
         |ORDER BY n.doc_id""".stripMargin) { (s, dir) =>
       // fannedOut (standing rule 7): the shingle+minhash derivation is
       // CPU-dense per-row and the single-file scan would single-thread
-      // it; persistShingles: each side's shingle stream has two
-      // consumers (band hashes + Jaccard verify) — computed once via
-      // the handle, released by Verify/ProfileQ's per-query release
+      // it; each side's shingle stream has two consumers (band hashes
+      // + Jaccard verify) — the operator persists it, and the
+      // per-query Measure.releaseAll frees it
       val docs = Tables.fannedOut(s, dir, "documents")
-      Curation.incrementalDedupWithHandle(
+      Curation.incrementalDedup(
           docs.filter(col("source") === "src0").select("doc_id", "text"),
           docs.filter(col("source") =!= "src0").select("doc_id", "text"),
           "doc_id", "text", shingleK = 4, numHashes = 16, bands = 4,
-          jaccardMin = 0.5, persistShingles = true)._1
+          jaccardMin = 0.5)
         .orderBy("doc_id")
     },
 

@@ -49,8 +49,10 @@ object Streams {
     * keyed TxLog commit, an append of a pure function of the batch).
     * AvailableNow otherwise drains the whole backlog as ONE batch;
     * `maxFilesPerTrigger` caps the files per micro-batch, which is how a
-    * backfill still runs `f` once per file group. Returns the running
-    * query (caller awaits/stops). */
+    * backfill still runs `f` once per file group. An `f` that calls an
+    * operator which caches intermediates calls
+    * [[graft.core.Measure.releaseAll]] after the batch's action. Returns
+    * the running query (caller awaits/stops). */
   def eachFileBatch(spark: SparkSession, sourceDir: String,
                     checkpointDir: String, schema: StructType,
                     maxFilesPerTrigger: Option[Int] = None)(

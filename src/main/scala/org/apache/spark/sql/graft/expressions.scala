@@ -1984,7 +1984,7 @@ object NgramHash {
 
   /** All trigram events of a token array as
     * (h3, h3b, hab, habb, hbc, hbcb, hb, hc) rows — the exact key set
-    * graft.ops.Text.trigramNllWithHandle builds per event, with the
+    * graft.ops.Text.trigramNll builds per event, with the
     * chain prefixes shared: hab is h3's intermediate state, habb is
     * h3b's, and the per-token 42- and lit(1)-seeded hashes are computed
     * once per token instead of once per event side. Arrays shorter
@@ -2025,7 +2025,7 @@ object NgramHash {
 /** Bigram LM event keys in ONE fused per-row loop — semantics identical
   * to `transform`-built (a, b) token structs exploded and re-hashed
   * through four separate xxhash64 columns (the
-  * graft.ops.Text.bigramNllWithHandle composition); see [[NgramHash]]
+  * graft.ops.Text.bigramNll composition); see [[NgramHash]]
   * for the chain-sharing arithmetic. Output
   * array<struct<h2, h2b, ha, hb>> (all longs, never null — a null token
   * is skipped by the fold exactly as xxhash64 skips null children). */
@@ -2054,7 +2054,7 @@ case class BigramHashes(child: Expression)
 }
 
 /** Trigram LM event keys in ONE fused per-row loop — the
-  * [[BigramHashes]] treatment of graft.ops.Text.trigramNllWithHandle's
+  * [[BigramHashes]] treatment of graft.ops.Text.trigramNll's
   * eight xxhash64 key columns. Output
   * array<struct<h3, h3b, hab, habb, hbc, hbcb, hb, hc>>. */
 case class TrigramHashes(child: Expression)

@@ -12,7 +12,7 @@ class RetrievalSpec extends SparkSpec {
 
   // ---- df-cut sparse cosine ----------------------------------------------
 
-  test("sparseCosinePairs: hand-computed cosine, df-cut drops ubiquitous terms from the dot") {
+  releasingTest("sparseCosinePairs: hand-computed cosine, df-cut drops ubiquitous terms from the dot") {
     // shingleK=1 → terms are single tokens. N=4 docs.
     //   d1: x x y     d2: x x y     d3: x z      d4: q r
     // df: x=3, y=2, z=1, q=1, r=1. idf = ln(4/df).
@@ -90,16 +90,15 @@ class RetrievalSpec extends SparkSpec {
     assert(top == 1L)
   }
 
-  test("bm25TopKWithHandle: persisted tf equals the unpersisted plan") {
+  releasingTest("bm25TopK: persisted tf equals the unpersisted plan") {
     val docs = Seq((1L, "a b a c"), (2L, "a d"), (3L, "d d"))
       .toDF("doc_id", "text")
     val qs = Seq("q" -> Seq("a", "d"))
     val plain = Retrieval.bm25TopK(docs, "doc_id", "text", qs, topK = 3)
       .orderBy("query_id", "rank").collect().toSeq
-    val (fast, handle) = Retrieval.bm25TopKWithHandle(
-      docs, "doc_id", "text", qs, topK = 3, persistTf = true)
-    try assert(fast.orderBy("query_id", "rank").collect().toSeq == plain)
-    finally handle.unpersist()
+    val fast = Retrieval.bm25TopK(docs, "doc_id", "text", qs, topK = 3,
+      persist = true)
+    assert(fast.orderBy("query_id", "rank").collect().toSeq == plain)
   }
 
   // ---- SQ8 ----------------------------------------------------------------
@@ -260,7 +259,7 @@ class RetrievalSpec extends SparkSpec {
     assert(out.isEmpty) // lev 3 > maxDist even though grams collide
   }
 
-  test("corpus-relative maxDf defaults equal the calibrated floor at small scale") {
+  releasingTest("corpus-relative maxDf defaults equal the calibrated floor at small scale") {
     import spark.implicits._
     // below the frac knee every auto path resolves to its floor (= the
     // old explicit default), so default-vs-explicit must be identical —

@@ -99,44 +99,34 @@ class ScaleGuardSpec extends SparkSpec {
     assert(labeled.select("cluster").distinct().count() == 1L)
   }
 
-  test("suffix-ladder spans: an all-duplicate corpus yields maximal spans") {
-    val (spans, handles) = Text.suffixDupSpansWithHandle(docs, "doc_id", "text",
-      baseK = 4, levels = 4, minDocs = 2, persistLevels = true)
-    try assert(consume(spans) > 0)
-    finally handles.foreach(_.unpersist())
+  releasingTest("suffix-ladder spans: an all-duplicate corpus yields maximal spans") {
+    assert(consume(Text.suffixDupSpans(docs, "doc_id", "text",
+      baseK = 4, levels = 4, minDocs = 2)) > 0)
   }
 
-  test("winnow pairs, e2e (fixed and default maxDf) and gate yield output") {
+  releasingTest("winnow pairs, e2e (fixed and default maxDf) and gate yield output") {
     val m = marked
-    val (pairs, fp) = Text.winnowPairsWithHandle(m, "doc_id", "text",
-      k = 5, w = 8, maxDf = 30, minShared = 2, persistFp = true)
-    try assert(consume(pairs) > 0, "winnow candidate pairs")
-    finally fp.unpersist()
-    for (maxDf <- Seq(30, 0)) {
-      val (clusters, h) = Text.winnowDedupE2eWithHandle(m, "doc_id", "text",
-        k = 5, w = 8, maxDf = maxDf, minShared = 2, minJacPct = 50)
-      try assert(consume(clusters) > 0, s"winnow e2e clusters at maxDf=$maxDf")
-      finally h.unpersist()
-    }
+    assert(consume(Text.winnowPairs(m, "doc_id", "text",
+      k = 5, w = 8, maxDf = 30, minShared = 2)) > 0, "winnow candidate pairs")
+    for (maxDf <- Seq(30, 0))
+      assert(consume(Text.winnowDedupE2e(m, "doc_id", "text",
+        k = 5, w = 8, maxDf = maxDf, minShared = 2, minJacPct = 50)) > 0,
+        s"winnow e2e clusters at maxDf=$maxDf")
     val (sets0, rare) = Text.winnowIndex(m, "doc_id", "text", k = 5, w = 8,
       maxDf = 30)
     val sets = sets0.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val arrivals = m.select((col("doc_id") + 3 * ScaleFixture.KeyStride)
-        .as("doc_id"), concat(lit("edited preamble "), col("text")).as("text"))
-      assert(consume(Text.winnowGateFromIndex(arrivals, "doc_id", "text",
-        sets, rare, k = 5, w = 8, minShared = 2, minJacPct = 50)) > 0,
-        "edited arrivals must match their marker group")
-    } finally sets.unpersist()
+    val arrivals = m.select((col("doc_id") + 3 * ScaleFixture.KeyStride)
+      .as("doc_id"), concat(lit("edited preamble "), col("text")).as("text"))
+    assert(consume(Text.winnowGateFromIndex(arrivals, "doc_id", "text",
+      sets, rare, k = 5, w = 8, minShared = 2, minJacPct = 50)) > 0,
+      "edited arrivals must match their marker group")
   }
 
-  test("df-cut sparse cosine yields the marker-group pairs") {
+  releasingTest("df-cut sparse cosine yields the marker-group pairs") {
     val m = docs.withColumn("text", concat(col("text"), lit(" zq"),
       (col("doc_id") % ScaleFixture.KeyStride).cast("string"), lit(" xq end")))
-    val (pairs, w) = ops.Retrieval.sparseCosinePairsWithHandle(m, "doc_id",
-      "text", shingleK = 4, maxDf = 30, minCos = 0.05, persistW = true)
-    try assert(consume(pairs) > 0)
-    finally w.unpersist()
+    assert(consume(ops.Retrieval.sparseCosinePairs(m, "doc_id", "text",
+      shingleK = 4, maxDf = 30, minCos = 0.05)) > 0)
   }
 
   test("sft assembly and cross-domain overlap yield output on copies") {

@@ -11,7 +11,7 @@ import graft.ops.{Bpe, Curation, Sampling, Similarity, Sketches, Text}
 class TrainSpec extends SparkSpec {
   import spark.implicits._
 
-  test("suffixDupSpans: maximal variable-length spans, contained levels dropped") {
+  releasingTest("suffixDupSpans: maximal variable-length spans, contained levels dropped") {
     // docs 1/2 share EXACTLY 16 consecutive tokens (different contexts);
     // docs 3/4 share exactly 4; every other token is globally unique —
     // so the ladder must report one len-16 maximal span per sharing doc
@@ -44,7 +44,7 @@ class TrainSpec extends SparkSpec {
     assert(gotMid == Seq((5L, 2, 8), (6L, 3, 8)))
   }
 
-  test("suffixDupSpansGated equals the ungated ladder (exactness, not heuristic)") {
+  releasingTest("suffixDupSpansGated equals the ungated ladder (exactness, not heuristic)") {
     // the hand corpus above plus a pile of globally-unique filler docs —
     // the gate must drop the filler BEFORE the ladder (same output) and
     // must keep every doc that holds a duplicated window
@@ -79,7 +79,7 @@ class TrainSpec extends SparkSpec {
     assert(sg == su, "gate dropped degenerate empty-token windows")
   }
 
-  test("scrubSuffixSpans: minLen thresholds long spans, nested/overlapping union") {
+  releasingTest("scrubSuffixSpans: minLen thresholds long spans, nested/overlapping union") {
     // docs 1/2 share a 16-token run AND a separate 4-token run; at
     // minLen = 8 only the long run is scrubbed — the short duplicated
     // n-gram SURVIVES (the capability fixed-k scrubbing cannot express)
@@ -131,36 +131,13 @@ class TrainSpec extends SparkSpec {
     assert(n == Seq(2, 0, 1))
   }
 
-  test("duplicatedSpanStats counts spans shared across documents") {
+  releasingTest("duplicatedSpanStats counts spans shared across documents") {
     val df = Seq((1L, "a b c"), (2L, "b c d"), (3L, "x y")).toDF("doc_id", "text")
     val out = Text.duplicatedSpanStats(df, "doc_id", "text", k = 2)
       .orderBy("doc_id")
       .as[(Long, Long, Long, Double)].collect().toSeq
     // "b c" occurs in docs 1 and 2; every doc has n-1 = 2 or 1 spans
     assert(out == Seq((1L, 2L, 1L, 0.5), (2L, 2L, 1L, 0.5), (3L, 1L, 0L, 0.0)))
-  }
-
-  test("persisted span/bigram variants equal the unpersisted plans") {
-    val df = Seq((1L, "a b c d e f"), (2L, "b c d x y z"), (3L, "a b"))
-      .toDF("doc_id", "text")
-    val plainSpans = Text.duplicatedSpanStats(df, "doc_id", "text", k = 2)
-      .orderBy("doc_id").collect().toSeq
-    val (fastDf, spanHandle) = Text.duplicatedSpanStatsWithHandle(
-      df, "doc_id", "text", k = 2, persistSpans = true)
-    try assert(fastDf.orderBy("doc_id").collect().toSeq == plainSpans)
-    finally spanHandle.unpersist()
-    val plainNll = Text.bigramNll(df, "doc_id", "text")
-      .orderBy("doc_id").collect().toSeq
-    val (nllDf, bgHandle) = Text.bigramNllWithHandle(
-      df, "doc_id", "text", persistBigrams = true)
-    try assert(nllDf.orderBy("doc_id").collect().toSeq == plainNll)
-    finally bgHandle.unpersist()
-    val plainScrub = Text.scrubDuplicatedSpans(df, "doc_id", "text", k = 2)
-      .orderBy("doc_id").collect().toSeq
-    val (scrubDf, scrubHandle) = Text.scrubDuplicatedSpansWithHandle(
-      df, "doc_id", "text", k = 2, persistSpans = true)
-    try assert(scrubDf.orderBy("doc_id").collect().toSeq == plainScrub)
-    finally scrubHandle.unpersist()
   }
 
   test("bigramNll: add-one smoothed corpus LM, hand-computed") {
@@ -206,17 +183,6 @@ class TrainSpec extends SparkSpec {
     assert(out.forall(_._3 > 0))
   }
 
-  test("kneserNeyNll: persisted event stream equals the plain plan") {
-    val df = Seq((1L, "a b a b c"), (2L, "b c d")).toDF("doc_id", "text")
-    val plain = Text.kneserNeyNll(df, "doc_id", "text")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val (p, h) = Text.kneserNeyNllWithHandle(df, "doc_id", "text",
-      persistBigrams = true)
-    val persisted = p.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    h.unpersist()
-    assert(persisted == plain)
-  }
-
   test("chunkTokens: window/stride boundaries and short-doc single chunk") {
     val df = Seq("t1 t2 t3 t4 t5 t6 t7 t8 t9 t10 t11", "s1 s2").toDF("text")
     val out = df.select(Text.chunkTokens(split(col("text"), " ", -1),
@@ -230,7 +196,7 @@ class TrainSpec extends SparkSpec {
       (0L, "s1 s2", 2L)))
   }
 
-  test("dsirWeights: target-like docs score higher; persisted equals plain") {
+  test("dsirWeights: target-like docs score higher") {
     // two sharply separated vocabularies: target docs reuse target words
     val docs = (1L to 20L).map { i =>
       if (i <= 10) (i, "alpha beta gamma delta alpha beta", true)
@@ -245,11 +211,6 @@ class TrainSpec extends SparkSpec {
       s"target avg $tgtAvg should clearly exceed non-target $rawAvg")
     // a doc made of target vocabulary gets positive log weight
     assert(tgtAvg > 0 && rawAvg < 0)
-    val (p, handle) = Curation.dsirWeightsWithHandle(
-      df, "doc_id", "text", col("tgt"), buckets = 64, persistEvents = true)
-    val persisted = p.collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
-    handle.unpersist()
-    assert(persisted == out)
   }
 
   test("bigram stored model: scored-from-stored equals self-trained; unseen fallbacks finite") {
@@ -319,7 +280,7 @@ class TrainSpec extends SparkSpec {
     assert(f._1 == 4L && !f._2.isNaN && !f._2.isInfinite)
   }
 
-  test("mooreLewisFromModels: serving-time deltas match training-time scoring") {
+  releasingTest("mooreLewisFromModels: serving-time deltas match training-time scoring") {
     val docs = (1L to 20L).map { i =>
       if (i <= 10) (i, "alpha beta gamma delta alpha beta", true)
       else (i, "omega psi chi phi omega psi", false)
@@ -350,7 +311,7 @@ class TrainSpec extends SparkSpec {
     }
   }
 
-  test("mooreLewis: target docs get lower delta; unseen fallbacks finite; persisted equals plain") {
+  releasingTest("mooreLewis: target docs get lower delta; unseen fallbacks finite") {
     // sharply separated vocabularies (the dsirWeights fixture shape):
     // target docs reuse target bigrams, off-target docs a disjoint set,
     // and doc 21 mixes one target context with tokens the TARGET model
@@ -377,12 +338,6 @@ class TrainSpec extends SparkSpec {
     out.values.foreach { case (ct, cc, d) =>
       assert(math.abs(d - (ct - cc)) < 2e-4, s"delta consistency: $out")
     }
-    val (p, handle) = Text.mooreLewisWithHandle(
-      df, "doc_id", "text", col("tgt"), persistEvents = true)
-    val persisted = p.collect().map(r => r.getLong(0) ->
-      (r.getDouble(2), r.getDouble(3), r.getDouble(4))).toMap
-    handle.unpersist()
-    assert(persisted == out)
   }
 
   test("mixtureRates: alpha=0.5 upsamples the small domain") {
@@ -503,7 +458,7 @@ class TrainSpec extends SparkSpec {
     assert(kept == Map(2L -> 10L, 3L -> 20L, 5L -> 10L))
   }
 
-  test("incrementalDedup flags exact, near, and kept against a corpus") {
+  releasingTest("incrementalDedup flags exact, near, and kept against a corpus") {
     // the near-dup doc is a verified band-collision: a last-token edit of
     // a 30-token doc keeps 26/28 shingles, and the md5 signature family
     // (re-derived offline) shares LSH band 0 at jaccard 0.929
@@ -519,12 +474,6 @@ class TrainSpec extends SparkSpec {
     val out = Curation.incrementalDedup(batch, corpus, "doc_id", "text")
       .orderBy("doc_id").as[(Long, String)].collect().toSeq
     assert(out == Seq(1L -> "exact_dup", 2L -> "near_dup", 3L -> "kept"))
-    // persist-handle route (the persistTf contract): identical output,
-    // handles release cleanly
-    val (outH, handles) = Curation.incrementalDedupWithHandle(
-      batch, corpus, "doc_id", "text", persistShingles = true)
-    assert(outH.orderBy("doc_id").as[(Long, String)].collect().toSeq == out)
-    handles.foreach(_.unpersist())
   }
 
   test("scrubDuplicatedSpans removes exactly the cross-doc duplicated spans") {
@@ -742,17 +691,6 @@ class TrainSpec extends SparkSpec {
     val out = Text.trigramNll(df, "doc_id", "text").orderBy("doc_id")
       .as[(Long, Long, Double)].collect().toSeq
     assert(out == Seq((1L, 3L, 0.0513), (2L, 1L, 0.0513)))
-  }
-
-  test("trigramNll: persisted trigram stream equals the plain plan") {
-    val df = Seq((1L, "a b c d a b c"), (2L, "c d a b"), (3L, "a b c"))
-      .toDF("doc_id", "text")
-    val plain = Text.trigramNll(df, "doc_id", "text")
-      .orderBy("doc_id").collect().toSeq
-    val (fast, handle) = Text.trigramNllWithHandle(
-      df, "doc_id", "text", persistTrigrams = true)
-    try assert(fast.orderBy("doc_id").collect().toSeq == plain)
-    finally handle.unpersist()
   }
 
   test("trigramNll: rarer continuations score worse than corpus-typical ones") {

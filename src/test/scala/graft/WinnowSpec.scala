@@ -88,7 +88,7 @@ class WinnowSpec extends SparkSpec {
     assert(a == b && a.nonEmpty)
   }
 
-  test("winnowPairs counts the fingerprint intersection, maxDf prunes hot grams") {
+  releasingTest("winnowPairs counts the fingerprint intersection, maxDf prunes hot grams") {
     val base = "some fairly long distinctive document body with many words in it"
     val docs = Seq(
       (1L, base),
@@ -111,7 +111,7 @@ class WinnowSpec extends SparkSpec {
     assert(none == 0L)
   }
 
-  test("winnowDedupE2e: verify gate keeps true copies, cuts partial overlaps") {
+  releasingTest("winnowDedupE2e: verify gate keeps true copies, cuts partial overlaps") {
     // deterministic lowercase-alnum corpus (normalize() is identity here)
     val rnd = new scala.util.Random(7)
     def blob(n: Int): String =
