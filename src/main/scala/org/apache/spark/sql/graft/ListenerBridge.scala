@@ -6,9 +6,11 @@ import org.apache.spark.SparkContext
   * count jobs/stages/tasks through a SparkListener, and listener events
   * post asynchronously — a counter read immediately after an action can
   * miss the tail of its own job's events. `waitUntilEmpty` blocks until
-  * the bus has delivered everything, making per-query counts exact.
-  * Diagnostic use only (ProfileQ, the cosmobench tracer); never in a
-  * query plan. */
+  * the bus has delivered everything (at most 10 s, then a
+  * `TimeoutException`; interruptible), making per-query counts exact.
+  * Callers: ProfileQ and the cosmobench tracer, and the monitor
+  * `Runner`, which waits here for the sink's action to complete its
+  * row-count `Observation`. Never in a query plan. */
 object ListenerBridge {
   def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

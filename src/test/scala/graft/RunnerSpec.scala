@@ -1,7 +1,13 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicReference}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ListenerBridge
 import graft.monitors.Runner
 import graft.monitors.Runner.MonitorJob
 
@@ -19,6 +25,7 @@ class RunnerSpec extends SparkSpec {
       order += "broken"
       throw new RuntimeException("boom")
     }))
+    Runner.register(MonitorJob("no_message", "monthly", _ => throw new NullPointerException()))
     Runner.register(MonitorJob("daily_only", "daily", s => {
       order += "daily_only"
       Seq((9, 9.0)).toDF("k", "v")
@@ -29,28 +36,105 @@ class RunnerSpec extends SparkSpec {
       sink = (name, df) => sunk(name) = df.count())
     assert(order.take(1) == Seq("ingest"), "ingest runs before monitors")
     assert(!order.contains("daily_only"), "other cadences untouched")
-    assert(results.map(_.name) == Seq("osm_shift", "broken"))
+    assert(results.map(_.name) == Seq("osm_shift", "broken", "no_message"))
     assert(results.head.rowCount == 1 && results.head.error.isEmpty)
     assert(results(1).error.exists(_.contains("boom")), "failure recorded, not fatal")
+    assert(results(2).rowCount == -1L &&
+      results(2).error.exists(_.contains("NullPointerException")),
+      s"a failure without a message records its class: ${results(2).error}")
     assert(sunk == Map("osm_shift" -> 1L))
   }
 
   test("runner rethrows fatal errors instead of recording them") {
-    Seq[() => Throwable](() => new InterruptedException("stop"),
-      () => new StackOverflowError("deep")).foreach { fatal =>
+    val fatals = Seq[() => Throwable](() => new InterruptedException("stop"),
+      () => new StackOverflowError("deep"))
+    for (fatal <- fatals; inSink <- Seq(false, true)) {
       Runner.clear()
       val order = scala.collection.mutable.ArrayBuffer[String]()
       Runner.register(MonitorJob("fatal", "monthly", _ => {
         order += "fatal"
-        throw fatal()
+        if (inSink) Seq((1, 2.0)).toDF("k", "v") else throw fatal()
       }))
       Runner.register(MonitorJob("after", "monthly", _ => {
         order += "after"
         Seq((1, 2.0)).toDF("k", "v")
       }))
-      val thrown = intercept[Throwable](Runner.runAll(spark, "monthly"))
-      assert(thrown.getClass == fatal().getClass)
-      assert(order == Seq("fatal"), "no monitor runs after a fatal error")
+      val sink = (name: String, _: DataFrame) => if (inSink && name == "fatal") throw fatal()
+      val thrown = intercept[Throwable](Runner.runAll(spark, "monthly", sink = sink))
+      val where = if (inSink) "sink" else "run"
+      assert(thrown.getClass == fatal().getClass, s"thrown from the $where")
+      assert(order == Seq("fatal"), s"no monitor runs after a fatal error in the $where")
+    }
+    Runner.clear()
+  }
+
+  test("an interrupt while the runner waits for the observation propagates") {
+    Runner.clear()
+    val order = scala.collection.mutable.ArrayBuffer[String]()
+    Seq("first", "after").foreach { name =>
+      Runner.register(MonitorJob(name, "monthly", _ => {
+        order += name
+        Seq((1, 2.0)).toDF("k", "v")
+      }))
+    }
+    // hold the shared listener queue at the sink's query start: the
+    // observation cannot complete, so the runner must wait for the bus
+    val armed = new AtomicBoolean(true)
+    val release = new CountDownLatch(1)
+    val hold = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart if armed.getAndSet(false) =>
+          release.await(30, TimeUnit.SECONDS)
+        case _ =>
+      }
+    }
+    ListenerBridge.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(hold)
+    val thrown = new AtomicReference[Throwable]()
+    val runner = new Thread(() =>
+      try Runner.runAll(spark, "monthly", sink = (_, df) => df.count())
+      catch { case t: Throwable => thrown.set(t) })
+    def waiting = runner.getStackTrace.exists(_.getMethodName == "waitUntilEmpty")
+    try {
+      runner.start()
+      val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(30)
+      while (!waiting && runner.isAlive && System.nanoTime() < deadline) Thread.sleep(5)
+      assert(waiting, "the runner never waited for the listener bus")
+      runner.interrupt()
+      runner.join(TimeUnit.SECONDS.toMillis(30))
+    } finally {
+      release.countDown()
+      spark.sparkContext.removeSparkListener(hold)
+      Runner.clear()
+    }
+    assert(!runner.isAlive)
+    assert(thrown.get.isInstanceOf[InterruptedException], thrown.get)
+    assert(order == Seq("first"), "no monitor runs after the interrupt")
+  }
+
+  test("each monitor's plan executes once per runAll, whatever the sink") {
+    val n = 40L
+    val out = Files.createTempDirectory("runner-once").toString
+    val sinks = Seq[(String, (String, DataFrame) => Unit)](
+      "parquet" -> ((name, df) => df.write.mode("overwrite").parquet(s"$out/$name")),
+      "no-op" -> ((_, _) => ()),
+      "count" -> ((_, df) => df.count()))
+    sinks.foreach { case (label, sink) =>
+      Runner.clear()
+      val rowsEvaluated = spark.sparkContext.longAccumulator(s"runner-once-$label")
+      val tick = udf { (_: Long) => rowsEvaluated.add(1); true }.asNondeterministic()
+      var invocations = 0
+      Runner.register(MonitorJob("once", "monthly", s => {
+        invocations += 1
+        s.range(0, n, 1, 2).toDF("k").where(tick(col("k")))
+      }))
+      val Seq(r) = Runner.runAll(spark, "monthly", sink = sink)
+      assert(r.error.isEmpty, s"$label sink: ${r.error}")
+      assert(invocations == 1, s"$label sink: run invoked $invocations times")
+      assert(rowsEvaluated.value == n, s"$label sink: ${rowsEvaluated.value} row evaluations")
+      assert(r.rowCount == n, s"$label sink")
+      if (label == "parquet")
+        assert(spark.read.parquet(s"$out/once").count() == r.rowCount)
     }
     Runner.clear()
   }
