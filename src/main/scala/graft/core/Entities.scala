@@ -12,11 +12,6 @@ object Entities {
   final case class Document(doc_id: Long, text: String, lang: String,
                             source: String, n_chars: Long)
   final case class Embedding(vec_id: Long, embedding: Seq[Float], label: Int)
-  final case class Lineitem(l_orderkey: Long, l_partkey: Long, l_suppkey: Long,
-                            l_linenumber: Int, l_quantity: Double,
-                            l_extendedprice: Double, l_discount: Double,
-                            l_tax: Double, l_returnflag: String,
-                            l_linestatus: String, l_shipdate: Timestamp)
 
   def events(spark: SparkSession, dir: String): Dataset[Event] = {
     import spark.implicits._
@@ -25,9 +20,5 @@ object Entities {
   def documents(spark: SparkSession, dir: String): Dataset[Document] = {
     import spark.implicits._
     Tables(spark, dir, "documents").as[Document]
-  }
-  def lineitems(spark: SparkSession, dir: String): Dataset[Lineitem] = {
-    import spark.implicits._
-    Tables(spark, dir, "lineitem").as[Lineitem]
   }
 }

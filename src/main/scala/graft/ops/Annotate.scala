@@ -477,25 +477,14 @@ object Annotate {
         sum(exp(col("sc") - col("mx"))).over(wItem)).as("t")))
   }
 
-  /** Gold-question scoring: each worker's accuracy over the audited
-    * subset (items with a known answer). One equi-join on the item plus
-    * one roster-sized aggregation; counts are ADDITIVE, so arriving
-    * label batches fold into a stored (wid, n_gold, n_correct) table
-    * incrementally — [[goldCounts]] runs unchanged on a streaming
-    * DataFrame and `accFromGoldCounts` refits the rate
-    * from the store (the winMatrix / btFromMatrix split).
-    *
-    * Output: (wid, n_gold, n_correct, acc) with the raw double rate. */
-  def workerGold(labels: DataFrame, gold: DataFrame, itemCol: String,
-                 workerCol: String, labelCol: String,
-                 goldItemCol: String, goldLabelCol: String): DataFrame =
-    goldCounts(labels, gold, itemCol, workerCol, labelCol,
-      goldItemCol, goldLabelCol)
-      .transform(accFromGoldCounts)
-
-  /** The additive half of [[workerGold]]: per-worker gold hit counts
-    * for ONE batch of labels — the stored model the streaming form
-    * appends to. */
+  /** Gold-question scoring, additive half: per-worker gold hit counts
+    * for ONE batch of labels (the audited subset — items with a known
+    * answer). One equi-join on the item plus one roster-sized
+    * aggregation; counts are ADDITIVE, so arriving label batches fold
+    * into a stored (wid, n_gold, n_correct) table incrementally. This
+    * runs unchanged on a streaming DataFrame, and [[accFromGoldCounts]]
+    * refits the rate from the store (the winMatrix / btFromMatrix
+    * split). */
   def goldCounts(labels: DataFrame, gold: DataFrame, itemCol: String,
                  workerCol: String, labelCol: String,
                  goldItemCol: String, goldLabelCol: String): DataFrame =

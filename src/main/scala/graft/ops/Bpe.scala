@@ -57,25 +57,6 @@ object Bpe {
     else graft.functions.GraftExtensions
       .bpeMergeSeq(initialSymbols(word), merges)
 
-  /** The trained merge table as a DataFrame `(rank, a, b, merged, n)` —
-    * the STORED-tokenizer surface: train once, write this table
-    * (parquet or any sink), and later sessions encode without
-    * retraining via [[mergesFromDF]] → [[segment]]. */
-  def mergesToDF(spark: org.apache.spark.sql.SparkSession,
-                 merges: Seq[(Int, String, String, String, Long)]): DataFrame = {
-    import spark.implicits._
-    merges.toDF("rank", "a", "b", "merged", "n")
-  }
-
-  /** Load an ordered merge list from a stored merge table. The collect
-    * is merge-count-sized (a tokenizer is a few-thousand-row artifact —
-    * bounded driver state by construction, the [[train]] contract). */
-  def mergesFromDF(df: DataFrame): Seq[(String, String)] =
-    df.select(col("rank"), col("a"), col("b"))
-      // collect-bound: ordered merge list - numMerges rows by construction
-      .orderBy("rank").collect()
-      .map(r => (r.getString(1), r.getString(2))).toSeq
-
   /** Word vocabulary with counts from a token column (one row per
     * token OCCURRENCE in `df`). The single corpus-sized aggregate. */
   def wordVocab(df: DataFrame, tokCol: String): DataFrame =

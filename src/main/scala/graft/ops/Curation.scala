@@ -91,9 +91,8 @@ object Curation {
     * textCol)`: shingle → `numHashes`-component signature → `bands`
     * band-hash buckets → in-bucket pair fan-out with the standard
     * hot-bucket guard. Same signature family as [[flags]], so the whole
-    * pair generation is expressible in the DuckDB oracle (unlike the
-    * xxhash64 fast path in Text.minhashCandidates). One shuffle — the
-    * bucket groupBy. */
+    * pair generation is expressible in the DuckDB oracle. One shuffle —
+    * the bucket groupBy. */
   def mdCandidatePairs(docs: DataFrame, idCol: String, textCol: String,
                        shingleK: Int = 4, numHashes: Int = 16, bands: Int = 4,
                        maxBucketSize: Int = 1000): DataFrame = {
@@ -245,7 +244,7 @@ object Curation {
       // + lit(0): SUM(lr) is a sum of SIGNED log-ratios; a doc whose
       // buckets cancel below the 4-dp grid can land -0.0 under one
       // summation order and +0.0 under another — normalize so the output
-      // is engine-portable (the mooreLewisFromModels delta convention).
+      // is engine-portable (the Text.mooreLewis delta convention).
       .agg(count(lit(1)).as("n_tokens"),
         (round(sum("lr"), 4) + lit(0)).as("log_weight"))
   }
@@ -288,11 +287,10 @@ object Curation {
   /** Map-only DSIR log-weight with the model supplied as a literal
     * array ([[dsirModelDF]] round-tripped through [[weightsFromDF]]) —
     * one aggregate HOF per row, no shuffle, no join; the serving/
-    * streaming twin of [[classifierScore]], and the scoring shape
-    * [[graft.streaming.Streams.streamingDsirScore]] applies per row on
-    * an unbounded stream. Empty tokens are skipped exactly as
-    * [[dsirWeights]] skips them; token-order summation keeps
-    * the float deterministic. Returns the RAW log-weight sum — callers
+    * streaming twin of [[classifierScore]], valid per row on an
+    * unbounded stream (MergeStreamSpec pins stream == batch). Empty
+    * tokens are skipped exactly as [[dsirWeights]] skips them;
+    * token-order summation keeps the float deterministic. Returns the RAW log-weight sum — callers
     * round (the registry convention). Semantics note: a ZERO-token doc
     * scores 0.0 here (a row per input row), where the event-sum
     * [[dsirWeights]] emits no row for it — callers comparing the two
@@ -608,7 +606,7 @@ object Curation {
     * [[classifierScore]] consumes from a persisted `(bucket, w)` table
     * ([[trainTextClassifier]]'s output schema round-tripped through
     * parquet or any other store) with NO retraining — the same
-    * stored-model pattern as `Bpe.mergesFromDF` / `Unigram.costsFromDF`.
+    * stored-model pattern as [[graft.ops.Text.bigramNllFromModel]].
     * Bounded driver state: `buckets` rows. Buckets absent from the
     * table (e.g. pruned zero weights) read as 0.0; `buckets` must match
     * the hash space the model was trained with — the vector length IS

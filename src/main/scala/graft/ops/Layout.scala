@@ -1,22 +1,21 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Multi-dimensional physical layout: Z-ORDER (Morton) clustering, the
-  * public Delta/Iceberg `OPTIMIZE ZORDER BY` lever re-expressed as a
-  * plain Spark write-time job. A linear sort prunes file scans only on
-  * its LEADING column; interleaving the bits of rank-quantized columns
+  * public Delta/Iceberg `OPTIMIZE ZORDER BY` lever re-expressed as
+  * column expressions. A linear sort prunes file scans only on its
+  * LEADING column; interleaving the bits of rank-quantized columns
   * gives every z-ordered column locality, so a range predicate on ANY
-  * of them maps to a small fraction of the written files (min/max file
+  * of them maps to a small fraction of a z-sorted layout (min/max file
   * stats or partition ranges skip the rest).
   *
-  * Scale shape: ONE approx-percentile sketch pass to learn per-column
-  * bucket thresholds (driver state = cols × 2^bits doubles, data-size
-  * independent — the `quantileBuckets` pattern), then a map-only
-  * bucket+interleave expression and one range repartition on the
-  * z-value. No window, no explode, no per-row driver involvement; the
-  * range exchange is the same single shuffle any rewrite pays. */
+  * Scale shape: the bucket + interleave expressions are map-only pure
+  * functions of the row (a fold over a literal threshold array, then
+  * integer bit arithmetic), so they stay in whole-stage codegen and a
+  * z-sorted rewrite pays only the one range exchange on the z-value.
+  * The `ext_zorder_cells` registry query composes them. */
 object Layout {
 
   /** Quantile-rank bucket of `c` given ascending `thresholds` (the
@@ -40,242 +39,4 @@ object Layout {
       }
     }.reduce(_ + _)
   }
-
-  /** Cluster `df` for multi-dimensional scan pruning: learn per-column
-    * quantile thresholds in one sketch pass, bucket each row, Morton-
-    * interleave, then range-repartition + sort on the z-value. Write
-    * the result as-is; each output file then covers a small z-range =
-    * a small hyper-rectangle of the column space, so min/max file
-    * skipping works for predicates on every z-ordered column.
-    * `outPartitions` defaults to the session shuffle parallelism. */
-  def zorderBy(df: DataFrame, cols: Seq[String], bits: Int = 8,
-               outPartitions: Int = 0): DataFrame = {
-    val levels = 1 << bits
-    val probs = (1 until levels).map(_.toDouble / levels)
-    val thRow = df.select(cols.map(c =>
-      percentile_approx(col(c).cast("double"),
-        lit(probs.toArray), lit(10000)).as(c)): _*).head()
-    val buckets = cols.indices.map { i =>
-      quantileBucket(col(cols(i)).cast("double"), thRow.getSeq[Double](i))
-    }
-    val np =
-      if (outPartitions > 0) outPartitions
-      else df.sparkSession.sessionState.conf.numShufflePartitions
-    df.withColumn("__z", zValue(buckets, bits))
-      .repartitionByRange(np, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-  }
-
-  /** Clustered-table layout with a file-level min/max manifest — the
-    * zone-map data-skipping half of the public Delta/Iceberg pair whose
-    * clustering half is [[zorderBy]]. Writes `dir/data` (z-ordered
-    * parquet) and `dir/stats` (one row per data file: min/max of each
-    * stats column + row count). [[prunedScan]] then turns a range
-    * predicate into a STATIC file list BEFORE any data file is opened —
-    * the same collect-a-bounded-driver-list-then-prune move as
-    * `Similarity.searchIvfIndex`, but keyed on column ranges instead of
-    * cell ids. After z-ordering, each file covers a small hyper-
-    * rectangle of the clustered columns, so the manifest prunes hard on
-    * ALL of them; on unclustered data the same scan degrades gracefully
-    * to reading every overlapping file (correct, just unpruned). */
-  def writeZordered(df: DataFrame, dir: String, zcols: Seq[String],
-                    bits: Int = 8, statsCols: Seq[String] = Nil,
-                    outPartitions: Int = 0): Unit = {
-    zorderBy(df, zcols, bits, outPartitions)
-      .write.mode("overwrite").parquet(s"$dir/data")
-    writeFileStats(df.sparkSession, dir,
-      if (statsCols.nonEmpty) statsCols else zcols)
-  }
-
-  /** (Re)build `dir/stats`: per-file min/max of the stats columns
-    * (native type for strings, double envelope for numerics) + row
-    * count, keyed by the file path. One COLUMN-PRUNED
-    * read-back over the data files (the scan reads only the indexed
-    * columns — at 100 TB that is the cheap columnar fraction of the
-    * write it follows), one file-count-sized aggregate. Driver state:
-    * nothing — the manifest itself is written distributed (coalesced to
-    * one file; it has one row per data file). */
-  def writeFileStats(spark: org.apache.spark.sql.SparkSession, dir: String,
-                     statsCols: Seq[String]): Unit =
-    writeFileStatsAt(spark, s"$dir/data", s"$dir/stats", statsCols)
-
-  /** [[writeFileStats]] with explicit data/stats paths — lets a
-    * transactional snapshot keep its manifest INSIDE the snapshot dir
-    * (an `_`-prefixed subdir is invisible to Spark's file index, so the
-    * manifest flips atomically with the data it describes —
-    * [[graft.ops.TxLog.commitCluster]]). */
-  def writeFileStatsAt(spark: org.apache.spark.sql.SparkSession,
-                       dataDir: String, statsDir: String,
-                       statsCols: Seq[String]): Unit = {
-    require(statsCols.nonEmpty, "statsCols must be non-empty")
-    val data = spark.read.parquet(dataDir)
-    // min/max in the column's NATIVE type for strings (judge r16 task
-    // 6): the LLM-pipeline slice keys are strings — host, lang, source,
-    // url prefix — and the former cast-to-double manifest stored null
-    // stats for them, so string predicates could never prune a file.
-    // Parquet itself keeps binary min/max per column chunk; this
-    // manifest now does the same, and the overlap compare at scan time
-    // is the engine's lexicographic string ordering — the SAME ordering
-    // the min/max aggregates here used, so skipping is exact. Numeric
-    // columns keep the double envelope (one manifest schema across int/
-    // long/float widths).
-    val stringCols = data.schema.fields
-      .filter(_.dataType == org.apache.spark.sql.types.StringType)
-      .map(_.name).toSet
-    val aggs = statsCols.flatMap { c =>
-      val v = if (stringCols(c)) col(c) else col(c).cast("double")
-      Seq(min(v).as(s"min_$c"), max(v).as(s"max_$c"))
-    } :+ count(lit(1L)).as("n_rows")
-    data.groupBy(input_file_name().as("file"))
-      .agg(aggs.head, aggs.tail: _*)
-      .coalesce(1)
-      .write.mode("overwrite").parquet(statsDir)
-  }
-
-  /** Manifest-pruned range scan over a [[writeZordered]] layout: keep
-    * only the data files whose [min, max] envelope of EVERY predicate
-    * column overlaps its requested [lo, hi] (conjunctive ranges — the
-    * zone-map skipping rule), read just those files, and apply the
-    * exact predicate as the residual filter. The manifest read +
-    * overlap filter touch one file-count-sized table; the surviving
-    * file list is the only driver state (bounded by file count — the
-    * same class as a Delta/Iceberg manifest scan). Files whose stats
-    * are null (all-null column) are skipped: a range predicate can
-    * never select a null. */
-  def prunedScan(spark: org.apache.spark.sql.SparkSession, dir: String,
-                 ranges: Seq[(String, Double, Double)]): DataFrame =
-    prunedScanAt(spark, s"$dir/data", s"$dir/stats", ranges)
-
-  /** [[prunedScan]] with explicit data/stats paths (see
-    * [[writeFileStatsAt]]). */
-  def prunedScanAt(spark: org.apache.spark.sql.SparkSession,
-                   dataDir: String, statsDir: String,
-                   ranges: Seq[(String, Double, Double)]): DataFrame =
-    prunedScanTypedAt(spark, dataDir, statsDir,
-      ranges.map { case (c, lo, hi) => (c, lo: Any, hi: Any) })
-
-  /** Typed [[prunedScan]]: `lo`/`hi` as literals of the column's OWN
-    * type, so string slice keys (host/lang/source — the keys an LLM
-    * pipeline actually prunes on) skip files against the native string
-    * min/max the manifest keeps since r17. String range compares are
-    * the engine's lexicographic ordering on both the manifest side and
-    * the residual filter — the same ordering that built the stats, so
-    * a pruned scan returns exactly the full scan's filtered rows. */
-  def prunedScanTyped(spark: org.apache.spark.sql.SparkSession,
-                      dir: String,
-                      ranges: Seq[(String, Any, Any)]): DataFrame =
-    prunedScanTypedAt(spark, s"$dir/data", s"$dir/stats", ranges)
-
-  /** [[prunedScanTyped]] with explicit data/stats paths. */
-  def prunedScanTypedAt(spark: org.apache.spark.sql.SparkSession,
-                        dataDir: String, statsDir: String,
-                        ranges: Seq[(String, Any, Any)]): DataFrame = {
-    require(ranges.nonEmpty, "ranges must be non-empty")
-    val st = spark.read.parquet(statsDir)
-    // Literal/stat TYPE validation (advisor r17): a numeric range
-    // against a string-stat column — or a string range against a
-    // pre-r17 manifest, where string columns kept null DOUBLE stats —
-    // makes the overlap predicate NULL for every file, and
-    // filter(overlap) would silently return zero rows instead of
-    // erroring: silent data loss on exactly the slice-key use case this
-    // API exists for. Fail loudly instead, naming the manifest rewrite
-    // that fixes the old format. (Files whose stats are genuinely null
-    // — an all-null column — are still skipped: a range predicate can
-    // never select a null.)
-    val statType = st.schema.fields.map(f => f.name -> f.dataType).toMap
-    ranges.foreach { case (c, lo, hi) =>
-      val mt = statType.getOrElse(s"min_$c", throw new IllegalArgumentException(
-        s"column '$c' has no min_/max_ stats in manifest $statsDir"))
-      mt match {
-        case org.apache.spark.sql.types.StringType =>
-          require(lo.isInstanceOf[String] && hi.isInstanceOf[String],
-            s"range for string-stat column '$c' must use String bounds, " +
-              s"got (${lo.getClass.getSimpleName}, ${hi.getClass.getSimpleName})")
-        case _: org.apache.spark.sql.types.NumericType =>
-          require(lo.isInstanceOf[Number] && hi.isInstanceOf[Number],
-            s"range for numeric-stat column '$c' must use numeric bounds, " +
-              s"got (${lo.getClass.getSimpleName}, ${hi.getClass.getSimpleName})" +
-              " — a String range here usually means a pre-r17 manifest " +
-              "(null double stats for strings); rewrite it with writeFileStats")
-        case other => throw new IllegalArgumentException(
-          s"unsupported stat type $other for column '$c'")
-      }
-    }
-    val overlap = ranges.map { case (c, lo, hi) =>
-      col(s"max_$c") >= lit(lo) && col(s"min_$c") <= lit(hi)
-    }.reduce(_ && _)
-    // input_file_name() produced URI-ENCODED paths (space → %20);
-    // spark.read.parquet wants plain Hadoop path strings, so decode —
-    // otherwise a table path containing any URI-escaping character
-    // resolves to nonexistent literal %XX paths while the unpruned
-    // scan of the same table still works. Scheme/authority survive.
-    val files = st.filter(overlap).select("file")
-      // collect-bound: pruned file LIST (one path per surviving file) - metadata, not data
-      .collect().map(r => decodeFileUri(r.getString(0)))
-    val residual = rangePredicateTyped(ranges)
-    if (files.isEmpty)
-      spark.read.parquet(dataDir).filter(lit(false))
-    else
-      spark.read.parquet(files.toIndexedSeq: _*).filter(residual)
-  }
-
-  /** Decode one input_file_name() URI back to a Hadoop path string:
-    * percent-escapes unapplied, scheme and authority preserved (a bare
-    * path passes through unchanged; an unparsable value falls back to
-    * itself rather than failing the scan). */
-  /** Bucketed CO-LOCATED layout — the other write-time join lever
-    * beside [[zorderBy]] (the brief's "repartition()/bucketing for
-    * co-located joins"): write a hot join side hash-bucketed (and
-    * within-bucket sorted) by the join key, so every LATER equi-join
-    * between two tables bucketed on the same key with the same bucket
-    * count runs with ZERO shuffle exchanges — Spark's bucketed scan
-    * reports the bucket spec as the output partitioning and Catalyst
-    * elides both Exchanges (and, with one file per bucket, both sorts)
-    * under the sort-merge join. At 100 TB this converts every
-    * fact-to-fact join on the bucketing key from a full two-sided
-    * shuffle into a file-aligned merge — the shuffle is paid ONCE at
-    * write time, amortized over every downstream join/aggregation on
-    * that key (a groupBy on the key also goes exchange-free).
-    *
-    * `bucketBy` requires the table catalog (bucket metadata lives in
-    * the catalog, not the parquet footer), so this registers `name` as
-    * an EXTERNAL table at `path` — the files are plain parquet + the
-    * session catalog entry carries the bucket spec. Readers go through
-    * `spark.table(name)`; a raw `spark.read.parquet(path)` sees the
-    * same rows but without the co-location guarantee (no catalog, no
-    * bucket spec). Bucket-count choice is the usual file-size math:
-    * buckets ≈ table bytes / target file bytes, and both join sides
-    * MUST agree on it (mismatched counts fall back to a shuffle —
-    * plan-asserted in LayoutSpec). */
-  def writeBucketed(df: DataFrame, name: String, path: String,
-                    key: String, buckets: Int): Unit = {
-    require(buckets > 0, s"buckets must be positive, got $buckets")
-    df.write.mode("overwrite")
-      .option("path", path)
-      .bucketBy(buckets, key)
-      .sortBy(key)
-      .format("parquet")
-      .saveAsTable(name)
-  }
-
-  private[ops] def decodeFileUri(f: String): String =
-    try {
-      val u = new java.net.URI(f)
-      if (u.getScheme == null) u.getPath
-      else u.getScheme + ":" +
-        Option(u.getAuthority).map("//" + _).getOrElse("") + u.getPath
-    } catch { case _: java.net.URISyntaxException => f }
-
-  /** Conjunctive `[lo, hi]` range predicate over the named columns —
-    * the residual filter a pruned scan applies after file skipping. */
-  def rangePredicate(ranges: Seq[(String, Double, Double)]): Column =
-    rangePredicateTyped(ranges.map { case (c, lo, hi) => (c, lo: Any, hi: Any) })
-
-  /** [[rangePredicate]] with literals of the column's own type (string
-    * ranges compare lexicographically, matching the manifest side). */
-  def rangePredicateTyped(ranges: Seq[(String, Any, Any)]): Column =
-    ranges.map { case (c, lo, hi) =>
-      col(c) >= lit(lo) && col(c) <= lit(hi)
-    }.reduce(_ && _)
 }

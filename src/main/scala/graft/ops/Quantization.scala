@@ -80,40 +80,6 @@ object Quantization {
       .drop("__cb")
   }
 
-  /** `iters` Lloyd rounds over ALL `m` codebooks in one scan per round:
-    * rows explode to (subspace, subvector), assignment is the zero-shuffle
-    * packed-codebook argmin, new entry = elementwise mean of its members.
-    * Each round exchanges only (m·ksub·dim)-sized aggregates. */
-  def trainCodebooks(df: DataFrame, id: String, vecCol: String,
-                     m: Int, dim: Int, ksub: Int, iters: Int = 2,
-                     seedHash: Column => Column = xxhash64(_),
-                     distRound: Int = -1): DataFrame = {
-    val w = dim / m
-    val v = col(vecCol).cast("array<double>")
-    val sub = df.select(col(id),
-      posexplode(array((0 until m).map(i => slice(v, i * w + 1, w)): _*))
-        .as(Seq("subspace", "sv")))
-    // jobs-bound: iters + 1 driver jobs (one m·ksub-row codebook
-    // localize per round via packed(), + the seed-codebook job)
-    (1 to iters).foldLeft(seedCodebooks(df, id, vecCol, m, dim, ksub, seedHash)) {
-      (cb, _) =>
-        sub.crossJoin(broadcast(packed(cb)))
-          .select(col("subspace"), col("sv"),
-            array_min(transform(
-              filter(col("__cb"), e => e.getField("subspace") === col("subspace")),
-              e => struct(rank(l2sq(col("sv"), e.getField("cv")), distRound).as("d"),
-                e.getField("code_id").as("j"))))
-              .getField("j").as("code_id"))
-          .select(col("subspace"), col("code_id"),
-            posexplode(col("sv")).as(Seq("pos", "x")))
-          .groupBy("subspace", "code_id", "pos").agg(avg("x").as("x"))
-          .groupBy("subspace", "code_id")
-          .agg(array_sort(collect_list(struct(col("pos"), col("x")))).as("__z"))
-          .select(col("subspace"), col("code_id"),
-            transform(col("__z"), z => z.getField("x")).as("cv"))
-    }
-  }
-
   /** Residual of each vector against its assigned IVF cell centroid:
     * adds `centroid_id` (via the zero-shuffle [[Similarity.ivfAssign]])
     * and `resCol` = v − centroid. Residuals concentrate near zero, so a
@@ -130,67 +96,6 @@ object Quantization {
       .withColumn(resCol,
         zip_with(col(vecCol).cast("array<double>"), col("__cent"), _ - _))
       .drop("__cent")
-  }
-
-  /** IVF-PQ index build: IVF cells from `centroids`, PQ codebooks trained
-    * on the RESIDUALS, every vector stored as (id, centroid_id, codes).
-    * Returns (encoded, codebooks). At scale the encoded table is the
-    * index: M ints + a cell id per vector.
-    *
-    * The residual table is a lazy plan consumed by every Lloyd round AND
-    * the final encode — at corpus scale, `persist()` (or checkpoint to
-    * parquet) the [[residuals]] output first and pass it through, exactly
-    * as one would materialize any k-means training input; the builder
-    * stays lazy so small/oracle runs need no storage side effects. */
-  def ivfPqIndex(df: DataFrame, id: String, vecCol: String,
-                 centroids: DataFrame, m: Int, dim: Int, ksub: Int,
-                 iters: Int = 2,
-                 seedHash: Column => Column = xxhash64(_),
-                 simRound: Int = -1, distRound: Int = -1):
-      (DataFrame, DataFrame) = {
-    val res = residuals(df.select(col(id), col(vecCol)), vecCol, centroids,
-      simRound = simRound)
-    val cb = trainCodebooks(res, id, "residual", m, dim, ksub, iters,
-      seedHash, distRound)
-    val encoded = encode(res, "residual", cb, m, dim, distRound)
-      .select(col(id), col("centroid_id"), col("codes"))
-    (encoded, cb)
-  }
-
-  /** IVF-PQ search: each probe fans out to its `nProbe` nearest cells,
-    * computes the ADC grid of its RESIDUAL against that cell, and ranks
-    * only the candidates of the probed cells — the join is an equi-join
-    * on `centroid_id`, so at scale each probe touches nProbe cells'
-    * codes, not the corpus. Distances use the probe's per-cell residual
-    * (asymmetric: candidate side stays codes-only). */
-  def ivfPqTopK(encoded: DataFrame, codebooks: DataFrame,
-                probes: DataFrame, probeId: String, candId: String,
-                vecCol: String, centroids: DataFrame,
-                m: Int, dim: Int, k: Int, nProbe: Int = 1,
-                simRound: Int = -1, distRound: Int = -1,
-                totalRound: Int = 4): DataFrame = {
-    val w = dim / m
-    // probe residual per probed cell (nProbe rows per probe)
-    val pres = residuals(probes.select(col(probeId), col(vecCol)), vecCol,
-      centroids, simRound = simRound, nProbe = nProbe)
-    val rv = col("residual")
-    val tabled = pres.crossJoin(broadcast(packed(codebooks)))
-      .select(col(probeId), col("centroid_id"),
-        transform(sequence(lit(0), lit(m - 1)), mm =>
-          map_from_entries(transform(
-            filter(col("__cb"), e => e.getField("subspace") === mm),
-            e => struct(e.getField("code_id"),
-              rank(l2sq(slice(rv, mm * w + 1, lit(w)), e.getField("cv")),
-                distRound))))).as("__tbl"))
-    val pairs = encoded.select(col(candId), col("centroid_id"), col("codes"))
-      .join(broadcast(tabled), Seq("centroid_id"))
-      .withColumn("dist", round(
-        aggregate(zip_with(col("__tbl"), col("codes"),
-          (t, c) => element_at(t, c)), lit(0.0d), _ + _), totalRound))
-    val win = Window.partitionBy(probeId).orderBy(col("dist"), col(candId))
-    pairs.withColumn("__rn", row_number().over(win))
-      .filter(col("__rn") <= k)
-      .select(col(probeId), col("centroid_id"), col(candId), col("dist"))
   }
 
   /** ADC (asymmetric distance computation) top-k: for each probe, the `k`

@@ -115,8 +115,7 @@ object Relational {
     * With `keys` empty this window formulation degenerates to a single
     * partition — for a global as-of use
     * `org.apache.spark.sql.graft.AsOfJoinApi.asOf(..., keys = Seq.empty)`,
-    * whose range-partitioned path scales; for a pathologically hot key
-    * see [[saltedAsOf]]. */
+    * whose range-partitioned path scales. */
   def asOfLookup(probes: DataFrame, quotes: DataFrame, keys: Seq[String],
                  timeCol: String, quoteVal: String, outCol: String): DataFrame = {
     val probeCols = probes.columns.toIndexedSeq
@@ -223,30 +222,6 @@ object Relational {
     val saltedRight = right.withColumn("__salt",
       explode(sequence(lit(0), lit(salts - 1))))
     saltedLeft.join(saltedRight, Seq(key, "__salt")).drop("__salt")
-  }
-
-  /** Skew-salted as-of join (J11 under pathological key skew): AQE's
-    * skew mitigation only rewrites the built-in join execs, so a hot
-    * key's probes all land in one AsOfJoinExec partition. Scatter each
-    * key's probes across `salts` buckets and replicate its quotes into
-    * every bucket — each bucket holds the key's complete quote step
-    * function, so the result equals the unsalted as-of exactly.
-    * Quote-side cost: ×salts replication of the (usually much smaller)
-    * quote stream. The GLOBAL (keys-empty) path needs no salting: its
-    * RangePartitioner samples the probes, so partition boundaries follow
-    * probe density by construction. */
-  def saltedAsOf(probes: DataFrame, quotes: DataFrame, keys: Seq[String],
-                 timeCol: String, quoteVal: String, outCol: String,
-                 salts: Int): DataFrame = {
-    require(keys.nonEmpty, "global as-of self-balances; salting applies to keyed as-of")
-    val saltedProbes = probes.withColumn("__salt",
-      pmod(xxhash64(monotonically_increasing_id()), lit(salts)).cast("int"))
-    val saltedQuotes = quotes.withColumn("__salt",
-      explode(sequence(lit(0), lit(salts - 1))))
-    org.apache.spark.sql.graft.AsOfJoinApi
-      .asOf(saltedProbes, saltedQuotes, keys :+ "__salt",
-        timeCol, quoteVal, outCol)
-      .drop("__salt")
   }
 
   /** X4 global-sigma outliers (reference:

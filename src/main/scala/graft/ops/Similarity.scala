@@ -115,13 +115,6 @@ object Similarity {
         (round(col("__margin"), 4) + lit(0)).as("margin"))
   }
 
-  /** Deterministic random hyperplanes: `nBits` planes of dimension `dim`,
-    * fixed seed — every executor computes identical literals. */
-  def hyperplanes(nBits: Int, dim: Int, seed: Long = 42L): Seq[Seq[Double]] = {
-    val rnd = new scala.util.Random(seed)
-    Seq.fill(nBits)(Seq.fill(dim)(rnd.nextGaussian()))
-  }
-
   /** Portable plane family: entry (j,i) = md5("j_i")'s 60-bit prefix
     * normalized to (−0.5, 0.5). Uniform entries are a valid random
     * projection for sign-LSH (Achlioptas-style; gaussian is the classic
@@ -414,7 +407,7 @@ object Similarity {
     * the shuffle-free [[ivfAssign]]; the mean is posexplode + two
     * map-side-combinable aggregations, so one round costs one scan of
     * `df` plus exchanges of only (k · dim)-sized data. Output
-    * `(centroid_id, vecCol)` feeds [[ivfAssign]]/[[annIvfJoin]].
+    * `(centroid_id, vecCol)` feeds [[ivfAssign]].
     *
     * Lloyd's caveats, standard and deterministic here: a cell that loses
     * every point disappears (k can shrink); seeds are hash-arbitrary, not
@@ -491,189 +484,6 @@ object Similarity {
             transform(col("__z"), x => x("v")).as(vecCol)))
       }
     } finally proj.unpersist(blocking = false)
-  }
-
-  /** IVF ANN join: assign both sides to cells, join on cell, top-k within.
-    * Probes may fan out to `nProbe` cells; candidates live in exactly one. */
-  def annIvfJoin(probes: DataFrame, cands: DataFrame, probeId: String,
-                 candId: String, vecCol: String, k: Int,
-                 centroids: DataFrame, nProbe: Int = 1): DataFrame = {
-    val p = ivfAssign(probes.select(col(probeId), col(vecCol).as("__pv")),
-      "__pv", centroids.withColumnRenamed(vecCol, "__pv"), nProbe = nProbe)
-    val c = ivfAssign(cands.select(col(candId), col(vecCol).as("__cv")),
-      "__cv", centroids.withColumnRenamed(vecCol, "__cv"))
-    val joined = p.join(c, Seq("centroid_id"))
-      .filter(col(probeId) =!= col(candId))
-      .withColumn("sim", round(cosine(col("__pv"), col("__cv")), 3))
-    val w = Window.partitionBy(probeId).orderBy(col("sim").desc, col(candId))
-    joined.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= k)
-      .select(col(probeId), col(candId), col("sim"))
-  }
-
-  /** Persisted IVF index: centroids + the corpus PARTITIONED BY CELL on
-    * disk. Training stays a periodic batch job ([[kmeansCentroids]]);
-    * this pair is the serving layout — the point at scale is that
-    * [[searchIvfIndex]] READS ONLY THE PROBED CELLS (static partition
-    * pruning on `centroid_id`), so a query batch with nProbe/k = 1%
-    * scans ~1% of the index files, where the in-memory [[annIvfJoin]]
-    * re-scans every vector per batch. Streaming adds land in their cell
-    * via [[ivfAssign]] on the streaming DataFrame with the same
-    * `partitionBy(centroid_id)` sink. */
-  def writeIvfIndex(cands: DataFrame, candId: String, vecCol: String,
-                    centroids: DataFrame, dir: String): Unit = {
-    // centroids are k rows — one file; the cell table lays each cell in
-    // its own partition directory for pruned probes
-    centroids.coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
-    ivfAssign(cands.select(col(candId), col(vecCol)), vecCol, centroids)
-      .write.mode("overwrite").partitionBy("centroid_id")
-      .parquet(s"$dir/cells")
-  }
-
-  /** Cell-pruned top-k search over a [[writeIvfIndex]] layout: assign
-    * probes (zero-shuffle broadcast argmax), collect the ≤ k distinct
-    * probed cell ids (bounded driver state — this is what turns the
-    * probe set into a STATIC partition filter the parquet scan prunes
-    * on), read only those cell directories, cosine top-k per probe.
-    * Same ranking contract as [[annIvfJoin]] (sim rounded to 3,
-    * candId tiebreak, self-pairs dropped). */
-  def searchIvfIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
-                     probes: DataFrame, probeId: String, candId: String,
-                     vecCol: String, k: Int, nProbe: Int = 1): DataFrame = {
-    val cents = spark.read.parquet(s"$dir/centroids")
-    val p = ivfAssign(probes.select(col(probeId), col(vecCol).as("__pv")),
-      "__pv", cents.withColumnRenamed(vecCol, "__pv"), nProbe = nProbe)
-    val probedCells = p.select("centroid_id").distinct()
-      // collect-bound: <= k distinct centroid ids (the probed-cell roster)
-      .collect().map(_.get(0))
-    val cells = spark.read.parquet(s"$dir/cells")
-      .filter(col("centroid_id").isin(probedCells.toIndexedSeq: _*))
-    val joined = p.join(cells, Seq("centroid_id"))
-      .filter(col(probeId) =!= col(candId))
-      .withColumn("sim", round(cosine(col("__pv"), col(vecCol)), 3))
-    val w = Window.partitionBy(probeId).orderBy(col("sim").desc, col(candId))
-    joined.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= k)
-      .select(col(probeId), col(candId), col("sim"))
-  }
-
-  /** Maintenance append into a [[writeIvfIndex]] layout: assign the
-    * arrivals to their cells under the STORED centroids (zero-shuffle
-    * broadcast argmax — the same plan [[ivfAssign]] runs on a stream)
-    * and partition-append them into
-    * the cell directories. Only the partitions the batch actually hits
-    * gain a file; the centroids and every untouched cell are left
-    * byte-identical, so concurrent [[searchIvfIndex]] readers see
-    * either the old or the new file list, never a half-written cell.
-    * This is the between-retrains serving path: appends keep the index
-    * current while cell QUALITY (how well the frozen centroids fit the
-    * drifting data) only degrades recall, never correctness — the same
-    * contract as a stale LSH plane set. */
-  def appendToIvfIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
-                       arrivals: DataFrame, candId: String,
-                       vecCol: String): Unit = {
-    val cents = spark.read.parquet(s"$dir/centroids")
-    ivfAssign(arrivals.select(col(candId), col(vecCol)), vecCol, cents)
-      .write.mode("append").partitionBy("centroid_id")
-      .parquet(s"$dir/cells")
-  }
-
-  /** Cell-balance drift of a batch against the stored index — the
-    * sim_ivf_drift signal as a single number: total-variation distance
-    * between the batch's and the index's cell-occupancy distributions
-    * under the STORED centroids (0 = identical balance, 1 = disjoint
-    * cells). Both sides aggregate to ≤ k rows before the driver sees
-    * them — one map-side-combinable count over each input, k-row
-    * driver state, any corpus size. */
-  def ivfIndexDrift(spark: org.apache.spark.sql.SparkSession, dir: String,
-                    batch: DataFrame, vecCol: String): Double = {
-    val cents = spark.read.parquet(s"$dir/centroids")
-    def dist(df: DataFrame): Map[Long, Double] = {
-      // partition-discovered centroid_id comes back as INT, the
-      // in-memory assignment as LONG — normalize before keying
-      val counts = df.groupBy(col("centroid_id").cast("long").as("cid"))
-        .agg(count(lit(1)).as("n"))
-        // collect-bound: k-cell count histogram - one row per centroid
-        .collect().map(r => r.getLong(0) -> r.getLong(1).toDouble).toMap
-      val total = counts.values.sum.max(1.0)
-      counts.view.mapValues(_ / total).toMap
-    }
-    val idx = dist(spark.read.parquet(s"$dir/cells"))
-    val bat = dist(ivfAssign(batch.select(col(vecCol)), vecCol, cents))
-    (idx.keySet ++ bat.keySet).toSeq
-      .map(c => math.abs(idx.getOrElse(c, 0.0) - bat.getOrElse(c, 0.0)))
-      .sum / 2.0
-  }
-
-  /** Blue/green index rebuild: retrain centroids over everything the
-    * current generation holds and write a NEW generation directory
-    * (`newDir`) with [[writeIvfIndex]] — never in place, because Spark
-    * (correctly) refuses to overwrite a path it is reading, and at
-    * scale an in-place rewrite would leave searchers a torn index; the
-    * caller flips its serving pointer when the write commits (the
-    * generation-swap pattern every production ANN index uses). */
-  def rebuildIvfIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
-                      newDir: String, candId: String, vecCol: String,
-                      k: Int, iters: Int = 3): Unit = {
-    val all = spark.read.parquet(s"$dir/cells").select(col(candId), col(vecCol))
-    val cents = kmeansCentroids(all, candId, vecCol, k, iters)
-    writeIvfIndex(all, candId, vecCol, cents, newDir)
-  }
-
-  /** Drift-triggered maintenance front door (judge r11 — the missing
-    * piece of the ANN serving lifecycle): always partition-append the
-    * batch (serving must include it either way), then measure
-    * [[ivfIndexDrift]] of the batch against the index it just joined;
-    * past `driftThreshold` the frozen centroids no longer fit the data,
-    * so retrain into the `nextDir` generation (including the batch) and
-    * return it as the new serving directory — otherwise keep serving
-    * `dir`. The drift probe runs BEFORE the append (batch vs the index
-    * it is about to join): measuring after would let a large batch drag
-    * the index distribution toward itself and dampen its own signal.
-    * The append is partition-local; the drift probe is two k-row
-    * aggregates; only an actual retrain rescans the corpus. */
-  def maintainIvfIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
-                       nextDir: String, batch: DataFrame, candId: String,
-                       vecCol: String, k: Int, driftThreshold: Double,
-                       iters: Int = 3): String = {
-    val drift = ivfIndexDrift(spark, dir, batch, vecCol)
-    appendToIvfIndex(spark, dir, batch, candId, vecCol)
-    if (drift <= driftThreshold) dir
-    else { rebuildIvfIndex(spark, dir, nextDir, candId, vecCol, k, iters); nextDir }
-  }
-
-  /** LSH-bucketed ANN: probes and candidates bucketed by the same planes,
-    * joined on bucket, top-k within the joined set per probe. Misses
-    * cross-bucket neighbors (recall < 1) — the accepted ANN trade-off.
-    *
-    * `multiProbe` raises recall without more planes: each probe also
-    * searches the buckets at Hamming distance 1 whose sign-margin was
-    * smallest (the classic multi-probe heuristic, approximated here by
-    * flipping each of the first `multiProbe` bits) — probe-side fan-out
-    * is `1 + multiProbe` rows, candidate side stays single-bucket. */
-  def annLshJoin(probes: DataFrame, cands: DataFrame, probeId: String,
-                 candId: String, vecCol: String, k: Int,
-                 nBits: Int, dim: Int, seed: Long = 42L,
-                 multiProbe: Int = 0): DataFrame = {
-    val planes = hyperplanes(nBits, dim, seed)
-    val bkt = lshBucket(col(vecCol), planes)
-    val probeBuckets =
-      if (multiProbe <= 0) array(bkt)
-      else array(bkt +: (0 until math.min(multiProbe, nBits)).map(j =>
-        bkt.bitwiseXOR(lit(1L << j))): _*)
-    val p = probes.select(col(probeId), col(vecCol).as("__pv"),
-      explode(probeBuckets).as("__bkt"))
-    val c = cands.select(col(candId), col(vecCol).as("__cv"),
-      lshBucket(col(vecCol), planes).as("__bkt"))
-    val joined = p.join(c, Seq("__bkt"))
-      .filter(col(probeId) =!= col(candId))
-      .withColumn("sim", round(cosine(col("__pv"), col("__cv")), 3))
-      // a candidate can match through several probe buckets — dedupe pairs
-      .select(col(probeId), col(candId), col("sim")).distinct()
-    val w = Window.partitionBy(probeId).orderBy(col("sim").desc, col(candId))
-    joined.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= k)
-      .select(col(probeId), col(candId), col("sim"))
   }
 
   /** Sample covariance matrix (biased, ÷N) of a vector column in ONE
@@ -789,57 +599,6 @@ object Similarity {
     val eig = v.zip(q).foldLeft(0.0) { case (s, (a, b)) => s + a * b }
     (v, eig)
   }
-
-  /** Exact-duplicate collapse BEFORE near-dup ANN — the production
-    * pipeline order (round 18, judge r17 top task): exact dedup is one
-    * hash aggregate, so running it first means the quadratic near-dup
-    * machinery only ever sees DISTINCT vectors. On corpora whose
-    * duplication is replication-heavy (the ScaleFixture X-copy
-    * embeddings stack exact copies, so TRUE near-dup pair volume grows
-    * quadratically — RecallProbe r18: 509,800 pairs at 10× → 4,648,200
-    * at 30×), this one aggregate turns the ANN stage scale-INVARIANT.
-    *
-    * Returns (reps, members): `reps(vec_id, v)` one row per distinct
-    * vector (smallest member id as its id); `members(vec_id, rep_id,
-    * group_size, zero_norm)` every input row. EXACTNESS of
-    * collapse-then-cluster: byte-identical vectors share cosine 1 with
-    * each other and identical cosine to everything else, so any
-    * cosine-threshold edge exists between members iff it exists
-    * between their reps, and expansion (members inherit their rep's
-    * cluster; a ≥2-member group whose rep has no rep-level edge is its
-    * own cluster) reproduces member-level clustering EXACTLY — except
-    * all-zero vectors: the guarded cosine(0,0) = 0 means identical
-    * zero vectors are NOT near-dups at any positive threshold, so
-    * expansion must not auto-cluster zero-norm groups (hence the
-    * `zero_norm` flag; the whole contract is pinned in
-    * SimilaritySpec against direct member-level clustering). */
-  def collapseExactEmbeddings(e: DataFrame): (DataFrame, DataFrame) = {
-    val groups = e.groupBy(col("v"))
-      .agg(min(col("vec_id")).as("rep_id"), count(lit(1)).as("group_size"))
-    val reps = groups.select(col("rep_id").as("vec_id"), col("v"))
-    val members = e.join(groups, "v")
-      .select(col("vec_id"), col("rep_id"), col("group_size"),
-        (dot(col("v"), col("v")) === 0.0d).as("zero_norm"))
-    (reps, members)
-  }
-
-  /** Expand rep-level near-dup clusters back to members (the
-    * [[collapseExactEmbeddings]] inverse): members inherit their rep's
-    * cluster; a ≥2-member non-zero-norm group whose rep carries no
-    * rep-level edge forms its own cluster (its members are mutual
-    * exact dups — cosine 1). Returns (vec_id, cluster); rows without
-    * any cluster (singleton reps with no edges) are dropped, matching
-    * [[graft.ops.Graph.connectedComponents]]'s edge-covered-nodes-only
-    * contract. */
-  def expandCollapsedClusters(members: DataFrame,
-                              repClusters: DataFrame): DataFrame =
-    members.join(repClusters.withColumnRenamed("node", "rep_id"),
-        Seq("rep_id"), "left")
-      .select(col("vec_id"),
-        coalesce(col("cluster"),
-          when(col("group_size") >= 2 && !col("zero_norm"),
-            col("rep_id"))).as("cluster"))
-      .filter(col("cluster").isNotNull)
 
   /** [[ivfAssignNative]]'s LARGE-k twin (round 18): per-row work drops
     * from k·dim to (k1 + coarseProbe·k/k1)·dim by routing through a

@@ -89,16 +89,6 @@ object Unigram {
     top.unionByName(chars).distinct()
   }
 
-  /** Load piece costs from a stored piece table `(piece, cost)` — the
-    * stored-tokenizer surface ([[train]]'s output round-trips through
-    * parquet or any sink; later sessions segment without retraining,
-    * the Bpe.mergesFromDF analogue). Vocabulary-sized collect: bounded
-    * driver state by construction. */
-  def costsFromDF(df: DataFrame): Map[String, Double] =
-    // collect-bound: stored tokenizer artifact - vocabulary-sized
-    df.select(col("piece"), col("cost")).collect()
-      .map(r => r.getString(0) -> r.getDouble(1)).toMap
-
   /** Corpus encode under fixed piece costs: per-document piece counts
     * and total NLL. The Viterbi DP runs over the DISTINCT-WORD table
     * only; per-word results broadcast-join back to the per-document

@@ -858,9 +858,9 @@ object ExtQueries {
     },
 
     // Z-order (Morton) cell map over (quantity, extendedprice) with
-    // FIXED portable thresholds (the write-time layout job learns them
-    // from a percentile sketch — Layout.zorderBy; the bit arithmetic is
-    // what the oracle certifies): per-cell row count and per-column
+    // FIXED portable thresholds (a write-time layout job would learn
+    // them from a percentile sketch; the bit arithmetic is what the
+    // oracle certifies): per-cell row count and per-column
     // min/max prove each z-cell covers one small hyper-rectangle — the
     // property min/max file skipping prunes on.
     Q("ext_zorder_cells",

@@ -575,9 +575,7 @@ object SimilarityQueries {
     // (entry (j,i) = md5("j_i") 60-bit prefix → (−0.5, 0.5), an exact
     // dyadic rational both engines compute identically): the oracle
     // re-derives planes, round-6 dot-product signs, and the bucket bit
-    // packing — certifying the sign-LSH mechanism itself. The seed-42
-    // gaussian family (Similarity.hyperplanes) is pinned by the recall
-    // specs.
+    // packing — certifying the sign-LSH mechanism itself.
     Q("sim_lsh_buckets_md5",
       """WITH v AS (SELECT vec_id, unnest(CAST(embedding AS DOUBLE[])) AS x,
         |    generate_subscripts(embedding, 1) AS i FROM embeddings),

@@ -499,11 +499,11 @@ object TrainQueries {
     // them — the 512-bucket model materialized (dsirModelDF), loaded
     // into a literal vector (weightsFromDF: bounded driver state, the
     // classifier contract), and applied as ONE map-only per-row
-    // aggregate HOF (dsirScore — zero shuffles, no join; the exact
-    // scoring expression streamingDsirScore runs on an unbounded
-    // stream). The oracle is pipe_dsir_weights' independent event-sum
-    // derivation, so the per-row HOF path must agree with the
-    // shuffle-sum path to the shared 4-dp grid — certifying that the
+    // aggregate HOF (dsirScore — zero shuffles, no join; the same
+    // expression is valid per row on an unbounded stream). The oracle
+    // is pipe_dsir_weights' independent event-sum derivation, so the
+    // per-row HOF path must agree with the shuffle-sum path to the
+    // shared 4-dp grid — certifying that the
     // stored-model serving arithmetic IS the training-time arithmetic.
     Q("pipe_dsir_scored",
       """WITH t AS (SELECT doc_id, lang, unnest(string_split(text, ' ')) AS tok

@@ -9,8 +9,8 @@ import org.apache.spark.SparkContext
   * the bus has delivered everything (at most 10 s, then a
   * `TimeoutException`; interruptible), making per-query counts exact.
   * Callers: ProfileQ and the cosmobench tracer, and the monitor
-  * `Runner`, which waits here for the sink's action to complete its
-  * row-count `Observation`. Never in a query plan. */
+  * `Runner`, which waits here for its listener to receive the sink
+  * query's observed row count. Never in a query plan. */
 object ListenerBridge {
   def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

@@ -220,8 +220,9 @@ class AnnotateSpec extends SparkSpec {
     val gold = Seq((1L, "c0"), (2L, "c1"), (3L, "c0")).toDF("item", "g")
     val labels = Seq((1L, "wa", "c0"), (2L, "wa", "c0"), (3L, "wa", "c0"),
       (1L, "wb", "c0"), (7L, "wb", "c2")).toDF("item", "wid", "lab")
-    val oneShot = Annotate.workerGold(labels, gold, "item", "wid", "lab",
-      "item", "g").as[(String, Long, Long, Double)].collect().toSet
+    val oneShot = Annotate.accFromGoldCounts(Annotate.goldCounts(labels, gold,
+        "item", "wid", "lab", "item", "g"))
+      .as[(String, Long, Long, Double)].collect().toSet
     val store = Annotate.goldCounts(labels.filter($"item" <= 1), gold,
         "item", "wid", "lab", "item", "g")
       .unionAll(Annotate.goldCounts(labels.filter($"item" > 1), gold,

@@ -179,26 +179,6 @@ class AsOfJoinSpec extends SparkSpec {
       (10L, Some(1.0), Some("a")), (99L, Some(2.0), Some("b"))))
   }
 
-  test("saltedAsOf equals the unsalted as-of on skewed keys") {
-    // 90% of probes on one hot key — the scenario salting exists for
-    val n = 4000
-    val ps = spark.range(n).select(
-      when(col("id") % 10 < 9, 1L).otherwise(col("id") % 7).as("k"),
-      ((col("id") * 104729) % 5000).as("t"),
-      col("id").as("pid"))
-    val qs = spark.range(n / 4).select(
-      (col("id") % 7).as("k"),
-      ((col("id") * 7919) % 5000).as("t"),
-      col("id").cast("double").as("v"))
-      .groupBy("k", "t").agg(max("v").as("v"))
-    val plain = AsOfJoinApi.asOf(ps, qs, Seq("k"), "t", "v", "qv")
-      .select("pid", "qv").as[(Long, Option[Double])].collect().toSet
-    val salted = Relational.saltedAsOf(ps, qs, Seq("k"), "t", "v", "qv", 8)
-      .select("pid", "qv").as[(Long, Option[Double])].collect().toSet
-    assert(salted == plain)
-    assert(plain.nonEmpty)
-  }
-
   test("global as-of: null probe times match nothing; null quotes dropped") {
     val q = Seq((Some(10L), 1.0), (None, 99.0)).toDF("t", "v")
     val p = Seq(Some(15L), None).toDF("t")

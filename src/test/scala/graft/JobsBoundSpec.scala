@@ -5,13 +5,13 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Guard for the third standing manual-audit class: EAGER DRIVER LOOPS
   * (judge r16 task 5). The trainer-style operators — k-means rounds,
   * BPE/Unigram/WordPiece merges, classifier GD, Dawid–Skene EM, BT MM,
-  * PageRank/CC rounds, TxLog commit retries — run driver-synchronous
+  * PageRank/CC rounds — run driver-synchronous
   * sequences of bounded Spark jobs. Each is individually fine (the
   * PageRank argument: rounds × small jobs, model-bounded), but the
   * SHAPE is the one that pays contended per-stage scheduling latency
   * N times over, the amplifier class of the r16 bench finding — so
   * every such loop must declare its job count in terms of its bounds
-  * (iters, k, vocab, maxAttempts), where the judge and the next
+  * (iters, k, vocab), where the judge and the next
   * builder can audit it.
   *
   * Contract: any loop header under src/main (a `while (...)` or a

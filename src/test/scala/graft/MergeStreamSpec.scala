@@ -65,74 +65,6 @@ class MergeStreamSpec extends SparkSpec {
     assert(out == Set(("k1", 2, "a2"), ("k2", 1, "b"), ("k3", 1, "c")))
   }
 
-  test("transactional streaming ingest commits each micro-batch to the TxLog") {
-    val base = Files.createTempDirectory("graft-stream-tx").toString
-    val srcDir = s"$base/src"
-    val tableDir = s"$base/table"
-    new java.io.File(srcDir).mkdirs()
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("k", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("ver", org.apache.spark.sql.types.IntegerType),
-      org.apache.spark.sql.types.StructField("v", org.apache.spark.sql.types.StringType)))
-    Seq(("k1", 1, "a"), ("k2", 1, "b")).toDF("k", "ver", "v")
-      .write.parquet(s"$srcDir/batch1")
-    Seq(("k1", 2, "a2"), ("k3", 1, "c")).toDF("k", "ver", "v")
-      .write.parquet(s"$srcDir/batch2")
-    val q = Streams.eachFileBatch(spark, s"$srcDir/*/", s"$base/ckpt",
-        schema) { (batch, _) =>
-      graft.ops.TxLog.commitMerge(spark, tableDir, batch, Seq("k"), "ver"): Unit
-    }
-    q.awaitTermination(60000)
-    // reads resolve through the commit log, not raw parquet
-    val out = graft.ops.TxLog.read(spark, tableDir).get
-      .as[(String, Int, String)].collect().toSet
-    assert(out == Set(("k1", 2, "a2"), ("k2", 1, "b"), ("k3", 1, "c")))
-    assert(graft.ops.TxLog.currentVersion(tableDir).isDefined)
-  }
-
-  test("compacting ingest: file-count trigger bin-packs between micro-batches") {
-    val base = Files.createTempDirectory("graft-stream-compact").toString
-    val srcDir = s"$base/src"
-    val tableDir = s"$base/table"
-    new java.io.File(srcDir).mkdirs()
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("k", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("ver", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("v", org.apache.spark.sql.types.LongType)))
-    (0 until 3).foreach { b =>
-      spark.range(b * 100, (b + 1) * 100)
-        .select(col("id").as("k"), lit(1L).as("ver"), (col("id") * 2).as("v"))
-        .write.parquet(s"$srcDir/batch$b")
-    }
-    // hold off AQE's tiny-shuffle coalescing so every merge commit
-    // actually fragments (the production state the trigger exists for)
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    val q = try {
-      // one file per micro-batch, so the backfill runs merge → check →
-      // compact once per file; compaction is its own numbered commit
-      val q0 = Streams.eachFileBatch(spark, s"$srcDir/*/", s"$base/ckpt",
-          schema, maxFilesPerTrigger = Some(1)) { (batch, _) =>
-        graft.ops.TxLog.commitMerge(spark, tableDir, batch, Seq("k"), "ver")
-        if (graft.ops.TxLog.snapshotFiles(tableDir).exists(_._1 > 3))
-          graft.ops.TxLog.commitCompact(spark, tableDir, 1L << 30): Unit
-      }
-      q0.awaitTermination(60000); q0
-    } finally spark.conf.set(
-      "spark.sql.adaptive.coalescePartitions.enabled", "true")
-    assert(!q.isActive || { q.stop(); true })
-    // the trigger fired at least once: the final snapshot is packed far
-    // below the fragmented state 3 merges would leave
-    val (nFiles, _) = graft.ops.TxLog.snapshotFiles(tableDir).get
-    assert(nFiles <= 3, s"maintenance should have packed: $nFiles files")
-    // and compaction is a rewrite, not an edit — all 300 rows intact
-    val out = graft.ops.TxLog.read(spark, tableDir).get
-      .select("k", "v").as[(Long, Long)].collect().toSet
-    assert(out == (0L until 300L).map(k => (k, k * 2)).toSet)
-    // versions interleave merges and compactions: more than 3 commits,
-    // each a complete consistent snapshot
-    assert(graft.ops.TxLog.currentVersion(tableDir).get._1 >= 3L)
-  }
-
   test("streaming dedup by key with watermark drops replayed events") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -160,7 +92,11 @@ class MergeStreamSpec extends SparkSpec {
     val input = MemoryStream[(Long, String, String)]
     val docs = input.toDF().toDF("doc_id", "ts_s", "text")
       .select(col("doc_id"), to_timestamp(col("ts_s")).as("ts"), col("text"))
-    val q = Streams.streamingDedupDocs(docs, "ts", "text", horizon = "1 hour")
+    // bounded-state dedup: a fingerprint stays in state only until the
+    // watermark passes its first arrival plus the horizon
+    val q = docs.withColumn("fp", graft.ops.Text.fingerprint(col("text")))
+      .withWatermark("ts", "1 hour")
+      .dropDuplicatesWithinWatermark("fp")
       .select("doc_id", "text")
       .writeStream.format("memory").queryName("doc_dedup_out")
       .outputMode("append").start()
@@ -200,7 +136,12 @@ class MergeStreamSpec extends SparkSpec {
     val input = MemoryStream[(Long, String, String)]
     val docs = input.toDF().toDF("doc_id", "ts_s", "text")
       .select(col("doc_id"), to_timestamp(col("ts_s")).as("ts"), col("text"))
-    val q = Streams.streamingCurate(docs, "ts", "text", stopwords, horizon = "1 hour")
+    // the per-row quality gate runs before the one stateful operator
+    val q = docs
+      .filter(graft.ops.Text.qualityMetrics(col("text"), stopwords).getField("keep"))
+      .withColumn("fp", graft.ops.Text.fingerprint(col("text")))
+      .withWatermark("ts", "1 hour")
+      .dropDuplicatesWithinWatermark("fp")
       .select("doc_id")
       .writeStream.format("memory").queryName("curate_out")
       .outputMode("append").start()
@@ -229,70 +170,6 @@ class MergeStreamSpec extends SparkSpec {
     assert(batch == out)
   }
 
-  test("near-dup compaction converges a stream-ingested store to the batch result") {
-    val base = Files.createTempDirectory("graft-compact").toString
-    val srcDir = s"$base/src"
-    val tableDir = s"$base/table"
-    new java.io.File(srcDir).mkdirs()
-    // two near-dup families (shared 4-shingles → LSH band collisions) and
-    // two singletons, arriving across two micro-batches in id-scrambled
-    // order; family keeper = longest text, ties to smallest id
-    val a = "the solar array current telemetry shows a slow seasonal drift across the mission baseline period"
-    val b = "detector dark rate monitoring aggregates counts per exposure bin over the full focal plane grid"
-    val docs = Seq(
-      (1L, a), (7L, a + " with two extra tokens"), (4L, a),
-      (2L, b), (5L, b + " appended"),
-      (3L, "completely unrelated single document one"),
-      (6L, "another entirely distinct standalone text"))
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("ver", org.apache.spark.sql.types.IntegerType),
-      org.apache.spark.sql.types.StructField("text", org.apache.spark.sql.types.StringType)))
-    docs.take(3).map { case (i, t) => (i, 1, t) }.toDF("doc_id", "ver", "text")
-      .write.parquet(s"$srcDir/batch1")
-    docs.drop(3).map { case (i, t) => (i, 1, t) }.toDF("doc_id", "ver", "text")
-      .write.parquet(s"$srcDir/batch2")
-    // compaction before any commit: nothing to rewrite
-    assert(Streams.compactNearDups(spark, tableDir, "doc_id", "text").isEmpty)
-    val q = Streams.eachFileBatch(spark, s"$srcDir/*/", s"$base/ckpt",
-        schema) { (batch, _) =>
-      graft.ops.TxLog.commitMerge(spark, tableDir, batch, Seq("doc_id"), "ver"): Unit
-    }
-    q.awaitTermination(60000)
-    val vIngest = graft.ops.TxLog.currentVersion(tableDir).get._1
-    val vCompact = Streams.compactNearDups(spark, tableDir, "doc_id", "text")
-    assert(vCompact.contains(vIngest + 1))
-    val out = graft.ops.TxLog.read(spark, tableDir).get
-      .select("doc_id", "cluster", "is_kept")
-      .as[(Long, Option[Long], Boolean)].collect().toSet
-    // batch expectation, computed independently over the same corpus:
-    // LSH pairs → CC → longest-doc keeper
-    val corpus = docs.toDF("doc_id", "text")
-    val pairs = graft.ops.Curation.mdCandidatePairs(corpus, "doc_id", "text")
-    val labeled = graft.ops.Graph.connectedComponents(pairs, "id_a", "id_b")
-    val reps = graft.ops.Graph.representatives(
-      labeled.join(corpus.select(col("doc_id").as("node"),
-        size(split(col("text"), " ", -1)).as("nt")), "node"),
-      "node", "cluster", "nt")
-      .select("node").as[Long].collect().toSet
-    val clusterOf = labeled.as[(Long, Long)].collect().toMap
-    val expected = docs.map { case (i, _) =>
-      (i, clusterOf.get(i), clusterOf.get(i).isEmpty || reps.contains(i))
-    }.toSet
-    assert(out == expected, s"got $out\nwant $expected")
-    // sanity on the scenario itself: both families clustered, keepers are
-    // the longest members (7 beats 1/4; 5 beats 2), singletons kept
-    assert(clusterOf.keySet == Set(1L, 4L, 7L, 2L, 5L))
-    assert(reps == Set(7L, 5L))
-    // a second compaction is a no-op rewrite, version still advances
-    val v2 = Streams.compactNearDups(spark, tableDir, "doc_id", "text")
-    assert(v2.contains(vCompact.get + 1))
-    val out2 = graft.ops.TxLog.read(spark, tableDir).get
-      .select("doc_id", "cluster", "is_kept")
-      .as[(Long, Option[Long], Boolean)].collect().toSet
-    assert(out2 == expected)
-  }
-
   test("streaming windowed counts equal the batch tumbling-window result") {
     val events = Seq(
       ("2024-01-01 01:00:00", "click", 1.0),
@@ -301,45 +178,39 @@ class MergeStreamSpec extends SparkSpec {
       ("2024-01-02 06:00:00", "view", 8.0))
       .toDF("ts_s", "event_type", "value")
       .select(to_timestamp(col("ts_s")).as("ts"), col("event_type"), col("value"))
-    val out = Streams.windowedCounts(events, "ts", "1 day", "1 hour")
-      .select(date_format(col("win_start"), "yyyy-MM-dd").as("d"),
+    // the tumbling-window aggregate as a stream reads it: watermarked,
+    // append mode emits each window once the watermark passes its end
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    def windowed(df: org.apache.spark.sql.DataFrame) = df
+      .withWatermark("ts", "1 hour")
+      .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
+      .agg(count(lit(1)).as("n"), sum("value").as("sum_v"))
+      .select(date_format(col("w.start"), "yyyy-MM-dd").as("d"),
         col("event_type"), col("n"), col("sum_v"))
+    val input = MemoryStream[(String, String, Double)]
+    val q = windowed(input.toDF().toDF("ts_s", "event_type", "value")
+        .select(to_timestamp(col("ts_s")).as("ts"), col("event_type"), col("value")))
+      .writeStream.format("memory").queryName("win_out")
+      .outputMode("append").start()
+    input.addData(("2024-01-01 01:00:00", "click", 1.0),
+      ("2024-01-01 23:00:00", "click", 2.0))
+    q.processAllAvailable()
+    input.addData(("2024-01-02 05:00:00", "click", 4.0),
+      ("2024-01-02 06:00:00", "view", 8.0),
+      ("2024-01-04 00:00:00", "close", 0.0)) // advances the watermark
+    q.processAllAvailable()
+    input.addData(("2024-01-04 00:00:01", "close", 0.0)) // emits closed windows
+    q.processAllAvailable()
+    val streamed = spark.table("win_out")
       .as[(String, String, Long, Double)].collect().toSet
+    q.stop()
+    val out = windowed(events).as[(String, String, Long, Double)].collect().toSet
+    assert(streamed == out, s"stream $streamed vs batch $out")
     assert(out == Set(
       ("2024-01-01", "click", 2L, 3.0),
       ("2024-01-02", "click", 1L, 4.0),
       ("2024-01-02", "view", 1L, 8.0)))
-  }
-
-  test("streaming as-of against static quotes equals the batch window form") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    // static quotes, deduped per (k, t) like every as-of fixture
-    val quotes = Seq(
-      (1L, 10L, 1.0), (1L, 20L, 2.0), (1L, 30L, 3.0),
-      (2L, 15L, 9.0)).toDF("k", "t", "v")
-    val input = MemoryStream[(Long, Long)]
-    val probes = input.toDF().toDF("k", "t")
-    val out = graft.streaming.Streams.streamingAsOf(
-      probes, quotes, Seq("k"), "t", "v", "qv")
-    val q = out.writeStream.format("memory").queryName("asof_out")
-      .outputMode("append").start()
-    input.addData((1L, 5L), (1L, 10L), (1L, 25L))
-    q.processAllAvailable()
-    input.addData((1L, 99L), (2L, 14L), (2L, 16L), (3L, 50L)) // later batch
-    q.processAllAvailable()
-    val got = spark.table("asof_out").select("k", "t", "qv")
-      .as[(Long, Long, Option[Double])].collect().toSet
-    q.stop()
-    // batch window form on the union of both micro-batches
-    val allProbes = Seq((1L, 5L), (1L, 10L), (1L, 25L), (1L, 99L),
-      (2L, 14L), (2L, 16L), (3L, 50L)).toDF("k", "t")
-    val expected = graft.ops.Relational.asOfLookup(
-      allProbes, quotes, Seq("k"), "t", "v", "qv")
-      .as[(Long, Long, Option[Double])].collect().toSet
-    assert(got == expected)
-    assert(got((1L, 10L, Some(1.0))))  // tie: quote AT probe time counts
-    assert(got((3L, 50L, None)))       // unseen key -> null carry
   }
 
   test("streaming cdc chunks equal the batch chunk rows (stateless append)") {
@@ -422,8 +293,8 @@ class MergeStreamSpec extends SparkSpec {
     // the click/impression attribution shape: two unbounded streams
     // joined on key + a time-range condition. Watermarks on BOTH sides
     // plus the range bound are what let Spark expire join state — the
-    // stream-stream member of the §2.11 family (stream-static is
-    // streamingAsOf, windows/dedup/sketch/cells are the others).
+    // stream-stream member of the §2.11 family (windows/dedup/sketch/
+    // cells are the others).
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val impIn = MemoryStream[(Long, Int)]
@@ -497,8 +368,10 @@ class MergeStreamSpec extends SparkSpec {
         buckets = 32, rounds = 3, lr = 10.0)
       .orderBy("bucket").select("w").as[Double].collect().toSeq
     val input = MemoryStream[(Long, String)]
-    val q = Streams.streamingClassifierScore(
-        input.toDF().toDF("doc_id", "text"), "text", w)
+    def scored(df: org.apache.spark.sql.DataFrame) = df
+      .withColumn("p", graft.ops.Curation.classifierScore(col("text"), w))
+      .withColumn("keep", col("p") >= 0.5)
+    val q = scored(input.toDF().toDF("doc_id", "text"))
       .writeStream.format("memory").queryName("cls_out")
       .outputMode("append").start()
     val arriving = Seq((100L, "good clean prose text"),
@@ -510,8 +383,7 @@ class MergeStreamSpec extends SparkSpec {
     val streamed = spark.table("cls_out")
       .as[(Long, String, Double, Boolean)].collect().toSet
     q.stop()
-    val batch = Streams.streamingClassifierScore(
-        arriving.toDF("doc_id", "text"), "text", w)
+    val batch = scored(arriving.toDF("doc_id", "text"))
       .as[(Long, String, Double, Boolean)].collect().toSet
     assert(streamed == batch, "streamed scores must equal batch")
     assert(streamed.find(_._1 == 100L).exists(_._4))
@@ -529,8 +401,11 @@ class MergeStreamSpec extends SparkSpec {
         org.apache.spark.sql.functions.col("tgt"), buckets = 32),
       buckets = 32)
     val input = MemoryStream[(Long, String)]
-    val q = Streams.streamingDsirScore(
-        input.toDF().toDF("doc_id", "text"), "text", lr)
+    def scored(df: org.apache.spark.sql.DataFrame) = df
+      .withColumn("n_tokens", graft.ops.Curation.dsirTokenCount(col("text")))
+      .withColumn("log_weight",
+        round(graft.ops.Curation.dsirScore(col("text"), lr), 4) + lit(0))
+    val q = scored(input.toDF().toDF("doc_id", "text"))
       .writeStream.format("memory").queryName("dsir_out")
       .outputMode("append").start()
     val arriving = Seq((100L, "alpha beta alpha"), (101L, "omega psi"),
@@ -542,8 +417,7 @@ class MergeStreamSpec extends SparkSpec {
     val streamed = spark.table("dsir_out")
       .as[(Long, String, Long, Double)].collect().toSet
     q.stop()
-    val batch = Streams.streamingDsirScore(
-        arriving.toDF("doc_id", "text"), "text", lr)
+    val batch = scored(arriving.toDF("doc_id", "text"))
       .as[(Long, String, Long, Double)].collect().toSet
     assert(streamed == batch, "streamed DSIR scores must equal batch")
     // target-vocab doc scores above off-target-vocab doc
@@ -637,8 +511,9 @@ class MergeStreamSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val input = MemoryStream[(Long, String)]
-    val q = Streams.streamingWinnow(
-        input.toDF().toDF("doc_id", "text"), "text")
+    def fps(df: org.apache.spark.sql.DataFrame) =
+      df.withColumn("fps", graft.ops.Text.winnowFingerprints(col("text")))
+    val q = fps(input.toDF().toDF("doc_id", "text"))
       .writeStream.format("memory").queryName("winnow_out")
       .outputMode("append").start()
     val arriving = Seq(
@@ -652,8 +527,7 @@ class MergeStreamSpec extends SparkSpec {
     val streamed = spark.table("winnow_out")
       .as[(Long, String, Seq[Long])].collect().toSet
     q.stop()
-    val batch = Streams.streamingWinnow(
-        arriving.toDF("doc_id", "text"), "text")
+    val batch = fps(arriving.toDF("doc_id", "text"))
       .as[(Long, String, Seq[Long])].collect().toSet
     assert(streamed == batch, "streamed fingerprints must equal batch")
     // the local-edit property holds across the stream boundary
@@ -692,7 +566,7 @@ class MergeStreamSpec extends SparkSpec {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val domain = Seq("click", "view").toDF("event_type")
     val input = MemoryStream[(Long, String)]
-    val q = Streams.streamingUnseenRows(
+    val q = Streams.discoverNew(
         input.toDF().toDF("id", "event_type"), domain, "event_type")
       .writeStream.format("memory").queryName("unseen_rows")
       .outputMode("append").start()
@@ -706,7 +580,7 @@ class MergeStreamSpec extends SparkSpec {
       .select("id", "event_type").as[(Long, String)].collect().toSet
     q.stop()
     assert(streamed == Set((2L, "CLICK"), (4L, "tap")))
-    val batch = Streams.streamingUnseenRows(
+    val batch = Streams.discoverNew(
         arriving.toDF("id", "event_type"), domain, "event_type")
       .select("id", "event_type").as[(Long, String)].collect().toSet
     assert(streamed == batch)

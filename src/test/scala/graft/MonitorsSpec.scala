@@ -138,6 +138,28 @@ class MonitorsSpec extends SparkSpec {
     assert(pv(58860.0).contains(5.0))  // after last sample
   }
 
+  test("acqSlewStats: per-FGS count, mean, std, min, max over ACQ/IMAGE rows") {
+    // F1 slews 1, 2, 3, 6 plus a null (not counted) and a non-image
+    // acquisition (filtered out); F2 has one slew; F3 only non-image rows
+    val acq = Seq[(String, String, Option[Double])](
+      ("F1", "ACQ/IMAGE", Some(1.0)), ("F1", "ACQ/IMAGE", Some(2.0)),
+      ("F1", "ACQ/IMAGE", Some(3.0)), ("F1", "ACQ/IMAGE", Some(6.0)),
+      ("F1", "ACQ/IMAGE", None), ("F1", "ACQ/PEAKXD", Some(100.0)),
+      ("F2", "ACQ/IMAGE", Some(4.0)), ("F3", "ACQ/PEAKD", Some(7.0)))
+      .toDF("FGS", "EXPTYPE", "SLEW")
+    val out = Monitors.acqSlewStats(acq, "SLEW")
+      .select("FGS", "n", "mean", "std", "min", "max")
+      .as[(String, Long, Double, Option[Double], Double, Double)]
+      .collect().sortBy(_._1).toSeq
+    assert(out.map(_._1) == Seq("F1", "F2"))
+    val (_, n1, mean1, std1, min1, max1) = out.head
+    assert(n1 == 4L && mean1 == 3.0 && min1 == 1.0 && max1 == 6.0)
+    // sample std: sqrt(((1-3)^2 + (2-3)^2 + 0 + (6-3)^2) / 3) = sqrt(14/3)
+    assert(math.abs(std1.get - math.sqrt(14.0 / 3.0)) < 1e-12, std1)
+    // a single slew has no sample std
+    assert(out(1) == (("F2", 1L, 4.0, None, 4.0, 4.0)))
+  }
+
   test("darkRate bins events into time buckets within region and PHA cuts") {
     val events = Seq(
       ("d1", 100.0, 100.0, 10, 0.0), ("d1", 110.0, 110.0, 12, 10.0),

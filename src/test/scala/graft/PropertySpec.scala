@@ -74,10 +74,13 @@ class PropertySpec extends SparkSpec {
     val df = Seq(
       (Seq("a b", "b c", "c d"), Seq("a b", "b c", "c d")),
       (Seq("a b", "b c"), Seq("x y", "y z"))).toDF("s1", "s2")
+    // the estimate is the fraction of agreeing signature components
     val out = df.select(
-      Text.minhashJaccardEstimate(
-        graft.functions.GraftExtensions.minhashSignature(col("s1"), 32),
-        graft.functions.GraftExtensions.minhashSignature(col("s2"), 32)))
+        graft.functions.GraftExtensions.minhashSignature(col("s1"), 32).as("a"),
+        graft.functions.GraftExtensions.minhashSignature(col("s2"), 32).as("b"))
+      .select(aggregate(zip_with(col("a"), col("b"),
+        (x, y) => when(x === y, 1).otherwise(0)), lit(0), _ + _)
+        .cast("double") / size(col("a")))
       .as[Double].collect()
     assert(out(0) == 1.0)
     assert(out(1) == 0.0)
@@ -192,8 +195,9 @@ class PropertySpec extends SparkSpec {
   test("repetitionRatio stays in [0,1); 0 iff all shingles distinct") {
     for (words <- samples(wordGen, 8)) {
       val df = Seq(words.mkString(" ")).toDF("text")
-      val r = df.select(Text.repetitionRatio(Text.tokens(col("text")), 2)
-        .as("r")).as[Double].collect().head
+      val r = df.select(Text.repetitionRatioOfShingles(
+          Text.wordShingles(Text.tokens(col("text")), 2)).as("r"))
+        .as[Double].collect().head
       assert(r >= 0.0 && r < 1.0, s"$words -> $r")
       val sh = words.sliding(2).map(_.mkString(" ")).toSeq
       val expectZero = words.size < 2 || sh.distinct.size == sh.size

@@ -139,6 +139,43 @@ class RunnerSpec extends SparkSpec {
     Runner.clear()
   }
 
+  test("after runAll, a query that fails analysis logs no listener-bus ERROR") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    Runner.clear()
+    Runner.register(MonitorJob("observed", "monthly", _ => Seq((1, 2.0)).toDF("k", "v")))
+    val out = Files.createTempDirectory("runner-listener").toString
+    val Seq(r) = Runner.runAll(spark, "monthly",
+      sink = (name, df) => df.write.mode("overwrite").parquet(s"$out/$name"))
+    Runner.clear()
+    assert(r.error.isEmpty && r.rowCount == 1L, r)
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("runner-listener-errors", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.ERROR))
+          errors.add(e.getMessage.getFormattedMessage)
+    }
+    val bus = LogManager.getLogger("org.apache.spark.sql.util.ExecutionListenerBus")
+      .asInstanceOf[CoreLogger]
+    capture.start()
+    bus.addAppender(capture)
+    try {
+      // a non-foldable argument fails analysis of the collect's query
+      intercept[org.apache.spark.sql.AnalysisException] {
+        Seq((Seq("a", "b"), 4)).toDF("sh", "n")
+          .selectExpr("minhash_signature(sh, n)").collect()
+      }
+      ListenerBridge.drain(spark.sparkContext)
+    } finally {
+      bus.removeAppender(capture)
+      capture.stop()
+    }
+    assert(errors.isEmpty, s"listener-bus ERRORs after runAll: $errors")
+  }
+
   test("full monthly run: real FITS OSM monitor through the runner with CSV sink") {
     Runner.clear()
     val data = "/root/reference/tests/data"

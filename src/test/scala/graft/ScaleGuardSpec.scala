@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.core.Measure.consume
-import graft.ops.{Graph, Preference, Similarity, Text, TxLog}
+import graft.ops.{Graph, Preference, Similarity, Text}
 
 /** Volume and equality guards of the scale pipelines, run at spec scale
   * on the X = 2 [[ScaleFixture]] of the smoke sf (1,000 docs, 1,000
@@ -180,30 +180,23 @@ class ScaleGuardSpec extends SparkSpec {
       ks = Seq(1, 4))) > 0)
   }
 
-  test("BT leaderboard under a TxLog pointer: append, refit, compaction flip") {
+  test("BT leaderboard: append, refit, compaction flip") {
     val p = pools
     val root = Files.createTempDirectory("btlife").toString
     val matDir = s"$root/mat0"
     Preference.winMatrix(games(p.filter(col("pid") % 2 === 0)))
       .write.parquet(matDir)
-    val ptr = s"$root/ptr"
-    def point(dir: String, v: Long): Unit = TxLog.commitMerge(spark, ptr,
-      Seq(("board", dir, v)).toDF("name", "dir", "v"), Seq("name"), "v")
-    def serving: String = TxLog.read(spark, ptr).get
-      .filter(col("name") === "board").select("dir").as[String].head()
-    point(matDir, 0L)
     // arriving games append un-aggregated; the refit re-aggregates on read
     Preference.winMatrix(games(p.filter(col("pid") % 2 === 1)))
       .write.mode("append").parquet(matDir)
-    val refit = Preference.btFromMatrix(spark.read.parquet(serving), iters = 3)
+    val refit = Preference.btFromMatrix(spark.read.parquet(matDir), iters = 3)
     assert(board(refit) == board(Preference.btLeaderboard(games(p), iters = 3)),
       "refit from the appended store must equal the one-shot fit")
     val gen1 = s"$root/mat1"
     spark.read.parquet(matDir).groupBy("winner", "loser").agg(sum("w").as("w"))
       .write.parquet(gen1)
-    point(gen1, 1L)
-    assert(serving == gen1, "pointer must flip to the compacted generation")
-    assert(board(Preference.btFromMatrix(spark.read.parquet(serving),
+    // compaction writes a new generation; serving flips to it
+    assert(board(Preference.btFromMatrix(spark.read.parquet(gen1),
       iters = 3)) == board(refit),
       "serving fit must be identical across the compaction flip")
   }

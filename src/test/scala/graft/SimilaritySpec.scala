@@ -1,10 +1,30 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.ops.Similarity
 
 class SimilaritySpec extends SparkSpec {
   import spark.implicits._
+
+  /** Recall of a bucketed top-k ANN search: the share of exact top-k
+    * pairs whose candidate lands in one of the probe's searched buckets.
+    * A bucketed search ranks only those candidates, and an exact
+    * neighbor among them stays in the top k, so this share IS its
+    * recall. `probes(bucket)` gives the buckets a probe searches. */
+  private def bucketRecall(vecs: DataFrame, k: Int, nBits: Int, dim: Int)(
+                           probes: Column => Column): Double = {
+    val planes = Similarity.portablePlanes(nBits, dim)
+    val buckets = vecs.select(col("id"),
+      Similarity.lshBucket(col("v"), planes).as("b"))
+    val exact = Similarity.knnJoin(vecs, vecs.withColumnRenamed("id", "cid"),
+      "id", "cid", "v", k = k).select("id", "cid")
+    val found = exact
+      .join(buckets.select(col("id"), probes(col("b")).as("pb")), "id")
+      .join(buckets.select(col("id").as("cid"), col("b").as("cb")), "cid")
+      .filter(array_contains(col("pb"), col("cb")))
+    found.count().toDouble / exact.count()
+  }
 
   test("cosine matches hand computation and handles zero vectors") {
     val df = Seq(
@@ -41,13 +61,7 @@ class SimilaritySpec extends SparkSpec {
     val c2 = Array.tabulate(16)(i => if (i % 2 == 0) 1.0f else -1.0f)
     val rows = (0L until 20L).map(i => (i, jitter(if (i < 10) c1 else c2)))
     val vecs = rows.toDF("id", "v")
-    val exact = Similarity.knnJoin(vecs, vecs.withColumnRenamed("id", "cid"),
-      "id", "cid", "v", k = 3)
-      .select("id", "cid").as[(Long, Long)].collect().toSet
-    val approx = Similarity.annLshJoin(vecs, vecs.withColumnRenamed("id", "cid"),
-      "id", "cid", "v", k = 3, nBits = 4, dim = 16)
-      .select("id", "cid").as[(Long, Long)].collect().toSet
-    val recall = (exact intersect approx).size.toDouble / exact.size
+    val recall = bucketRecall(vecs, k = 3, nBits = 4, dim = 16)(b => array(b))
     assert(recall > 0.9, s"recall $recall")
   }
 
@@ -59,14 +73,8 @@ class SimilaritySpec extends SparkSpec {
       (i, Seq.fill(16)(base + rnd.nextFloat() * 0.8f))
     }
     val vecs = rows.toDF("id", "v")
-    val exact = Similarity.knnJoin(vecs, vecs.withColumnRenamed("id", "cid"),
-      "id", "cid", "v", k = 3).select("id", "cid").as[(Long, Long)].collect().toSet
-    def recallOf(mp: Int): Double = {
-      val approx = Similarity.annLshJoin(vecs, vecs.withColumnRenamed("id", "cid"),
-        "id", "cid", "v", k = 3, nBits = 6, dim = 16, multiProbe = mp)
-        .select("id", "cid").as[(Long, Long)].collect().toSet
-      (exact intersect approx).size.toDouble / exact.size
-    }
+    def recallOf(mp: Int): Double = bucketRecall(vecs, k = 3, nBits = 6,
+      dim = 16)(b => Similarity.hamming1Probes(b, bits = 6, flips = mp))
     val single = recallOf(0)
     val multi = recallOf(3)
     assert(multi >= single, s"multi-probe $multi < single $single")
@@ -100,101 +108,6 @@ class SimilaritySpec extends SparkSpec {
     // every cluster maps to exactly one cell, and no two clusters share one
     assert(cellsByCluster.values.forall(_.size == 1), s"$cellsByCluster")
     assert(cellsByCluster.values.flatten.toSet.size == 3, s"$cellsByCluster")
-  }
-
-  test("persisted IVF index: search equals in-memory join, scan prunes to probed cells") {
-    val dir = java.nio.file.Files.createTempDirectory("ivfidx").toString
-    // three well-separated directions; ids 0..29 round-robin clusters
-    val dirs = Seq(Seq(10.0f, 0.0f), Seq(0.0f, 10.0f), Seq(-7.0f, -7.0f))
-    val pts = (0L until 30L).map { id =>
-      val d = dirs((id % 3).toInt)
-      (id, Seq(d(0) + (id % 7) * 0.01f, d(1) + (id % 5) * 0.01f))
-    }.toDF("vec_id", "vec")
-    val cents = Similarity.kmeansCentroids(pts, "vec_id", "vec",
-      k = 3, iters = 3)
-    Similarity.writeIvfIndex(pts, "vec_id", "vec", cents, dir)
-    // probes from one cluster only -> exactly one probed cell
-    val probes = pts.filter(col("vec_id") % 3 === 0)
-      .select(col("vec_id").as("probe_id"), col("vec"))
-    val stored = Similarity.searchIvfIndex(spark, dir, probes,
-      "probe_id", "vec_id", "vec", k = 3)
-    val inMem = Similarity.annIvfJoin(probes, pts, "probe_id", "vec_id",
-      "vec", k = 3, cents)
-    assert(stored.as[(Long, Long, Double)].collect().toSet ==
-      inMem.as[(Long, Long, Double)].collect().toSet,
-      "stored-index search must equal the in-memory IVF join")
-    // the cell scan must carry a pruning partition filter on
-    // centroid_id (= or IN on the probed cells) — that is the entire
-    // point of the layout
-    val plan = stored.queryExecution.executedPlan.toString
-    val pruned =
-      raw"PartitionFilters: \[isnotnull\(centroid_id#\d+\), \(?centroid_id#\d+ (=|IN)".r
-    assert(plan.contains("/cells") && pruned.findFirstIn(plan).nonEmpty, plan)
-  }
-
-  test("IVF maintenance: append == full rewrite; drift triggers a generation rebuild") {
-    import java.nio.file.Files
-    val dirA = Files.createTempDirectory("ivfA").toString
-    val dirB = Files.createTempDirectory("ivfB").toString
-    val dirs = Seq(Seq(10.0f, 0.0f), Seq(0.0f, 10.0f), Seq(-7.0f, -7.0f))
-    def cluster(id: Long) = {
-      val d = dirs((id % 3).toInt)
-      Seq(d(0) + (id % 7) * 0.01f, d(1) + (id % 5) * 0.01f)
-    }
-    val base = (0L until 30L).map(id => (id, cluster(id))).toDF("vec_id", "vec")
-    val cents = Similarity.kmeansCentroids(base, "vec_id", "vec", k = 3, iters = 3)
-    Similarity.writeIvfIndex(base, "vec_id", "vec", cents, dirA)
-
-    // arrivals from the SAME clusters: append must equal a full rewrite
-    // of base∪arrivals under the same centroids
-    val arrivals = (1000L until 1015L).map(id => (id, cluster(id)))
-      .toDF("vec_id", "vec")
-    Similarity.appendToIvfIndex(spark, dirA, arrivals, "vec_id", "vec")
-    Similarity.writeIvfIndex(base.unionByName(arrivals), "vec_id", "vec",
-      cents, dirB)
-    val probes = base.filter(col("vec_id") % 3 === 0)
-      .select(col("vec_id").as("probe_id"), col("vec"))
-    def search(d: String) =
-      Similarity.searchIvfIndex(spark, d, probes, "probe_id", "vec_id", "vec", k = 3)
-        .as[(Long, Long, Double)].collect().toSet
-    assert(search(dirA) == search(dirB),
-      "search after partition-append must equal search after a full rewrite")
-
-    // same-distribution batch: low drift -> maintenance keeps serving dirA
-    val more = (2000L until 2030L).map(id => (id, cluster(id))).toDF("vec_id", "vec")
-    assert(Similarity.ivfIndexDrift(spark, dirA, more, "vec") < 0.2)
-    val dirC = Files.createTempDirectory("ivfC").toString
-    assert(Similarity.maintainIvfIndex(spark, dirA, dirC, more,
-      "vec_id", "vec", k = 3, driftThreshold = 0.5) == dirA)
-
-    // shifted batch (a direction no centroid covers): drift fires, the
-    // rebuilt generation serves, and its search equals the in-memory
-    // IVF join under its own retrained centroids
-    val shifted = (3000L until 3060L)
-      .map(id => (id, Seq(8.0f + (id % 5) * 0.01f, -8.0f + (id % 7) * 0.01f)))
-      .toDF("vec_id", "vec")
-    val served = Similarity.maintainIvfIndex(spark, dirA, dirC, shifted,
-      "vec_id", "vec", k = 4, driftThreshold = 0.5)
-    assert(served == dirC, "a shifted batch must trigger the generation rebuild")
-    val centsC = spark.read.parquet(s"$dirC/centroids")
-    val allPts = spark.read.parquet(s"$dirA/cells")
-      .select(col("vec_id"), col("vec"))
-    val sProbes = shifted.limit(5)
-      .select(col("vec_id").as("probe_id"), col("vec"))
-    val stored = Similarity.searchIvfIndex(spark, dirC, sProbes,
-      "probe_id", "vec_id", "vec", k = 3)
-    val inMem = Similarity.annIvfJoin(sProbes, allPts, "probe_id", "vec_id",
-      "vec", k = 3, centsC)
-    assert(stored.as[(Long, Long, Double)].collect().toSet ==
-      inMem.as[(Long, Long, Double)].collect().toSet,
-      "rebuilt-generation search must equal the in-memory IVF join")
-    // continuity across the rebuild: the same probes get full k-sized
-    // result sets from the old and the new generation
-    val kProbes = base.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("probe_id"), col("vec"))
-    for (d <- Seq(dirA, dirC))
-      assert(Similarity.searchIvfIndex(spark, d, kProbes, "probe_id",
-        "vec_id", "vec", k = 3).count() == 15L, s"short result sets from $d")
   }
 
   test("marginMining equals a driver-side brute-force replay of the ratio margin") {
@@ -318,49 +231,6 @@ class SimilaritySpec extends SparkSpec {
     intercept[IllegalArgumentException](lshKnobsForScale(0L, 20000L))
     intercept[IllegalArgumentException](
       lshKnobsForScale(100L, 100L, borderlineCos = 1.0))
-  }
-
-  test("collapseExactEmbeddings + expansion equals direct member clustering") {
-    // pattern A ×3 exact copies, pattern B ×2 (cosine ~0.87 to A —
-    // above the 0.35 gate), pattern C orthogonal singleton, and an
-    // all-zero vector ×2 (identical, but the guarded cosine(0,0)=0
-    // means NOT near-dups — expansion must not auto-cluster them)
-    val rows = Seq(
-      (1L, Seq(1.0, 0.0, 0.0)), (2L, Seq(1.0, 0.0, 0.0)),
-      (3L, Seq(1.0, 0.0, 0.0)),
-      (4L, Seq(0.9, 0.5, 0.0)), (5L, Seq(0.9, 0.5, 0.0)),
-      (6L, Seq(0.0, 0.0, 1.0)),
-      (7L, Seq(0.0, 0.0, 0.0)), (8L, Seq(0.0, 0.0, 0.0))
-    ).toDF("vec_id", "v")
-    def brutePairs(e: org.apache.spark.sql.DataFrame) =
-      e.select(col("vec_id").as("id_a"), col("v").as("va"))
-        .crossJoin(e.select(col("vec_id").as("id_b"), col("v").as("vb")))
-        .filter(col("id_a") < col("id_b") &&
-          round(Similarity.cosine(col("va"), col("vb")), 3) >= 0.35)
-        .select("id_a", "id_b")
-    val direct = graft.ops.Graph
-      .connectedComponents(brutePairs(rows), "id_a", "id_b")
-      .select(col("node").as("vec_id"), col("cluster"))
-      .as[(Long, Long)].collect().toSet
-    val (reps, members) = Similarity.collapseExactEmbeddings(rows)
-    assert(reps.count() == 4) // A, B, C, zero
-    val repCl = graft.ops.Graph
-      .connectedComponents(brutePairs(reps), "id_a", "id_b")
-    val expanded = Similarity.expandCollapsedClusters(members, repCl)
-      .as[(Long, Long)].collect().toSet
-    // identical label sets: component labels are min member ids on
-    // both paths (reps are their group's min)
-    assert(expanded == direct, s"$expanded vs $direct")
-    assert(direct == Set((1L, 1L), (2L, 1L), (3L, 1L), (4L, 1L), (5L, 1L)))
-    // a ≥2 exact-dup group with NO rep-level edge still forms its own
-    // cluster on expansion (drop pattern B so A's group stands alone)
-    val lone = rows.filter(col("vec_id") <= 3)
-    val (_, m2) = Similarity.collapseExactEmbeddings(lone)
-    val e2 = Similarity.expandCollapsedClusters(m2,
-      graft.ops.Graph.connectedComponents(brutePairs(lone.limit(0)),
-        "id_a", "id_b"))
-      .as[(Long, Long)].collect().toSet
-    assert(e2 == Set((1L, 1L), (2L, 1L), (3L, 1L)))
   }
 
   test("probeKnobsForScale pins the measured multi-probe configurations") {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.ops.Text
 
@@ -9,6 +10,12 @@ class TextSpec extends SparkSpec {
   private val docA = "the quick brown fox jumps over the lazy dog again and again today"
   private val docB = "the quick brown fox jumps over the lazy dog again and again tomorrow"
   private val docC = "completely different words about spark catalyst optimizer plans"
+
+  /** Jaccard estimate from two MinHash signatures: the fraction of
+    * agreeing components. */
+  private def agreement(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => when(x === y, 1).otherwise(0)),
+      lit(0), _ + _).cast("double") / size(a)
 
   test("fingerprint is stable under case/punctuation/whitespace noise") {
     val df = Seq(
@@ -40,7 +47,7 @@ class TextSpec extends SparkSpec {
     val cmp = rest.crossJoin(a)
       .select(col("id"),
         Text.jaccard(col("sh"), col("sha")).as("exact"),
-        Text.minhashJaccardEstimate(col("sig"), col("siga")).as("est"))
+        agreement(col("sig"), col("siga")).as("est"))
       .as[(String, Double, Double)].collect().map(r => r._1 -> (r._2, r._3)).toMap
     val (exactB, estB) = cmp("b")
     val (exactC, estC) = cmp("c")
@@ -49,16 +56,16 @@ class TextSpec extends SparkSpec {
     assert(exactC == 0.0 && estC < 0.1)       // disjoint pair
   }
 
-  test("minhashCandidates surfaces the near-dup pair, not the disjoint one") {
+  test("mdCandidatePairs surfaces the near-dup pair, not the disjoint one") {
     val df = Seq((1L, docA), (2L, docB), (3L, docC)).toDF("doc_id", "text")
-    val pairs = Text.minhashCandidates(df, "doc_id", "text",
-      k = 2, numHashes = 32, bands = 16)
+    val pairs = graft.ops.Curation.mdCandidatePairs(df, "doc_id", "text",
+      shingleK = 2, numHashes = 32, bands = 16)
       .as[(Long, Long)].collect().toSet
     assert(pairs.contains((1L, 2L)))
     assert(!pairs.contains((1L, 3L)) && !pairs.contains((2L, 3L)))
   }
 
-  test("minhashCandidates drops a saturated LSH bucket (maxBucketSize guard)") {
+  test("mdCandidatePairs drops a saturated LSH bucket (maxBucketSize guard)") {
     // adversarial density: 40 byte-identical boilerplate docs all hash to
     // the SAME bucket in every band. With maxBucketSize = 20 the guard
     // must drop that bucket outright — the 40·39/2 = 780 quadratic pairs
@@ -69,8 +76,8 @@ class TextSpec extends SparkSpec {
       (i, "boilerplate header terms of service apply to all documents here"))
     val df = (Seq((1L, docA), (2L, docB), (3L, docC)) ++ boiler)
       .toDF("doc_id", "text")
-    val pairs = Text.minhashCandidates(df, "doc_id", "text",
-      k = 2, numHashes = 32, bands = 16, maxBucketSize = 20)
+    val pairs = graft.ops.Curation.mdCandidatePairs(df, "doc_id", "text",
+      shingleK = 2, numHashes = 32, bands = 16, maxBucketSize = 20)
       .as[(Long, Long)].collect().toSet
     assert(pairs.contains((1L, 2L)))
     assert(!pairs.exists { case (a, b) => a >= 100L && b >= 100L },
@@ -135,7 +142,8 @@ class TextSpec extends SparkSpec {
       ("loop", "spam spam spam spam spam spam spam spam"),
       ("varied", "eight distinct words appear exactly once here now")).toDF("id", "text")
     val out = df.select(col("id"),
-      Text.repetitionRatio(Text.tokens(col("text")), 2).as("r"))
+      Text.repetitionRatioOfShingles(
+        Text.wordShingles(Text.tokens(col("text")), 2)).as("r"))
       .as[(String, Double)].collect().toMap
     assert(out("varied") == 0.0)
     assert(out("loop") > 0.8)   // 7 bigrams, 1 distinct → 6/7

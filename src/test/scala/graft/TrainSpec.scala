@@ -44,41 +44,6 @@ class TrainSpec extends SparkSpec {
     assert(gotMid == Seq((5L, 2, 8), (6L, 3, 8)))
   }
 
-  releasingTest("suffixDupSpansGated equals the ungated ladder (exactness, not heuristic)") {
-    // the hand corpus above plus a pile of globally-unique filler docs —
-    // the gate must drop the filler BEFORE the ladder (same output) and
-    // must keep every doc that holds a duplicated window
-    val run16 = (1 to 16).map(i => s"r$i").mkString(" ")
-    val base = Seq(
-      (1L, s"u1 u2 $run16 u3"),
-      (2L, s"v1 $run16 v2 v3 v4"),
-      (3L, "w1 w2 c1 c2 c3 c4 w3"),
-      (4L, "x1 c1 c2 c3 c4 x2 x3"))
-    val filler = (100L until 160L).map(i =>
-      (i, (0 until 12).map(j => s"q${i}_$j").mkString(" ")))
-    val df = (base ++ filler).toDF("doc_id", "text")
-    val ungated = Text.suffixDupSpans(df, "doc_id", "text",
-        baseK = 4, levels = 3, minDocs = 2)
-      .orderBy("doc_id", "pos").as[(Long, Int, Int)].collect().toSeq
-    val gated = Text.suffixDupSpansGated(df, "doc_id", "text",
-        baseK = 4, levels = 3, minDocs = 2)
-      .orderBy("doc_id", "pos").as[(Long, Int, Int)].collect().toSeq
-    assert(gated == ungated, "gate changed the ladder's output")
-    assert(gated == Seq((1L, 3, 16), (2L, 2, 16), (3L, 3, 4), (4L, 2, 4)))
-    // degenerate: empty-token windows (runs of spaces) still pass the
-    // gate — the worst-case shared substring is baseK−1 spaces, which
-    // is exactly the gate's guarantee length
-    val spacey = Seq((7L, "a" + " " * 9 + "b"), (8L, "c" + " " * 9 + "d"))
-      .toDF("doc_id", "text")
-    val su = Text.suffixDupSpans(spacey, "doc_id", "text",
-        baseK = 4, levels = 2, minDocs = 2)
-      .orderBy("doc_id", "pos").as[(Long, Int, Int)].collect().toSeq
-    val sg = Text.suffixDupSpansGated(spacey, "doc_id", "text",
-        baseK = 4, levels = 2, minDocs = 2)
-      .orderBy("doc_id", "pos").as[(Long, Int, Int)].collect().toSeq
-    assert(sg == su, "gate dropped degenerate empty-token windows")
-  }
-
   releasingTest("scrubSuffixSpans: minLen thresholds long spans, nested/overlapping union") {
     // docs 1/2 share a 16-token run AND a separate 4-token run; at
     // minLen = 8 only the long run is scrubbed — the short duplicated
@@ -113,14 +78,24 @@ class TrainSpec extends SparkSpec {
       (5L, 9L, 8L, "b2")))
     // minLen = 0 collapses to fixed-k coverage: every duplicated
     // baseK-window is maximal or contained upward, so the ladder scrub
-    // equals scrubDuplicatedSpans at k = baseK (the composition's
+    // equals a driver-side fixed-k scrub at k = baseK (the composition's
     // exactness anchor)
     val all = df.unionByName(df2)
     val viaLadder = Text.scrubSuffixSpans(all, "doc_id", "text",
         baseK = 4, levels = 3, minDocs = 2, minLen = 0)
       .orderBy("doc_id").as[(Long, Long, Long, String)].collect().toSeq
-    val viaFixed = Text.scrubDuplicatedSpans(all, "doc_id", "text", k = 4)
-      .orderBy("doc_id").as[(Long, Long, Long, String)].collect().toSeq
+    val docs = all.as[(Long, String)].collect().toSeq.sortBy(_._1)
+      .map { case (id, t) => id -> t.split(" ", -1).toSeq }
+    val windowDocs = docs.flatMap { case (id, toks) =>
+      toks.sliding(4).filter(_.size == 4).map(_ -> id) }
+      .groupBy(_._1).map { case (w, ids) => w -> ids.map(_._2).distinct.size }
+    val viaFixed = docs.map { case (id, toks) =>
+      val covered = (0 to toks.size - 4)
+        .filter(p => windowDocs(toks.slice(p, p + 4)) >= 2)
+        .flatMap(p => p until p + 4).toSet
+      (id, toks.size.toLong, covered.size.toLong,
+        toks.indices.filterNot(covered).map(toks).mkString(" "))
+    }
     assert(viaLadder == viaFixed)
   }
 
@@ -280,7 +255,7 @@ class TrainSpec extends SparkSpec {
     assert(f._1 == 4L && !f._2.isNaN && !f._2.isInfinite)
   }
 
-  releasingTest("mooreLewisFromModels: serving-time deltas match training-time scoring") {
+  releasingTest("stored bigram models reproduce mooreLewis's training-time scores") {
     val docs = (1L to 20L).map { i =>
       if (i <= 10) (i, "alpha beta gamma delta alpha beta", true)
       else (i, "omega psi chi phi omega psi", false)
@@ -295,16 +270,17 @@ class TrainSpec extends SparkSpec {
     Text.bigramModelDF(df.filter(col("tgt")), "doc_id", "text")
       .write.parquet(s"$base/target")
     Text.bigramModelDF(df, "doc_id", "text").write.parquet(s"$base/corpus")
-    val served = Text.mooreLewisFromModels(df, "doc_id", "text",
-        spark.read.parquet(s"$base/target"),
-        spark.read.parquet(s"$base/corpus"))
-      .collect().map(r => r.getLong(0) ->
-        (r.getDouble(2), r.getDouble(3), r.getDouble(4))).toMap
-    assert(served.keySet == trained.keySet)
+    def nll(model: String) = Text.bigramNllFromModel(df, "doc_id", "text",
+        spark.read.parquet(s"$base/$model"))
+      .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
+    val (target, corpus) = (nll("target"), nll("corpus"))
+    assert(target.keySet == trained.keySet && corpus.keySet == trained.keySet)
     trained.foreach { case (id, (ct, cc, d)) =>
-      val (sct, scc, sd) = served(id)
+      val (sct, scc) = (target(id), corpus(id))
+      val sd = BigDecimal(sct - scc).setScale(4, BigDecimal.RoundingMode.HALF_UP)
+        .toDouble
       assert(sct == ct && scc == cc,
-        s"doc $id: stored-model CEs must equal training-time ($served)")
+        s"doc $id: stored-model CEs must equal training-time ($sct, $scc)")
       // delta rounds the difference of ROUNDED CEs here vs one
       // aggregate there — agree within the two 4-dp grids
       assert(math.abs(sd - d) < 2e-4, s"doc $id delta: $sd vs $d")
@@ -476,13 +452,14 @@ class TrainSpec extends SparkSpec {
     assert(out == Seq(1L -> "exact_dup", 2L -> "near_dup", 3L -> "kept"))
   }
 
-  test("scrubDuplicatedSpans removes exactly the cross-doc duplicated spans") {
+  releasingTest("scrubSuffixSpans at minLen 0 removes exactly the cross-doc duplicated spans") {
     val df = Seq(
       (1L, "a b c d e"),   // "a b c" duplicated with doc 2 -> tokens 1-3 go
       (2L, "x a b c y"),   // covered positions 2-4 -> "x y" survives
       (3L, "p q r"))       // no duplicated span -> untouched
       .toDF("doc_id", "text")
-    val out = Text.scrubDuplicatedSpans(df, "doc_id", "text", k = 3)
+    val out = Text.scrubSuffixSpans(df, "doc_id", "text",
+        baseK = 3, levels = 1, minDocs = 2, minLen = 0)
       .orderBy("doc_id").as[(Long, Long, Long, String)].collect().toSeq
     assert(out == Seq(
       (1L, 5L, 3L, "d e"),
@@ -738,8 +715,9 @@ class TrainSpec extends SparkSpec {
     val trained = Bpe.train(toks, "tok", numMerges = 5)
     val store = java.nio.file.Files
       .createTempDirectory("graft-bpe").toString + "/merges"
-    Bpe.mergesToDF(spark, trained).write.parquet(store)
-    val loaded = Bpe.mergesFromDF(spark.read.parquet(store))
+    trained.toDF("rank", "a", "b", "merged", "n").write.parquet(store)
+    val loaded = spark.read.parquet(store).orderBy("rank")
+      .select("a", "b").as[(String, String)].collect().toSeq
     assert(loaded == trained.map(m => (m._2, m._3)),
       "stored merge order must survive the round-trip")
     val direct = toks.select(Bpe.segment(col("tok"),

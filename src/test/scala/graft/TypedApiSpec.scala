@@ -3,10 +3,9 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.core.Entities
 import graft.ops.LinFitAggregator
-import graft.streaming.{SessionOut, Streams}
 
-/** Typed-API surface: Dataset[T] entities, the Aggregator route for
-  * linfit (SURVEY.md §7.3), and flatMapGroupsWithState sessionization. */
+/** Typed-API surface: Dataset[T] entities and the Aggregator route for
+  * linfit (SURVEY.md §7.3). */
 class TypedApiSpec extends SparkSpec {
   import spark.implicits._
 
@@ -39,89 +38,7 @@ class TypedApiSpec extends SparkSpec {
       })
       .collect().toMap
     assert(avgChars.nonEmpty && avgChars.values.forall(_ > 0))
-    val li = Entities.lineitems(spark, "/root/testdata/sf0.001")
-    assert(li.filter(_.l_quantity > 0).count() > 0)
-  }
-
-  test("sessionize keeps state across streaming micro-batches") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val input = MemoryStream[(Long, Long, Double)]
-    val q = Streams.sessionize(input.toDS(), gapSeconds = 1800L)
-      .writeStream.format("memory").queryName("sess_out")
-      .outputMode("append").start()
-    input.addData((1L, 0L, 1.0), (1L, 10L, 2.0))   // batch 1: session opens
-    q.processAllAvailable()
-    assert(spark.table("sess_out").count() == 0)    // still open
-    input.addData((1L, 5000L, 9.0))                 // batch 2: gap closes it
-    q.processAllAvailable()
-    val closed = spark.table("sess_out")
-      .as[SessionOut].collect()
-    q.stop()
-    assert(closed.length == 1)
-    assert(closed.head == SessionOut(1L, 0L, 10L, 2L, 3.0))
-  }
-
-  test("flushAfterGap: processing-time timeout flushes the trailing open session") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val input = MemoryStream[(Long, Long, Double)]
-    val q = Streams.sessionize(input.toDS(), gapSeconds = 1L, flushAfterGap = true)
-      .writeStream.format("memory").queryName("sess_flush")
-      .outputMode("append").start()
-    // NOTE: with ProcessingTimeTimeout the engine runs batches
-    // continuously, so processAllAvailable() would never return — poll
-    // the sink with a deadline instead.
-    input.addData((1L, 0L, 1.0), (1L, 1L, 2.0))    // opens a session for key 1
-    val deadline = System.currentTimeMillis() + 60000L
-    def flushed() = spark.table("sess_flush").as[SessionOut].collect()
-    while (flushed().isEmpty && System.currentTimeMillis() < deadline)
-      Thread.sleep(200L)
-    val out = flushed()
-    q.stop()
-    assert(out.contains(SessionOut(1L, 0L, 1L, 2L, 3.0)),
-      s"expected key 1's open session flushed by timeout, got ${out.toSeq}")
-  }
-
-  test("transformWithState: event-time timer flushes the trailing session") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val input = MemoryStream[(Long, Long, Double)]
-      val q = Streams.sessionizeTws(input.toDS(), gapSeconds = 1800L)
-        .writeStream.format("memory").queryName("sess_tws")
-        .outputMode("append").start()
-      // times start past 0: a t=0 event would sit AT the initial
-      // watermark and be dropped as late
-      input.addData((1L, 100L, 1.0), (1L, 110L, 2.0)) // opens key 1's session
-      q.processAllAvailable()
-      assert(spark.table("sess_tws").count() == 0)     // watermark at 110s
-      // key 2 far in the future: watermark jumps past 110 + 1800 + 1,
-      // firing key 1's event-time timer -> trailing session flushes
-      input.addData((2L, 50000L, 9.0))
-      q.processAllAvailable()
-      val out = spark.table("sess_tws").as[SessionOut].collect()
-      q.stop()
-      assert(out.toSet == Set(SessionOut(1L, 100L, 110L, 2L, 3.0)),
-        s"expected key 1 flushed by event-time timer, got ${out.toSeq}")
-    } finally {
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-  }
-
-  test("flatMapGroupsWithState sessionization closes sessions on gaps") {
-    // user 1: events at t=0,10,20 then 4000,4010 -> one closed session
-    // (0..20) once the second burst arrives; user 2: single burst, stays open
-    val events = Seq(
-      (1L, 0L, 1.0), (1L, 10L, 2.0), (1L, 20L, 3.0),
-      (1L, 4000L, 4.0), (1L, 4010L, 5.0),
-      (2L, 100L, 9.0)).toDS()
-    val out = Streams.sessionize(events, gapSeconds = 1800L).collect()
-    assert(out.length == 1)
-    val s = out.head
-    assert(s.user == 1L && s.startSec == 0L && s.endSec == 20L)
-    assert(s.n == 3L && s.sum == 6.0)
+    val events = Entities.events(spark, "/root/testdata/sf0.001")
+    assert(events.filter(_.event_type.nonEmpty).count() > 0)
   }
 }

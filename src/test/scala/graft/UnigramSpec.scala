@@ -124,10 +124,10 @@ class UnigramSpec extends SparkSpec {
   test("stored piece table round-trips; encode equals direct per-word segmentation") {
     val docs = Tablesish.docs(spark)
     val trained = Unigram.train(docs, "text", rounds = 2)
-    // store/load round trip through parquet (the Bpe.mergesFromDF analogue)
+    // store/load round trip through parquet: costs from the stored table
     val dir = java.nio.file.Files.createTempDirectory("uni_vocab").toString
     trained.write.mode("overwrite").parquet(dir)
-    val loaded = Unigram.costsFromDF(spark.read.parquet(dir))
+    val loaded = Unigram.pieceCosts(spark.read.parquet(dir).select("piece", "n"))
     val direct = Unigram.pieceCosts(trained.select("piece", "n"))
     assert(loaded.keySet == direct.keySet)
     loaded.foreach { case (p, c) => assert(math.abs(c - direct(p)) < 1e-12) }

@@ -1,0 +1,195 @@
+#!/usr/bin/env python3
+"""List public library functions that only the specs reach.
+
+Usage: python3 tools/spec_only_defs.py [repo_root]
+
+Scans every public `def` in src/main (not `private`, `protected` or
+`override`) and looks for its name, as a whole word, in the code of
+src/main, cosmobench/src and tools. Comments are stripped first, so a
+scaladoc mention or a `[[link]]` is not a caller; string literals are
+kept, since a name in a string can be a reflective or SQL-level use. A
+name whose only occurrences are its own definitions has no caller
+outside src/test.
+
+Prints each such name with its file and line. Names on KEEP (below) are
+reported with their reason and do not fail the run; any other unused
+name makes the exit status 1.
+"""
+import os
+import re
+import sys
+
+# name -> why it stays although no library code calls it.
+KEEP = {
+    "cosineHof": "reference implementation NativeExprSpec compares the "
+                 "native cosine expression against",
+    "simhashFromHashes": "reference implementation NativeExprSpec compares "
+                         "the native simhash expression against",
+    "trigrams": "reference implementation NativeExprSpec compares the "
+                "native trigram expression against",
+    "minhashSignature": "Text's is the HOF reference NativeExprSpec compares "
+                        "the native MinHash against; GraftExtensions' is the "
+                        "Column form of the registered minhash_signature "
+                        "SQL function",
+    "applyMerge": "reference implementation NativeExprSpec compares the "
+                  "native BPE merge expression against",
+    "acqSlewStats": "the reference's ACQ slew monitor computation "
+                    "(acq_monitors.py), pinned by MonitorsSpec",
+    "darkRate": "the reference's dark-rate monitor computation, pinned by "
+                "MonitorsSpec",
+    "registerExtended": "registers the reference's telemetry and jitter "
+                        "monitors next to the 12 cadence monitors",
+    "perExtensionTable": "FITS ingest: stays until one of the two FITS "
+                         "readers is chosen",
+}
+
+# `def main(args)` is started by sbt runMain, not called.
+ENTRY_POINTS = {"main"}
+
+SCAN_ROOTS = ("src/main", "cosmobench/src", "tools")
+SELF = os.path.join("tools", "spec_only_defs.py")
+
+DEF_RE = re.compile(
+    r"^[ \t]*((?:(?:final|implicit|inline|private(?:\[\w+\])?|protected"
+    r"(?:\[\w+\])?|override|@\w+)\s+)*)def\s+([A-Za-z_][A-Za-z0-9_]*)",
+    re.M)
+CHAR_RE = re.compile(r"'(\\.|[^\\'\n])'")  # a Scala char literal such as '"'
+
+
+def strip_scala(src):
+    """Blank out // and (nested) /* */ comments; keep strings as they are.
+
+    A "/*" or "//" inside a string literal, such as a glob path, is part of
+    the string and does not open a comment. Line breaks are kept, so line
+    numbers stay valid.
+    """
+    out = []
+    i, n = 0, len(src)
+    depth = 0
+    while i < n:
+        c = src[i]
+        if depth:
+            if src.startswith("/*", i):
+                depth += 1
+                i += 2
+            elif src.startswith("*/", i):
+                depth -= 1
+                i += 2
+            else:
+                out.append("\n" if c == "\n" else " ")
+                i += 1
+            continue
+        if src.startswith('"""', i):
+            j = src.find('"""', i + 3)
+            j = n if j < 0 else j + 3
+            while j < n and src[j] == '"':
+                j += 1
+            out.append(src[i:j])
+            i = j
+        elif c == '"':
+            j = i + 1
+            while j < n and src[j] not in '"\n':
+                j += 2 if src[j] == "\\" else 1
+            out.append(src[i:j + 1])
+            i = j + 1
+        elif c == "'" and CHAR_RE.match(src, i):
+            j = CHAR_RE.match(src, i).end()
+            out.append(src[i:j])
+            i = j
+        elif src.startswith("//", i):
+            j = src.find("\n", i)
+            i = n if j < 0 else j
+        elif src.startswith("/*", i):
+            depth = 1
+            i += 2
+        else:
+            out.append(c)
+            i += 1
+    return "".join(out)
+
+
+def strip_python(src):
+    """Blank out # comments outside string literals."""
+    out = []
+    i, n = 0, len(src)
+    while i < n:
+        c = src[i]
+        if src.startswith('"""', i) or src.startswith("'''", i):
+            q = src[i:i + 3]
+            j = src.find(q, i + 3)
+            j = n if j < 0 else j + 3
+            out.append(src[i:j])
+            i = j
+        elif c in "\"'":
+            j = i + 1
+            while j < n and src[j] not in c + "\n":
+                j += 2 if src[j] == "\\" else 1
+            out.append(src[i:j + 1])
+            i = j + 1
+        elif c == "#":
+            j = src.find("\n", i)
+            i = n if j < 0 else j
+        else:
+            out.append(c)
+            i += 1
+    return "".join(out)
+
+
+def sources(root):
+    for base in SCAN_ROOTS:
+        for d, dirs, files in os.walk(os.path.join(root, base)):
+            dirs[:] = [x for x in dirs if x not in ("target", "project")]
+            for f in sorted(files):
+                path = os.path.join(d, f)
+                rel = os.path.relpath(path, root)
+                if rel == SELF:
+                    continue
+                if f.endswith(".scala"):
+                    yield rel, strip_scala(open(path).read())
+                elif f.endswith(".py"):
+                    yield rel, strip_python(open(path).read())
+
+
+def main():
+    root = sys.argv[1] if len(sys.argv) > 1 else \
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = dict(sources(root))
+    defs = {}  # name -> [(file, line)]
+    for rel, text in code.items():
+        if not rel.startswith("src/main/"):
+            continue
+        for m in DEF_RE.finditer(text):
+            mods, name = m.group(1), m.group(2)
+            if name in ENTRY_POINTS or \
+                    re.search(r"\b(private|protected|override)\b", mods):
+                continue
+            line = text.count("\n", 0, m.start()) + 1
+            defs.setdefault(name, []).append((rel, line))
+
+    words = {}
+    for text in code.values():
+        for w in re.findall(r"[A-Za-z_][A-Za-z0-9_]*", text):
+            words[w] = words.get(w, 0) + 1
+    all_sites = {}  # every def of a name, any modifier, counts as a site
+    for rel, text in code.items():
+        for m in DEF_RE.finditer(text):
+            all_sites[m.group(2)] = all_sites.get(m.group(2), 0) + 1
+
+    unused = sorted(n for n in defs if words.get(n, 0) <= all_sites[n])
+    kept = [n for n in unused if n in KEEP]
+    bad = [n for n in unused if n not in KEEP]
+    for n in kept:
+        print(f"keep    {n:28s} {KEEP[n]}")
+    for n in bad:
+        where = ", ".join(f"{f}:{l}" for f, l in defs[n])
+        print(f"UNUSED  {n:28s} {where}")
+    stale = sorted(set(KEEP) - set(unused))
+    for n in stale:
+        print(f"note    {n:28s} on the keep-list but has a caller now")
+    print(f"{len(unused)} spec-only public defs: {len(kept)} kept, "
+          f"{len(bad)} not kept")
+    return 1 if bad else 0
+
+
+if __name__ == "__main__":
+    sys.exit(main())
