@@ -20,9 +20,6 @@ import org.apache.spark.sql.functions._
   *   - `embeddings.label` moves by `i * 1000` per copy so that the
   *     label blocks of different copies stay apart.
   *
-  * At X a multiple of 10 it also writes `embeddings_d.parquet`, the
-  * diversity-growing embedding table [[RecallProbe]] reads.
-  *
   * Usage: runMain graft.ScaleFixture <sfDir> <outDir> <X> [X …] */
 object ScaleFixture {
 
@@ -58,46 +55,7 @@ object ScaleFixture {
           save(copies.reduce(_.unionByName(_)).repartition(32), name)
       }
     }
-    if (x % 10 == 0) save(diverseEmbeddings(spark, sfDir, x / 10), "embeddings_d")
-    else System.err.println(s"[fixture] x=$x is not a multiple of 10: no embeddings_d")
     System.err.println(s"[fixture] wrote $dir")
-  }
-
-  /** Diversity-growing embeddings. The replication tables stack EXACT
-    * copies, so true near-dup pair volume grows QUADRATICALLY in X
-    * (measured: RecallProbe truth 509,800 pairs at 10× → 4,648,200 at
-    * 30×, truth clusters pinned at 37): on that growth model no
-    * constant-recall candidate generator can read near-linear, because
-    * the verify work itself is Θ(N²). Real corpora grow the other way:
-    * cluster COUNT grows, cluster SIZE stays bounded. This table models
-    * that: each base vector under `variants` per-variant random sign
-    * masks (s(v,i) ∈ {±1} hash-derived; within a variant the mask
-    * cancels in every inner product, so each variant reproduces the
-    * base corpus's pair structure exactly, while cross-variant cosines
-    * decorrelate toward 0) × 10 near-duplicate copies each (one
-    * coordinate scaled per copy, cosine to the pattern ≈ 0.99). Same
-    * row count as the X-copy embeddings table, truth pairs ≈ variants ×
-    * base truth: LINEAR growth. */
-  private def diverseEmbeddings(spark: SparkSession, sfDir: String,
-      variants: Int): DataFrame = {
-    val dim = 64
-    core.Tables(spark, sfDir, "embeddings")
-      .select(col("vec_id").as("base_id"),
-        col("embedding").cast("array<double>").as("bv"))
-      .withColumn("variant", explode(sequence(lit(0), lit(variants - 1))))
-      .withColumn("copy", explode(sequence(lit(0), lit(9))))
-      .select(
-        (col("base_id") * 1000L + col("variant") * 10L + col("copy"))
-          .as("vec_id"),
-        (col("base_id") * 100L + col("variant")).as("label"),
-        transform(sequence(lit(0), lit(dim - 1)), i =>
-          element_at(col("bv"), i.cast("int") + 1) *
-            (lit(1.0) - lit(2.0) *
-              pmod(xxhash64(col("variant") * 64 + i), lit(2)).cast("double")) *
-            when(i === col("copy") % dim,
-              lit(1.0) + (col("copy") + 1) * lit(0.05)).otherwise(lit(1.0)))
-          .as("embedding"))
-      .repartition(32)
   }
 
   def main(args: Array[String]): Unit = {

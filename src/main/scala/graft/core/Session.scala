@@ -3,7 +3,7 @@ package graft.core
 import org.apache.spark.sql.SparkSession
 
 /** The one SparkSession builder of the repo's mains (Verify, ProfileQ,
-  * Explain, ScaleCheck, ScaleFixture, RecallProbe): `local[N]` with
+  * Explain, ScaleCheck, ScaleFixture): `local[N]` with
   * N = `SPARK_GRAFT_CPUS` or else the JVM's core count, shuffle
   * partitions = N, UTC, UI off, and a registry-sized codegen cache so
   * repeated queries run compile-free. The benchmark harness

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.graft.{BigramHashes, BpeMergeSeq, CdcCuts, CosineSimilarity, DotProduct, EvalBarrier, IvfTopCells, IvfTreeTopCells, Md5Prefix60, MdBandKeys, MdBucketMargin, MdDerivedMarginInt, SpanHashes60, MdMinHashSignature, MinHashSignature, MjdToTimestamp, NativeBridge, RegexpExtractGroups, ShingleArray, SimHash64, MultiMatch, TimestampToMjd, TrigramHashes, UnicodeNormalize, UnigramViterbi, WinnowMinima, WordPieceEncode}
+import org.apache.spark.sql.graft.{BigramHashes, BpeMergeSeq, CdcCuts, CosineSimilarity, DotProduct, EvalBarrier, IvfTopCells, Md5Prefix60, MdBandKeys, MdBucketMargin, MdDerivedMarginInt, SpanHashes60, MdMinHashSignature, MinHashSignature, MjdToTimestamp, NativeBridge, RegexpExtractGroups, ShingleArray, SimHash64, MultiMatch, TimestampToMjd, TrigramHashes, UnicodeNormalize, UnigramViterbi, WinnowMinima, WordPieceEncode}
 
 /** Registers the native expressions as SQL functions so every operator is
   * reachable from `spark.sql` (SURVEY.md §7.1 `sql/` surface). Install
@@ -205,14 +205,6 @@ object GraftExtensions {
     NativeBridge.column(IvfTopCells(
       NativeBridge.expression(vec.cast("array<double>")),
       cids, cents, nProbe, simRound))
-  def ivfTreeTopCells(vec: Column, coarseMat: Seq[Seq[Double]],
-      fineCids: Seq[Long], fineMat: Seq[Seq[Double]],
-      coarseStart: Seq[Int], coarseProbe: Int, nProbe: Int,
-      simRound: Int): Column =
-    NativeBridge.column(IvfTreeTopCells(
-      NativeBridge.expression(vec.cast("array<double>")),
-      coarseMat, fineCids, fineMat, coarseStart, coarseProbe, nProbe,
-      simRound))
   def minhashSignature(shingles: Column, numHashes: Int): Column =
     NativeBridge.column(MinHashSignature(NativeBridge.expression(shingles), numHashes))
   def mdMinhashSignature(shingles: Column, numHashes: Int): Column =

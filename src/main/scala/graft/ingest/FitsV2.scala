@@ -6,7 +6,6 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -15,33 +14,42 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-/** DataSourceV2 FITS source: `spark.read.format("fits").option("hdu", 1)
-  * .load(glob)` exposes one BINTABLE extension as a RELATIONAL table —
-  * one Spark row per FITS table row, scalar cells typed, repeat>1
-  * numeric cells as arrays. Builds on the same pure-Scala parser as
-  * [[Fits]] (S2/S3; reference: cosmo/filesystem.py:34–92) but plugs into
-  * the planner properly:
+/** DataSourceV2 FITS source, the one FITS reader:
+  * `spark.read.format("fits").option("hdu", 1).load(glob)` returns the
+  * reference's exposure record (cosmo/filesystem.py:34–92) — one row per
+  * (file, selected HDU) with the source path in `_file`, each requested
+  * header key as a string column, and each table column of a selected
+  * BINTABLE as an array with one element per table row (cell types from
+  * [[Fits.sparkType]]). A row-per-table-row view is
+  * `Relational.explodeArrays` over the record.
   *
+  * Options:
+  *  - `hdu`: an HDU index (default 1), or an EXTNAME that selects every
+  *    HDU so named — a jitter association file with 4 `jit` extensions
+  *    gives 4 rows (S6, filesystem.py:196–227);
+  *  - `headers`: comma-separated header keys, each looked up in the
+  *    primary header, then in the selected HDU's ([[Fits.headerValue]]);
+  *    a key in neither is null.
+  * A selected HDU that is not a BINTABLE (a header-only rawacq or SPT
+  * read) gives `_file` and header columns only.
+  *
+  * The scan plugs into the planner:
   *  - one InputPartition per file — the reference's dask per-file
-  *    fan-out (filesystem.py:355–373) as genuine scan parallelism;
-  *  - COLUMN PRUNING pushed into the scan (SupportsPushDownRequiredColumns):
-  *    only requested columns are byte-decoded, so `select(two cols)`
-  *    never pays for the other twenty — the property SURVEY.md §4 calls
-  *    out as "a scan that reads all columns for a 2-column projection is
-  *    wrong";
-  *  - gzip containers handled per file, schema inferred from the first
-  *    file (all files of one product type share a layout, as the
-  *    reference's per-model requests assume).
-  *
-  * Options: `hdu` (extension index, default 1), `headers`
-  * (comma-separated PRIMARY-header keys to attach as string columns).
-  * A `_file` column always carries the source path.
+  *    fan-out (filesystem.py:355–373) as scan parallelism;
+  *  - column pruning (SupportsPushDownRequiredColumns): only required
+  *    columns are decoded, and the table layout is not read at all when
+  *    no table column is required;
+  *  - file-level filter pushdown on `_file` and header columns, decided
+  *    from header-only reads (the FITS analog of a parquet footer);
+  *  - schema inferred from the first file's headers (all files of one
+  *    product type share a layout, as the reference's per-model requests
+  *    assume).
   */
 class FitsDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "fits"
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    FitsV2.schemaFor(FitsV2.resolvePaths(options), FitsV2.hduIndex(options),
+    FitsV2.schemaFor(FitsV2.resolvePaths(options), FitsV2.hdu(options),
       FitsV2.headerKeys(options))
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
@@ -76,8 +84,8 @@ object FitsV2 {
     new SerializableHadoopConf(
       SparkSession.active.sessionState.newHadoopConf())
 
-  def hduIndex(options: CaseInsensitiveStringMap): Int =
-    Option(options.get("hdu")).map(_.toInt).getOrElse(1)
+  def hdu(options: CaseInsensitiveStringMap): String =
+    Option(options.get("hdu")).map(_.trim).getOrElse("1")
 
   def headerKeys(options: CaseInsensitiveStringMap): Seq[String] =
     Option(options.get("headers")).map(_.split(",").map(_.trim).toSeq)
@@ -98,130 +106,68 @@ object FitsV2 {
   private[ingest] def readFile(path: String,
       conf: org.apache.hadoop.conf.Configuration): Array[Byte] = {
     val p = new Path(path)
-    val fs = FileSystem.get(p.toUri, conf)
-    val in = fs.open(p)
+    val in = FileSystem.get(p.toUri, conf).open(p)
+    try Fits.gunzipIfNeeded(in.readAllBytes()) finally in.close()
+  }
+
+  /** The headers of a file's HDUs, read without keeping any data section:
+    * 2880-byte blocks up to each END card, then a skip over the data.
+    * With an index `hdu` the read stops after that HDU. This is what
+    * makes schema inference and header-predicate pruning cheap — a few
+    * KB per file instead of the whole product. */
+  private[ingest] def readHeaders(path: String, hdu: String,
+      conf: org.apache.hadoop.conf.Configuration): Seq[Map[String, String]] = {
+    val last = if (hdu.nonEmpty && hdu.forall(_.isDigit)) hdu.toInt else Int.MaxValue
+    val p = new Path(path)
+    val raw = new java.io.BufferedInputStream(FileSystem.get(p.toUri, conf).open(p), 8192)
+    raw.mark(2)
+    val gzip = raw.read() == 0x1f && raw.read() == 0x8b
+    raw.reset()
+    val in = if (gzip) new java.util.zip.GZIPInputStream(raw) else raw
     try {
-      val out = new java.io.ByteArrayOutputStream(1 << 20)
-      val buf = new Array[Byte](65536)
-      var n = in.read(buf)
-      while (n > 0) { out.write(buf, 0, n); n = in.read(buf) }
-      Fits.gunzipIfNeeded(out.toByteArray)
+      val headers = Seq.newBuilder[Map[String, String]]
+      val block = new Array[Byte](2880)
+      var index = 0
+      var eof = false
+      while (!eof && index <= last) {
+        val cards = new java.io.ByteArrayOutputStream(2880)
+        var done = false
+        while (!done && !eof) {
+          // a short block at an HDU boundary ends the file, as in parseHdus
+          val got = in.readNBytes(block, 0, 2880)
+          if (got < 2880 && cards.size == 0) eof = true
+          else if (got < 2880) throw new java.io.EOFException(s"truncated FITS header: $path")
+          else {
+            cards.write(block)
+            done = new String(block, "US-ASCII").grouped(80).exists(Fits.isEndCard)
+          }
+        }
+        if (!eof) {
+          val h = Fits.parseHdus(cards.toByteArray).head
+          headers += h.header
+          var skip = if (index < last) ((h.dataLen + 2879L) / 2880) * 2880 else 0L
+          while (skip > 0) {
+            val n = in.skip(skip)
+            skip = if (n > 0) skip - n else if (in.read() < 0) 0L else skip - 1
+          }
+          index += 1
+        }
+      }
+      headers.result()
     } finally in.close()
   }
 
-  /** Read ONLY the primary header of a file: stream 2880-byte blocks
-    * (through a streaming gunzip for .gz) until the END card, never
-    * touching the data sections. This is what makes header-predicate
-    * file pruning cheap — a few KB per file instead of the whole
-    * product, the FITS analog of reading a parquet footer. */
-  private[ingest] def readPrimaryHeader(path: String,
-      conf: org.apache.hadoop.conf.Configuration): Map[String, String] = {
-    val p = new Path(path)
-    val fs = FileSystem.get(p.toUri, conf)
-    val raw = fs.open(p)
-    try {
-      val head = new java.io.BufferedInputStream(raw, 8192)
-      head.mark(2)
-      val b0 = head.read(); val b1 = head.read()
-      head.reset()
-      val in: java.io.InputStream =
-        if (b0 == 0x1f && b1 == 0x8b) new java.util.zip.GZIPInputStream(head)
-        else head
-      val out = new java.io.ByteArrayOutputStream(2880 * 4)
-      val block = new Array[Byte](2880)
-      var done = false
-      while (!done) {
-        var got = 0
-        while (got < 2880) {
-          val n = in.read(block, got, 2880 - got)
-          if (n < 0) throw new java.io.EOFException(s"truncated FITS header: $path")
-          got += n
-        }
-        out.write(block)
-        val text = new String(block, "US-ASCII")
-        done = text.grouped(80).exists(c =>
-          c.startsWith("END     ") || c.trim == "END")
-      }
-      // reuse the full card parser on just the header blocks: a header-only
-      // byte slice parses as one data-less HDU
-      Fits.parseHdus(out.toByteArray).head.header
-    } finally raw.close()
-  }
-
-  private def sparkType(spec: Fits.ColSpec): DataType = {
-    val elem = spec.code match {
-      case 'A' => StringType
-      case 'D' => DoubleType
-      case 'E' => FloatType
-      case 'J' | 'I' | 'B' => IntegerType
-      case 'K' => LongType
-      case 'L' => BooleanType
-    }
-    if (spec.code == 'A') elem
-    else if (spec.desc != ' ') ArrayType(elem, containsNull = false)
-    else if (spec.repeat == 1) elem
-    else ArrayType(elem, containsNull = false)
-  }
-
-  def schemaFor(paths: Seq[String], hdu: Int, headers: Seq[String]): StructType = {
-    val bytes = readFile(paths.head, sessionConf().value)
-    val hdus = Fits.parseHdus(bytes)
-    val cols = Fits.tableCols(hdus(hdu))
+  def schemaFor(paths: Seq[String], hdu: String, headers: Seq[String]): StructType = {
+    val hs = readHeaders(paths.head, hdu, sessionConf().value)
+    val selected = hs.indices.find(i => Fits.selects(hdu, i, hs(i))).getOrElse(
+      throw new IllegalArgumentException(s"no HDU $hdu in ${paths.head}"))
+    val cols =
+      if (Fits.isTable(hs(selected))) Fits.tableCols(hs(selected)) else Seq.empty
     StructType(
       StructField("_file", StringType, nullable = false) +:
         headers.map(k => StructField(k, StringType)) ++:
-        cols.map(s => StructField(s.name, sparkType(s))))
-  }
-
-  /** Decode one cell (scalar, string, fixed-repeat array, or
-    * variable-length heap array — `heapStart` is the absolute heap
-    * offset of the cell's HDU, ignored for fixed cells). */
-  private[ingest] def cellValue(bytes: Array[Byte], base: Int,
-                                spec: Fits.ColSpec, heapStart: Int): Any = {
-    import java.nio.ByteBuffer
-    def scalar(code: Char, at: Int): Any = code match {
-      case 'D' => ByteBuffer.wrap(bytes, at, 8).getDouble
-      case 'E' => ByteBuffer.wrap(bytes, at, 4).getFloat
-      case 'J' => ByteBuffer.wrap(bytes, at, 4).getInt
-      case 'I' => ByteBuffer.wrap(bytes, at, 2).getShort.toInt
-      case 'K' => ByteBuffer.wrap(bytes, at, 8).getLong
-      case 'B' => bytes(at) & 0xff
-      case 'L' => bytes(at) == 'T'.toByte
-    }
-    def unit(code: Char): Int = code match {
-      case 'A' | 'L' | 'B' => 1
-      case 'I' => 2
-      case 'E' | 'J' => 4
-      case 'D' | 'K' => 8
-    }
-    if (spec.desc != ' ') {
-      if (spec.repeat == 0)
-        return if (spec.code == 'A') UTF8String.fromString("")
-               else new GenericArrayData(Array.empty[Any])
-      val (cnt, off) =
-        if (spec.desc == 'P')
-          (ByteBuffer.wrap(bytes, base, 4).getInt,
-            ByteBuffer.wrap(bytes, base + 4, 4).getInt.toLong)
-        else
-          (ByteBuffer.wrap(bytes, base, 8).getLong.toInt,
-            ByteBuffer.wrap(bytes, base + 8, 8).getLong)
-      val at0 = heapStart + off.toInt
-      if (spec.code == 'A')
-        UTF8String.fromString(new String(bytes, at0, cnt, "US-ASCII").trim)
-      else {
-        val u = unit(spec.code)
-        new GenericArrayData(
-          (0 until cnt).map(i => scalar(spec.code, at0 + i * u)).toArray)
-      }
-    }
-    else if (spec.code == 'A')
-      UTF8String.fromString(new String(bytes, base, spec.repeat, "US-ASCII").trim)
-    else if (spec.repeat == 1) scalar(spec.code, base)
-    else {
-      val unitB = spec.cellBytes / spec.repeat
-      new GenericArrayData(
-        (0 until spec.repeat).map(i => scalar(spec.code, base + i * unitB)).toArray)
-    }
+        cols.filterNot(s => s.name == "_file" || headers.contains(s.name))
+          .map(s => StructField(s.name, ArrayType(Fits.sparkType(s), containsNull = false))))
   }
 }
 
@@ -233,11 +179,11 @@ case class FitsV2Table(tableSchema: StructType, options: CaseInsensitiveStringMa
     Set(TableCapability.BATCH_READ).asJava
   override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder =
     new FitsScanBuilder(tableSchema,
-      FitsV2.resolvePaths(options), FitsV2.hduIndex(options),
+      FitsV2.resolvePaths(options), FitsV2.hdu(options),
       FitsV2.headerKeys(options), FitsV2.sessionConf())
 }
 
-class FitsScanBuilder(fullSchema: StructType, paths: Seq[String], hdu: Int,
+class FitsScanBuilder(fullSchema: StructType, paths: Seq[String], hdu: String,
                       headerKeys: Seq[String], conf: SerializableHadoopConf)
   extends ScanBuilder with SupportsPushDownRequiredColumns
   with SupportsPushDownFilters {
@@ -249,12 +195,12 @@ class FitsScanBuilder(fullSchema: StructType, paths: Seq[String], hdu: Int,
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
 
-  // FILE-LEVEL pruning: a predicate over `_file` or a primary-header
-  // column is constant across every row of a file, so satisfying files
-  // can be selected before any table byte is decoded — the custom-source
-  // analog of partition pruning. Accepted filters are fully enforced by
-  // the prune (a file either passes or contributes no rows), so nothing
-  // is returned as residual.
+  // FILE-LEVEL pruning: a predicate over `_file` or a header column can
+  // drop whole files before any table byte is decoded — the custom-source
+  // analog of partition pruning. A `_file` predicate is constant across a
+  // file, so the prune enforces it fully. A header predicate keeps a file
+  // when any selected HDU passes it; an EXTNAME selection can give a file
+  // rows that differ in a header value, so Spark still applies it per row.
   private def fileLevel(attr: String): Boolean =
     attr == "_file" || headerKeys.contains(attr)
 
@@ -269,18 +215,17 @@ class FitsScanBuilder(fullSchema: StructType, paths: Seq[String], hdu: Int,
   }
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (ours, residual) = filters.partition(prunable)
-    accepted = ours
-    residual
+    accepted = filters.filter(prunable)
+    filters.filterNot(f => prunable(f) && f.references.forall(_ == "_file"))
   }
   override def pushedFilters(): Array[Filter] = accepted
 
   override def build(): Scan =
-    FitsScan(required, paths, hdu, conf, accepted)
+    FitsScan(required, paths, hdu, headerKeys, conf, accepted)
 }
 
-case class FitsScan(readSchemaV: StructType, paths: Seq[String], hdu: Int,
-                    conf: SerializableHadoopConf,
+case class FitsScan(readSchemaV: StructType, paths: Seq[String], hdu: String,
+                    headerKeys: Seq[String], conf: SerializableHadoopConf,
                     pushed: Array[org.apache.spark.sql.sources.Filter])
   extends Scan with Batch {
   import org.apache.spark.sql.sources._
@@ -303,9 +248,11 @@ case class FitsScan(readSchemaV: StructType, paths: Seq[String], hdu: Int,
     }
 
   /** Paths surviving the pushed file-level predicates. `_file` filters
-    * cost nothing; header filters read ONLY each candidate's primary
-    * header (KBs, driver-side — the same planning-time cost profile as
-    * parquet footer reads), and only when such a filter exists. */
+    * cost nothing; header filters read only each candidate's headers
+    * (KBs at planning time — the cost profile of parquet footer reads),
+    * and only when such a filter exists. A file survives
+    * when some selected HDU passes every filter under the reader's own
+    * header lookup. */
   private[graft] lazy val prunedPaths: Seq[String] = {
     val (pathFs, headerFs) = pushed.partition(_.references.forall(_ == "_file"))
     val byPath = paths.filter(p => pathFs.forall(matches(_, {
@@ -314,54 +261,49 @@ case class FitsScan(readSchemaV: StructType, paths: Seq[String], hdu: Int,
     })))
     if (headerFs.isEmpty) byPath
     else byPath.filter { p =>
-      val hdr = FitsV2.readPrimaryHeader(p, conf.value)
-      headerFs.forall(matches(_, {
-        case "_file" => Some(p)
-        case k => hdr.get(k)
-      }))
+      val hs = FitsV2.readHeaders(p, hdu, conf.value)
+      hs.indices.exists(i => Fits.selects(hdu, i, hs(i)) &&
+        headerFs.forall(matches(_, {
+          case "_file" => Some(p)
+          case k => Fits.headerValue(hs.head, hs(i), k)
+        })))
     }
   }
 
   override def planInputPartitions(): Array[InputPartition] =
     prunedPaths.map(p => FitsFilePartition(p): InputPartition).toArray
   override def createReaderFactory(): PartitionReaderFactory =
-    FitsReaderFactory(readSchemaV, hdu, conf)
+    FitsReaderFactory(readSchemaV, hdu, headerKeys, conf)
 }
 
 case class FitsFilePartition(path: String) extends InputPartition
 
-case class FitsReaderFactory(schema: StructType, hdu: Int,
-                             conf: SerializableHadoopConf)
+case class FitsReaderFactory(schema: StructType, hdu: String,
+                             headerKeys: Seq[String], conf: SerializableHadoopConf)
   extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val path = partition.asInstanceOf[FitsFilePartition].path
+    val bytes = FitsV2.readFile(path, conf.value)
+    val hdus = Fits.parseHdus(bytes)
+    val file = UTF8String.fromString(path)
+    val rows = hdus.indices.filter(i => Fits.selects(hdu, i, hdus(i).header)).map { i =>
+      val h = hdus(i)
+      // only required columns are decoded; the table layout is read only
+      // when a table column is required
+      lazy val specs = Fits.tableCols(h.header).map(s => s.name -> s).toMap
+      new GenericInternalRow(schema.fields.map[Any] { f =>
+        if (f.name == "_file") file
+        else if (headerKeys.contains(f.name))
+          Fits.headerValue(hdus.head.header, h.header, f.name)
+            .map(UTF8String.fromString).orNull
+        else Fits.column(bytes, h, specs.getOrElse(f.name,
+          throw new IllegalArgumentException(s"no column ${f.name} in HDU $i of $path")))
+      }): InternalRow
+    }.iterator
     new PartitionReader[InternalRow] {
-      private val bytes = FitsV2.readFile(path, conf.value)
-      private val hdus = Fits.parseHdus(bytes)
-      private val ext = hdus(hdu)
-      private val primary = hdus.head
-      private val specByName = Fits.tableCols(ext).map(s => s.name -> s).toMap
-      private val rowLen = ext.header("NAXIS1").toInt
-      private val nRows = ext.header("NAXIS2").toInt
-      // per required field: decode plan — only PRUNED columns touch bytes
-      private val pathValue = UTF8String.fromString(path)
-      private val decoders: Array[Int => Any] = schema.fields.map { f =>
-        if (f.name == "_file") (_: Int) => pathValue
-        else specByName.get(f.name) match {
-          case Some(spec) =>
-            val hs = Fits.heapStart(ext)
-            (r: Int) => FitsV2.cellValue(bytes,
-              ext.dataStart + r * rowLen + spec.offset, spec, hs)
-          case None => // a primary-header key column
-            val v = primary.header.get(f.name)
-              .map(UTF8String.fromString).orNull
-            (_: Int) => v
-        }
-      }
-      private var row = -1
-      override def next(): Boolean = { row += 1; row < nRows }
-      override def get(): InternalRow =
-        new GenericInternalRow(decoders.map(d => d(row)).asInstanceOf[Array[Any]])
+      private var row: InternalRow = _
+      override def next(): Boolean = rows.hasNext && { row = rows.next(); true }
+      override def get(): InternalRow = row
       override def close(): Unit = ()
     }
   }

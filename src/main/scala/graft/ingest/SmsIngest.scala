@@ -128,30 +128,14 @@ object SmsIngest {
     * ingested, parse them, and MERGE into the stored table keyed by
     * EXPOSURE with FILEID as the version guard (reference:
     * ingest_sms.py:188–198 — `EXCLUDED.FILEID_id > FILEID_id`).
-    *
-    * Discovery anti-join strategy is size-aware: below `bloomThreshold`
-    * ingested files, a plain left_anti join (broadcast at that size);
-    * above it, `BloomOps.bloomAntiJoin` — the ingested list becomes a
-    * ~1.2 MB/M-keys bloom filter, and candidates that provably aren't
-    * ingested skip the shuffle entirely. At 100 TB the ingested-file
-    * table is the side that grows without bound, so this is the lever
-    * that keeps per-run discovery cost bounded by NEW files, not by
-    * history. */
+    * Discovery is one left_anti join of the latest files against
+    * `ingestedFileIds(file_id)`. */
   def ingest(spark: SparkSession, sourceGlob: String, tableDir: String,
-             ingestedFileIds: DataFrame,
-             bloomThreshold: Long = 100000L): Unit = {
+             ingestedFileIds: DataFrame): Unit = {
     import spark.implicits._
     val all = spark.read.format("binaryFile").load(sourceGlob)
       .select(col("path"))
-    val latest = latestSmsFiles(all)
-    val nIngested = ingestedFileIds.count()
-    val fresh =
-      if (nIngested < bloomThreshold)
-        latest.join(ingestedFileIds, Seq("file_id"), "left_anti")
-      else
-        org.apache.spark.sql.graft.BloomOps.bloomAntiJoin(
-          latest, ingestedFileIds, "file_id", "file_id",
-          estimatedItems = nIngested.max(1000L))
+    val fresh = latestSmsFiles(all).join(ingestedFileIds, Seq("file_id"), "left_anti")
     // the surviving file LIST is tiny (one path per SMS id) — collecting
     // it to drive the text read matches the reference's discovery step
     // collect-bound: discovery file list - one path per un-ingested SMS id

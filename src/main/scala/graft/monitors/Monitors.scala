@@ -12,6 +12,17 @@ import graft.ops.{Relational, Stats}
   */
 object Monitors {
 
+  /** SMS rows keyed for the J2 join (`sms.ROOTNAME || 'q'`), less every
+    * column the lampflash frame also has: an ingested SMS table carries
+    * EXPSTART and DETECTOR too, and the exposure's own values are the
+    * ones the monitors read. */
+  private def smsKeyed(lampflash: DataFrame, sms: DataFrame): DataFrame = {
+    val shared = sms.columns.filter(c =>
+      c != "ROOTNAME" && lampflash.columns.exists(_.equalsIgnoreCase(c)))
+    (if (shared.isEmpty) sms else sms.drop(shared: _*))
+      .withColumn("ROOTNAME", concat(col("ROOTNAME"), lit("q")))
+  }
+
   /** FUV OSM Shift pipeline (reference:
     * cosmo/monitors/osm_shift_monitors.py:124–137 data assembly; SURVEY.md
     * §7.2 minimum slice). Input lampflash rows carry per-flash arrays
@@ -24,10 +35,9 @@ object Monitors {
     */
   def osmShiftData(lampflash: DataFrame, sms: DataFrame,
                    detector: String = "FUV"): DataFrame = {
-    val smsKeyed = sms.withColumn("ROOTNAME", concat(col("ROOTNAME"), lit("q")))
     val joined = lampflash
       .filter(col("DETECTOR") === detector && size(col("SHIFT_DISP")) > 0)
-      .join(smsKeyed, Seq("ROOTNAME"))
+      .join(smsKeyed(lampflash, sms), Seq("ROOTNAME"))
     Relational.explodeArrays(joined,
       Seq("TIME", "SHIFT_DISP", "SHIFT_XDISP", "SEGMENT"), posCol = "flash")
       .withColumn("sample_ts",
@@ -110,14 +120,13 @@ object Monitors {
     * time-since-OSM-move columns (W4). */
   def osmDriftData(lampflash: DataFrame, sms: DataFrame,
                    detector: String): DataFrame = {
-    val smsKeyed = sms.withColumn("ROOTNAME", concat(col("ROOTNAME"), lit("q")))
     def relToFirst(c: String) =
       transform(slice(col(c), lit(2), size(col(c)) - 1),
         x => x - element_at(col(c), 1))
     def dropFirst(c: String) = slice(col(c), lit(2), size(col(c)) - 1)
     val joined = lampflash
       .filter(col("DETECTOR") === detector && size(col("SHIFT_DISP")) > 1)
-      .join(smsKeyed, Seq("ROOTNAME"))
+      .join(smsKeyed(lampflash, sms), Seq("ROOTNAME"))
       .withColumn("REL_SHIFT_DISP", relToFirst("SHIFT_DISP"))
       .withColumn("REL_SHIFT_XDISP", relToFirst("SHIFT_XDISP"))
       .withColumn("TIME", dropFirst("TIME"))

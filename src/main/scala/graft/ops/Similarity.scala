@@ -600,103 +600,6 @@ object Similarity {
     (v, eig)
   }
 
-  /** [[ivfAssignNative]]'s LARGE-k twin (round 18): per-row work drops
-    * from k·dim to (k1 + coarseProbe·k/k1)·dim by routing through a
-    * COARSE quantizer — k-means over the fine centroid table itself —
-    * before ranking only the fine centroids inside the row's top
-    * `coarseProbe` coarse cells
-    * ([[org.apache.spark.sql.graft.IvfTreeTopCells]]). With the
-    * constant-cell rule (k ∝ N) flat assignment is the pipeline's
-    * quadratic term past ~2M vectors; the tree's arithmetic is
-    * ~N·√k·dim ≈ N^1.25 — not asymptotically linear, but the
-    * coefficient is minutes at 20M vectors where flat is hours. The
-    * fine ranking comparator is byte-identical to the flat path's, so
-    * `coarseProbe >= coarseK` reproduces [[ivfAssignNative]] EXACTLY
-    * (pinned in NativeExprSpec); smaller probes trade a measured
-    * sliver of recall (PERF.md r18: recall vs the flat path at 100×
-    * and the 1000×/2M-vector certification). All tree construction is
-    * bounded driver work: the fine table is k-means k rows, the
-    * coarse train runs over those k rows, and fine→coarse routing is
-    * k·k1 driver cosines. */
-  def ivfAssignTree(df: DataFrame, vecCol: String, centroids: DataFrame,
-                    coarseK: Int, centroidId: String = "centroid_id",
-                    coarseProbe: Int = 8, nProbe: Int = 1,
-                    simRound: Int = -1): DataFrame = {
-    require(coarseK >= 1, s"coarseK must be >= 1, got $coarseK")
-    // collect-bound: k fine centroid rows (k-means k — the bounded
-    // contract every IVF path already holds)
-    val fine = centroids
-      .select(col(centroidId).cast("long"), col(vecCol).cast("array<double>"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    // coarse quantizer: k-means over the FINE CENTROIDS (k rows, tiny)
-    val coarseDf = kmeansCentroids(
-      centroids.select(col(centroidId).as("__fid"),
-        col(vecCol).cast("array<double>").as("__fv")),
-      "__fid", "__fv", k = math.min(coarseK, fine.length), iters = 2,
-      assignNative = true)
-    // collect-bound: k1 coarse centroid rows
-    val coarse = coarseDf.select(col("__fv")).collect()
-      .map(_.getSeq[Double](0).toArray)
-    def cos(a: Array[Double], b: Array[Double]): Double = {
-      if (a.length != b.length) return Double.NegativeInfinity
-      var dot = 0.0d; var na = 0.0d; var nb = 0.0d; var i = 0
-      while (i < a.length) {
-        dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1
-      }
-      val d = math.sqrt(na) * math.sqrt(nb)
-      if (d == 0.0d) 0.0d else dot / d
-    }
-    // fine → coarse routing: k·k1 driver cosines (bounded arithmetic,
-    // no Spark job), then group fines by coarse cell for the offsets
-    val routed = fine.map { case (cid, fv) =>
-      var best = 0; var bestSim = Double.NegativeInfinity
-      var c = 0
-      while (c < coarse.length) {
-        val s = cos(fv, coarse(c))
-        if (s > bestSim) { bestSim = s; best = c }
-        c += 1
-      }
-      (best, cid, fv)
-    }.sortBy(r => (r._1, r._2))
-    val starts = new Array[Int](coarse.length + 1)
-    routed.foreach { case (c, _, _) => starts(c + 1) += 1 }
-    (1 to coarse.length).foreach(c => starts(c) += starts(c - 1))
-    df.withColumn(centroidId,
-      explode(graft.functions.GraftExtensions.ivfTreeTopCells(
-        col(vecCol),
-        coarse.map(_.toSeq).toSeq,
-        routed.map(_._2).toSeq,
-        routed.map(_._3.toSeq).toSeq,
-        starts.toSeq,
-        coarseProbe, nProbe, simRound)))
-  }
-
-  /** [[ivfKnobsForScale]]'s large-corpus extension: same constant cell
-    * size (candidates stay linear), plus the coarse-quantizer knobs
-    * that replace flat assignment past its ~2M-vector regime. k1 = ⌈√k⌉
-    * balances the two routing terms (k1 + coarseProbe·k/k1 per row);
-    * coarseProbe 8 held pair recall at the flat path's level in the
-    * r18 measurements. Arithmetic is ~N·√(N/cellSize)·dim ≈ N^1.25 —
-    * certified at 2M vectors (PERF.md r18), coefficient minutes at
-    * 20M; past that a deeper tree is the same trick again. Returns
-    * (k, coarseK, coarseProbe, nProbe) for [[kmeansCentroids]] (train
-    * on a bounded sample at this scale) + [[ivfAssignTree]]. */
-  def ivfTreeKnobsForScale(nVectors: Long, cellSize: Int = 100,
-                           coarseProbe: Int = 8, nProbe: Int = 2)
-      : (Int, Int, Int, Int) = {
-    require(nVectors > 0 && cellSize > 0 && coarseProbe >= 1 && nProbe >= 1,
-      s"positive knobs required, got n=$nVectors cellSize=$cellSize " +
-        s"coarseProbe=$coarseProbe nProbe=$nProbe")
-    require(nVectors <= 20000000L,
-      s"tree-IVF knobs are certified to ~2M and arithmetic-bounded to " +
-        s"~20M vectors (N^1.25 routing); past that, add a tree level; " +
-        s"got $nVectors")
-    val k = math.max(1L, (nVectors + cellSize - 1) / cellSize).toInt
-    val k1 = math.max(1, math.ceil(math.sqrt(k.toDouble)).toInt)
-    (k, k1, coarseProbe, nProbe)
-  }
-
   /** Shared verify→cluster→keeper tail of the ANN-dedup e2e family
     * (the candidate GENERATOR varies — banded sign-LSH, multi-probe,
     * IVF cells — the tail is one contract): candidate id pairs re-join

@@ -1747,168 +1747,6 @@ case class IvfTopCells(child: Expression, cids: Seq[Long],
     copy(child = newChild)
 }
 
-/** Two-level (tree) IVF cell ranking — [[IvfTopCells]]'s large-k path
-  * (round 18): a flat scan is k·dim multiply-adds per row, and the
-  * constant-cell rule grows k ∝ N, so past ~2M vectors flat assignment
-  * is the pipeline's quadratic term. This expression first ranks the
-  * `coarseMat` quantizer (√k-ish cells, RAW cosine — internal routing,
-  * never surfaced), then ranks only the FINE centroids whose coarse
-  * cell is among the row's top `coarseProbe` — the fine comparator is
-  * [[IvfTopCells]]'s exactly ((round(cosine, simRound) desc, cid asc,
-  * nulls last)), so with `coarseProbe >= coarse cell count` the output
-  * is IDENTICAL to the flat expression (pinned in NativeExprSpec);
-  * smaller probes trade a measured sliver of recall for
-  * (coarseProbe·k/k1 + k1)·dim work per row instead of k·dim. Fine
-  * centroids arrive grouped by coarse cell (`coarseStart` offsets into
-  * the fine arrays), built by [[graft.ops.Similarity.ivfAssignTree]].
-  * Null input vector returns null; a length-mismatched fine centroid
-  * ranks with null similarity after every real one (coarse routing
-  * treats mismatches as cosine −∞). */
-case class IvfTreeTopCells(child: Expression,
-    coarseMat: Seq[Seq[Double]], fineCids: Seq[Long],
-    fineMat: Seq[Seq[Double]], coarseStart: Seq[Int],
-    coarseProbe: Int, nProbe: Int, simRound: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
-
-  require(fineCids.length == fineMat.length,
-    s"fineCids (${fineCids.length}) and fineMat (${fineMat.length}) must align")
-  require(coarseStart.length == coarseMat.length + 1 &&
-    coarseStart.head == 0 && coarseStart.last == fineCids.length,
-    "coarseStart must be k1+1 offsets covering the fine arrays")
-  require(coarseProbe >= 1 && nProbe >= 1,
-    s"coarseProbe/nProbe must be >= 1, got $coarseProbe/$nProbe")
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(DoubleType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "ivf_tree_top_cells"
-  override def nullable: Boolean = true
-  override def toString: String =
-    s"ivf_tree_top_cells($child, k1=${coarseMat.length}, " +
-      s"k=${fineCids.length}, coarseProbe=$coarseProbe, nProbe=$nProbe, " +
-      s"simRound=$simRound)"
-
-  @transient private lazy val cMat: Array[Array[Double]] =
-    coarseMat.map(_.toArray).toArray
-  @transient private lazy val fIds: Array[Long] = fineCids.toArray
-  @transient private lazy val fMat: Array[Array[Double]] =
-    fineMat.map(_.toArray).toArray
-  @transient private lazy val starts: Array[Int] = coarseStart.toArray
-
-  private def cosineOf(vec: ArrayData, n: Int, cv: Array[Double]): Double = {
-    // CosineSimilarity's accumulation verbatim (bit-identical doubles)
-    var dot = 0.0d; var nx = 0.0d; var ny = 0.0d
-    var i = 0
-    while (i < n) {
-      val xi = vec.getDouble(i); val yi = cv(i)
-      dot += xi * yi; nx += xi * xi; ny += yi * yi
-      i += 1
-    }
-    val denom = math.sqrt(nx) * math.sqrt(ny)
-    if (denom == 0.0d) 0.0d else dot / denom
-  }
-
-  def top(vecData: ArrayData): ArrayData = {
-    val n = vecData.numElements()
-    val k1 = cMat.length
-    // coarse routing: top-coarseProbe cells by raw cosine (index
-    // tiebreak; length mismatch routes last, like -inf)
-    val cs = new Array[Double](k1)
-    var c = 0
-    while (c < k1) {
-      cs(c) =
-        if (cMat(c).length != n) Double.NegativeInfinity
-        else cosineOf(vecData, n, cMat(c))
-      c += 1
-    }
-    val cProbe = math.min(coarseProbe, k1)
-    val cTaken = new Array[Boolean](k1)
-    val cSel = new Array[Int](cProbe)
-    var filled = 0
-    while (filled < cProbe) {
-      var best = -1
-      var j = 0
-      while (j < k1) {
-        if (!cTaken(j) && (best < 0 || cs(j) > cs(best))) best = j
-        j += 1
-      }
-      cTaken(best) = true
-      cSel(filled) = best
-      filled += 1
-    }
-    // fine ranking within the selected coarse groups — IvfTopCells'
-    // comparator on the candidate subset
-    var cand = 0
-    var s = 0
-    while (s < cProbe) { cand += starts(cSel(s) + 1) - starts(cSel(s)); s += 1 }
-    val idxs = new Array[Int](cand)
-    var w = 0
-    s = 0
-    while (s < cProbe) {
-      var f = starts(cSel(s))
-      val end = starts(cSel(s) + 1)
-      while (f < end) { idxs(w) = f; w += 1; f += 1 }
-      s += 1
-    }
-    val sims = new Array[Double](cand)
-    val simNull = new Array[Boolean](cand)
-    var q = 0
-    while (q < cand) {
-      val cv = fMat(idxs(q))
-      if (cv.length != n) simNull(q) = true
-      else {
-        var sim = cosineOf(vecData, n, cv)
-        if (simRound >= 0 && !sim.isNaN && !sim.isInfinite)
-          sim = java.math.BigDecimal.valueOf(sim)
-            .setScale(simRound, java.math.RoundingMode.HALF_UP).doubleValue()
-        sims(q) = sim
-      }
-      q += 1
-    }
-    val m = math.min(nProbe, cand)
-    val out = new Array[Long](m)
-    val taken = new Array[Boolean](cand)
-    filled = 0
-    while (filled < m) {
-      var best = -1
-      var j = 0
-      while (j < cand) {
-        if (!taken(j)) {
-          if (best < 0) best = j
-          else {
-            val bi = idxs(best); val ji = idxs(j)
-            val better =
-              if (simNull(best) && simNull(j)) fIds(ji) < fIds(bi)
-              else if (simNull(best)) true
-              else if (simNull(j)) false
-              else if (sims(j) > sims(best)) true
-              else if (sims(j) < sims(best)) false
-              else fIds(ji) < fIds(bi)
-            if (better) best = j
-          }
-        }
-        j += 1
-      }
-      taken(best) = true
-      out(filled) = fIds(idxs(best))
-      filled += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    top(input.asInstanceOf[ArrayData])
-
-  // reference-object call — see IvfTopCells
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("ivftree", this,
-      "org.apache.spark.sql.graft.IvfTreeTopCells")
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.top($c);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): IvfTreeTopCells =
-    copy(child = newChild)
-}
-
 /** Proper analysis errors for SQL-builder argument validation — lives in
   * this package to reach Spark's private[sql] error factories, so a bad
   * literal argument surfaces as an AnalysisException at registration

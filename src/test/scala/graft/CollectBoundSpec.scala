@@ -13,8 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * pattern applied to collects.
   *
   * Contract: every `.collect()` occurrence under src/main — EXCLUDING
-  * the driver-side diagnostic mains (Verify / ProfileQ / Explain /
-  * RecallProbe, whose whole job is consuming results on the
+  * the diagnostic mains (Verify / ProfileQ / Explain, whose
+  * whole job is consuming results on the
   * driver) — must carry, on the same line or within the 10 lines above
   * it, a `collect-bound:` comment stating why the collected row count
   * is bounded independent of data scale. A new collect without a
@@ -39,8 +39,7 @@ class CollectBoundSpec extends AnyFunSuite {
       finally stream.close()
     // diagnostic mains: driver-side tools whose purpose is consuming
     // results on the driver (they never ship in a library plan)
-    val exempt = Set("ProfileQ.scala", "Explain.scala", "Verify.scala",
-      "RecallProbe.scala")
+    val exempt = Set("ProfileQ.scala", "Explain.scala", "Verify.scala")
     val needle = ".collect()"
     def isComment(l: String) = {
       val t = l.trim

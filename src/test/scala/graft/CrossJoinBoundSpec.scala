@@ -32,8 +32,7 @@ class CrossJoinBoundSpec extends AnyFunSuite {
     val files =
       try stream.iterator().asScala.filter(_.toString.endsWith(".scala")).toVector
       finally stream.close()
-    val exempt = Set("ProfileQ.scala", "Explain.scala", "Verify.scala",
-      "RecallProbe.scala")
+    val exempt = Set("ProfileQ.scala", "Explain.scala", "Verify.scala")
     def isComment(l: String) = {
       val t = l.trim
       t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")

@@ -41,8 +41,7 @@ class JobsBoundSpec extends AnyFunSuite {
     val files =
       try stream.iterator().asScala.filter(_.toString.endsWith(".scala")).toVector
       finally stream.close()
-    val exempt = Set("ProfileQ.scala", "Explain.scala", "Verify.scala",
-      "RecallProbe.scala")
+    val exempt = Set("ProfileQ.scala", "Explain.scala", "Verify.scala")
     val loopRe =
       ("""^\s*\}?\s*(while\s*\(""" +
         """|[^/]*\(\s*\d+\s+(to|until)\s+\w+\s*\)\s*\.\s*(foldLeft|foreach|map)""" +

@@ -38,6 +38,30 @@ class MonitorsSpec extends SparkSpec {
     assert(math.abs(ts - expected) < 1e3)
   }
 
+  test("osmShiftData and osmDriftData take an ingested SMS table as it is") {
+    // every SmsIngest column; EXPSTART and DETECTOR are also lampflash
+    // columns, and the SMS DETECTOR here disagrees with the exposure's
+    val ts = java.sql.Timestamp.valueOf("2024-02-01 05:45:35")
+    val full = Seq(("la1", 100.0), ("la2", 200.0), ("la3", 300.0), ("la4", 400.0))
+      .map { case (r, t1) =>
+        (r, 12345, "AAA0101", "NUV", "TIME-TAG", 200.0, ts, "N/A", "PSA",
+          "G140L", "N/A", 1105, 3, t1, 20735.0, "100001aa", "/d/100001aa.txt")
+      }.toDF(graft.ingest.SmsIngest.fieldNames: _*)
+    val narrow = sms.withColumn("TSINCEOSM2", lit(20735.0))
+    val shiftCols = Seq("ROOTNAME", "flash", "DETECTOR", "EXPSTART", "SEGMENT",
+      "SHIFT_DISP", "TSINCEOSM1", "sample_ts").map(col)
+    val shift = Monitors.osmShiftData(lampflash, full).select(shiftCols: _*)
+    assert(shift.count() == 4)
+    assert(shift.collect().toSet ==
+      Monitors.osmShiftData(lampflash, narrow).select(shiftCols: _*).collect().toSet)
+    val driftCols = Seq("ROOTNAME", "flash", "DETECTOR", "EXPSTART", "SHIFT1_DRIFT",
+      "REL_TSINCEOSM1", "REL_TSINCEOSM2").map(col)
+    val drift = Monitors.osmDriftData(lampflash, full, "FUV").select(driftCols: _*)
+    assert(drift.count() == 2)
+    assert(drift.collect().toSet ==
+      Monitors.osmDriftData(lampflash, narrow, "FUV").select(driftCols: _*).collect().toSet)
+  }
+
   test("segment diff + X3 outlier threshold reproduce the shift1 rule") {
     val exploded = Monitors.osmShiftData(lampflash, sms)
     val diffs = Monitors.segmentDiff(exploded, "SHIFT_DISP")

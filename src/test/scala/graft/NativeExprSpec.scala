@@ -393,36 +393,6 @@ class NativeExprSpec extends SparkSpec {
     assert(nul.isNullAt(0))
   }
 
-  test("ivfAssignTree with exhaustive coarse probe equals the flat assignment") {
-    val pts = (0L until 120L).map { id =>
-      (id, Seq.tabulate(8)(j => math.sin(id * 17.0 + j * 5.0).abs + 0.01))
-    }.toDF("vec_id", "v")
-    val cents = Similarity.kmeansCentroids(pts, "vec_id", "v",
-      k = 12, iters = 2)
-    for (np <- Seq(1, 2); sr <- Seq(-1, 6)) {
-      val flat = Similarity.ivfAssignNative(pts, "v", cents,
-          nProbe = np, simRound = sr)
-        .select(col("vec_id"), col("centroid_id"))
-        .as[(Long, Long)].collect().sorted.toSeq
-      // coarseProbe = coarseK: every fine centroid is a candidate, so
-      // the tree MUST reproduce the flat ranking exactly
-      val tree = Similarity.ivfAssignTree(pts, "v", cents,
-          coarseK = 4, coarseProbe = 4, nProbe = np, simRound = sr)
-        .select(col("vec_id"), col("centroid_id"))
-        .as[(Long, Long)].collect().sorted.toSeq
-      assert(tree == flat, s"nProbe=$np simRound=$sr")
-      // a narrow probe still lands nearly everywhere on this smooth
-      // data — membership sanity, not exactness (that is the probe
-      // trade the knobs rule measures at scale)
-      val narrow = Similarity.ivfAssignTree(pts, "v", cents,
-          coarseK = 4, coarseProbe = 2, nProbe = np, simRound = sr)
-        .select(col("vec_id"), col("centroid_id"))
-        .as[(Long, Long)].collect().sorted.toSeq
-      val agree = narrow.toSet.intersect(flat.toSet).size.toDouble / flat.size
-      assert(agree > 0.8, s"narrow-probe agreement $agree")
-    }
-  }
-
   test("ivfAssignNative agrees with the HOF ivfAssign across nProbe/simRound") {
     val pts = (0L until 60L).map { id =>
       (id, Seq.tabulate(8)(j => math.sin(id * 31.0 + j * 7.0).abs + 0.01))

@@ -180,10 +180,11 @@ class RunnerSpec extends SparkSpec {
     Runner.clear()
     val data = "/root/reference/tests/data"
     Runner.register(MonitorJob("fuv_osm_shift", "monthly", s => {
-      val lamp = graft.ingest.Fits.exposures(s, s"$data/*lampflash*",
-        headerReq = Map(0 -> Seq("ROOTNAME", "DETECTOR", "OPT_ELEM"),
-          1 -> Seq("EXPSTART")),
-        tableReq = Map(1 -> Seq("TIME", "SHIFT_DISP", "SHIFT_XDISP", "SEGMENT")))
+      val lamp = s.read.format("fits")
+        .option("headers", "ROOTNAME,DETECTOR,OPT_ELEM,EXPSTART")
+        .load(s"$data/*lampflash*")
+        .select("ROOTNAME", "DETECTOR", "OPT_ELEM", "EXPSTART",
+          "TIME", "SHIFT_DISP", "SHIFT_XDISP", "SEGMENT")
         .withColumn("EXPSTART", col("EXPSTART").cast("double"))
       val sms = lamp.select(
         expr("substring(ROOTNAME, 1, length(ROOTNAME)-1)").as("ROOTNAME"))
@@ -196,6 +197,31 @@ class RunnerSpec extends SparkSpec {
         .option("header", "true").csv(s"$outDir/$name"))
     assert(results.head.error.isEmpty && results.head.rowCount > 0)
     // S17 CSV sink artifact exists and reads back with the same count
+    val back = spark.read.option("header", "true").csv(s"$outDir/fuv_osm_shift")
+    assert(back.count() == results.head.rowCount)
+  }
+
+  test("full monthly run: synthetic FITS OSM monitor through the runner with CSV sink") {
+    Runner.clear()
+    Runner.register(MonitorJob("fuv_osm_shift", "monthly", s => {
+      val lamp = s.read.format("fits")
+        .option("headers", "ROOTNAME,DETECTOR,OPT_ELEM,EXPSTART")
+        .load(SyntheticFits.path("*lampflash*"))
+        .select("ROOTNAME", "DETECTOR", "OPT_ELEM", "EXPSTART",
+          "TIME", "SHIFT_DISP", "SHIFT_XDISP", "SEGMENT")
+        .withColumn("EXPSTART", col("EXPSTART").cast("double"))
+      val sms = lamp.select(
+        expr("substring(ROOTNAME, 1, length(ROOTNAME)-1)").as("ROOTNAME"))
+        .withColumn("TSINCEOSM1", lit(100.0))
+      graft.monitors.Monitors.osmShiftData(lamp, sms)
+    }))
+    val outDir = Files.createTempDirectory("runner-out").toString
+    val results = Runner.runAll(spark, "monthly",
+      sink = (name, df) => df.coalesce(1).write.mode("overwrite")
+        .option("header", "true").csv(s"$outDir/$name"))
+    Runner.clear()
+    assert(results.head.error.isEmpty)
+    assert(results.head.rowCount == SyntheticFits.lamps.filter(_.fuv).map(_.rows).sum)
     val back = spark.read.option("header", "true").csv(s"$outDir/fuv_osm_shift")
     assert(back.count() == results.head.rowCount)
   }

@@ -90,16 +90,15 @@ class SmsIngestSpec extends SparkSpec {
     assert(ex.getMessage.contains("100009zz"))
   }
 
-  test("bloom-filtered discovery path skips ingested files exactly like left_anti") {
-    val base = Files.createTempDirectory("sms-bloom").toString
+  test("discovery skips files already in the ingested list") {
+    val base = Files.createTempDirectory("sms-discovery").toString
     val srcDir = s"$base/src"
     new java.io.File(srcDir).mkdirs()
     val tableDir = s"$base/table"
     writeReport(srcDir, "100001aa.txt", Seq(fuvLine))
     writeReport(srcDir, "100002bb.txt", Seq(nuvLine))
-    // bloomThreshold = 0 forces the bloom route even for a tiny list
     SmsIngest.ingest(spark, s"$srcDir/*", tableDir,
-      Seq("100001aa").toDF("file_id"), bloomThreshold = 0L)
+      Seq("100001aa").toDF("file_id"))
     val rows = spark.read.parquet(tableDir)
       .select("ROOTNAME").as[String].collect().toSet
     assert(rows == Set("laaa02ab"), "only the not-yet-ingested file parses")
@@ -121,11 +120,11 @@ class SmsIngestSpec extends SparkSpec {
     assert(sms.filter(col("CENWAVE").isNull || col("EXPSTART").isNull).count() == 0)
     // the reference's OSM data-model join (data_models.py:157-180): real
     // SMS rows join real lampflash exposures on ROOTNAME + 'q'
-    val lamp = graft.ingest.Fits.exposures(spark,
-      "/root/reference/tests/data/*lampflash*",
-      headerReq = Map(0 -> Seq("ROOTNAME", "DETECTOR", "OPT_ELEM"),
-        1 -> Seq("EXPSTART")),
-      tableReq = Map(1 -> Seq("TIME", "SHIFT_DISP", "SHIFT_XDISP", "SEGMENT")))
+    val lamp = spark.read.format("fits")
+      .option("headers", "ROOTNAME,DETECTOR,OPT_ELEM,EXPSTART")
+      .load(s"$dataDir/*lampflash*")
+      .select("ROOTNAME", "DETECTOR", "OPT_ELEM", "EXPSTART",
+        "TIME", "SHIFT_DISP", "SHIFT_XDISP", "SEGMENT")
       .withColumn("EXPSTART", col("EXPSTART").cast("double"))
     val joined = graft.monitors.Monitors.osmShiftData(
       lamp, sms.select(col("ROOTNAME"), col("TSINCEOSM1")))
@@ -134,6 +133,48 @@ class SmsIngestSpec extends SparkSpec {
     assert(joined.select("ROOTNAME").distinct().count() == 7)
     assert(joined.filter(col("TSINCEOSM1").isNull).count() == 0)
     // and the NUV side joins completely too
+    val nuv = graft.monitors.Monitors.osmShiftData(
+      lamp, sms.select(col("ROOTNAME"), col("TSINCEOSM1")), detector = "NUV")
+    assert(nuv.select("ROOTNAME").distinct().count() == 4)
+  }
+
+  /** One FUV exposure line for `stem` with TSINCEOSM1 = `ts`. */
+  private def smsLine(stem: String, ts: Int): String =
+    fuvLine.replace("laaa01xy", stem).replace("     87  ", f"$ts%7d  ")
+
+  test("synthetic SMS reports: discovery keeps the latest versions, parse joins synthetic lampflash") {
+    // 11 lampflash stems over 3 SMS ids; 200002 has an older version
+    // (TSINCEOSM1 off by 1000) and 200003 an .l-exp twin; one file fails
+    // the filename rule -> 3 ingested files, one row per stem
+    val dir = Files.createTempDirectory("sms-syn").toString
+    val lamps = SyntheticFits.lamps
+    def ts(i: Int) = 10 * i + 1
+    def lines(is: Range, off: Int) = is.map(i => smsLine(lamps(i).stem, ts(i) + off))
+    writeReport(dir, "200001aa.txt", lines(0 until 4, 0) :+ memoryLine)
+    writeReport(dir, "200002aa.txt", lines(4 until 8, 1000))
+    writeReport(dir, "200002ab.txt", lines(4 until 8, 0))
+    writeReport(dir, "200003ac.txt", lines(8 until 11, 0))
+    writeReport(dir, "200003ac.l-exp", lines(8 until 11, 1000))
+    writeReport(dir, "bad_200004.txt", lines(0 until 1, 1000))
+    val candidates = new java.io.File(dir).listFiles()
+      .map(_.getPath).toSeq.toDF("path")
+    val kept = SmsIngest.latestSmsFiles(candidates)
+    assert(kept.count() == 3)
+    val sms = SmsIngest.parse(spark,
+      kept.select("path").as[String].collect().toSeq)
+    assert(sms.count() == 11)
+    assert(sms.filter(col("CENWAVE").isNull || col("EXPSTART").isNull).count() == 0)
+    val lamp = spark.read.format("fits")
+      .option("headers", "ROOTNAME,DETECTOR,OPT_ELEM,EXPSTART")
+      .load(SyntheticFits.path("*lampflash*"))
+      .select("ROOTNAME", "DETECTOR", "OPT_ELEM", "EXPSTART",
+        "TIME", "SHIFT_DISP", "SHIFT_XDISP", "SEGMENT")
+      .withColumn("EXPSTART", col("EXPSTART").cast("double"))
+    val joined = graft.monitors.Monitors.osmShiftData(
+      lamp, sms.select(col("ROOTNAME"), col("TSINCEOSM1")))
+    assert(joined.select("ROOTNAME", "TSINCEOSM1").distinct()
+      .as[(String, Double)].collect().toSet ==
+      lamps.filter(_.fuv).map(l => (l.rootname, ts(l.i).toDouble)).toSet)
     val nuv = graft.monitors.Monitors.osmShiftData(
       lamp, sms.select(col("ROOTNAME"), col("TSINCEOSM1")), detector = "NUV")
     assert(nuv.select("ROOTNAME").distinct().count() == 4)

@@ -1,13 +1,36 @@
 package graft
 
+import java.sql.Timestamp
 import org.apache.spark.sql.functions._
-import graft.core.Entities
+import org.apache.spark.sql.{Dataset, SparkSession}
+import graft.core.Tables
 import graft.ops.LinFitAggregator
+
+/** Typed entities for two star-schema tables (SURVEY.md §1.4: `Dataset[T]`
+  * case classes where compile-time field checks help). */
+object TypedApiSpec {
+  final case class Event(event_id: Long, ts: Timestamp, user_id: Long,
+                         event_type: String, value: Double, props: String)
+  final case class Document(doc_id: Long, text: String, lang: String,
+                            source: String, n_chars: Long)
+
+  object Entities {
+    def events(spark: SparkSession, dir: String): Dataset[Event] = {
+      import spark.implicits._
+      Tables(spark, dir, "events").as[Event]
+    }
+    def documents(spark: SparkSession, dir: String): Dataset[Document] = {
+      import spark.implicits._
+      Tables(spark, dir, "documents").as[Document]
+    }
+  }
+}
 
 /** Typed-API surface: Dataset[T] entities and the Aggregator route for
   * linfit (SURVEY.md §7.3). */
 class TypedApiSpec extends SparkSpec {
   import spark.implicits._
+  import TypedApiSpec.Entities
 
   test("LinFitAggregator recovers a known line and matches regr_slope") {
     // y = 3x + 7 exactly

@@ -5,11 +5,12 @@ Usage: python3 tools/spec_only_defs.py [repo_root]
 
 Scans every public `def` in src/main (not `private`, `protected` or
 `override`) and looks for its name, as a whole word, in the code of
-src/main, cosmobench/src and tools. Comments are stripped first, so a
-scaladoc mention or a `[[link]]` is not a caller; string literals are
-kept, since a name in a string can be a reflective or SQL-level use. A
-name whose only occurrences are its own definitions has no caller
-outside src/test.
+src/main, cosmobench/src and tools. Comments and the bodies of Scala
+string literals are blanked first, so a scaladoc mention, a `[[link]]`
+or a word in a message or table name is not a caller; an interpolated
+`$name` or `${...}` is kept. Python sources keep their strings. A name
+whose only occurrences are its own definitions has no caller outside
+src/test.
 
 Prints each such name with its file and line. Names on KEEP (below) are
 reported with their reason and do not fail the run; any other unused
@@ -39,8 +40,22 @@ KEEP = {
                 "MonitorsSpec",
     "registerExtended": "registers the reference's telemetry and jitter "
                         "monitors next to the 12 cadence monitors",
-    "perExtensionTable": "FITS ingest: stays until one of the two FITS "
-                         "readers is chosen",
+    "entry": "smoke entry point called from outside this build: "
+             "SparkEntry.entry runs q1_agg on sf0.001 and its caller checks "
+             "rows > 0",
+    "dsModelDF": "Dawid-Skene's stored model, the train half of the "
+                 "train/serve split the other learned models have; "
+                 "AnnotateSpec pins dsServe(dsModelDF at r) to dawidSkene at "
+                 "r+1 and MergeStreamSpec serves it per micro-batch",
+    "dsServe": "the serve half of dsModelDF's train/serve split",
+    "ivfKnobsForScale": "measured IVF sizing rule (constant cell size) for "
+                        "ivfAssign past the registry's fixture scale; "
+                        "ScaleGuardSpec's candidate bound certifies it",
+    "probeKnobsForScale": "measured multi-probe sizing rule for lshBands "
+                          "past the registry's fixture scale (it also "
+                          "reaches lshKnobsForScale, the bands rule); "
+                          "ScaleGuardSpec's all-pairs guard certifies both",
+    "hamming1Probes": "the probe-side bucket set probeKnobsForScale sizes",
 }
 
 # `def main(args)` is started by sbt runMain, not called.
@@ -56,12 +71,44 @@ DEF_RE = re.compile(
 CHAR_RE = re.compile(r"'(\\.|[^\\'\n])'")  # a Scala char literal such as '"'
 
 
+def blank_string(body, interpolated):
+    """Blank a Scala string literal's body, keeping its line breaks and,
+    in an interpolated string, its `$name` and `${...}` expressions."""
+    out = []
+    i, n = 0, len(body)
+    while i < n:
+        c = body[i]
+        if interpolated and body.startswith("$$", i):
+            out.append("  ")
+            i += 2
+        elif interpolated and body.startswith("${", i):
+            depth, j = 1, i + 2
+            while j < n and depth:
+                depth += {"{": 1, "}": -1}.get(body[j], 0)
+                j += 1
+            out.append(body[i:j])
+            i = j
+        elif interpolated and c == "$":
+            m = re.match(r"\$[A-Za-z_][A-Za-z0-9_]*", body[i:])
+            if m:
+                out.append(m.group(0))
+                i += len(m.group(0))
+            else:
+                out.append(" ")
+                i += 1
+        else:
+            out.append("\n" if c == "\n" else " ")
+            i += 1
+    return "".join(out)
+
+
 def strip_scala(src):
-    """Blank out // and (nested) /* */ comments; keep strings as they are.
+    """Blank out // and (nested) /* */ comments and string bodies.
 
     A "/*" or "//" inside a string literal, such as a glob path, is part of
-    the string and does not open a comment. Line breaks are kept, so line
-    numbers stay valid.
+    the string and does not open a comment. A name that occurs only as a
+    word inside a string is not a use; an interpolated `$name` or `${...}`
+    is. Line breaks are kept, so line numbers stay valid.
     """
     out = []
     i, n = 0, len(src)
@@ -79,18 +126,19 @@ def strip_scala(src):
                 out.append("\n" if c == "\n" else " ")
                 i += 1
             continue
+        interpolated = i > 0 and (src[i - 1].isalnum() or src[i - 1] == "_")
         if src.startswith('"""', i):
             j = src.find('"""', i + 3)
             j = n if j < 0 else j + 3
             while j < n and src[j] == '"':
                 j += 1
-            out.append(src[i:j])
+            out.append('"""' + blank_string(src[i + 3:j - 3], interpolated) + '"""')
             i = j
         elif c == '"':
             j = i + 1
             while j < n and src[j] not in '"\n':
                 j += 2 if src[j] == "\\" else 1
-            out.append(src[i:j + 1])
+            out.append('"' + blank_string(src[i + 1:j], interpolated) + '"')
             i = j + 1
         elif c == "'" and CHAR_RE.match(src, i):
             j = CHAR_RE.match(src, i).end()
