@@ -140,19 +140,23 @@ object SmsIngest {
     // it to drive the text read matches the reference's discovery step
     // collect-bound: discovery file list - one path per un-ingested SMS id
     val todo = fresh.select("path").as[String].collect().toSeq
-    if (todo.nonEmpty) {
-      val parsed = parse(spark, todo)
+    if (todo.nonEmpty) graft.core.Observations(spark) { obs =>
       // a discovered file yielding ZERO exposure rows is malformed — the
       // reference rejects such files rather than silently skipping them
-      // (tests/test_sms_ingest.py:50–55)
-      // collect-bound: distinct FILEID set of the batch just parsed - file-count-sized
-      val yielded = parsed.select("FILEID").distinct().as[String].collect().toSet
-      val expected = todo.map(p => p.split('/').last.split('.').head).toSet
-      val empty = expected -- yielded
-      require(empty.isEmpty,
-        s"malformed SMS file(s) produced no exposure rows: ${empty.mkString(", ")}")
+      // (tests/test_sms_ingest.py:50–55). The FILEID set comes from the
+      // merge's own execution of the parse, checked before the swap.
+      val (parsed, yielded) = obs.observe(parse(spark, todo),
+        collect_set(col("FILEID")))
       graft.ops.MergeOps.mergeParquet(spark, tableDir, parsed,
-        Seq("EXPOSURE"), "FILEID")
+        Seq("EXPOSURE"), "FILEID", beforeSwap = () => {
+          val ids = yielded().fold(
+            // collect-bound: distinct FILEID set of the batch - file-count-sized
+            parsed.select("FILEID").distinct().as[String].collect().toSet)(
+            _.getSeq[String](0).toSet)
+          val empty = todo.map(p => p.split('/').last.split('.').head).toSet -- ids
+          require(empty.isEmpty,
+            s"malformed SMS file(s) produced no exposure rows: ${empty.mkString(", ")}")
+        })
     }
   }
 }

@@ -27,7 +27,8 @@ object MonitorCatalog {
       breakpoints: DataFrame)
 
   /** Register all 12 reference monitors (cadence `monthly`, matching
-    * their `run` attributes, e.g. acq_monitors.py:52). */
+    * their `run` attributes, e.g. acq_monitors.py:52), with the OSM
+    * families' shared input frames ([[Runner.Shared]]). */
   def register(src: Sources): Unit = {
     // ACQ family (acq_monitors.py)
     Runner.register(MonitorJob("acq_image", "monthly", _ =>
@@ -39,36 +40,37 @@ object MonitorCatalog {
     Runner.register(MonitorJob("acq_peakxd", "monthly", _ =>
       Monitors.specAcqSlews(src.acq, "ACQ/PEAKXD", "ACQSLEWY")))
 
-    // OSM shift family (osm_shift_monitors.py): FUVA−FUVB paired
-    // flash-for-flash per rootname for FUV (compute_segment_diff,
-    // osm_shift_monitors.py:55–86), stripe pairs B−C / C−A for NUV;
-    // SHIFT1 = dispersion shifts at threshold 10, SHIFT2 =
-    // cross-dispersion at 5 (X3).
-    def fuvShift(valueCol: String, threshold: Double): DataFrame = {
-      val exploded = Monitors.osmShiftData(src.lampflash, src.sms)
-      Monitors.segmentDiff(exploded, valueCol)
-        .withColumn("is_outlier", abs(col("seg_diff")) > threshold)
-    }
-    def nuvShift(valueCol: String, threshold: Double): DataFrame =
-      Monitors.nuvStripeDiffs(
-        Monitors.osmShiftData(src.lampflash, src.sms, detector = "NUV"),
-        valueCol)
-        .withColumn("is_outlier", abs(col("seg_diff")) > threshold)
-    Runner.register(MonitorJob("fuv_osm_shift1", "monthly", _ =>
-      fuvShift("SHIFT_DISP", 10.0)))
-    Runner.register(MonitorJob("fuv_osm_shift2", "monthly", _ =>
-      fuvShift("SHIFT_XDISP", 5.0)))
-    Runner.register(MonitorJob("nuv_osm_shift1", "monthly", _ =>
-      nuvShift("SHIFT_DISP", 10.0)))
-    Runner.register(MonitorJob("nuv_osm_shift2", "monthly", _ =>
-      nuvShift("SHIFT_XDISP", 5.0)))
+    // OSM families (osm_shift_monitors.py, osm_drift_monitors.py): all
+    // six monitors read one lampflash ⋈ SMS frame, and the two shift
+    // monitors of a detector read one segment pivot that carries both
+    // shift columns, so the runner builds each once per run.
+    val joined = new Runner.Shared(() => Monitors.osmJoined(src.lampflash, src.sms))
+    def pivot(detector: String, segments: Seq[String]) = new Runner.Shared(() =>
+      Monitors.segmentPivot(Monitors.osmExplode(joined(), detector), segments))
+    val fuvPivot = pivot("FUV", Seq("FUVA", "FUVB"))
+    val nuvPivot = pivot("NUV", Monitors.nuvStripes)
 
-    // OSM drift family (osm_drift_monitors.py): relative-to-first-flash
-    // shifts, drift rates vs time since the OSM move.
+    // OSM shift family: FUVA−FUVB paired flash-for-flash per rootname for
+    // FUV (compute_segment_diff, osm_shift_monitors.py:55–86), stripe
+    // pairs B−C / C−A for NUV; SHIFT1 = dispersion shifts at threshold
+    // 10, SHIFT2 = cross-dispersion at 5 (X3).
+    def flagged(diffs: DataFrame, threshold: Double): DataFrame =
+      diffs.withColumn("is_outlier", abs(col("seg_diff")) > threshold)
+    Runner.register(MonitorJob("fuv_osm_shift1", "monthly", _ =>
+      flagged(Monitors.pairDiff(fuvPivot(), "SHIFT_DISP", "FUVA", "FUVB"), 10.0)))
+    Runner.register(MonitorJob("fuv_osm_shift2", "monthly", _ =>
+      flagged(Monitors.pairDiff(fuvPivot(), "SHIFT_XDISP", "FUVA", "FUVB"), 5.0)))
+    Runner.register(MonitorJob("nuv_osm_shift1", "monthly", _ =>
+      flagged(Monitors.stripePairDiffs(nuvPivot(), "SHIFT_DISP"), 10.0)))
+    Runner.register(MonitorJob("nuv_osm_shift2", "monthly", _ =>
+      flagged(Monitors.stripePairDiffs(nuvPivot(), "SHIFT_XDISP"), 5.0)))
+
+    // OSM drift family: relative-to-first-flash shifts, drift rates vs
+    // time since the OSM move.
     Runner.register(MonitorJob("fuv_osm_drift", "monthly", _ =>
-      Monitors.osmDriftData(src.lampflash, src.sms, "FUV")))
+      Monitors.osmDrift(joined(), "FUV")))
     Runner.register(MonitorJob("nuv_osm_drift", "monthly", _ =>
-      Monitors.osmDriftData(src.lampflash, src.sms, "NUV")))
+      Monitors.osmDrift(joined(), "NUV")))
 
     // Aperture shift family (aper_shift_monitors.py): LP-position block
     // lookup per detector; SHIFT_APERY = APERYPOS − expected.

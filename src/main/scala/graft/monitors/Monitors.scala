@@ -23,76 +23,46 @@ object Monitors {
       .withColumn("ROOTNAME", concat(col("ROOTNAME"), lit("q")))
   }
 
-  /** FUV OSM Shift pipeline (reference:
-    * cosmo/monitors/osm_shift_monitors.py:124–137 data assembly; SURVEY.md
-    * §7.2 minimum slice). Input lampflash rows carry per-flash arrays
-    * TIME/SHIFT_DISP/SHIFT_XDISP/SEGMENT; SMS rows carry OSM move times.
-    *
-    *  1. join SMS on `sms.ROOTNAME || 'q' == lamp.ROOTNAME` (J2);
-    *  2. keep FUV, drop empty-array rows (P2/P5);
-    *  3. explode the per-flash arrays with position (R1);
-    *  4. absolute sample time = EXPSTART(mjd) + TIME sec (W5).
-    */
-  def osmShiftData(lampflash: DataFrame, sms: DataFrame,
-                   detector: String = "FUV"): DataFrame = {
-    val joined = lampflash
-      .filter(col("DETECTOR") === detector && size(col("SHIFT_DISP")) > 0)
+  /** The input every OSM monitor shares (J2; reference:
+    * cosmo/monitors/osm_shift_monitors.py:124–137 data assembly, SURVEY.md
+    * §7.2 minimum slice): lampflash exposures with at least one flash
+    * (P2/P5), all detectors, joined with their SMS rows on
+    * `sms.ROOTNAME || 'q' == lamp.ROOTNAME`. Lampflash rows carry
+    * per-flash arrays TIME/SHIFT_DISP/SHIFT_XDISP/SEGMENT; SMS rows carry
+    * the OSM move times. The monitor catalog persists this frame once
+    * per run for its six OSM monitors. */
+  def osmJoined(lampflash: DataFrame, sms: DataFrame): DataFrame =
+    lampflash.filter(size(col("SHIFT_DISP")) > 0)
       .join(smsKeyed(lampflash, sms), Seq("ROOTNAME"))
-    Relational.explodeArrays(joined,
+
+  /** One detector's flashes of [[osmJoined]], exploded with position
+    * (R1), with the absolute sample time EXPSTART(mjd) + TIME sec (W5). */
+  def osmExplode(joined: DataFrame, detector: String): DataFrame =
+    Relational.explodeArrays(joined.filter(col("DETECTOR") === detector),
       Seq("TIME", "SHIFT_DISP", "SHIFT_XDISP", "SEGMENT"), posCol = "flash")
       .withColumn("sample_ts",
         TimeFns.mjdToTs(col("EXPSTART") + col("TIME") / lit(86400.0d)))
-  }
 
-  /** FUVA−FUVB shift difference per flash pair (reference:
+  /** OSM shift data of one detector: [[osmJoined]] then [[osmExplode]]. */
+  def osmShiftData(lampflash: DataFrame, sms: DataFrame,
+                   detector: String = "FUV"): DataFrame =
+    osmExplode(osmJoined(lampflash, sms), detector)
+
+  /** The segment pivot the shift monitors difference (reference:
     * cosmo/monitors/osm_shift_monitors.py:55–86 compute_segment_diff):
-    * within each ROOTNAME the reference subtracts the two segments'
-    * shift sequences ELEMENTWISE — one seg_diff per flash pair, not one
-    * per rootname — and stamps each diff with segment1's absolute time
-    * (`lamp_time`). The pairing key is the flash's position within its
-    * own (ROOTNAME, SEGMENT) sequence (the exploded arrays concatenate
-    * the segments, so the global flash position is NOT the pair index).
+    * one row per (ROOTNAME, seg_idx) with `<SEG>_SHIFT_DISP`,
+    * `<SEG>_SHIFT_XDISP` and `<SEG>_ts` for every segment. The reference
+    * pairs the segments' shift sequences ELEMENTWISE within each
+    * ROOTNAME, so `seg_idx` is the flash's position within its own
+    * (ROOTNAME, SEGMENT) sequence (the exploded arrays concatenate the
+    * segments, so the global flash position is NOT the pair index).
+    * Both shift columns ride in one pivot, so SHIFT1 and SHIFT2 are
+    * projections of the same frame.
     *
     * One exchange: the explicit ROOTNAME repartition satisfies both the
     * per-segment row_number window and the (ROOTNAME, seg_idx) pivot
     * clustering, so neither adds a shuffle. */
-  def segmentDiff(exploded: DataFrame, valueCol: String = "SHIFT_DISP",
-                  seg1: String = "FUVA", seg2: String = "FUVB"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val idx = exploded
-      .repartition(col("ROOTNAME"))
-      .withColumn("seg_idx", row_number().over(
-        Window.partitionBy(col("ROOTNAME"), col("SEGMENT"))
-          .orderBy(col("flash"))))
-    idx.groupBy("ROOTNAME", "seg_idx")
-      .pivot("SEGMENT", Seq(seg1, seg2))
-      .agg(first(col(valueCol)).as("v"), first(col("sample_ts")).as("ts"))
-      .filter(col(s"${seg1}_v").isNotNull && col(s"${seg2}_v").isNotNull)
-      .select(col("ROOTNAME"), col("seg_idx"),
-        (col(s"${seg1}_v") - col(s"${seg2}_v")).as("seg_diff"),
-        col(s"${seg1}_ts").as("lamp_time"))
-  }
-
-  /** X3 outlier rule: |A−B| above threshold (10 px for SHIFT1, 5 for
-    * SHIFT2; reference: osm_shift_monitors.py:354–367). */
-  def segmentDiffOutliers(diffs: DataFrame, threshold: Double): DataFrame =
-    diffs.filter(abs(col("seg_diff")) > threshold)
-
-  /** NUV stripe differences B−C and C−A (reference:
-    * osm_shift_monitors.py:388–393, J7): compute_segment_diff per stripe
-    * pair, labeled — and, as in [[segmentDiff]], paired FLASH-FOR-FLASH
-    * (one diff per per-stripe flash index, `lamp_time` from the pair's
-    * first stripe), not collapsed to one value per rootname.
-    *
-    * Still ONE pivot over all three stripes: both pair diffs come from
-    * the same wide (ROOTNAME, seg_idx) row and fan out with an inline
-    * 2-element explode — the per-pair formulation would aggregate the
-    * input stream twice. A pair's row exists iff both its stripes have a
-    * flash at that index (the diff of two non-null doubles is non-null;
-    * a missing stripe nulls it) — compute_segment_diff's both-present
-    * guard. One exchange total: the ROOTNAME repartition satisfies the
-    * window and the pivot clustering. */
-  def nuvStripeDiffs(exploded: DataFrame, valueCol: String): DataFrame = {
+  def segmentPivot(exploded: DataFrame, segments: Seq[String]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     exploded
       .repartition(col("ROOTNAME"))
@@ -100,40 +70,85 @@ object Monitors {
         Window.partitionBy(col("ROOTNAME"), col("SEGMENT"))
           .orderBy(col("flash"))))
       .groupBy("ROOTNAME", "seg_idx")
-      .pivot("SEGMENT", Seq("NUVA", "NUVB", "NUVC"))
-      .agg(first(col(valueCol)).as("v"), first(col("sample_ts")).as("ts"))
+      .pivot("SEGMENT", segments)
+      .agg(first(col("SHIFT_DISP")).as("SHIFT_DISP"),
+        first(col("SHIFT_XDISP")).as("SHIFT_XDISP"),
+        first(col("sample_ts")).as("ts"))
+  }
+
+  /** seg1 − seg2 of one shift column per flash pair of a
+    * [[segmentPivot]], stamped with seg1's absolute time (`lamp_time`).
+    * A pair exists iff both segments have a non-null `valueCol` at that
+    * index — compute_segment_diff's both-present guard, applied to the
+    * monitor's own column only. */
+  def pairDiff(pivot: DataFrame, valueCol: String,
+               seg1: String, seg2: String): DataFrame =
+    pivot.filter(col(s"${seg1}_$valueCol").isNotNull &&
+        col(s"${seg2}_$valueCol").isNotNull)
+      .select(col("ROOTNAME"), col("seg_idx"),
+        (col(s"${seg1}_$valueCol") - col(s"${seg2}_$valueCol")).as("seg_diff"),
+        col(s"${seg1}_ts").as("lamp_time"))
+
+  /** FUVA−FUVB shift difference per flash pair: [[segmentPivot]] then
+    * [[pairDiff]]. */
+  def segmentDiff(exploded: DataFrame, valueCol: String = "SHIFT_DISP",
+                  seg1: String = "FUVA", seg2: String = "FUVB"): DataFrame =
+    pairDiff(segmentPivot(exploded, Seq(seg1, seg2)), valueCol, seg1, seg2)
+
+  /** X3 outlier rule: |A−B| above threshold (10 px for SHIFT1, 5 for
+    * SHIFT2; reference: osm_shift_monitors.py:354–367). */
+  def segmentDiffOutliers(diffs: DataFrame, threshold: Double): DataFrame =
+    diffs.filter(abs(col("seg_diff")) > threshold)
+
+  /** The NUV stripes, in the order [[stripePairDiffs]] pairs them. */
+  val nuvStripes: Seq[String] = Seq("NUVA", "NUVB", "NUVC")
+
+  /** NUV stripe differences B−C and C−A (reference:
+    * osm_shift_monitors.py:388–393, J7) of one shift column of a
+    * [[segmentPivot]] over [[nuvStripes]]: compute_segment_diff per
+    * stripe pair, labeled — and, as in [[pairDiff]], paired
+    * FLASH-FOR-FLASH (one diff per per-stripe flash index, `lamp_time`
+    * from the pair's first stripe), not collapsed to one value per
+    * rootname.
+    *
+    * Both pair diffs come from the same wide (ROOTNAME, seg_idx) row and
+    * fan out with an inline 2-element explode — the per-pair formulation
+    * would aggregate the input stream twice. A pair's row exists iff both
+    * its stripes have a flash at that index (the diff of two non-null
+    * doubles is non-null; a missing stripe nulls it) — compute_segment_diff's
+    * both-present guard. */
+  def stripePairDiffs(pivot: DataFrame, valueCol: String): DataFrame = {
+    def pair(label: String, a: String, b: String) =
+      struct(lit(label).as("pair"),
+        (col(s"${a}_$valueCol") - col(s"${b}_$valueCol")).as("seg_diff"),
+        col(s"${a}_ts").as("lamp_time"))
+    pivot
       .select(col("ROOTNAME"), col("seg_idx"), explode(array(
-        struct(lit("B-C").as("pair"),
-          (col("NUVB_v") - col("NUVC_v")).as("seg_diff"),
-          col("NUVB_ts").as("lamp_time")),
-        struct(lit("C-A").as("pair"),
-          (col("NUVC_v") - col("NUVA_v")).as("seg_diff"),
-          col("NUVC_ts").as("lamp_time")))).as("p"))
+        pair("B-C", "NUVB", "NUVC"), pair("C-A", "NUVC", "NUVA"))).as("p"))
       .select(col("ROOTNAME"), col("seg_idx"), col("p.pair").as("pair"),
         col("p.seg_diff").as("seg_diff"), col("p.lamp_time").as("lamp_time"))
       .filter(col("seg_diff").isNotNull)
   }
 
-  /** OSM drift data (reference: cosmo/monitors/osm_drift_monitors.py:
-    * 14–45): shifts relative to each exposure's FIRST flash (W2), first
-    * element dropped from every array (W3), exploded, with drift-rate and
-    * time-since-OSM-move columns (W4). */
-  def osmDriftData(lampflash: DataFrame, sms: DataFrame,
-                   detector: String): DataFrame = {
+  /** OSM drift data of one detector from [[osmJoined]] (reference:
+    * cosmo/monitors/osm_drift_monitors.py:14–45): exposures with at
+    * least two flashes, shifts relative to each exposure's FIRST flash
+    * (W2), first element dropped from every array (W3), exploded, with
+    * drift-rate and time-since-OSM-move columns (W4). */
+  def osmDrift(joined: DataFrame, detector: String): DataFrame = {
     def relToFirst(c: String) =
       transform(slice(col(c), lit(2), size(col(c)) - 1),
         x => x - element_at(col(c), 1))
     def dropFirst(c: String) = slice(col(c), lit(2), size(col(c)) - 1)
-    val joined = lampflash
+    val rel = joined
       .filter(col("DETECTOR") === detector && size(col("SHIFT_DISP")) > 1)
-      .join(smsKeyed(lampflash, sms), Seq("ROOTNAME"))
       .withColumn("REL_SHIFT_DISP", relToFirst("SHIFT_DISP"))
       .withColumn("REL_SHIFT_XDISP", relToFirst("SHIFT_XDISP"))
       .withColumn("TIME", dropFirst("TIME"))
       .withColumn("SHIFT_DISP", dropFirst("SHIFT_DISP"))
       .withColumn("SHIFT_XDISP", dropFirst("SHIFT_XDISP"))
       .withColumn("SEGMENT", dropFirst("SEGMENT"))
-    Relational.explodeArrays(joined,
+    Relational.explodeArrays(rel,
       Seq("TIME", "SHIFT_DISP", "SHIFT_XDISP", "SEGMENT",
         "REL_SHIFT_DISP", "REL_SHIFT_XDISP"), posCol = "flash")
       .withColumn("SHIFT1_DRIFT", col("REL_SHIFT_DISP") / col("TIME"))
@@ -224,10 +239,15 @@ object Monitors {
 
   /** J13 — LP-position expected aperture-block lookup (reference:
     * cosmo/monitors/aper_shift_monitors.py:77–105): the constant
-    * 11×4×2 (LIFE_ADJ × APERTURE × DETECTOR) position array as an 88-row
-    * broadcast dimension, replacing the reference's numpy index-array
-    * gymnastics with one equi-join. Adds `SHIFT_APERY = APERYPOS − std`.
-    * Rows with LIFE_ADJ < 1 are nulled then dropped (reference pd.NA). */
+    * 11×4×2 (LIFE_ADJ × APERTURE × DETECTOR) position array as a
+    * constant nested map looked up per row, replacing the reference's
+    * numpy index-array gymnastics. Adds `std_ypos` and
+    * `SHIFT_APERY = APERYPOS − std_ypos`; a row with no entry is dropped,
+    * and rows with LIFE_ADJ < 1 are nulled then dropped (reference
+    * pd.NA). Output columns as the equi-join on the three keys gives
+    * them: keys, the input's other columns, std_ypos, SHIFT_APERY. A
+    * map lookup, unlike a join with a broadcast dimension, runs no job
+    * of its own. */
   def apertureShift(df: DataFrame): DataFrame = {
     val positions = Array(
       // LP1..LP8, LP10, LP11, LP12 × (PSA, BOA, FCA, WCA) × (FUV, NUV)
@@ -245,18 +265,18 @@ object Monitors {
     val lps = Seq(1, 2, 3, 4, 5, 6, 7, 8, 10, 11, 12)
     val apertures = Seq("PSA", "BOA", "FCA", "WCA")
     val detectors = Seq("FUV", "NUV")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val dim = (for {
-      (lp, i) <- lps.zipWithIndex
-      (ap, j) <- apertures.zipWithIndex
-      (det, k) <- detectors.zipWithIndex
-    } yield (lp, ap, det, positions(i)(j)(k))).toDF(
-      "LIFE_ADJ", "APERTURE", "DETECTOR", "std_ypos")
+    // LIFE_ADJ -> APERTURE -> DETECTOR -> std_ypos
+    val std = typedLit(lps.zipWithIndex.map { case (lp, i) =>
+      lp -> apertures.zipWithIndex.map { case (ap, j) =>
+        ap -> detectors.zipWithIndex.map { case (det, k) =>
+          det -> positions(i)(j)(k) }.toMap }.toMap }.toMap)
+    val keys = Seq("LIFE_ADJ", "APERTURE", "DETECTOR")
     df.withColumn("LIFE_ADJ",
         when(col("LIFE_ADJ") < 1, lit(null)).otherwise(col("LIFE_ADJ")))
-      .na.drop(Seq("APERYPOS", "LIFE_ADJ", "APERTURE", "DETECTOR"))
-      .join(broadcast(dim), Seq("LIFE_ADJ", "APERTURE", "DETECTOR"))
+      .na.drop(Seq("APERYPOS") ++ keys)
+      .withColumn("std_ypos", std(col("LIFE_ADJ"))(col("APERTURE"))(col("DETECTOR")))
+      .filter(col("std_ypos").isNotNull)
+      .select((keys ++ df.columns.filterNot(keys.contains) :+ "std_ypos").map(col): _*)
       .withColumn("SHIFT_APERY", col("APERYPOS") - col("std_ypos"))
   }
 

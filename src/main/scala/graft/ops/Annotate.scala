@@ -158,12 +158,16 @@ object Annotate {
       count(lit(1)).as("n_shared"),
       avg(when(col("la") === col("lb"), 1.0).otherwise(0.0)).as("p_o"))
     // marginal product per pair: Σ_c p_a(c)·p_b(c) over the shared set
+    // both marginals derive from `j`, so mb's pair columns are renamed
+    // before the join: comparing the same attributes would rely on the
+    // analyzer's self-join rewrite (selfJoinAutoResolveAmbiguity)
     val ma = j.groupBy("w_a", "w_b", "la").agg(count(lit(1)).as("ca"))
     val mb = j.groupBy("w_a", "w_b", "lb").agg(count(lit(1)).as("cb"))
+      .select(col("w_a").as("mb_w_a"), col("w_b").as("mb_w_b"), col("lb"), col("cb"))
     val pe = ma.join(mb,
-        ma("w_a") === mb("w_a") && ma("w_b") === mb("w_b") &&
-          ma("la") === mb("lb"))
-      .select(ma("w_a"), ma("w_b"), (col("ca") * col("cb")).as("prod"))
+        col("w_a") === col("mb_w_a") && col("w_b") === col("mb_w_b") &&
+          col("la") === col("lb"))
+      .select(col("w_a"), col("w_b"), (col("ca") * col("cb")).as("prod"))
       .groupBy("w_a", "w_b").agg(sum(col("prod")).as("sprod"))
     // LEFT join + zero-fill: a pair whose label marginals are disjoint
     // (a always says x, b always says y on the shared set) has no

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Version-guarded upsert semantics (reference: cosmo/sms/ingest_sms.py:
   * 154–198 — `INSERT ... ON CONFLICT UPDATE` guarded by
@@ -35,9 +36,14 @@ object MergeOps {
     * (same data, same versions) leave the table unchanged.
     *
     * On a real cluster this is Delta/Iceberg MERGE; the swap here gives
-    * the same observable semantics for a single writer. */
+    * the same observable semantics for a single writer.
+    *
+    * `beforeSwap` runs after the merged table is written and before it
+    * replaces the current one: a check of what the write consumed (SMS
+    * ingest's per-file yield) that throws leaves the table as it was. */
   def mergeParquet(spark: SparkSession, tableDir: String, source: DataFrame,
-                   keys: Seq[String], versionCol: String): Unit = {
+                   keys: Seq[String], versionCol: String,
+                   beforeSwap: () => Unit = () => ()): Unit = {
     val path = new java.io.File(tableDir)
     // Dedupe WITHIN the batch too: one micro-batch can deliver several
     // versions of the same key (e.g. a streaming AvailableNow catch-up).
@@ -47,6 +53,8 @@ object MergeOps {
       else deduped
     val tmp = tableDir + ".tmp-" + java.util.UUID.randomUUID().toString
     merged.write.mode(SaveMode.Overwrite).parquet(tmp)
+    try beforeSwap()
+    catch { case NonFatal(e) => delete(new java.io.File(tmp)); throw e }
     val bak = new java.io.File(tableDir + ".bak")
     if (bak.exists()) delete(bak)
     if (path.exists() && !path.renameTo(bak))

@@ -8,9 +8,9 @@ import org.apache.spark.SparkContext
   * miss the tail of its own job's events. `waitUntilEmpty` blocks until
   * the bus has delivered everything (at most 10 s, then a
   * `TimeoutException`; interruptible), making per-query counts exact.
-  * Callers: ProfileQ and the cosmobench tracer, and the monitor
-  * `Runner`, which waits here for its listener to receive the sink
-  * query's observed row count. Never in a query plan. */
+  * Callers: ProfileQ and the cosmobench tracer, and
+  * `graft.core.Observations`, which waits here for its listener to
+  * receive a query's named observation. Never in a query plan. */
 object ListenerBridge {
   def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

@@ -108,6 +108,28 @@ class AnnotateSpec extends SparkSpec {
     assert(out(("wc", "wd")) == None)
   }
 
+  test("pairwiseKappa gives the same kappa without self-join auto-resolution") {
+    // items 1–4: wa x x y y, wb x x y x, wc y y y x. Per pair, p_o and
+    // p_e = Σ_c p_a(c)·p_b(c): (wa, wb) ¾ and ½ → κ = ½; (wa, wc) ¼ and
+    // ½ → κ = −½; (wb, wc) ½ and ⅜ → κ = ⅕. Several pairs are needed:
+    // a pair-blind marginal join only shows with more than one.
+    val labels = Seq("xxyy" -> "wa", "xxyx" -> "wb", "yyyx" -> "wc").flatMap {
+      case (labs, w) => labs.zipWithIndex.map { case (l, i) => (i + 1L, w, l.toString) }
+    }.toDF("item", "wid", "lab")
+    val key = "spark.sql.selfJoinAutoResolveAmbiguity"
+    val before = spark.conf.getOption(key)
+    val out = Seq("true", "false").map { v =>
+      spark.conf.set(key, v)
+      try Annotate.pairwiseKappa(labels, "item", "wid", "lab")
+        .select("w_a", "w_b", "p_e", "kappa").orderBy("w_a", "w_b")
+        .as[(String, String, Double, Option[Double])].collect().toSeq
+      finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+    val expected = Seq(("wa", "wb", 0.5, Some(0.5)), ("wa", "wc", 0.5, Some(-0.5)),
+      ("wb", "wc", 0.375, Some(0.2)))
+    assert(out == Seq(expected, expected))
+  }
+
   test("dawidSkene recovers truth where majority vote is provably wrong") {
     // two careful workers + two hash-random spammers over 3 classes.
     // Where the spammers collide on a wrong class the vote ties 2–2

@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.monitors.{MonitorCatalog, Monitors, Runner}
 
 /** The full 12-monitor reference suite as registered jobs: every monitor
@@ -139,16 +141,145 @@ class MonitorCatalogSpec extends SparkSpec {
     assert(diffs.isEmpty, "\n" + diffs.mkString("\n"))
   }
 
+  /** Rows of every monitor the catalog runs, as the sink received them. */
+  private def catalogRows(lamp: DataFrame, smsRows: DataFrame,
+                          failIn: Set[String] = Set.empty)
+      : (Seq[Runner.MonitorResult], Map[String, Set[Row]]) = {
+    val rows = scala.collection.mutable.Map[String, Set[Row]]()
+    Runner.clear()
+    MonitorCatalog.register(MonitorCatalog.Sources(lamp, smsRows, acq, breakpoints))
+    val results = Runner.runAll(spark, "monthly", sink = (name, df) => {
+      if (failIn(name)) throw new IllegalStateException(s"sink of $name")
+      rows(name) = df.collect().toSet
+    })
+    Runner.clear()
+    (results, rows.toMap)
+  }
+
+  private def osmFamilyFrames(lamp: DataFrame, smsRows: DataFrame): Seq[DataFrame] = {
+    val joined = Monitors.osmJoined(lamp, smsRows)
+    Seq(joined,
+      Monitors.segmentPivot(Monitors.osmExplode(joined, "FUV"), Seq("FUVA", "FUVB")),
+      Monitors.segmentPivot(Monitors.osmExplode(joined, "NUV"), Monitors.nuvStripes))
+  }
+
+  private def cached(df: DataFrame): Boolean = df.storageLevel != StorageLevel.NONE
+
+  test("runAll persists the OSM family frames and releases exactly those") {
+    val lamp = lampflash.persist()
+    val smsRows = sms
+    try {
+      assert(lamp.count() == 3)
+      val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
+      val seenCached = scala.collection.mutable.Map[String, Seq[Boolean]]()
+      Runner.clear()
+      MonitorCatalog.register(MonitorCatalog.Sources(lamp, smsRows, acq, breakpoints))
+      val results = Runner.runAll(spark, "monthly", sink = (name, df) => {
+        df.collect()
+        seenCached(name) = osmFamilyFrames(lamp, smsRows).map(cached)
+      })
+      Runner.clear()
+      assert(results.forall(_.error.isEmpty), results)
+      // the join is cached from the first OSM monitor on, each pivot from
+      // the first monitor of its detector
+      assert(seenCached("acq_peakxd") == Seq(false, false, false))
+      assert(seenCached("fuv_osm_shift1") == Seq(true, true, false))
+      assert(seenCached("nuv_osm_drift") == Seq(true, true, true))
+      assert(osmFamilyFrames(lamp, smsRows).forall(!cached(_)), "family frames released")
+      assert(cached(lamp), "the caller's cache survives")
+      assert(spark.sparkContext.getPersistentRDDs.keySet == rddsBefore)
+    } finally lamp.unpersist(blocking = true)
+  }
+
+  test("a family frame the caller cached is read, not released") {
+    val (lamp, smsRows) = (lampflash, sms)
+    val joined = Monitors.osmJoined(lamp, smsRows).persist()
+    try {
+      assert(joined.count() == 3)
+      val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
+      val (results, _) = catalogRows(lamp, smsRows)
+      assert(results.forall(_.error.isEmpty), results)
+      assert(cached(Monitors.osmJoined(lamp, smsRows)), "the caller's join stays cached")
+      assert(osmFamilyFrames(lamp, smsRows).tail.forall(!cached(_)))
+      assert(spark.sparkContext.getPersistentRDDs.keySet == rddsBefore)
+    } finally joined.unpersist(blocking = true)
+  }
+
+  test("a failing first monitor of a family leaves its siblings running, then releases") {
+    val (lamp, smsRows) = (lampflash, sms)
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val (results, _) = catalogRows(lamp, smsRows,
+      failIn = Set("fuv_osm_shift1", "nuv_osm_shift1"))
+    val byName = results.map(r => r.name -> r).toMap
+    assert(results.length == 12)
+    Seq("fuv_osm_shift1", "nuv_osm_shift1").foreach { n =>
+      assert(byName(n).rowCount == -1L && byName(n).error.exists(_.contains(s"sink of $n")))
+    }
+    assert(results.filterNot(r => Set("fuv_osm_shift1", "nuv_osm_shift1")(r.name))
+      .forall(_.error.isEmpty), results)
+    assert(byName("fuv_osm_shift2").rowCount == 2 && byName("nuv_osm_shift2").rowCount == 2)
+    assert(byName("fuv_osm_drift").rowCount == 2 && byName("nuv_osm_drift").rowCount == 2)
+    assert(osmFamilyFrames(lamp, smsRows).forall(!cached(_)))
+    assert(spark.sparkContext.getPersistentRDDs.keySet == rddsBefore)
+  }
+
+  test("a second runAll over one registration gives the same row counts") {
+    Runner.clear()
+    MonitorCatalog.register(MonitorCatalog.Sources(lampflash, sms, acq, breakpoints))
+    val first = Runner.runAll(spark, "monthly", sink = (_, df) => df.collect())
+    val second = Runner.runAll(spark, "monthly", sink = (_, df) => df.collect())
+    Runner.clear()
+    assert(first.forall(_.error.isEmpty), first)
+    assert(first == second)
+  }
+
+  test("shared-frame monitors equal the per-monitor forms, with a null in one shift column") {
+    // la1q's second FUVA/FUVB pair and na1q's NUVB flash have a null
+    // SHIFT_XDISP only: SHIFT1 keeps those pairs, SHIFT2 drops them
+    val lamp = Seq(
+      ("la1q", 59000.0, "FUV", "G160M", Seq(0.0, 1.0, 10.0, 11.0),
+        Seq(1.0, 30.0, 2.0, 3.0), Seq(Some(0.1), None, Some(9.2), Some(0.4)),
+        Seq("FUVA", "FUVA", "FUVB", "FUVB")),
+      ("la2q", 59001.0, "FUV", "G130M", Seq(0.0, 5.0),
+        Seq(20.0, 2.0), Seq(Some(0.3), Some(0.4)), Seq("FUVA", "FUVB")),
+      ("na1q", 59002.0, "NUV", "G185M", Seq(0.0, 1.0, 2.0),
+        Seq(1.0, 2.0, 30.0), Seq(Some(0.1), None, Some(8.3)),
+        Seq("NUVA", "NUVB", "NUVC")))
+      .toDF("ROOTNAME", "EXPSTART", "DETECTOR", "OPT_ELEM",
+        "TIME", "SHIFT_DISP", "SHIFT_XDISP", "SEGMENT")
+    def flagged(df: DataFrame, t: Double) = df.withColumn("is_outlier", abs(col("seg_diff")) > t)
+    val fuv = Monitors.osmShiftData(lamp, sms)
+    val nuv = Monitors.segmentPivot(Monitors.osmShiftData(lamp, sms, detector = "NUV"),
+      Monitors.nuvStripes)
+    val perMonitor = Map(
+      "fuv_osm_shift1" -> flagged(Monitors.segmentDiff(fuv, "SHIFT_DISP"), 10.0),
+      "fuv_osm_shift2" -> flagged(Monitors.segmentDiff(fuv, "SHIFT_XDISP"), 5.0),
+      "nuv_osm_shift1" -> flagged(Monitors.stripePairDiffs(nuv, "SHIFT_DISP"), 10.0),
+      "nuv_osm_shift2" -> flagged(Monitors.stripePairDiffs(nuv, "SHIFT_XDISP"), 5.0),
+      "fuv_osm_drift" -> Monitors.osmDrift(Monitors.osmJoined(lamp, sms), "FUV"),
+      "nuv_osm_drift" -> Monitors.osmDrift(Monitors.osmJoined(lamp, sms), "NUV"))
+      .map { case (n, df) => n -> df.collect().toSet }
+    val (results, shared) = catalogRows(lamp, sms)
+    assert(results.forall(_.error.isEmpty), results)
+    perMonitor.foreach { case (n, rows) =>
+      assert(shared(n) == rows, n)
+      assert(results.find(_.name == n).get.rowCount == rows.size, n)
+    }
+    assert(perMonitor("fuv_osm_shift1").size == 3 && perMonitor("fuv_osm_shift2").size == 2)
+    assert(perMonitor("nuv_osm_shift1").size == 2 && perMonitor("nuv_osm_shift2").size == 1)
+  }
+
   test("NUV stripe pairs compute B-C and C-A exactly") {
-    val out = Monitors.nuvStripeDiffs(
-      Monitors.osmShiftData(lampflash, sms, detector = "NUV"), "SHIFT_DISP")
+    val out = Monitors.stripePairDiffs(Monitors.segmentPivot(
+      Monitors.osmShiftData(lampflash, sms, detector = "NUV"), Monitors.nuvStripes),
+      "SHIFT_DISP")
       .select("ROOTNAME", "pair", "seg_diff")
       .as[(String, String, Double)].collect().toSet
     assert(out == Set(("na1q", "B-C", -1.0), ("na1q", "C-A", 2.0)))
   }
 
   test("OSM drift: relative-to-first shifts, drift rates, OSM-move offsets") {
-    val out = Monitors.osmDriftData(lampflash, sms, "FUV")
+    val out = Monitors.osmDrift(Monitors.osmJoined(lampflash, sms), "FUV")
       .select("ROOTNAME", "TIME", "REL_SHIFT_DISP", "SHIFT1_DRIFT",
         "REL_TSINCEOSM1", "REL_TSINCEOSM2")
       .as[(String, Double, Double, Double, Double, Double)].collect().toSet

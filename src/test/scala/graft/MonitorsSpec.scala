@@ -38,7 +38,7 @@ class MonitorsSpec extends SparkSpec {
     assert(math.abs(ts - expected) < 1e3)
   }
 
-  test("osmShiftData and osmDriftData take an ingested SMS table as it is") {
+  test("osmShiftData and osmDrift take an ingested SMS table as it is") {
     // every SmsIngest column; EXPSTART and DETECTOR are also lampflash
     // columns, and the SMS DETECTOR here disagrees with the exposure's
     val ts = java.sql.Timestamp.valueOf("2024-02-01 05:45:35")
@@ -56,10 +56,10 @@ class MonitorsSpec extends SparkSpec {
       Monitors.osmShiftData(lampflash, narrow).select(shiftCols: _*).collect().toSet)
     val driftCols = Seq("ROOTNAME", "flash", "DETECTOR", "EXPSTART", "SHIFT1_DRIFT",
       "REL_TSINCEOSM1", "REL_TSINCEOSM2").map(col)
-    val drift = Monitors.osmDriftData(lampflash, full, "FUV").select(driftCols: _*)
+    val drift = Monitors.osmDrift(Monitors.osmJoined(lampflash, full), "FUV").select(driftCols: _*)
     assert(drift.count() == 2)
     assert(drift.collect().toSet ==
-      Monitors.osmDriftData(lampflash, narrow, "FUV").select(driftCols: _*).collect().toSet)
+      Monitors.osmDrift(Monitors.osmJoined(lampflash, narrow), "FUV").select(driftCols: _*).collect().toSet)
   }
 
   test("segment diff + X3 outlier threshold reproduce the shift1 rule") {
@@ -143,6 +143,39 @@ class MonitorsSpec extends SparkSpec {
     val out = graft.monitors.Monitors.apertureShift(df)
       .select("ROOTNAME", "SHIFT_APERY").as[(String, Double)].collect().toMap
     assert(out == Map("r1" -> 19.0, "r2" -> 53.0, "r4" -> 4.0))
+  }
+
+  test("apertureShift's map lookup gives the rows and columns of the dimension join") {
+    val df = Seq(
+      ("r1", 3, "PSA", "FUV", 200.0),
+      ("r2", 1, "BOA", "NUV", -100.0),
+      ("r3", -1, "PSA", "FUV", 50.0),   // LP<1: dropped
+      ("r4", 10, "WCA", "FUV", 210.0),
+      ("r5", 9, "PSA", "FUV", 100.0),   // no LP9 entry: dropped
+      ("r6", 12, "XYZ", "NUV", 100.0),  // no such aperture: dropped
+      ("r7", 6, "WCA", "FUV", 30.0))
+      .toDF("ROOTNAME", "LIFE_ADJ", "APERTURE", "DETECTOR", "APERYPOS")
+    // the equi-join form against the 88-row dimension
+    val lps = Seq(1, 2, 3, 4, 5, 6, 7, 8, 10, 11, 12)
+    val fuv = Map("PSA" -> Seq(126, 53, 181, 234, 13, -11, -49, 206, 206, 270, 90),
+      "BOA" -> Seq(-153, -226, -98, -45, -226, -98, -98, -73, -73, -9, -189),
+      "WCA" -> Seq(126, 53, 181, 234, 13, 22, 32, 206, 206, 270, 90))
+    val nuv = Map("PSA" -> 126, "BOA" -> -153, "FCA" -> -153, "WCA" -> 126)
+    val dim = (for ((lp, i) <- lps.zipWithIndex; ap <- Seq("PSA", "BOA", "FCA", "WCA");
+                    det <- Seq("FUV", "NUV")) yield
+      (lp, ap, det, if (det == "NUV") nuv(ap) else fuv.getOrElse(ap, fuv("BOA"))(i)))
+      .toDF("LIFE_ADJ", "APERTURE", "DETECTOR", "std_ypos")
+    val joined = df.withColumn("LIFE_ADJ",
+        when(col("LIFE_ADJ") < 1, lit(null)).otherwise(col("LIFE_ADJ")))
+      .na.drop(Seq("APERYPOS", "LIFE_ADJ", "APERTURE", "DETECTOR"))
+      .join(broadcast(dim), Seq("LIFE_ADJ", "APERTURE", "DETECTOR"))
+      .withColumn("SHIFT_APERY", col("APERYPOS") - col("std_ypos"))
+    val out = Monitors.apertureShift(df)
+    assert(out.columns.toSeq == joined.columns.toSeq)
+    assert(out.columns.toSeq == Seq("LIFE_ADJ", "APERTURE", "DETECTOR",
+      "ROOTNAME", "APERYPOS", "std_ypos", "SHIFT_APERY"))
+    assert(out.collect().toSet == joined.collect().toSet)
+    assert(out.select("ROOTNAME").as[String].collect().toSet == Set("r1", "r2", "r4", "r7"))
   }
 
   test("telemetryTrack: boxcar, central band, and as-of probe values") {

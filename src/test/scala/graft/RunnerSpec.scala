@@ -8,6 +8,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ListenerBridge
+import org.apache.spark.storage.StorageLevel
 import graft.monitors.Runner
 import graft.monitors.Runner.MonitorJob
 
@@ -174,6 +175,34 @@ class RunnerSpec extends SparkSpec {
       capture.stop()
     }
     assert(errors.isEmpty, s"listener-bus ERRORs after runAll: $errors")
+  }
+
+  test("a Shared frame is built once per runAll, read from cache by every sibling, released after") {
+    Runner.clear()
+    val builds = new java.util.concurrent.atomic.AtomicInteger()
+    def frame = spark.range(0, 10, 1, 2).toDF("k")
+    val base = new Runner.Shared(() => { builds.incrementAndGet(); frame })
+    def cached = frame.storageLevel != StorageLevel.NONE
+    Runner.register(MonitorJob("first", "monthly", _ => {
+      base()
+      throw new RuntimeException("first reader fails")
+    }))
+    Runner.register(MonitorJob("all", "monthly", _ => base()))
+    Runner.register(MonitorJob("half", "monthly", _ => base().where(col("k") < 5)))
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val cachedInSink = scala.collection.mutable.ArrayBuffer[Boolean]()
+    val results = Runner.runAll(spark, "monthly",
+      sink = (_, df) => { df.collect(); cachedInSink += cached })
+    Runner.clear()
+    assert(results.map(r => (r.name, r.rowCount)) ==
+      Seq(("first", -1L), ("all", 10L), ("half", 5L)))
+    assert(results.head.error.exists(_.contains("first reader fails")))
+    assert(builds.get == 1, "siblings read the frame the failed monitor built")
+    assert(cachedInSink == Seq(true, true))
+    assert(!cached, "released when runAll returns")
+    assert(spark.sparkContext.getPersistentRDDs.keySet == rddsBefore)
+    base()
+    assert(builds.get == 2 && !cached, "outside runAll the frame is built plain")
   }
 
   test("full monthly run: real FITS OSM monitor through the runner with CSV sink") {
