@@ -20,6 +20,26 @@ object Measure {
       // collect-bound: single aggregate row (the consume hash)
       .agg(sum("__h"), count(lit(1))).collect()(0).getLong(1)
 
+  /** The one persist of an operator's cached intermediate
+    * (MEMORY_AND_DISK, released by [[releaseAll]]). A second call of an
+    * operator on the same input before the release builds the same
+    * plan, which is already cached: that call reads the first one's
+    * cache instead of persisting it again, which would only log
+    * CacheManager's "Asked to cache already cached data". */
+  def cacheOnce(df: DataFrame): DataFrame =
+    if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE) df
+    else df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+
+  /** Runs `body` over `df` cached for the duration of the call — a
+    * trainer's eager rounds re-reading one table. Like [[cacheOnce]] it
+    * reuses a cache of the same plan that a caller already holds, and
+    * then leaves it cached: the call releases only a persist it made. */
+  def cachedFor[T](df: DataFrame)(body: DataFrame => T): T = {
+    val owned = df.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+    val cached = cacheOnce(df)
+    try body(cached) finally if (owned) cached.unpersist(blocking = false)
+  }
+
   /** The one release of cached intermediates. Operators may persist
     * or locally checkpoint what their own plan reads more than once
     * (winnowPairs' fingerprint stream, the suffix ladder's levels,

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.graft.{BigramHashes, BpeMergeSeq, CdcCuts, CosineSimilarity, DotProduct, EvalBarrier, IvfTopCells, Md5Prefix60, MdBandKeys, MdBucketMargin, MdDerivedMarginInt, SpanHashes60, MdMinHashSignature, MinHashSignature, MjdToTimestamp, NativeBridge, RegexpExtractGroups, ShingleArray, SimHash64, MultiMatch, TimestampToMjd, TrigramHashes, UnicodeNormalize, UnigramViterbi, WinnowMinima, WordPieceEncode}
+import org.apache.spark.sql.graft.{BigramHashes, BpeMergeSeq, CdcCuts, CosineSimilarity, DotProduct, EvalBarrier, IvfTopCells, Md5Prefix60, MdBandKeys, MdBucketMargin, MdDerivedMarginInt, SpanHashes60, MdMinHashSignature, NativeBridge, RegexpExtractGroups, ShingleArray, SimHash64, MultiMatch, TrigramHashes, UnicodeNormalize, UnigramViterbi, WinnowMinima, WordPieceEncode}
 
 /** Registers the native expressions as SQL functions so every operator is
   * reachable from `spark.sql` (SURVEY.md §7.1 `sql/` surface). Install
@@ -14,7 +14,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     GraftExtensions.descriptors.foreach { case (name, info, builder) =>
       ext.injectFunction((FunctionIdentifier(name), info, builder))
     }
-    ext.injectOptimizerRule(_ => org.apache.spark.sql.graft.MjdPredicatePushdown)
     ext.injectPlannerStrategy(_ => org.apache.spark.sql.graft.AsOfJoinStrategy)
   }
 }
@@ -37,24 +36,12 @@ object GraftExtensions {
   }
 
   val descriptors: Seq[(String, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    ("mjd_to_ts",
-      info("mjd_to_ts", "mjd_to_ts(days) - MJD float days (UTC) to timestamp."),
-      (args: Seq[Expression]) => MjdToTimestamp(args.head)),
-    ("ts_to_mjd",
-      info("ts_to_mjd", "ts_to_mjd(ts) - timestamp to MJD float days."),
-      (args: Seq[Expression]) => TimestampToMjd(args.head)),
     ("cosine_sim",
       info("cosine_sim", "cosine_sim(a, b) - cosine similarity of two double arrays."),
       (args: Seq[Expression]) => CosineSimilarity(args.head, args(1))),
     ("dot_product",
       info("dot_product", "dot_product(a, b) - dot product of two double arrays."),
       (args: Seq[Expression]) => DotProduct(args.head, args(1))),
-    ("minhash_signature",
-      info("minhash_signature",
-        "minhash_signature(shingles, n) - n-component MinHash signature of a string array."),
-      (args: Seq[Expression]) => MinHashSignature(args.head,
-        literalArg(args(1), "minhash_signature", "n")
-          .asInstanceOf[Number].intValue())),
     ("simhash64",
       info("simhash64", "simhash64(hashes) - 64-bit SimHash of pre-hashed tokens."),
       (args: Seq[Expression]) => SimHash64(args.head)),
@@ -176,17 +163,13 @@ object GraftExtensions {
       }))
 
   /** Register on an existing session (tests, REPL). Functions go into the
-    * session registry; the pushdown rule into experimental optimizations
-    * (extensions proper only apply at session build). */
+    * session registry; the as-of join strategy into experimental
+    * strategies (extensions proper only apply at session build). */
   def register(spark: SparkSession): Unit = {
     descriptors.foreach { case (name, inf, builder) =>
       spark.sessionState.functionRegistry
         .registerFunction(FunctionIdentifier(name), inf, builder)
     }
-    val rule = org.apache.spark.sql.graft.MjdPredicatePushdown
-    if (!spark.experimental.extraOptimizations.contains(rule))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ rule
     val strategy = org.apache.spark.sql.graft.AsOfJoinStrategy
     if (!spark.experimental.extraStrategies.contains(strategy))
       spark.experimental.extraStrategies =
@@ -194,8 +177,6 @@ object GraftExtensions {
   }
 
   /** Column-API access to the native expressions. */
-  def mjdToTs(c: Column): Column = NativeBridge.column(MjdToTimestamp(NativeBridge.expression(c)))
-  def tsToMjd(c: Column): Column = NativeBridge.column(TimestampToMjd(NativeBridge.expression(c)))
   def cosineSim(a: Column, b: Column): Column =
     NativeBridge.column(CosineSimilarity(NativeBridge.expression(a), NativeBridge.expression(b)))
   def dotProduct(a: Column, b: Column): Column =
@@ -205,8 +186,6 @@ object GraftExtensions {
     NativeBridge.column(IvfTopCells(
       NativeBridge.expression(vec.cast("array<double>")),
       cids, cents, nProbe, simRound))
-  def minhashSignature(shingles: Column, numHashes: Int): Column =
-    NativeBridge.column(MinHashSignature(NativeBridge.expression(shingles), numHashes))
   def mdMinhashSignature(shingles: Column, numHashes: Int): Column =
     NativeBridge.column(MdMinHashSignature(NativeBridge.expression(shingles), numHashes))
   def md5Prefix60(s: Column): Column =

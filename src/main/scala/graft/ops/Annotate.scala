@@ -266,9 +266,10 @@ object Annotate {
       when(col("lab").isin(classes.map(c => c: Any): _*), col("lab"))
         .otherwise(raise_error(concat(lit("dawidSkene: label outside " +
           "declared classes: "), col("lab"))).cast("string")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val classDF = broadcast(spark.createDataFrame(classes.map(Tuple1(_)))
-      .toDF("cls"))
+      .transform(graft.core.Measure.cacheOnce)
+    // the dense class list is the preserved (left) side of the prior's
+    // left join, so it cannot be the broadcast build side: no hint
+    val classDF = spark.createDataFrame(classes.map(Tuple1(_))).toDF("cls")
 
     // T0: vote proportions (sparse — classes without votes carry no row;
     // the M-step left-joins from the dense side so zeros are implicit)

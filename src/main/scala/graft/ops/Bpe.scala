@@ -82,10 +82,8 @@ object Bpe {
     // action would re-run the corpus-sized wordVocab aggregate through
     // the lazy chain — WITH it the corpus is read exactly once and the
     // rounds chain fold expressions over the (small) cached table
-    val base = wordVocab(df, tokCol)
-      .select(col("word"), col("wc"), initialSymbols(col("word")).as("syms"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    graft.core.Measure.cachedFor(wordVocab(df, tokCol)
+        .select(col("word"), col("wc"), initialSymbols(col("word")).as("syms"))) { base =>
       var vocab = base
       val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, String, Long)]
       var rank = 1
@@ -112,6 +110,6 @@ object Bpe {
         }
       }
       merges.toSeq
-    } finally base.unpersist()
+    }
   }
 }

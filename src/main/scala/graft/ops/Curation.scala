@@ -142,7 +142,7 @@ object Curation {
       df.select(id,
           array_distinct(graft.functions.GraftExtensions
             .shingles(split(col(textCol), " ", -1), shingleK)).as("sh"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(graft.core.Measure.cacheOnce)
     val newSh = shingled(newDocs)
     val corpSh = shingled(corpus)
     val exactIds = newDocs
@@ -526,7 +526,7 @@ object Curation {
                           wRound: Int = 6): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val feats = docs
+    val feats0 = docs
       .select(col(idCol).as("__id"), label.cast("double").as("__y"),
         split(col(textCol), " ", -1).as("__toks"))
       .withColumn("__n", size(col("__toks")).cast("double"))
@@ -543,8 +543,7 @@ object Curation {
       // distribution, so the per-round exchanges of the feature table
       // vanish (rounds shuffle only the buckets-sized gradient).
       .repartition(col("__id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    graft.core.Measure.cachedFor(feats0) { feats =>
       val nDocs = docs.select(col(idCol)).count().toDouble
       def r6(v: Double): Double =
         java.math.BigDecimal.valueOf(v)
@@ -571,7 +570,7 @@ object Curation {
           (b, r6(wb - lr * g.getOrElse(b, 0.0) / nDocs)) }
       }
       w.toDF("bucket", "w")
-    } finally { feats.unpersist(); () }
+    }
   }
 
   /** Tie-corrected Mann–Whitney AUC over a scored table whose score

@@ -76,7 +76,7 @@ object Retrieval {
     val w = tf.join(dfT, "term").crossJoin(broadcast(n))
       .select(col("id"), col("term"), col("df"),
         (col("tf") * log(col("n").cast("double") / col("df"))).as("w"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.core.Measure.cacheOnce)
     val norms = w.groupBy("id").agg(sqrt(sum(col("w") * col("w"))).as("nrm"))
     val posts = w.filter(col("df") <= dfCut).select("term", "id", "w")
     val dots = posts.toDF("term", "d1", "w1")
@@ -126,7 +126,7 @@ object Retrieval {
       .filter(col("term").isin(terms: _*)) // map-side, below the exchange
       .groupBy(col(idCol), col("term"), col("dl"))
       .agg(count(lit(1)).cast("double").as("tf"))
-    val tf = if (persist) tf0.persist() else tf0
+    val tf = if (persist) graft.core.Measure.cacheOnce(tf0) else tf0
     // df is per-TERM (query-sized) — derived from the postings, broadcast
     val dfreq = tf.groupBy("term").agg(count(lit(1)).cast("double").as("df"))
     // arithmetic shape mirrored token-for-token by the DuckDB oracle so

@@ -296,7 +296,7 @@ object Similarity {
     * 1.01/1.06 across 10×/30×/100× at pair-recall 1.0000 against
     * brute-force truth — near-linear with recall held. What constant
     * cells spend instead is assignment arithmetic: N·k = N²/cellSize
-    * native cosines ([[ivfAssignNative]]'s fused loop — at 200k
+    * native cosines ([[ivfAssign]]'s fused loop — at 200k
     * vectors that is 4×10⁸ 64-dim cosines ≈ seconds on 32 cores, not
     * the bottleneck). That term IS quadratic, so the rule REFUSES past
     * the measured regime (~2M vectors) and points to
@@ -305,9 +305,7 @@ object Similarity {
     * quantizer. `nProbe` stays constant: probing exists to recover
     * pairs straddling a cell frontier; growing it with scale would
     * re-inflate pair volume. Returns `(k, nProbe)`; train with
-    * [[kmeansCentroids]] (assignNative = true — the interpreted HOF
-    * comparator is O(k log k) per row) and assign with
-    * [[ivfAssignNative]]. */
+    * [[kmeansCentroids]] and assign with [[ivfAssign]]. */
   def ivfKnobsForScale(nVectors: Long, cellSize: Int = 100,
                        nProbe: Int = 2): (Int, Int) = {
     require(nVectors > 0 && cellSize > 0 && nProbe >= 1,
@@ -326,67 +324,23 @@ object Similarity {
     * (inverted file cell); search happens within the probe's cell only —
     * a bucket equi-join like LSH, but with data-adaptive cells.
     * `centroids(centroid_id, vecCol)` is a small table (k-means output or,
-    * deterministically, per-label means) and is broadcast to both sides.
-    * `nProbe > 1` searches that many nearest cells for better recall. */
+    * deterministically, per-label means) with numeric ids. `nProbe > 1`
+    * searches that many nearest cells for better recall: one output row
+    * per (input row, cell), `centroid_id` in the centroid table's type.
+    *
+    * Ranking is (cosine desc, centroid id asc), null similarity (a
+    * length mismatch) last; `simRound >= 0` ranks on the rounded
+    * similarity — needed when an external oracle replays the argmax
+    * (double ulp noise between engines can't flip a 6-decimal-rounded
+    * ranking); production paths keep the raw double. A null vector gets
+    * no cell. The k centroids enter the plan as literals and each row
+    * ranks them in one fused k·dim loop
+    * ([[org.apache.spark.sql.graft.IvfTopCells]]): zero shuffles, and
+    * none of the per-row `array_sort` with an interpreted lambda
+    * comparator that the built-in form needs. */
   def ivfAssign(df: DataFrame, vecCol: String,
                 centroids: DataFrame, centroidId: String = "centroid_id",
                 nProbe: Int = 1, simRound: Int = -1): DataFrame = {
-    // ZERO shuffles: the centroid table packs into one broadcast array
-    // row and the per-row argmax is a sorted-array HOF — the former
-    // broadcast-join + window formulation fanned every input row out
-    // ×|centroids| and then shuffled that on the row id just to rank,
-    // which was the dominant exchange of the whole ANN pipeline at scale
-    // (the rewrite also made the id parameter unnecessary: ranking is
-    // per-row now).
-    // Comparator = (csim desc, cid asc), the window's exact ordering,
-    // with null csim sorting last (a null vector matches no cell cleanly;
-    // the window's `desc` NullsLast did the same) — the full sort also
-    // makes the nondeterministic collect_list order irrelevant.
-    // |centroids| is small (k-means k), so the interpreted per-row loop
-    // is ~k native-cosine calls.
-    // simRound >= 0 ranks on the rounded similarity — needed when an
-    // external oracle replays the argmax (double ulp noise between
-    // engines can't flip a 6-decimal-rounded ranking); production paths
-    // keep the raw double.
-    def rank(c: Column) =
-      if (simRound >= 0) round(c, simRound) else c
-    val packed = centroids.agg(collect_list(
-      struct(col(centroidId).as("cid"), col(vecCol).as("cv"))).as("__cents"))
-    df.crossJoin(broadcast(packed))
-      .withColumn("__cell", explode(slice(array_sort(
-        transform(col("__cents"), c =>
-          struct(rank(cosine(col(vecCol), c.getField("cv"))).as("csim"),
-            c.getField("cid").as("cid"))),
-        (l, r) => {
-          def cidOrd = when(l.getField("cid") < r.getField("cid"), -1)
-            .when(l.getField("cid") > r.getField("cid"), 1)
-            .otherwise(0)
-          when(l.getField("csim").isNull && r.getField("csim").isNull, cidOrd)
-            .when(l.getField("csim").isNull, 1)
-            .when(r.getField("csim").isNull, -1)
-            .when(l.getField("csim") > r.getField("csim"), -1)
-            .when(l.getField("csim") < r.getField("csim"), 1)
-            .otherwise(cidOrd)
-        }), 1, nProbe)))
-      .withColumn(centroidId, col("__cell").getField("cid"))
-      .drop("__cents", "__cell")
-  }
-
-  /** [[ivfAssign]]'s native twin for LARGE k: same ranking contract
-    * ((round(cosine, simRound) desc, cid asc), nulls last — agreement
-    * pinned in NativeExprSpec), but the per-row work is one fused
-    * k·dim loop over a pre-unpacked primitive matrix
-    * ([[org.apache.spark.sql.graft.IvfTopCells]]) instead of a
-    * k-struct `array_sort` whose comparator runs as an interpreted
-    * lambda — O(k log k) interpreted evals per row, which dominates
-    * the whole pipeline once k grows as √N ([[ivfKnobsForScale]]).
-    * Output `centroid_id` is LongType (the HOF form keeps the
-    * centroid table's own id type). Prefer the HOF form for small
-    * fixed k where its plan is already proven (the oracled k=8
-    * chains); this one for corpus-scaled k. */
-  def ivfAssignNative(df: DataFrame, vecCol: String, centroids: DataFrame,
-                      centroidId: String = "centroid_id", nProbe: Int = 1,
-                      simRound: Int = -1): DataFrame = {
     // collect-bound: k centroid rows (k-means k) — the same
     // bounded-driver contract kmeansCentroids' localize already holds
     val rows = centroids
@@ -395,9 +349,11 @@ object Similarity {
       .collect()
     val cids = rows.map(_.getLong(0)).toSeq
     val cents = rows.map(_.getSeq[Double](1)).toSeq
+    val idType = centroids.schema(centroidId).dataType
     df.withColumn(centroidId,
       explode(graft.functions.GraftExtensions.ivfTopCells(
-        col(vecCol), cids, cents, nProbe, simRound)))
+        col(vecCol), cids, cents, nProbe, simRound)
+        .cast(org.apache.spark.sql.types.ArrayType(idType, containsNull = false))))
   }
 
   /** Deterministic mini k-means (Lloyd's) to train IVF cells when no
@@ -432,8 +388,7 @@ object Similarity {
   def kmeansCentroids(df: DataFrame, id: String, vecCol: String,
                       k: Int, iters: Int = 3,
                       seedHash: Column => Column = xxhash64(_),
-                      simRound: Int = -1,
-                      assignNative: Boolean = false): DataFrame = {
+                      simRound: Int = -1): DataFrame = {
     val spark = df.sparkSession
     import scala.jdk.CollectionConverters._
     def localize(cents: DataFrame): DataFrame = {
@@ -448,9 +403,7 @@ object Similarity {
     // for the duration of training; the result is already a
     // LocalRelation when we release it, so no downstream plan can
     // reference the freed cache.
-    val proj = df.select(col(id), col(vecCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    graft.core.Measure.cachedFor(df.select(col(id), col(vecCol))) { proj =>
       // k rows total after the TakeOrdered limit — the single-partition
       // window only ever ranks those k. `seedHash` defaults to xxhash64;
       // an md5 hex string gives the same data-independent spread with a
@@ -462,19 +415,11 @@ object Similarity {
         .withColumn("centroid_id",
           row_number().over(Window.partitionBy(lit(0)).orderBy("__h")) - 1)
         .select(col("centroid_id"), col(vecCol))
-      // assignNative routes each round's assignment through the fused
-      // native ranking (same comparator — see ivfAssignNative): at
-      // corpus-scaled k the HOF array_sort's interpreted comparator
-      // would dominate training wall
-      def assign(cents: DataFrame): DataFrame =
-        if (assignNative) ivfAssignNative(proj, vecCol, cents,
-          simRound = simRound)
-        else ivfAssign(proj, vecCol, cents, simRound = simRound)
       // jobs-bound: iters + 1 driver jobs (one k-row localize collect
       // per Lloyd round + the seed localize), each over the cached
       // projection
       (1 to iters).foldLeft(localize(seeds)) { (cents, _) =>
-        localize(assign(cents)
+        localize(ivfAssign(proj, vecCol, cents, simRound = simRound)
           .select(col("centroid_id"),
             posexplode(col(vecCol).cast("array<double>")).as(Seq("pos", "v")))
           .groupBy("centroid_id", "pos").agg(avg("v").as("v"))
@@ -483,7 +428,7 @@ object Similarity {
           .select(col("centroid_id"),
             transform(col("__z"), x => x("v")).as(vecCol)))
       }
-    } finally proj.unpersist(blocking = false)
+    }
   }
 
   /** Sample covariance matrix (biased, ÷N) of a vector column in ONE

@@ -5,8 +5,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for large-scale training-data pipelines:
-  * tokenization, quality metrics, language-ID, fingerprinting, shingling,
-  * MinHash signatures and SimHash — all as pure column expressions / plans.
+  * tokenization, quality metrics, language-ID, fingerprinting, shingling
+  * and SimHash — all as pure column expressions / plans (the MinHash
+  * signatures live in graft.ops.Curation).
   *
   * Everything here is codegen-friendly (array HOFs, no UDFs) and per-row
   * (no shuffle) except the candidate-pair joins, which shuffle once on the
@@ -121,7 +122,7 @@ object Text {
     // explode already yields distinct (doc, fp) rows — no dedup shuffle
     val fp = df.select(col(idCol).as("id"),
         explode(winnowFingerprints(col(textCol), k, w)).as("fp"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.core.Measure.cacheOnce)
     val rare = fp.groupBy("fp").agg(count("*").as("df"))
       .filter(col("df") <= dfCut).select("fp")
     val pruned = fp.join(rare, "fp").select("fp", "id")
@@ -429,16 +430,6 @@ object Text {
   private def r4half(x: Column): Column =
     floor(x * lit(10000.0) + lit(0.5)) / lit(10000.0)
 
-  /** MinHash signature of a shingle set: `n` independent hash functions,
-    * each the min over shingles of a salted xxhash64. Salting (rather than
-    * universal hashing ax+b mod p) avoids 64-bit multiply overflow, which
-    * ANSI mode rejects. Per-row compute, no shuffle. */
-  def minhashSignature(shingles: Column, n: Int): Column =
-    array((0 until n).map { i =>
-      aggregate(shingles, lit(Long.MaxValue),
-        (acc, s) => least(acc, xxhash64(s, lit(i))))
-    }: _*)
-
   /** Exact Jaccard similarity of two token arrays (as sets). */
   def jaccard(a: Column, b: Column): Column = {
     val da = array_distinct(a)
@@ -456,26 +447,6 @@ object Text {
       when(
         aggregate(hashes, lit(0L), (acc, h) =>
           acc + when(call_function("shiftright", h, j.cast("int"))
-            .bitwiseAND(lit(1L)) === lit(1L), lit(1L))
-            .otherwise(lit(-1L))) >= 0,
-        lit(1L)).otherwise(lit(0L)))
-    aggregate(
-      zip_with(bits, sequence(lit(0), lit(63)),
-        (bit, j) => call_function("shiftleft", bit, j.cast("int"))),
-      lit(0L), (acc, x) => acc.bitwiseOR(x))
-  }
-
-  /** 64-bit SimHash over a token array: bit j of the output is the sign of
-    * the sum over tokens of ±1 according to bit j of the token's hash.
-    * Near-dup docs differ in few bits (compare with [[hammingDistance]]).
-    * Pure per-row expression: O(64·|tokens|) inside codegen. Prefer
-    * hashing tokens in a prior select + [[simhashFromHashes]] on hot
-    * paths. */
-  def simhash64(toks: Column): Column = {
-    val bits = transform(sequence(lit(0), lit(63)), j =>
-      when(
-        aggregate(toks, lit(0L), (acc, t) =>
-          acc + when(call_function("shiftright", xxhash64(t), j.cast("int"))
             .bitwiseAND(lit(1L)) === lit(1L), lit(1L))
             .otherwise(lit(-1L))) >= 0,
         lit(1L)).otherwise(lit(0L)))
@@ -612,7 +583,7 @@ object Text {
     val spans = df
       .select(col(idCol), explode(spanHashes(split(col(textCol), " ", -1), k)).as("s"))
       .select(col(idCol), col("s.h").as("h"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.core.Measure.cacheOnce)
     val dupHashes = spans.groupBy("h")
       .agg(countDistinct(idCol).as("nd"))
       .filter(col("nd") >= 2)
@@ -721,7 +692,7 @@ object Text {
         .select(col(idCol), col("__s.pos").as("pos"),
           col("__s.h").as("__h")),
       idCol, minDocs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.core.Measure.cacheOnce)
     // ladder: dups(i) = positions duplicated at width baseK * 2^i.
     // Each level's candidate at pos p pairs the survivor at p (left
     // half) with the survivor at p + half (right half, shifted to join
@@ -743,7 +714,7 @@ object Text {
           xxhash64(halves: _*).as("__h1"),
           xxhash64((lit(1) +: halves): _*).as("__h2"))
       dupPositions(cands, idCol, minDocs, Seq("__h1", "__h2"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(graft.core.Measure.cacheOnce)
     }
     // maximality: drop level-i spans contained in a level-(i+1) span —
     // a 2k-span at q contains exactly the k-spans starting in
@@ -1019,7 +990,7 @@ object Text {
           .bigramHashes(split(col(textCol), " ", -1))).as("b"))
       .select(col(idCol), col("is_t"), col("b.h2").as("h2"),
         col("b.h2b").as("h2b"), col("b.ha").as("ha"), col("b.hb").as("hb"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.core.Measure.cacheOnce)
     // ONE corpus-scale aggregate carries both models: cc = corpus pair
     // count, ct = target pair count (sum of the is_t flag)
     val c2 = ev.groupBy("h2", "h2b").agg(

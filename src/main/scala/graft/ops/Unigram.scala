@@ -135,10 +135,8 @@ object Unigram {
             topK: Int = 200, maxPieceLen: Int = 6,
             maxWordLen: Int = Int.MaxValue): DataFrame = {
     val words0 = wordCounts(df, textCol)
-    val words = (if (maxWordLen == Int.MaxValue) words0
-      else words0.filter(length(col("word")) <= maxWordLen))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    graft.core.Measure.cachedFor(if (maxWordLen == Int.MaxValue) words0
+        else words0.filter(length(col("word")) <= maxWordLen)) { words =>
       var vocab = seedVocab(words, maxPieceLen, topK)
       var it = 0
       // jobs-bound: rounds x 1 job (the topK-bounded pieceCosts vocab
@@ -152,6 +150,6 @@ object Unigram {
       // WindowExec warning, see round-9 hygiene rule)
       val w = org.apache.spark.sql.expressions.Window.partitionBy(lit(0))
       vocab.withColumn("cost", -log(col("n") / sum("n").over(w)))
-    } finally words.unpersist()
+    }
   }
 }

@@ -587,7 +587,7 @@ object AnnotQueries {
           when(hq % 100 < col("err"),
             when(col("tru") === "good", lit("bad")).otherwise(lit("good")))
             .otherwise(col("tru")).as("lab"))
-        .persist()
+        .transform(graft.core.Measure.cacheOnce)
       val ds = Annotate.dawidSkene(labels, "item", "wid", "lab",
         Seq("bad", "good"), iters = 2)
       // train ONLY on the crowd-reviewed subset (inner join), then the

@@ -556,8 +556,8 @@ object SimilarityQueries {
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       val cents = Similarity.kmeansCentroids(e, "vec_id", "v",
         k = 8, iters = 3, seedHash = c => md5(c.cast("string")),
-        simRound = 6, assignNative = true)
-      val assigned = Similarity.ivfAssignNative(e, "v", cents,
+        simRound = 6)
+      val assigned = Similarity.ivfAssign(e, "v", cents,
         nProbe = 2, simRound = 6)
         .select(col("centroid_id"), col("vec_id"))
       // candidates carry ids only through the cell join + distinct; the

@@ -741,7 +741,7 @@ object TextQueries {
       val sh = corpus
         .select(col("doc_id"), array_distinct(graft.functions.GraftExtensions
           .shingles(split(col("text"), " ", -1), 4)).as("sh"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(graft.core.Measure.cacheOnce)
       // exact Jaccard over all sample pairs: array intersection on the
       // persisted shingle arrays (no exploded self-join re-derivation)
       val a = sh.select(col("doc_id").as("d1"), col("sh").as("sh1"))
@@ -763,7 +763,7 @@ object TextQueries {
           transform(sequence(lit(0), lit(3)), j =>
             md5(concat_ws(",", transform(slice(col("cs"), j * 4 + 1, lit(4)),
               c => c.cast("string")))))).as(Seq("j", "bh")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(graft.core.Measure.cacheOnce)
       val coll = banded.select(col("j"), col("bh"), col("doc_id").as("d1"))
         .join(banded.select(col("j"), col("bh"), col("doc_id").as("d2")),
           Seq("j", "bh"))

@@ -452,7 +452,7 @@ object TrainQueries {
         val scored = Text.bigramNll(docs, "doc_id", "text")
           .join(docs.select("doc_id", "lang"), "doc_id")
           .select(col("lang"), col("nll"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .transform(graft.core.Measure.cacheOnce)
         // threshRound = 4 (the NLLs' own precision): without it, an
         // exact-integer quantile index lands the interpolated threshold
         // an ulp below a TIED round-4 value and the whole tie run flips

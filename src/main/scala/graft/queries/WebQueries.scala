@@ -492,7 +492,7 @@ object WebQueries {
           |    ELSE (po - pe) / (1 - pe) END, 4) AS kappa
           |FROM k""".stripMargin) { (s, dir) =>
       val lines = synthLines(Tables.fannedOut(s, dir, "documents"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(graft.core.Measure.cacheOnce)
       val c4 = Curation.c4Clean(lines, "doc_id", "idx", "line")
         .select(col("doc_id"), col("kept").as("c4_kept"))
       val gp = Curation.gopherRules(Tables(s, dir, "documents"), lines,
@@ -620,7 +620,7 @@ object WebQueries {
           |FROM c4 JOIN gp USING (doc_id) JOIN pd USING (doc_id)
           |ORDER BY doc_id""".stripMargin) { (s, dir) =>
       val lines = synthLines(Tables.fannedOut(s, dir, "documents"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(graft.core.Measure.cacheOnce)
       val c4 = Curation.c4Clean(lines, "doc_id", "idx", "line")
         .select(col("doc_id"), col("kept").as("c4_kept"))
       val gp = Curation.gopherRules(Tables(s, dir, "documents"), lines,

@@ -7,55 +7,15 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
 /** Native Catalyst expressions (SURVEY.md §4 "custom Catalyst work" /
-  * §7.3 stretch): scalar conversions the monitors use in every plan, as
-  * codegen'd expressions instead of composed built-ins — one fused
-  * arithmetic op in the generated code, no Column-tree overhead, still
-  * inside whole-stage codegen.
+  * §7.3 stretch): per-row kernels written as codegen'd expressions
+  * instead of composed built-ins, so they stay inside whole-stage
+  * codegen without interpreted HOF lambdas. Spark already fuses its
+  * built-in expressions, so each one here stays only for a measured win
+  * over its built-in form, for having no built-in equivalent, or for a
+  * semantic role ([[EvalBarrier]]); CHANGES.md records which, with the
+  * registry queries that reach it. The monitors convert MJD with
+  * graft.core.TimeFns' built-in compositions.
   */
-
-/** MJD (UTC float days) → TimestampType. Semantics identical to
-  * `timestamp_seconds((mjd - 40587) * 86400)` (graft.core.TimeFns.mjdToTs);
-  * this form compiles to a single multiply-add on the unboxed double.
-  * Reference semantics: astropy Time(..., format='mjd') conversions
-  * (cosmo/monitor_helpers.py:52–76). */
-case class MjdToTimestamp(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(DoubleType)
-  override def dataType: DataType = TimestampType
-  override def prettyName: String = "mjd_to_ts"
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val mjd = input.asInstanceOf[Double]
-    ((mjd - 40587.0d) * 86400.0d * 1e6d).toLong
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"(long)((($c) - 40587.0d) * 86400.0d * 1.0e6d)")
-
-  override protected def withNewChildInternal(newChild: Expression): MjdToTimestamp =
-    copy(child = newChild)
-}
-
-/** TimestampType → MJD double (micros-exact); inverse of [[MjdToTimestamp]]. */
-case class TimestampToMjd(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(TimestampType)
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "ts_to_mjd"
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val micros = input.asInstanceOf[Long]
-    micros / 1e6d / 86400.0d + 40587.0d
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"((double)($c)) / 1.0e6d / 86400.0d + 40587.0d")
-
-  override protected def withNewChildInternal(newChild: Expression): TimestampToMjd =
-    copy(child = newChild)
-}
 
 /** Cosine similarity of two numeric arrays in ONE pass: dot product and
   * both norms accumulate in a single generated loop, vs three separate
@@ -176,84 +136,6 @@ case class DotProduct(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotProduct =
     copy(left = newLeft, right = newRight)
-}
-
-/** MinHash signature in ONE pass: for each of `numHashes` salted xxhash64
-  * functions, the minimum over the shingle array — as a native loop
-  * instead of `numHashes` separate aggregate() HOF calls (HOF lambdas are
-  * evaluated interpreted, per element, per hash). Output: array<long> of
-  * length `numHashes`.
-  *
-  * Hash family contract: component j equals Spark's `xxhash64(s, lit(j))`
-  * — i.e. base = xxhash64(s) with the default seed 42, then the salt int
-  * j hashed with base as the seed (XXH64.hashInt(j, base)). This keeps
-  * signatures bit-identical to graft.ops.Text.minhashSignature's HOF
-  * formulation (pinned by NativeExprSpec), so signatures persisted via
-  * either path stay comparable. It is also cheaper: one string hash per
-  * shingle, then `numHashes` int hashes — not `numHashes` string hashes. */
-case class MinHashSignature(child: Expression, numHashes: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(StringType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhash_signature"
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr => {
-      val st = ctx.addReferenceObj("stringType", StringType,
-        "org.apache.spark.sql.types.DataType")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val n = ctx.freshName("n")
-      val sig = ctx.freshName("sig")
-      val s = ctx.freshName("s")
-      val base = ctx.freshName("base")
-      val h = ctx.freshName("h")
-      s"""
-         |int $n = $arr.numElements();
-         |long[] $sig = new long[$numHashes];
-         |java.util.Arrays.fill($sig, Long.MAX_VALUE);
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$arr.isNullAt($i)) {
-         |    org.apache.spark.unsafe.types.UTF8String $s = $arr.getUTF8String($i);
-         |    long $base = org.apache.spark.sql.catalyst.expressions.XxHash64Function
-         |      .hash($s, $st, 42L);
-         |    for (int $j = 0; $j < $numHashes; $j++) {
-         |      long $h = org.apache.spark.sql.catalyst.expressions.XXH64
-         |        .hashInt($j, $base);
-         |      if ($h < $sig[$j]) $sig[$j] = $h;
-         |    }
-         |  }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($sig);
-       """.stripMargin
-    })
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    val sig = Array.fill(numHashes)(Long.MaxValue)
-    var i = 0
-    while (i < n) {
-      if (!arr.isNullAt(i)) {
-        val s = arr.getUTF8String(i)
-        val base = org.apache.spark.sql.catalyst.expressions.XxHash64Function
-          .hash(s, StringType, 42L)
-        var j = 0
-        while (j < numHashes) {
-          val h = org.apache.spark.sql.catalyst.expressions.XXH64.hashInt(j, base)
-          if (h < sig(j)) sig(j) = h
-          j += 1
-        }
-      }
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(sig)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashSignature =
-    copy(child = newChild)
 }
 
 /** Shared md5-component kernel of [[MdMinHashSignature]]: the 60-bit
@@ -1509,61 +1391,6 @@ case class RegexpExtractGroups(child: Expression, pattern: String)
 
   override protected def withNewChildInternal(newChild: Expression): RegexpExtractGroups =
     copy(child = newChild)
-}
-
-/** Optimizer rule (SURVEY.md §4's optional candidate): filters on
-  * `ts_to_mjd(ts) <cmp> literal` cannot reach the parquet scan — the
-  * conversion hides the timestamp column. This rule AND-injects a
-  * conservative derived predicate directly on `ts` (1 ms slack on the
-  * boundary), which Catalyst then pushes to the scan for row-group
-  * pruning. The original predicate still applies, so semantics are
-  * unchanged; the rule is idempotent because the injected conjunct is
-  * detected on re-application.
-  */
-object MjdPredicatePushdown
-    extends org.apache.spark.sql.catalyst.rules.Rule[
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] {
-  import org.apache.spark.sql.catalyst.expressions._
-  import org.apache.spark.sql.catalyst.plans.logical._
-
-  private val slackMicros = 1000L // 1 ms guard against double rounding
-
-  private def lowerTs(mjd: Double): Literal =
-    Literal(((mjd - 40587.0d) * 86400.0d * 1e6d).toLong - slackMicros, TimestampType)
-  private def upperTs(mjd: Double): Literal =
-    Literal(((mjd - 40587.0d) * 86400.0d * 1e6d).toLong + slackMicros, TimestampType)
-
-  private def derived(cond: Expression): Seq[Expression] = cond.collect {
-    case GreaterThan(TimestampToMjd(ts), Literal(d: Double, DoubleType)) =>
-      GreaterThanOrEqual(ts, lowerTs(d))
-    case GreaterThanOrEqual(TimestampToMjd(ts), Literal(d: Double, DoubleType)) =>
-      GreaterThanOrEqual(ts, lowerTs(d))
-    case LessThan(TimestampToMjd(ts), Literal(d: Double, DoubleType)) =>
-      LessThanOrEqual(ts, upperTs(d))
-    case LessThanOrEqual(TimestampToMjd(ts), Literal(d: Double, DoubleType)) =>
-      LessThanOrEqual(ts, upperTs(d))
-    case EqualTo(TimestampToMjd(ts), Literal(d: Double, DoubleType)) =>
-      And(GreaterThanOrEqual(ts, lowerTs(d)), LessThanOrEqual(ts, upperTs(d)))
-    // reversed orientations (literal on the left)
-    case GreaterThan(Literal(d: Double, DoubleType), TimestampToMjd(ts)) =>
-      LessThanOrEqual(ts, upperTs(d))
-    case LessThan(Literal(d: Double, DoubleType), TimestampToMjd(ts)) =>
-      GreaterThanOrEqual(ts, lowerTs(d))
-  }
-
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
-    case f @ Filter(cond, child) =>
-      val conjuncts = splitConjuncts(cond)
-      val toAdd = derived(cond).filterNot(d =>
-        conjuncts.exists(_.semanticEquals(d)))
-      if (toAdd.isEmpty) f
-      else Filter(toAdd.foldLeft(cond)(And(_, _)), child)
-  }
-
-  private def splitConjuncts(e: Expression): Seq[Expression] = e match {
-    case And(l, r) => splitConjuncts(l) ++ splitConjuncts(r)
-    case other => Seq(other)
-  }
 }
 
 /** Bloom-filter join pruning (100 TB lever): build a bloom filter over the

@@ -1,26 +1,11 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.core.TimeFns
 import graft.functions.GraftExtensions
 import graft.ops.Similarity
 
 class NativeExprSpec extends SparkSpec {
   import spark.implicits._
-
-  test("native mjd_to_ts/ts_to_mjd agree with the composed builtins") {
-    val df = Seq(40587.0, 59000.5, 60000.123456).toDF("mjd")
-    val cmp = df.select(
-      unix_micros(GraftExtensions.mjdToTs(col("mjd"))).as("native"),
-      unix_micros(TimeFns.mjdToTs(col("mjd"))).as("composed"),
-      GraftExtensions.tsToMjd(GraftExtensions.mjdToTs(col("mjd"))).as("rt"),
-      col("mjd"))
-      .as[(Long, Long, Double, Double)].collect()
-    cmp.foreach { case (native, composed, rt, mjd) =>
-      assert(math.abs(native - composed) <= 1, s"micros $native vs $composed")
-      assert(math.abs(rt - mjd) < 1e-8)
-    }
-  }
 
   test("native cosine_sim agrees with the HOF composition") {
     val df = Seq(
@@ -157,25 +142,14 @@ class NativeExprSpec extends SparkSpec {
     assert(row.isNullAt(1), "HOF reference is null on length mismatch")
   }
 
-  test("native minhash signature is bit-identical to the HOF formulation") {
-    val df = Seq(
-      Seq("the quick", "quick brown", "brown fox", "fox jumps"),
-      Seq("single"),
-      Seq("a", "b", "c", "d", "e", "f", "g", "h")).toDF("sh")
-    val out = df.select(
-      GraftExtensions.minhashSignature(col("sh"), 16).as("native"),
-      graft.ops.Text.minhashSignature(col("sh"), 16).as("hof"))
-      .as[(Seq[Long], Seq[Long])].collect()
-    out.foreach { case (n, h) => assert(n == h, s"$n vs $h") }
-  }
-
   test("SQL registration: functions callable from spark.sql") {
     GraftExtensions.register(spark)
     val r = spark.sql(
-      """SELECT ts_to_mjd(mjd_to_ts(59000.0)) AS rt,
+      """SELECT md5_prefix60('abc') AS h,
         |  cosine_sim(array(1.0d, 2.0d), array(2.0d, 4.0d)) AS cs""".stripMargin)
-      .as[(Double, Double)].head()
-    assert(math.abs(r._1 - 59000.0) < 1e-8)
+      .as[(Long, Double)].head()
+    // the first 15 hex digits of md5('abc') = 900150983cd24fb0...
+    assert(r._1 == java.lang.Long.parseLong("900150983cd24fb", 16))
     assert(math.abs(r._2 - 1.0) < 1e-12)
   }
 
@@ -192,51 +166,11 @@ class NativeExprSpec extends SparkSpec {
     out.foreach { case (n, h) => assert(n == h, s"$n vs $h") }
   }
 
-  test("native minhash signature: component count, determinism, containment") {
-    val df = Seq(
-      ("a", Seq("s1", "s2", "s3", "s4")),
-      ("b", Seq("s1", "s2", "s3", "s4", "s5")),
-      ("c", Seq("z9"))).toDF("id", "sh")
-    val sigs = df.select(col("id"),
-      GraftExtensions.minhashSignature(col("sh"), 64).as("sig"))
-      .as[(String, Seq[Long])].collect().toMap
-    assert(sigs("a").length == 64)
-    // superset's componentwise min is <= subset's (monotone containment)
-    assert(sigs("a").zip(sigs("b")).forall { case (x, y) => y <= x })
-    // identical input -> identical signature
-    val again = df.filter(col("id") === "a").select(
-      GraftExtensions.minhashSignature(col("sh"), 64)).as[Seq[Long]].head()
-    assert(again == sigs("a"))
-    assert(sigs("c") != sigs("a"))
-  }
-
-  test("MjdPredicatePushdown: filter on ts_to_mjd reaches the parquet scan") {
-    GraftExtensions.register(spark)
-    val dir = java.nio.file.Files.createTempDirectory("mjd").toString + "/t"
-    spark.range(1000)
-      .select(col("id"),
-        timestamp_micros(col("id") * 86400L * 1000000L).as("ts"))
-      .write.parquet(dir)
-    val df = spark.read.parquet(dir)
-      .filter(GraftExtensions.tsToMjd(col("ts")) > 40587.0 + 500.0)
-    val plan = df.queryExecution.explainString(
-      org.apache.spark.sql.execution.FormattedMode)
-    // the derived ts predicate must be pushed to the scan
-    assert("PushedFilters: \\[[^\\]]*GreaterThanOrEqual\\(ts".r
-      .findFirstIn(plan).isDefined, plan)
-    // and results must equal the unoptimized semantics: mjd > 41087
-    // means id > 500 -> 499 rows
-    assert(df.count() == 499)
-    // boundary row id=500 (exactly mjd 41087.0) excluded by the strict >
-    val ids = df.agg(min("id")).head().getLong(0)
-    assert(ids == 501)
-  }
-
   test("native expressions stay inside whole-stage codegen") {
     GraftExtensions.register(spark)
     val df = spark.range(100).select(
-      GraftExtensions.mjdToTs(col("id").cast("double") + 59000.0).as("ts"))
-      .filter(col("ts").isNotNull)
+      GraftExtensions.md5Prefix60(col("id").cast("string")).as("h"))
+      .filter(col("h").isNotNull)
     val plan = df.queryExecution.executedPlan.toString
     // the "*(n)" prefix marks operators inside a WholeStageCodegen stage
     assert(plan.contains("*(1) Project"), plan)
@@ -265,7 +199,7 @@ class NativeExprSpec extends SparkSpec {
     // non-foldable minhash n
     val e3 = intercept[org.apache.spark.sql.AnalysisException] {
       Seq((Seq("a", "b"), 4)).toDF("sh", "n")
-        .selectExpr("minhash_signature(sh, n)").collect()
+        .selectExpr("md_minhash_signature(sh, n)").collect()
     }
     assert(e3.getMessage.contains("n"), e3.getMessage)
     // and the valid literal path still works
@@ -393,24 +327,58 @@ class NativeExprSpec extends SparkSpec {
     assert(nul.isNullAt(0))
   }
 
-  test("ivfAssignNative agrees with the HOF ivfAssign across nProbe/simRound") {
+  /** The built-in form of [[Similarity.ivfAssign]]'s ranking, kept as
+    * its reference: the packed centroid array crosses every row and an
+    * `array_sort` with a lambda comparator (csim desc, cid asc, null
+    * csim last) ranks it per row. */
+  private def ivfAssignHof(df: org.apache.spark.sql.DataFrame, vecCol: String,
+      centroids: org.apache.spark.sql.DataFrame, nProbe: Int,
+      simRound: Int): org.apache.spark.sql.DataFrame = {
+    def rank(c: org.apache.spark.sql.Column) =
+      if (simRound >= 0) round(c, simRound) else c
+    val packed = centroids.agg(collect_list(
+      struct(col("centroid_id").as("cid"), col(vecCol).as("cv"))).as("__cents"))
+    df.crossJoin(broadcast(packed))
+      .withColumn("__cell", explode(slice(array_sort(
+        transform(col("__cents"), c =>
+          struct(rank(Similarity.cosine(col(vecCol), c.getField("cv"))).as("csim"),
+            c.getField("cid").as("cid"))),
+        (l, r) => {
+          def cidOrd = when(l.getField("cid") < r.getField("cid"), -1)
+            .when(l.getField("cid") > r.getField("cid"), 1)
+            .otherwise(0)
+          when(l.getField("csim").isNull && r.getField("csim").isNull, cidOrd)
+            .when(l.getField("csim").isNull, 1)
+            .when(r.getField("csim").isNull, -1)
+            .when(l.getField("csim") > r.getField("csim"), -1)
+            .when(l.getField("csim") < r.getField("csim"), 1)
+            .otherwise(cidOrd)
+        }), 1, nProbe)))
+      .withColumn("centroid_id", col("__cell").getField("cid"))
+      .drop("__cents", "__cell")
+  }
+
+  test("ivfAssign agrees with the built-in array_sort ranking across nProbe/simRound") {
     val pts = (0L until 60L).map { id =>
       (id, Seq.tabulate(8)(j => math.sin(id * 31.0 + j * 7.0).abs + 0.01))
     }.toDF("vec_id", "v")
     val cents = Similarity.kmeansCentroids(pts, "vec_id", "v",
       k = 5, iters = 2)
     for (np <- Seq(1, 2, 3); sr <- Seq(-1, 6)) {
-      val hof = Similarity.ivfAssign(pts, "v", cents,
-          nProbe = np, simRound = sr)
-        .select(col("vec_id"), col("centroid_id").cast("long"))
-        .as[(Long, Long)].collect().sorted.toSeq
-      val nat = Similarity.ivfAssignNative(pts, "v", cents,
-          nProbe = np, simRound = sr)
+      val hof = ivfAssignHof(pts, "v", cents, nProbe = np, simRound = sr)
         .select(col("vec_id"), col("centroid_id"))
-        .as[(Long, Long)].collect().sorted.toSeq
+        .as[(Long, Int)].collect().sorted.toSeq
+      val assigned = Similarity.ivfAssign(pts, "v", cents,
+          nProbe = np, simRound = sr)
+      // centroid_id keeps the centroid table's type
+      assert(assigned.schema("centroid_id").dataType ==
+        cents.schema("centroid_id").dataType)
+      val nat = assigned.select(col("vec_id"), col("centroid_id"))
+        .as[(Long, Int)].collect().sorted.toSeq
       assert(nat == hof, s"nProbe=$np simRound=$sr")
     }
   }
+
 
   // shared fixture for the r19 n-gram key pins: unicode, empties,
   // single/two/three-token docs, repeated tokens, a null element

@@ -28,6 +28,17 @@ class PersistContractSpec extends SparkSpec {
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)
   }
 
+  test("a trainer's scoped cache leaves its caller's cache of the same table in place") {
+    Measure.releaseAll(spark)
+    // Unigram.train caches the word table for its rounds; a caller that
+    // already cached the same table keeps it after train returns
+    val words = graft.ops.Unigram.wordCounts(docs, "text").persist()
+    graft.ops.Unigram.train(docs, "text", rounds = 1).collect()
+    assert(words.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+      "train must release only the cache it made")
+    Measure.releaseAll(spark)
+  }
+
   test("bigramNll caches nothing") {
     Measure.releaseAll(spark)
     assert(Measure.consume(Text.bigramNll(docs, "id", "text")) > 0)

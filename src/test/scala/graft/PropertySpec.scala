@@ -76,8 +76,8 @@ class PropertySpec extends SparkSpec {
       (Seq("a b", "b c"), Seq("x y", "y z"))).toDF("s1", "s2")
     // the estimate is the fraction of agreeing signature components
     val out = df.select(
-        graft.functions.GraftExtensions.minhashSignature(col("s1"), 32).as("a"),
-        graft.functions.GraftExtensions.minhashSignature(col("s2"), 32).as("b"))
+        graft.functions.GraftExtensions.mdMinhashSignature(col("s1"), 32).as("a"),
+        graft.functions.GraftExtensions.mdMinhashSignature(col("s2"), 32).as("b"))
       .select(aggregate(zip_with(col("a"), col("b"),
         (x, y) => when(x === y, 1).otherwise(0)), lit(0), _ + _)
         .cast("double") / size(col("a")))

@@ -167,7 +167,7 @@ class RunnerSpec extends SparkSpec {
       // a non-foldable argument fails analysis of the collect's query
       intercept[org.apache.spark.sql.AnalysisException] {
         Seq((Seq("a", "b"), 4)).toDF("sh", "n")
-          .selectExpr("minhash_signature(sh, n)").collect()
+          .selectExpr("md_minhash_signature(sh, n)").collect()
       }
       ListenerBridge.drain(spark.sparkContext)
     } finally {

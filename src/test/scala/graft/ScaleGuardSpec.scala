@@ -74,9 +74,8 @@ class ScaleGuardSpec extends SparkSpec {
     val e = vectors
     val nVec = e.count()
     val (k, nProbe) = Similarity.ivfKnobsForScale(nVec)
-    val cents = Similarity.kmeansCentroids(e, "vec_id", "v", k = k, iters = 3,
-      assignNative = true)
-    val assigned = Similarity.ivfAssignNative(e, "v", cents, nProbe = nProbe)
+    val cents = Similarity.kmeansCentroids(e, "vec_id", "v", k = k, iters = 3)
+    val assigned = Similarity.ivfAssign(e, "v", cents, nProbe = nProbe)
       .select(col("centroid_id"), col("vec_id"))
     val cand = assigned.select(col("centroid_id"), col("vec_id").as("id_a"))
       .join(assigned.select(col("centroid_id"), col("vec_id").as("id_b")),

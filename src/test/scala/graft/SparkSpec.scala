@@ -25,6 +25,8 @@ object SparkSpec {
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    // the by-design WARNs the mains quiet (Session.build) stay quiet here
+    graft.core.Logs.quietKnownWarnings()
     s
   }
 }

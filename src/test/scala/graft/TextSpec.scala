@@ -40,7 +40,8 @@ class TextSpec extends SparkSpec {
     val df = Seq(("a", docA), ("b", docB), ("c", docC)).toDF("id", "text")
     val withSig = df.select(col("id"),
       array_distinct(Text.wordShingles(Text.tokens(col("text")), 2)).as("sh"))
-      .select(col("id"), col("sh"), Text.minhashSignature(col("sh"), 128).as("sig"))
+      .select(col("id"), col("sh"),
+        graft.functions.GraftExtensions.mdMinhashSignature(col("sh"), 128).as("sig"))
     val a = withSig.filter(col("id") === "a").select("sh", "sig")
       .withColumnRenamed("sh", "sha").withColumnRenamed("sig", "siga")
     val rest = withSig.filter(col("id") =!= "a")
@@ -90,7 +91,8 @@ class TextSpec extends SparkSpec {
   test("simhash: near-dup docs land within small hamming distance") {
     val df = Seq(("a", docA), ("b", docB), ("c", docC)).toDF("id", "text")
     val hashes = df.select(col("id"),
-      Text.simhash64(Text.tokens(col("text"))).as("sh"))
+      graft.functions.GraftExtensions.simhash64(
+        transform(Text.tokens(col("text")), t => xxhash64(t))).as("sh"))
       .as[(String, Long)].collect().toMap
     val near = java.lang.Long.bitCount(hashes("a") ^ hashes("b"))
     val far = java.lang.Long.bitCount(hashes("a") ^ hashes("c"))

@@ -12,9 +12,17 @@ or a word in a message or table name is not a caller; an interpolated
 whose only occurrences are its own definitions has no caller outside
 src/test.
 
+When two objects (or classes or traits) define the same public name, a
+bare word cannot tell their callers apart: `TimeFns.mjdToTs` is no call
+of `GraftExtensions.mjdToTs`. Such a name is checked per owner, as
+`Owner.name`: a use counts only if it is qualified with the owner
+(`Owner.name`, a line break before the dot allowed) or is an unqualified
+use in the owner's own file. `apply` is exempt.
+
 Prints each such name with its file and line. Names on KEEP (below) are
 reported with their reason and do not fail the run; any other unused
-name makes the exit status 1.
+name makes the exit status 1. A name checked per owner is kept as
+`Owner.name`.
 """
 import os
 import re
@@ -28,10 +36,6 @@ KEEP = {
                          "the native simhash expression against",
     "trigrams": "reference implementation NativeExprSpec compares the "
                 "native trigram expression against",
-    "minhashSignature": "Text's is the HOF reference NativeExprSpec compares "
-                        "the native MinHash against; GraftExtensions' is the "
-                        "Column form of the registered minhash_signature "
-                        "SQL function",
     "applyMerge": "reference implementation NativeExprSpec compares the "
                   "native BPE merge expression against",
     "acqSlewStats": "the reference's ACQ slew monitor computation "
@@ -60,6 +64,8 @@ KEEP = {
 
 # `def main(args)` is started by sbt runMain, not called.
 ENTRY_POINTS = {"main"}
+# Names too generic to check per owner: `Owner(...)` calls `apply`.
+OWNER_EXEMPT = {"apply"}
 
 SCAN_ROOTS = ("src/main", "cosmobench/src", "tools")
 SELF = os.path.join("tools", "spec_only_defs.py")
@@ -69,6 +75,7 @@ DEF_RE = re.compile(
     r"(?:\[\w+\])?|override|@\w+)\s+)*)def\s+([A-Za-z_][A-Za-z0-9_]*)",
     re.M)
 CHAR_RE = re.compile(r"'(\\.|[^\\'\n])'")  # a Scala char literal such as '"'
+OWNER_RE = re.compile(r"\b(object|class|trait|def|val|var)\s+([A-Za-z_][A-Za-z0-9_]*)")
 
 
 def blank_string(body, interpolated):
@@ -183,6 +190,48 @@ def strip_python(src):
     return "".join(out)
 
 
+def owners(text):
+    """For each `{` ... `}` block of blanked Scala source, the name of the
+    object, class or trait whose body it is (None for any other block).
+    Returns a function from a position to its innermost named owner."""
+    spans, stack, last = [], [], 0
+    for i, c in enumerate(text):
+        if c == "{":
+            head = list(OWNER_RE.finditer(text, last, i))
+            kind = head[-1].group(1) if head else None
+            stack.append((i, head[-1].group(2)
+                          if kind in ("object", "class", "trait") else None))
+            last = i + 1
+        elif c == "}":
+            if stack:
+                start, name = stack.pop()
+                if name:
+                    spans.append((start, i, name))
+            last = i + 1
+        elif c == ";":
+            last = i + 1
+
+    def owner_at(pos):
+        inner = [s for s in spans if s[0] < pos < s[1]]
+        return max(inner)[2] if inner else None
+    return owner_at
+
+
+def owner_uses(code, owner, name, files):
+    """Uses of `owner.name`: qualified anywhere, or unqualified (no dot
+    before it) in one of the owner's own files, its definitions excluded."""
+    qualified = re.compile(r"\b%s\s*\.\s*%s\b" % (owner, name))
+    # a dot or `def` before the name is consumed with it, so only bare
+    # uses leave the prefix group empty
+    bare = re.compile(r"(\.\s*|\bdef\s+)?\b%s\b" % name)
+    n = 0
+    for rel, text in code.items():
+        n += len(qualified.findall(text))
+        if rel in files:
+            n += sum(1 for m in bare.finditer(text) if m.group(1) is None)
+    return n
+
+
 def sources(root):
     for base in SCAN_ROOTS:
         for d, dirs, files in os.walk(os.path.join(root, base)):
@@ -202,17 +251,18 @@ def main():
     root = sys.argv[1] if len(sys.argv) > 1 else \
         os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     code = dict(sources(root))
-    defs = {}  # name -> [(file, line)]
+    defs = {}  # name -> [(file, line, owner)]
     for rel, text in code.items():
         if not rel.startswith("src/main/"):
             continue
+        owner_at = owners(text)
         for m in DEF_RE.finditer(text):
             mods, name = m.group(1), m.group(2)
             if name in ENTRY_POINTS or \
                     re.search(r"\b(private|protected|override)\b", mods):
                 continue
             line = text.count("\n", 0, m.start()) + 1
-            defs.setdefault(name, []).append((rel, line))
+            defs.setdefault(name, []).append((rel, line, owner_at(m.start())))
 
     words = {}
     for text in code.values():
@@ -223,14 +273,28 @@ def main():
         for m in DEF_RE.finditer(text):
             all_sites[m.group(2)] = all_sites.get(m.group(2), 0) + 1
 
-    unused = sorted(n for n in defs if words.get(n, 0) <= all_sites[n])
+    unused, where = [], {}
+    for n, sites in defs.items():
+        by_owner = {}
+        for f, l, o in sites:
+            by_owner.setdefault(o, []).append((f, l))
+        if len(by_owner) > 1 and n not in OWNER_EXEMPT and None not in by_owner:
+            for o, osites in by_owner.items():
+                files = {f for f, _ in osites}
+                if owner_uses(code, o, n, files) == 0:
+                    unused.append(f"{o}.{n}")
+                    where[f"{o}.{n}"] = osites
+        elif words.get(n, 0) <= all_sites[n]:
+            unused.append(n)
+            where[n] = [(f, l) for f, l, _ in sites]
+    unused.sort()
     kept = [n for n in unused if n in KEEP]
     bad = [n for n in unused if n not in KEEP]
     for n in kept:
         print(f"keep    {n:28s} {KEEP[n]}")
     for n in bad:
-        where = ", ".join(f"{f}:{l}" for f, l in defs[n])
-        print(f"UNUSED  {n:28s} {where}")
+        at = ", ".join(f"{f}:{l}" for f, l in where[n])
+        print(f"UNUSED  {n:28s} {at}")
     stale = sorted(set(KEEP) - set(unused))
     for n in stale:
         print(f"note    {n:28s} on the keep-list but has a caller now")
