@@ -1458,7 +1458,7 @@ object Text {
       .foldLeft(noTags) { case (c, (e, r)) => regexp_replace(c, e, r) }
     val oneSpace = regexp_replace(decoded, "[ \\t]+", " ")
     val lineTrim = regexp_replace(oneSpace, " ?\\n ?", "\n")
-    trim(regexp_replace(lineTrim, "\\n+", "\n"), " \n")
+    btrim(regexp_replace(lineTrim, "\\n+", "\n"), lit(" \n"))
   }
 
   /** Link density of an HTML page: characters of anchor text over

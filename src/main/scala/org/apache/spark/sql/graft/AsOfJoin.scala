@@ -7,9 +7,8 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, BinaryNode => LogicalBinaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning, UnspecifiedDistribution}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.catalyst.util.TypeUtils
-import org.apache.spark.sql.execution.{BinaryExecNode, CodegenSupport, CollapseCodegenStages, SparkPlan, SparkStrategy, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 
 /** Whole-operator custom plan for the as-of (step-function) lookup —
   * SURVEY.md §2.3 J11 / §2.5 W8 (reference:
@@ -34,6 +33,11 @@ import org.apache.spark.sql.execution.{BinaryExecNode, CodegenSupport, CollapseC
   * the operator itself is O(n) with no buffering beyond one lookahead
   * quote. At 100 TB each side shuffles once on the key — the minimum —
   * and skew is AQE's problem, same as any shuffled join.
+  *
+  * The node runs through `doExecute` only and has no whole-stage-codegen
+  * path of its own: Spark's collapse rule still fuses each child's sort
+  * and the parent's filters/projects into their own stages, and the
+  * merge runs between them as a row iterator ([[AsOfMerge]]).
   *
   * The stack: [[AsOfJoinPlan]] (logical) → [[AsOfJoinStrategy]]
   * (planner) → [[AsOfJoinExec]] (physical), registered through
@@ -72,13 +76,11 @@ object AsOfJoinStrategy extends SparkStrategy {
   }
 }
 
-/** Per-partition merge worker for the KEYED as-of join — the exact loop
-  * documented on [[AsOfJoinExec.doExecute]], factored out so the
-  * interpreted path (`zipPartitions`) and the whole-stage-codegen path
-  * (`doProduce`) run the same compiled projections/orderings and stay
-  * semantically identical by construction. One instance per partition;
-  * `process` must see probes in (key, time) order and pulls quotes from
-  * `qIter` as it goes. */
+/** Per-partition merge worker for the KEYED as-of join, run by
+  * [[AsOfJoinExec.doExecute]]. One instance per partition, built on the
+  * executor (its projections and orderings compile there); `process`
+  * must see probes in (key, time) order and pulls quotes from `qIter`
+  * as it goes. */
 final class AsOfMerge(
     lk: Seq[Expression], rk: Seq[Expression],
     lt: Expression, rt: Expression, rvs: Seq[Expression],
@@ -169,8 +171,7 @@ final class AsOfMerge(
   }
 
   /** The as-of result row for one probe. The returned UnsafeRow is a
-    * reused buffer — copy before buffering (the exec declares
-    * `needCopyResult`). */
+    * reused buffer — copy before buffering. */
   def process(p: InternalRow, qIter: Iterator[InternalRow]): UnsafeRow = {
     if (!started) { advance(qIter); started = true }
     val pRow = lProj(p)
@@ -194,22 +195,12 @@ final class AsOfMerge(
   }
 }
 
-/** Serializable recipe for [[AsOfMerge]]: ships unbound expressions to
-  * executors; projections/orderings compile lazily per task (cached by
-  * the codegen compiler cache). */
-final class AsOfMergeFactory(
-    lk: Seq[Expression], rk: Seq[Expression],
-    lt: Expression, rt: Expression, rvs: Seq[Expression],
-    lOut: Seq[Attribute], rOut: Seq[Attribute]) extends Serializable {
-  def create(): AsOfMerge = new AsOfMerge(lk, rk, lt, rt, rvs, lOut, rOut)
-}
-
 case class AsOfJoinExec(
     left: SparkPlan, right: SparkPlan,
     leftKeys: Seq[Expression], rightKeys: Seq[Expression],
     leftTime: Expression, rightTime: Expression,
     rightValues: Seq[Expression], outAttrs: Seq[AttributeReference])
-  extends BinaryExecNode with CodegenSupport {
+  extends BinaryExecNode {
 
   override def output: Seq[Attribute] = left.output ++ outAttrs
   override def producedAttributes: AttributeSet = AttributeSet(outAttrs)
@@ -256,87 +247,15 @@ case class AsOfJoinExec(
       "as-of join time types must match on both sides")
   }
 
-  private def mergeFactory: AsOfMergeFactory =
-    new AsOfMergeFactory(leftKeys, rightKeys, leftTime, rightTime,
-      rightValues, left.output, right.output)
-
   protected override def doExecute(): RDD[InternalRow] = {
     if (leftKeys.isEmpty) return executeGlobal()
     validateTypes()
-    val factory = mergeFactory
+    val (lk, rk, lt, rt, rvs) = (leftKeys, rightKeys, leftTime, rightTime, rightValues)
+    val (lOut, rOut) = (left.output, right.output)
     left.execute().zipPartitions(right.execute()) { (pIter, qIter) =>
-      val merge = factory.create()
+      val merge = new AsOfMerge(lk, rk, lt, rt, rvs, lOut, rOut)
       pIter.map(p => merge.process(p, qIter))
     }
-  }
-
-  // ---- whole-stage codegen (keyed path) ----------------------------------
-  //
-  // Produce-leaf, the SortMergeJoinExec pattern: both children stay
-  // separate stages feeding `inputs[0]`/`inputs[1]`, and this node's merge
-  // loop runs inside the PARENT's generated pipeline — the as-of output
-  // flows into downstream filters/projects with no iterator boundary. The
-  // per-row merge work itself is the same compiled projections and
-  // generated orderings as the interpreted path (one shared AsOfMerge),
-  // so the two paths cannot drift.
-
-  // the global (unkeyed) path re-partitions internally — RDD-only
-  override def supportCodegen: Boolean = leftKeys.nonEmpty
-
-  // process() returns a reused UnsafeRow buffer — buffering parents and
-  // the stage-top append must copy
-  override def needCopyResult: Boolean = true
-
-  // like SortMergeJoinExec: this node drives the produce loop from raw
-  // input iterators, so it is a valid place to test the limit condition
-  override def canCheckLimitNotReached: Boolean = true
-
-  override def inputRDDs(): Seq[RDD[InternalRow]] =
-    childStage(left).execute() :: childStage(right).execute() :: Nil
-
-  /** CollapseCodegenStages hard-codes SortMergeJoinExec/ShuffledHashJoinExec
-    * as the two-input nodes whose children get their own codegen stages; a
-    * custom node falls through to the default traversal and its child
-    * pipelines (the EnsureRequirements sorts and everything below) would
-    * silently run un-fused. Re-running the collapse rule on each child
-    * subtree here gives them exactly the treatment the built-ins get.
-    *
-    * Guard: re-collapse ONLY a subtree the planner has not collapsed yet.
-    * Under AQE the children are query-stage leaves (no
-    * WholeStageCodegenExec anywhere below this node), so the rule runs and
-    * fuses them. With AQE disabled the planner's own collapse pass already
-    * wrapped the stages below each exchange; running the rule again would
-    * wrap those WholeStageCodegenExec nodes in a second one (the rule sees
-    * them as plain codegen-supporting operators) and the inner node's
-    * doProduce throws at runtime. In that case return the subtree as-is —
-    * the thin sort-above-exchange top runs un-fused, which is correct and
-    * costs nothing measurable (the sort dominates and has its own
-    * non-codegen execute path). Regression pinned in AsOfJoinSpec
-    * ("keyed as-of with AQE disabled"). */
-  private def childStage(p: SparkPlan): SparkPlan =
-    if (p.exists(_.isInstanceOf[WholeStageCodegenExec])) p
-    else CollapseCodegenStages(new java.util.concurrent.atomic.AtomicInteger(0))(p)
-
-  protected override def doProduce(ctx: CodegenContext): String = {
-    validateTypes()
-    val leftInput = ctx.addMutableState("scala.collection.Iterator", "asofProbeInput",
-      v => s"$v = inputs[0];", forceInline = true)
-    val rightInput = ctx.addMutableState("scala.collection.Iterator", "asofQuoteInput",
-      v => s"$v = inputs[1];", forceInline = true)
-    val factoryTerm = ctx.addReferenceObj("asOfMergeFactory", mergeFactory,
-      classOf[AsOfMergeFactory].getName)
-    val mergeTerm = ctx.addMutableState(classOf[AsOfMerge].getName, "asofMerge",
-      v => s"$v = $factoryTerm.create();", forceInline = true)
-    val probe = ctx.freshName("asofProbe")
-    val outRow = ctx.freshName("asofOut")
-    s"""
-       |while ($limitNotReachedCond $leftInput.hasNext()) {
-       |  InternalRow $probe = (InternalRow) $leftInput.next();
-       |  InternalRow $outRow = $mergeTerm.process($probe, $rightInput);
-       |  ${consume(ctx, null, outRow)}
-       |  if (shouldStop()) return;
-       |}
-     """.stripMargin
   }
 
   /** Global (unkeyed) as-of: every probe sees ONE step function over all

@@ -15,13 +15,36 @@ import org.apache.spark.sql.types._
   * semantic role ([[EvalBarrier]]); CHANGES.md records which, with the
   * registry queries that reach it. The monitors convert MJD with
   * graft.core.TimeFns' built-in compositions.
+  *
+  * Each native holds its algorithm once, in a public kernel (`compute`
+  * for most): `eval` calls it, and `doGenCode` emits one call to it
+  * through a reference object, so interpreted and generated code run
+  * the same code. A reference-object call, not CodegenFallback, keeps
+  * the surrounding projection inside the fused stage (fallback switches
+  * the whole projection to the interpreted row path; PERF.md round-1
+  * fix 4).
   */
 
+/** Generated code for a kernel that can return null: one call, and a
+  * null result when the call returns null. `unbox` reads a primitive
+  * result out of its box (e.g. `.doubleValue()`). */
+private object KernelCall {
+  def orNull(ctx: CodegenContext, ev: ExprCode, javaType: String,
+             call: String, unbox: String = ""): String = {
+    val r = ctx.freshName("r")
+    s"""
+       |$javaType $r = $call;
+       |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r$unbox; }
+     """.stripMargin
+  }
+}
+
 /** Cosine similarity of two numeric arrays in ONE pass: dot product and
-  * both norms accumulate in a single generated loop, vs three separate
+  * both norms accumulate in a single loop ([[compute]]), vs three separate
   * array traversals (plus zip_with allocation) for the HOF composition
-  * `dot(a,b)/(norm(a)*norm(b))`. Null or zero-norm input → 0.0 (matching
-  * graft.ops.Similarity.cosine's guard). Unequal-length arrays → null,
+  * `dot(a,b)/(norm(a)*norm(b))`. A zero norm (empty arrays included) →
+  * 0.0 (matching graft.ops.Similarity.cosine's guard); a null array →
+  * null. Unequal-length arrays → null,
   * matching the HOF reference (zip_with pads with nulls, which propagate
   * through the aggregate) — pinned by NativeExprSpec. */
 case class CosineSimilarity(left: Expression, right: Expression)
@@ -33,11 +56,9 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override def prettyName: String = "cosine_sim"
   override def nullable: Boolean = true
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    if (x.numElements() != y.numElements()) return null
+  def compute(x: ArrayData, y: ArrayData): java.lang.Double = {
     val n = x.numElements()
+    if (n != y.numElements()) return null
     var dot = 0.0d; var nx = 0.0d; var ny = 0.0d
     var i = 0
     while (i < n) {
@@ -49,32 +70,15 @@ case class CosineSimilarity(left: Expression, right: Expression)
     if (denom == 0.0d) 0.0d else dot / denom
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      val nx = ctx.freshName("nx")
-      val ny = ctx.freshName("ny")
-      val xi = ctx.freshName("xi")
-      val yi = ctx.freshName("yi")
-      val denom = ctx.freshName("denom")
-      s"""
-         |if ($a.numElements() != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int $n = $a.numElements();
-         |  double $dot = 0.0d; double $nx = 0.0d; double $ny = 0.0d;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    double $xi = $a.getDouble($i);
-         |    double $yi = $b.getDouble($i);
-         |    $dot += $xi * $yi; $nx += $xi * $xi; $ny += $yi * $yi;
-         |  }
-         |  double $denom = java.lang.Math.sqrt($nx) * java.lang.Math.sqrt($ny);
-         |  ${ev.value} = ($denom == 0.0d) ? 0.0d : $dot / $denom;
-         |}
-       """.stripMargin
-    })
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("cosine", this,
+      "org.apache.spark.sql.graft.CosineSimilarity")
+    nullSafeCodeGen(ctx, ev, (a, b) => KernelCall.orNull(ctx, ev,
+      "java.lang.Double", s"$ref.compute($a, $b)", ".doubleValue()"))
+  }
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CosineSimilarity =
@@ -92,7 +96,7 @@ object NativeBridge {
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 }
 
-/** Dot product of two double arrays in one generated loop (the HOF form
+/** Dot product of two double arrays in one loop (the HOF form
   * `aggregate(zip_with(a, b, _*_), 0d, _+_)` allocates the zipped array
   * and evaluates interpreted lambdas per element). Null/length rules
   * match [[CosineSimilarity]]: null input → null, unequal lengths →
@@ -106,32 +110,24 @@ case class DotProduct(left: Expression, right: Expression)
   override def prettyName: String = "dot_product"
   override def nullable: Boolean = true
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    if (x.numElements() != y.numElements()) return null
+  def compute(x: ArrayData, y: ArrayData): java.lang.Double = {
+    val n = x.numElements()
+    if (n != y.numElements()) return null
     var dot = 0.0d
     var i = 0
-    while (i < x.numElements()) { dot += x.getDouble(i) * y.getDouble(i); i += 1 }
+    while (i < n) { dot += x.getDouble(i) * y.getDouble(i); i += 1 }
     dot
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot")
-      s"""
-         |if ($a.numElements() != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $dot = 0.0d;
-         |  for (int $i = 0; $i < $a.numElements(); $i++) {
-         |    $dot += $a.getDouble($i) * $b.getDouble($i);
-         |  }
-         |  ${ev.value} = $dot;
-         |}
-       """.stripMargin
-    })
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("dot", this,
+      "org.apache.spark.sql.graft.DotProduct")
+    nullSafeCodeGen(ctx, ev, (a, b) => KernelCall.orNull(ctx, ev,
+      "java.lang.Double", s"$ref.compute($a, $b)", ".doubleValue()"))
+  }
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotProduct =
@@ -280,27 +276,7 @@ case class MdMinHashSignature(child: Expression, numHashes: Int)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "md_minhash_signature"
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val sig = ctx.freshName("sig")
-      s"""
-         |int $n = $arr.numElements();
-         |long[] $sig = new long[$numHashes];
-         |java.util.Arrays.fill($sig, Long.MAX_VALUE);
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$arr.isNullAt($i)) {
-         |    org.apache.spark.sql.graft.MdMinHash.fold(
-         |      $sig, $numHashes, $arr.getUTF8String($i));
-         |  }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($sig);
-       """.stripMargin
-    })
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  def compute(arr: ArrayData): ArrayData = {
     val n = arr.numElements()
     val sig = Array.fill(numHashes)(Long.MaxValue)
     var i = 0
@@ -309,6 +285,15 @@ case class MdMinHashSignature(child: Expression, numHashes: Int)
       i += 1
     }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(sig)
+  }
+
+  override protected def nullSafeEval(input: Any): Any =
+    compute(input.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("mdminhash", this,
+      "org.apache.spark.sql.graft.MdMinHashSignature")
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): MdMinHashSignature =
@@ -411,34 +396,7 @@ case class MdBucketMargin(child: Expression, weights: Seq[Double],
 
   @transient private lazy val wArr: Array[Double] = weights.toArray
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val w = ctx.addReferenceObj("weights", wArr, "double[]")
-    nullSafeCodeGen(ctx, ev, arr => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      val sawNull = ctx.freshName("sawNull")
-      val s = ctx.freshName("s")
-      val h = ctx.freshName("h")
-      val skip = if (skipEmpty) s"if ($s.numBytes() == 0) continue;" else ""
-      s"""
-         |int $n = $arr.numElements();
-         |double $acc = 0.0;
-         |boolean $sawNull = false;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($arr.isNullAt($i)) { $sawNull = true; break; }
-         |  org.apache.spark.unsafe.types.UTF8String $s = $arr.getUTF8String($i);
-         |  $skip
-         |  long $h = org.apache.spark.sql.graft.MdMinHash.hash60($s.getBytes());
-         |  $acc += $w[(int) ($h % $w.length)];
-         |}
-         |if ($sawNull) { ${ev.isNull} = true; } else { ${ev.value} = $acc; }
-       """.stripMargin
-    })
-  }
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  def compute(arr: ArrayData): java.lang.Double = {
     val n = arr.numElements()
     var acc = 0.0
     var i = 0
@@ -452,6 +410,16 @@ case class MdBucketMargin(child: Expression, weights: Seq[Double],
       i += 1
     }
     acc
+  }
+
+  override protected def nullSafeEval(input: Any): Any =
+    compute(input.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("margin", this,
+      "org.apache.spark.sql.graft.MdBucketMargin")
+    nullSafeCodeGen(ctx, ev, c => KernelCall.orNull(ctx, ev,
+      "java.lang.Double", s"$ref.compute($c)", ".doubleValue()"))
   }
 
   override protected def withNewChildInternal(newChild: Expression): MdBucketMargin =
@@ -477,27 +445,7 @@ case class MdDerivedMarginInt(child: Expression, buckets: Int)
   override def nullable: Boolean = true
   override def prettyName: String = "md_derived_margin_int"
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      val sawNull = ctx.freshName("sawNull")
-      s"""
-         |int $n = $arr.numElements();
-         |long $acc = 0L;
-         |boolean $sawNull = false;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($arr.isNullAt($i)) { $sawNull = true; break; }
-         |  $acc += org.apache.spark.sql.graft.MdMinHash.derivedWeight(
-         |    $arr.getUTF8String($i).getBytes(), $buckets);
-         |}
-         |if ($sawNull) { ${ev.isNull} = true; } else { ${ev.value} = $acc; }
-       """.stripMargin
-    })
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  def compute(arr: ArrayData): java.lang.Long = {
     val n = arr.numElements()
     var acc = 0L
     var i = 0
@@ -509,13 +457,24 @@ case class MdDerivedMarginInt(child: Expression, buckets: Int)
     acc
   }
 
+  override protected def nullSafeEval(input: Any): Any =
+    compute(input.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("imargin", this,
+      "org.apache.spark.sql.graft.MdDerivedMarginInt")
+    nullSafeCodeGen(ctx, ev, c => KernelCall.orNull(ctx, ev,
+      "java.lang.Long", s"$ref.compute($c)", ".longValue()"))
+  }
+
   override protected def withNewChildInternal(newChild: Expression): MdDerivedMarginInt =
     copy(child = newChild)
 }
 
 /** 64-bit SimHash from pre-hashed tokens in ONE pass: per token, all 64
-  * bit-counters update in an unrolled loop — vs 64 interpreted aggregate()
-  * traversals for the HOF formulation. Input array<long>, output long. */
+  * bit-counters update in one inner loop — vs 64 interpreted aggregate()
+  * traversals for the HOF formulation. Input array<long>, output long;
+  * null elements are skipped. */
 case class SimHash64(child: Expression)
     extends UnaryExpression with ImplicitCastInputTypes {
 
@@ -523,35 +482,7 @@ case class SimHash64(child: Expression)
   override def dataType: DataType = LongType
   override def prettyName: String = "simhash64"
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr => {
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val n = ctx.freshName("n")
-      val counters = ctx.freshName("counters")
-      val h = ctx.freshName("h")
-      val out = ctx.freshName("out")
-      s"""
-         |int $n = $arr.numElements();
-         |int[] $counters = new int[64];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$arr.isNullAt($i)) {
-         |    long $h = $arr.getLong($i);
-         |    for (int $j = 0; $j < 64; $j++) {
-         |      if ((($h >>> $j) & 1L) == 1L) $counters[$j]++; else $counters[$j]--;
-         |    }
-         |  }
-         |}
-         |long $out = 0L;
-         |for (int $j = 0; $j < 64; $j++) {
-         |  if ($counters[$j] >= 0) $out |= (1L << $j);
-         |}
-         |${ev.value} = $out;
-       """.stripMargin
-    })
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  def compute(arr: ArrayData): Long = {
     val n = arr.numElements()
     val counters = new Array[Int](64)
     var i = 0
@@ -575,6 +506,15 @@ case class SimHash64(child: Expression)
     out
   }
 
+  override protected def nullSafeEval(input: Any): Any =
+    compute(input.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("simhash", this,
+      "org.apache.spark.sql.graft.SimHash64")
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
+  }
+
   override protected def withNewChildInternal(newChild: Expression): SimHash64 =
     copy(child = newChild)
 }
@@ -582,11 +522,7 @@ case class SimHash64(child: Expression)
 /** Word k-gram shingles in one pass: space-joined k-token windows over a
   * string array (k > 0); shorter inputs yield one partial shingle.
   * Semantics identical to graft.ops.Text.wordShingles, without the
-  * per-window interpreted concat_ws lambda. Codegen emits one call to
-  * [[compute]] via a reference object — the string assembly gains
-  * nothing from inlined Java, but staying OUT of CodegenFallback keeps
-  * the surrounding stage fused (fallback switches the whole projection
-  * to the interpreted row path; see PERF.md round-1 fix 4). */
+  * per-window interpreted concat_ws lambda. */
 case class ShingleArray(child: Expression, k: Int)
     extends UnaryExpression with ImplicitCastInputTypes {
   require(k > 0, "shingle size must be positive")
@@ -735,9 +671,6 @@ case class CdcCuts(child: Expression, window: Int, divisor: Int,
     if (isBinary) computeBytes(input.asInstanceOf[Array[Byte]])
     else compute(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
 
-  // reference-object call, not inlined Java: the win is the fused rolling
-  // loop itself; staying out of CodegenFallback keeps the surrounding
-  // stage's projection compiled (see ShingleArray note)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("cdc", this, "org.apache.spark.sql.graft.CdcCuts")
     val m = if (isBinary) "computeBytes" else "compute"
@@ -879,9 +812,6 @@ case class WinnowMinima(child: Expression, k: Int, w: Int,
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 
-  // reference-object call (the fused O(n) loop is the win; stays out of
-  // CodegenFallback so the surrounding stage keeps compiling — see
-  // ShingleArray note)
   override protected def nullSafeEval(input: Any): Any =
     compute(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
 
@@ -1013,13 +943,8 @@ case class UnigramViterbi(left: Expression, right: Expression, maxPieceLen: Int)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("viterbi", this,
       "org.apache.spark.sql.graft.UnigramViterbi")
-    nullSafeCodeGen(ctx, ev, (w, m) => {
-      val r = ctx.freshName("r")
-      s"""
-         |org.apache.spark.sql.catalyst.InternalRow $r = $ref.compute($w, $m);
-         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (w, m) => KernelCall.orNull(ctx, ev,
+      "org.apache.spark.sql.catalyst.InternalRow", s"$ref.compute($w, $m)"))
   }
 
   override protected def withNewChildrenInternal(
@@ -1087,7 +1012,7 @@ case class WordPieceEncode(left: Expression, right: Expression, maxPieceLen: Int
   }
 
   def compute(w: org.apache.spark.unsafe.types.UTF8String,
-              v: ArrayData): AnyRef = {
+              v: ArrayData): ArrayData = {
     // CODE-POINT units throughout, not UTF-16 chars: the vocabulary
     // builder (Spark substr) and the DuckDB oracle both slice by code
     // point, so a supplementary-plane word (emoji, rare CJK) must
@@ -1130,14 +1055,8 @@ case class WordPieceEncode(left: Expression, right: Expression, maxPieceLen: Int
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("wordpiece", this,
       "org.apache.spark.sql.graft.WordPieceEncode")
-    nullSafeCodeGen(ctx, ev, (w, v) => {
-      val r = ctx.freshName("r")
-      s"""
-         |Object $r = $ref.compute($w, $v);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $r; }
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (w, v) => KernelCall.orNull(ctx, ev,
+      "org.apache.spark.sql.catalyst.util.ArrayData", s"$ref.compute($w, $v)"))
   }
 
   override protected def withNewChildrenInternal(
@@ -1345,48 +1264,28 @@ case class RegexpExtractGroups(child: Expression, pattern: String)
   @transient private lazy val compiled: java.util.regex.Pattern =
     java.util.regex.Pattern.compile(pattern)
 
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else {
-      val m = compiled.matcher(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].toString)
-      if (!m.find()) null
-      else {
-        val out = new Array[AnyRef](m.groupCount())
-        var i = 0
-        while (i < out.length) {
-          val g = m.group(i + 1)
-          out(i) = if (g == null) null
-            else org.apache.spark.unsafe.types.UTF8String.fromString(g)
-          i += 1
-        }
-        new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-      }
+  def compute(input: org.apache.spark.unsafe.types.UTF8String): ArrayData = {
+    val m = compiled.matcher(input.toString)
+    if (!m.find()) return null
+    val out = new Array[AnyRef](m.groupCount())
+    var i = 0
+    while (i < out.length) {
+      val g = m.group(i + 1)
+      out(i) = if (g == null) null
+        else org.apache.spark.unsafe.types.UTF8String.fromString(g)
+      i += 1
     }
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 
+  override protected def nullSafeEval(input: Any): Any =
+    compute(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
+
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val patRef = ctx.addReferenceObj("pattern", compiled, "java.util.regex.Pattern")
-    nullSafeCodeGen(ctx, ev, c => {
-      val m = ctx.freshName("m")
-      val out = ctx.freshName("out")
-      val i = ctx.freshName("i")
-      val g = ctx.freshName("g")
-      s"""
-         |java.util.regex.Matcher $m = $patRef.matcher($c.toString());
-         |if (!$m.find()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  Object[] $out = new Object[$m.groupCount()];
-         |  for (int $i = 0; $i < $out.length; $i++) {
-         |    String $g = $m.group($i + 1);
-         |    $out[$i] = ($g == null) ? null
-         |      : org.apache.spark.unsafe.types.UTF8String.fromString($g);
-         |  }
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-         |}
-       """.stripMargin
-    })
+    val ref = ctx.addReferenceObj("regexpgroups", this,
+      "org.apache.spark.sql.graft.RegexpExtractGroups")
+    nullSafeCodeGen(ctx, ev, c => KernelCall.orNull(ctx, ev,
+      "org.apache.spark.sql.catalyst.util.ArrayData", s"$ref.compute($c)"))
   }
 
   override protected def withNewChildInternal(newChild: Expression): RegexpExtractGroups =
@@ -1561,10 +1460,6 @@ case class IvfTopCells(child: Expression, cids: Seq[Long],
   override protected def nullSafeEval(input: Any): Any =
     top(input.asInstanceOf[ArrayData])
 
-  // reference-object call, not inlined Java: the win is the fused
-  // k·dim loop over the pre-unpacked matrix; staying out of
-  // CodegenFallback keeps the surrounding stage's projection compiled
-  // (see CdcCuts note)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("ivf", this, "org.apache.spark.sql.graft.IvfTopCells")
     nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.top($c);")
@@ -1814,9 +1709,6 @@ case class MdBandKeys(child: Expression, bands: Int)
   override protected def nullSafeEval(input: Any): Any =
     compute(input.asInstanceOf[ArrayData])
 
-  // reference-object call — the fused digest loop is the win; staying
-  // out of CodegenFallback keeps the surrounding stage compiled (see
-  // ShingleArray note)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("bandkeys", this,
       "org.apache.spark.sql.graft.MdBandKeys")
@@ -1899,9 +1791,6 @@ case class BpeMergeSeq(child: Expression, merges: Seq[(String, String)])
   override protected def nullSafeEval(input: Any): Any =
     compute(input.asInstanceOf[ArrayData])
 
-  // reference-object call (the MdBandKeys pattern) — the fused merge
-  // loop is the win; staying out of CodegenFallback keeps the
-  // surrounding stage compiled
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("bpemerges", this,
       "org.apache.spark.sql.graft.BpeMergeSeq")

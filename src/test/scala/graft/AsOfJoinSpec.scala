@@ -189,40 +189,14 @@ class AsOfJoinSpec extends SparkSpec {
       (None, None)))
   }
 
-  test("keyed as-of joins whole-stage codegen and fuses with its parent") {
-    // fallback=false: a codegen compile error would throw instead of
-    // silently reverting to the interpreted path
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    try {
-      val df = AsOfJoinApi.asOf(probes, quotes, Seq("k"), "t", "v", "qv")
-        .filter(col("qv").isNotNull)
-      // collect THIS dataset so its own AQE plan finalizes (a derived
-      // select would execute a different QueryExecution)
-      val out = df.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(3))).toSet
-      assert(out == Set(
-        (1L, 10L, 1.0), (1L, 25L, 2.0), (1L, 99L, 3.0), (2L, 16L, 9.0)))
-      val plan = df.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==")(0)
-      // the as-of line carries a codegen-stage star, i.e. the node is
-      // INSIDE a WholeStageCodegen span together with the Filter above it
-      assert(plan.linesIterator.exists(l =>
-        l.contains("AsOfJoin") && l.trim.startsWith("+- *(")), plan)
-      assert(plan.linesIterator.exists(l =>
-        l.contains("Filter") && l.contains("*(")), plan)
-    } finally spark.conf.unset("spark.sql.codegen.fallback")
-  }
-
   test("keyed as-of with AQE disabled (planner pre-collapses child stages)") {
-    // Without AQE the planner's CollapseCodegenStages pass has already
-    // wrapped the stages below each child exchange in WholeStageCodegenExec;
-    // childStage must NOT re-collapse such a subtree (double-wrapping makes
-    // the inner stage's doProduce throw at runtime). Codegen fallback off so
-    // the failure mode is a hard error, not a silent interpreted retry.
+    // Without AQE the planner collapses the codegen stages of the whole
+    // plan in one pass, with the as-of node between its children's stages
+    // and its parent's. Codegen fallback off so the failure mode is a
+    // hard error, not a silent interpreted retry.
     // Inputs must be range-derived so a real codegen stage (WSCG over the
     // range+project) sits BELOW each child exchange — a local Seq.toDF
-    // gives LocalTableScanExec, which the collapse rule never wraps, and
-    // the double-wrap cannot occur. This shape reproduced the crash.
+    // gives LocalTableScanExec, which the collapse rule never wraps.
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.conf.set("spark.sql.codegen.fallback", "false")
     try {

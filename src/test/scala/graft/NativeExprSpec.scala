@@ -1,11 +1,118 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.functions.GraftExtensions
 import graft.ops.Similarity
 
 class NativeExprSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Codegen/interpreted parity of one native: `rows` goes through a
+    * parquet file, so nothing folds to a LocalRelation at plan time, and
+    * `column` is projected over the scan twice — compiled into a
+    * whole-stage-codegen stage with codegen-only projections and no
+    * fallback, then with codegen off and interpreted projections. Both
+    * must collect the same rows; the compiled rows are returned, in
+    * `rows`' order, for value checks. */
+  private def checkNative(column: Column, rows: DataFrame): Seq[Row] = {
+    val dir = java.nio.file.Files.createTempDirectory("native-parity")
+      .resolve("t").toString
+    rows.coalesce(1).write.parquet(dir)
+    def run(settings: (String, String)*): Seq[Row] = {
+      settings.foreach { case (k, v) => spark.conf.set(k, v) }
+      try spark.read.parquet(dir).select(column).collect().toSeq
+      finally settings.foreach { case (k, _) => spark.conf.unset(k) }
+    }
+    val compiled = run("spark.sql.codegen.wholeStage" -> "true",
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+      "spark.sql.codegen.fallback" -> "false")
+    val interpreted = run("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    assert(compiled == interpreted)
+    assert(compiled.size == rows.count())
+    compiled
+  }
+
+  private def vectorPairs: DataFrame = Seq[(Option[Seq[Double]], Option[Seq[Double]])](
+    (Some(Seq(1.0, 2.0, 3.0)), Some(Seq(4.0, 5.0, 6.0))),
+    (Some(Seq(0.0, 0.0)), Some(Seq(1.0, 1.0))),
+    (Some(Seq.empty), Some(Seq.empty)),
+    (Some(Seq(1.0, 2.0, 3.0)), Some(Seq(1.0, 2.0))),
+    (None, Some(Seq(1.0))),
+    (Some(Seq(-0.5, 0.25)), None)).toDF("a", "b")
+
+  // null arrays, empty arrays, null and empty tokens, unicode
+  private def tokenRows: DataFrame = Seq[Option[Seq[String]]](
+    Some(Seq("alpha", "beta", "gamma", "beta")),
+    Some(Seq("", "x", "")),
+    Some(Seq("unicode é ü", "漢")),
+    Some(Seq("a", null, "b")),
+    Some(Seq.empty),
+    None).toDF("toks")
+
+  test("cosine_sim: codegen and interpreted agree (zero norm, empty, unequal, null)") {
+    val out = checkNative(GraftExtensions.cosineSim(col("a"), col("b")),
+      vectorPairs).map(r => if (r.isNullAt(0)) None else Some(r.getDouble(0)))
+    assert(out.drop(1) == Seq(Some(0.0), Some(0.0), None, None, None))
+  }
+
+  test("dot_product: codegen and interpreted agree (empty, unequal, null)") {
+    val out = checkNative(GraftExtensions.dotProduct(col("a"), col("b")),
+      vectorPairs).map(r => if (r.isNullAt(0)) None else Some(r.getDouble(0)))
+    assert(out == Seq(Some(32.0), Some(0.0), Some(0.0), None, None, None))
+  }
+
+  test("md_minhash_signature: codegen and interpreted agree (null token, empty, null)") {
+    val out = checkNative(GraftExtensions.mdMinhashSignature(col("toks"), 8),
+      tokenRows)
+    // an empty array keeps the aggregate's init; a null array is null
+    assert(out(4).getSeq[Long](0) == Seq.fill(8)(Long.MaxValue))
+    assert(out(5).isNullAt(0))
+  }
+
+  test("md_bucket_margin: codegen and interpreted agree (null token, skipEmpty)") {
+    val w = Seq(0.5, -1.25, 2.0, 0.125, -0.75)
+    for (skip <- Seq(false, true)) {
+      val out = checkNative(
+        GraftExtensions.mdBucketMargin(col("toks"), w, skipEmpty = skip),
+        tokenRows)
+      assert(out(3).isNullAt(0), s"skipEmpty=$skip: a null token nulls the sum")
+      assert(out(4).getDouble(0) == 0.0)
+      assert(out(5).isNullAt(0))
+    }
+  }
+
+  test("md_derived_margin_int: codegen and interpreted agree (null token, empty, null)") {
+    val out = checkNative(GraftExtensions.mdDerivedMarginInt(col("toks"), 64),
+      tokenRows)
+    assert(out(3).isNullAt(0))
+    assert(out(4).getLong(0) == 0L)
+    assert(out(5).isNullAt(0))
+  }
+
+  test("simhash64: codegen and interpreted agree (null element, empty, null)") {
+    val rows = Seq[Option[Seq[Option[Long]]]](
+      Some(Seq(Some(1L), Some(-1L), Some(0x5555555555555555L), Some(42L))),
+      Some(Seq(Some(7L), None, Some(7L))),
+      Some(Seq.empty),
+      None).toDF("h")
+    val out = checkNative(GraftExtensions.simhash64(col("h")), rows)
+    assert(out(1).getLong(0) == 7L) // the null element is skipped
+    assert(out(2).getLong(0) == -1L) // no votes: every counter is 0
+    assert(out(3).isNullAt(0))
+  }
+
+  test("regexp_extract_groups: codegen and interpreted agree (no match, optional group)") {
+    val rows = Seq[Option[String]](
+      Some("obs 12-ab"), Some("obs 7-"), Some("no digits"), Some(""), None)
+      .toDF("s")
+    val out = checkNative(
+      GraftExtensions.regexpGroups(col("s"), "(\\d+)-([a-z]+)?"), rows)
+    assert(out(0).getSeq[String](0) == Seq("12", "ab"))
+    assert(out(1).getSeq[String](0) == Seq("7", null))
+    assert(out.drop(2).forall(_.isNullAt(0)), "no match and null input are null")
+  }
 
   test("native cosine_sim agrees with the HOF composition") {
     val df = Seq(
@@ -181,6 +288,22 @@ class NativeExprSpec extends SparkSpec {
     val shPlan = sh.queryExecution.executedPlan.toString
     assert(shPlan.contains("*(1) Project"), shPlan)
     assert(sh.selectExpr("size(sh)").as[Int].head() == 4)
+    // the seven natives whose generated code is one kernel call
+    val id = col("id")
+    val vec = array(id.cast("double"), lit(1.0))
+    val toks = split(concat(lit("t"), id.cast("string"), lit(" u")), " ")
+    Seq(
+      GraftExtensions.cosineSim(vec, vec),
+      GraftExtensions.dotProduct(vec, vec),
+      GraftExtensions.mdMinhashSignature(toks, 4),
+      GraftExtensions.mdBucketMargin(toks, Seq(0.5, -1.0)),
+      GraftExtensions.mdDerivedMarginInt(toks, 8),
+      GraftExtensions.simhash64(array(id, id * 3)),
+      GraftExtensions.regexpGroups(id.cast("string"), "(\\d)(\\d)?")
+    ).foreach { c =>
+      val p = spark.range(100).select(c.as("x")).queryExecution.executedPlan.toString
+      assert(p.contains("*(1) Project"), p)
+    }
   }
 
   test("literal-only SQL args fail analysis cleanly, not with a CCE/NPE") {
