@@ -114,6 +114,65 @@ class NativeExprSpec extends SparkSpec {
     assert(out.drop(2).forall(_.isNullAt(0)), "no match and null input are null")
   }
 
+  /** The md5 hex digest of `s`'s UTF-8 bytes, and its 60-bit prefix,
+    * computed off Spark. */
+  private def md5Hex(s: String): String = java.security.MessageDigest
+    .getInstance("MD5").digest(s.getBytes("UTF-8")).map(b => f"$b%02x").mkString
+  private def md5Prefix(s: String): Long =
+    java.lang.Long.parseLong(md5Hex(s).take(15), 16)
+
+  test("md5_prefix60: codegen and interpreted agree (empty, unicode, null)") {
+    val strs = Seq("abc", "", "unicode é ü 漢")
+    val out = checkNative(GraftExtensions.md5Prefix60(col("s")),
+      (strs.map(Option(_)) :+ None).toDF("s"))
+    assert(out.init.map(_.getLong(0)) == strs.map(md5Prefix))
+    assert(out.last.isNullAt(0))
+  }
+
+  test("span_hashes60: codegen and interpreted agree (null token, short, empty, null)") {
+    val out = Seq(1, 3).map { k =>
+      val rows = checkNative(GraftExtensions.spanHashes60(col("toks"), k),
+        tokenRows).map(r => if (r.isNullAt(0)) None else Some(r.getSeq[Row](0)))
+      assert(rows.map(_.map(_.size)) ==
+        Seq(4, 3, 2, 3, 0).map(n => Some(math.max(n - k + 1, 0))) :+ None, s"k=$k")
+      rows
+    }
+    // a null token is skipped like concat_ws skips it: the window is "a b"
+    assert(out(1)(3).get.map(r => (r.getInt(0), r.getLong(1))) ==
+      Seq((1, md5Prefix("a b"))))
+  }
+
+  test("shingles: codegen and interpreted agree (null token, empty, null)") {
+    val out = checkNative(GraftExtensions.shingles(col("toks"), 2), tokenRows)
+    assert(out(0).getSeq[String](0) == Seq("alpha beta", "beta gamma", "gamma beta"))
+    assert(out(2).getSeq[String](0) == Seq("unicode é ü 漢"))
+    assert(out(4).getSeq[String](0) == Seq(""), "an empty array is one empty shingle")
+    assert(out(5).isNullAt(0))
+  }
+
+  test("bigram_hashes and trigram_hashes: codegen and interpreted agree (null token, short, empty, null)") {
+    for ((c, n) <- Seq(GraftExtensions.bigramHashes(col("toks")) -> 2,
+        GraftExtensions.trigramHashes(col("toks")) -> 3)) {
+      val out = checkNative(c, tokenRows)
+        .map(r => if (r.isNullAt(0)) None else Some(r.getSeq[Row](0).size))
+      assert(out == Seq(4, 3, 2, 3, 0).map(m => Some(math.max(m - n + 1, 0))) :+ None,
+        s"$n-grams")
+    }
+  }
+
+  test("md_band_keys: codegen and interpreted agree (empty, null)") {
+    val rows = Seq[Option[Seq[Long]]](
+      Some((1L to 8L).toSeq), Some(Seq(Long.MaxValue, 0L, -1L, 42L)),
+      Some(Seq.empty), None).toDF("cs")
+    val out = checkNative(GraftExtensions.mdBandKeys(col("cs"), 2), rows)
+    def hex(r: Row) = r.getSeq[Row](0).map(b => f"${b.getLong(1)}%016x${b.getLong(2)}%016x")
+    assert(hex(out(0)) == Seq(md5Hex("1,2,3,4"), md5Hex("5,6,7,8")))
+    assert(hex(out(1)) == Seq(md5Hex(s"${Long.MaxValue},0"), md5Hex("-1,42")))
+    assert(hex(out(2)) == Seq(md5Hex(""), md5Hex("")),
+      "an empty signature bands to empty slices")
+    assert(out(3).isNullAt(0))
+  }
+
   test("native cosine_sim agrees with the HOF composition") {
     val df = Seq(
       (Seq(1.0, 2.0, 3.0), Seq(4.0, 5.0, 6.0)),
@@ -288,7 +347,7 @@ class NativeExprSpec extends SparkSpec {
     val shPlan = sh.queryExecution.executedPlan.toString
     assert(shPlan.contains("*(1) Project"), shPlan)
     assert(sh.selectExpr("size(sh)").as[Int].head() == 4)
-    // the seven natives whose generated code is one kernel call
+    // natives whose generated code is one kernel call
     val id = col("id")
     val vec = array(id.cast("double"), lit(1.0))
     val toks = split(concat(lit("t"), id.cast("string"), lit(" u")), " ")
@@ -299,7 +358,11 @@ class NativeExprSpec extends SparkSpec {
       GraftExtensions.mdBucketMargin(toks, Seq(0.5, -1.0)),
       GraftExtensions.mdDerivedMarginInt(toks, 8),
       GraftExtensions.simhash64(array(id, id * 3)),
-      GraftExtensions.regexpGroups(id.cast("string"), "(\\d)(\\d)?")
+      GraftExtensions.regexpGroups(id.cast("string"), "(\\d)(\\d)?"),
+      GraftExtensions.spanHashes60(toks, 1),
+      GraftExtensions.bigramHashes(toks),
+      GraftExtensions.trigramHashes(toks),
+      GraftExtensions.mdBandKeys(array(id, id, id * 3, id), 2)
     ).foreach { c =>
       val p = spark.range(100).select(c.as("x")).queryExecution.executedPlan.toString
       assert(p.contains("*(1) Project"), p)
